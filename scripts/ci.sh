@@ -50,6 +50,15 @@ if [[ "${1:-}" == "--bench" ]]; then
   exit 0
 fi
 
+echo "== one session factory =="
+# Every SparkSession is built by graft.GraftSession.local; a hand-copied
+# builder would drift from its shared confs (UTC, plan-string cap, UI off,
+# shuffle partitions = cores).
+if git grep -n 'SparkSession\.builder' -- src ':!src/main/scala/graft/GraftSession.scala'; then
+  echo "CI FAILED: SparkSession.builder outside GraftSession (use GraftSession.local)" >&2
+  exit 1
+fi
+
 echo "== sbt Test/compile =="
 sbt -batch Test/compile
 

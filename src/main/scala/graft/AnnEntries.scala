@@ -8,7 +8,7 @@ import graft.EntryMath._
 import graft.operators.{Drift, Similarity, TextAnalysis}
 import graft.sources.Tables
 
-/** Embedding / ANN query entries (split from ExtendedEntries): cosine
+/** Embedding / ANN query entries: cosine
   * top-k, IVF / PQ / IVFADC search, SRP-LSH embedding dedup, PCA, drift,
   * quantization — each with its DuckDB oracle. Shared portability rules in
   * [[EntryMath]]. */
@@ -364,7 +364,7 @@ private[graft] object AnnEntries {
 
   /** ADC shortlist size for q_cosine_ivfpq_rerank: 8× topK — the
     * operating point chosen from the measured nprobe × shortlist sweep
-    * (graft.RerankSweep, table in SCALE.md r16): at the shipped
+    * (SCALE.md, "r16: IVFADC rerank operating point"): at the shipped
     * nprobe=2 it captures 97% of the probe ceiling (recall@5 0.724 vs
     * 0.744 with an unbounded shortlist) at half the rerank broadcast of
     * 16×; past 8× the binding constraint is the PROBE — recall moves
@@ -742,35 +742,8 @@ private[graft] object AnnEntries {
        |WHERE c.isb""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hybrid_search" -> qHybridSearch,
-    "q_cosine_topk" -> qCosineTopK,
-    "q_knn_classify" -> qKnnClassify,
-    "q_cosine_ivf" -> qCosineIvf,
-    "q_embed_outliers" -> ((s, dir) =>
-      Similarity.embedOutliers(Tables.embeddings(s, dir), 8, 2, 0.05)),
-    "q_cosine_ivf_probe" -> qCosineIvfProbe,
-    "q_ivf_append" -> qIvfAppend,
-    "q_ivf_recall" -> qIvfRecall,
-    "q_embed_clusters" -> qEmbedClusters,
-    "q_embed_pca" -> qEmbedPca,
-    "q_embed_quantize" -> qEmbedQuantize,
-    "q_cosine_q8" -> qCosineQ8,
-    "q_cosine_pq" -> qCosinePq,
-    "q_cosine_ivfpq" -> qCosineIvfPq,
-    "q_cosine_ivfpq_rerank" -> qCosineIvfPqRerank,
-    "q_cosine_ivfpq_sampled" -> qCosineIvfPqSampled,
-    "q_embed_drift" -> qEmbedDrift,
-    "q_dedup_embed_lsh" -> qDedupEmbedLsh,
-    "q_dedup_embed_lsh_mp" -> qDedupEmbedLshMp,
-    "q_dedup_embed_ivf" -> qDedupEmbedIvf,
-    "q_semdedup" -> qSemDedup,
-    "q_dedup_embed_ivf2" -> qDedupEmbedIvf2,
-    "q_dedup_embed_incremental" -> qDedupEmbedIncr,
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_cosine_topk" ->
+  val entries: Seq[Query] = Seq(
+    Query("q_cosine_topk", qCosineTopK, Some(
       s"""WITH q AS (
          |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 10
          |), s AS (
@@ -783,11 +756,11 @@ private[graft] object AnnEntries {
          |      ORDER BY score DESC, neighbor_id) AS INTEGER) AS rk
          |  FROM s
          |)
-         |SELECT query_id, neighbor_id, score, rk FROM rk WHERE rk <= 5""".stripMargin,
+         |SELECT query_id, neighbor_id, score, rk FROM rk WHERE rk <= 5""".stripMargin)),
     // mirrors Similarity.knnClassify: top-10 neighbors per probe by
     // 4dp-rounded cosine, majority vote over neighbor labels (vote-count
     // tiebreak = smallest label)
-    "q_knn_classify" ->
+    Query("q_knn_classify", qKnnClassify, Some(
       s"""WITH q AS (
          |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 50
          |), s AS (
@@ -812,10 +785,11 @@ private[graft] object AnnEntries {
          |SELECT p.query_id, t.label AS true_label, p.label AS pred_label,
          |  p.votes, (p.label = t.label) AS correct
          |FROM p JOIN embeddings t ON t.vec_id = p.query_id
-         |WHERE p.vrk = 1""".stripMargin,
+         |WHERE p.vrk = 1""".stripMargin)),
     // same trained centroids/assignment as the IVF family; bottom-frac by
     // cosine-to-own-centroid per cluster
-    "q_embed_outliers" ->
+    Query("q_embed_outliers", (s, dir) =>
+      Similarity.embedOutliers(Tables.embeddings(s, dir), 8, 2, 0.05), Some(
       s"""WITH ${oIvfAssign(8, 2)}, sc AS (
          |  SELECT a.vec_id, a.centroid_id,
          |    ${r4(oCos("a.embedding", "c.ce"))} AS cscore
@@ -829,16 +803,16 @@ private[graft] object AnnEntries {
          |)
          |SELECT vec_id, centroid_id, cscore, rk, cluster_n,
          |  rk <= ceil(cluster_n * 0.05) AS is_outlier
-         |FROM rk""".stripMargin,
-    "q_cosine_ivf" -> ivfSearchOracleSql,
+         |FROM rk""".stripMargin)),
+    Query("q_cosine_ivf", qCosineIvf, Some(ivfSearchOracleSql)),
     // the append-maintained index must search identically to the
     // single-shot one: hash-gated against q_cosine_ivf's oracle unchanged
-    "q_ivf_append" -> ivfSearchOracleSql,
+    Query("q_ivf_append", qIvfAppend, Some(ivfSearchOracleSql)),
     // quantized power iteration unrolled to exactly PcaRounds rounds:
     // per round the float_dot dᵢ 4+2-dp-quantizes into int64 matvec sums
     // (order-free), the norm folds the dim-sized list sequentially, and
     // v re-rounds through FLOAT32 — each step mirrored op-for-op
-    "q_embed_pca" -> {
+    Query("q_embed_pca", qEmbedPca, Some {
       val rounds = (1 to PcaRounds).map { i =>
         s"""d$i AS MATERIALIZED (
            |  SELECT e.vec_id,
@@ -878,8 +852,8 @@ private[graft] object AnnEntries {
          |  ${r4(s"CAST(v$PcaRounds.v[s.pos] AS DOUBLE)")} AS loading,
          |  ${r4(s"n$PcaRounds.nrm / 100000000.0")} AS lambda
          |FROM s$PcaRounds s, v$PcaRounds, n$PcaRounds""".stripMargin
-    },
-    "q_embed_clusters" ->
+    }),
+    Query("q_embed_clusters", qEmbedClusters, Some(
       s"""WITH ${oIvfAssign(8, 2)}, sc AS (
          |  SELECT a.centroid_id,
          |    ${r4(oCos("a.embedding", "c.ce"))} AS cscore
@@ -889,8 +863,8 @@ private[graft] object AnnEntries {
          |  ${r4("CAST(sum(CAST(floor(cscore * 10000 + 0.5) AS BIGINT)) AS BIGINT) / 10000.0 / count(*)")}
          |    AS mean_cos,
          |  min(cscore) AS min_cos
-         |FROM sc GROUP BY 1""".stripMargin,
-    "q_embed_quantize" ->
+         |FROM sc GROUP BY 1""".stripMargin)),
+    Query("q_embed_quantize", qEmbedQuantize, Some(
       s"""WITH m AS (
          |  SELECT vec_id, embedding,
          |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS mx
@@ -902,15 +876,16 @@ private[graft] object AnnEntries {
          |         ELSE list_transform(embedding,
          |           x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 / mx + 0.5) AS INTEGER))
          |    END, ',') AS qvec_csv
-         |FROM m""".stripMargin,
-    "q_cosine_pq" -> oPqSql(10, 5),
-    "q_cosine_ivfpq" -> oIvfPqSql(10, 5),
-    "q_cosine_ivfpq_rerank" -> oIvfPqSql(10, 5,
-      rerank = Some(IvfPqRerankShortlist)),
-    "q_cosine_ivfpq_sampled" -> oIvfPqSql(10, 5, sampledTrain = true),
+         |FROM m""".stripMargin)),
+    Query("q_cosine_pq", qCosinePq, Some(oPqSql(10, 5))),
+    Query("q_cosine_ivfpq", qCosineIvfPq, Some(oIvfPqSql(10, 5))),
+    Query("q_cosine_ivfpq_rerank", qCosineIvfPqRerank, Some(oIvfPqSql(10, 5,
+      rerank = Some(IvfPqRerankShortlist)))),
+    Query("q_cosine_ivfpq_sampled", qCosineIvfPqSampled,
+      Some(oIvfPqSql(10, 5, sampledTrain = true))),
     // embedding drift: the scalar drift skeleton (q_drift, CorpusEntries)
     // with bins = shared-codebook IVF cluster ids
-    "q_embed_drift" ->
+    Query("q_embed_drift", qEmbedDrift, Some(
       s"""WITH ${oIvfAssign(8, 2)},
          |hr AS (
          |  SELECT CAST(least(floor(CAST(centroid_id AS DOUBLE) / 1), 8) AS INTEGER) AS bin,
@@ -951,8 +926,8 @@ private[graft] object AnnEntries {
          |  psi_term, js_term,
          |  floor(psi * 10000 + 0.5) / 10000 AS psi,
          |  floor(js * 10000 + 0.5) / 10000 AS js
-         |FROM terms, g""".stripMargin,
-    "q_cosine_q8" -> {
+         |FROM terms, g""".stripMargin)),
+    Query("q_cosine_q8", qCosineQ8, Some {
       val dim = Similarity.LshDim
       def qdot(a: String, b: String) =
         s"""CAST(list_reduce(list_transform(range(1, ${dim + 1}),
@@ -982,9 +957,9 @@ private[graft] object AnnEntries {
          |  FROM sf
          |)
          |SELECT query_id, neighbor_id, score, rk FROM rk WHERE rk <= 5""".stripMargin
-    },
+    }),
     // NB: `cent2` below is oIvfAssign's final centroid table for iters=2
-    "q_cosine_ivf_probe" ->
+    Query("q_cosine_ivf_probe", qCosineIvfProbe, Some(
       s"""WITH ${oIvfAssign(8, 2)}, qp AS (
          |  SELECT vec_id AS query_id, centroid_id AS qc FROM (
          |    SELECT e.vec_id, c.centroid_id,
@@ -1007,10 +982,10 @@ private[graft] object AnnEntries {
          |      ORDER BY score DESC, neighbor_id) AS INTEGER) AS rk
          |  FROM s
          |)
-         |SELECT query_id, neighbor_id, score, rk FROM rk WHERE rk <= 3""".stripMargin,
+         |SELECT query_id, neighbor_id, score, rk FROM rk WHERE rk <= 3""".stripMargin)),
     // recall@5 of the nprobe=2 IVF ranking vs the exact brute-force top-5
     // (both rankings deterministic: 4dp scores, neighbor_id tiebreak)
-    "q_ivf_recall" ->
+    Query("q_ivf_recall", qIvfRecall, Some(
       s"""WITH ${oIvfAssign(8, 2)}, qp AS (
          |  SELECT vec_id AS query_id, centroid_id AS qc FROM (
          |    SELECT e.vec_id, c.centroid_id,
@@ -1052,24 +1027,24 @@ private[graft] object AnnEntries {
          |  ${r4("count(ap.neighbor_id) / 5.0")} AS recall
          |FROM ex LEFT JOIN ap
          |  ON ap.query_id = ex.query_id AND ap.neighbor_id = ex.neighbor_id
-         |GROUP BY ex.query_id""".stripMargin,
+         |GROUP BY ex.query_id""".stripMargin)),
     // literal 8 == Similarity.clustersFor(N) at every verify SF (N = 199
     // at sf0.001 / 2000 at sf0.01); the query sizes k adaptively so the
     // trend bench's bigger synthetic inputs stay linear
-    "q_dedup_embed_ivf" ->
+    Query("q_dedup_embed_ivf", qDedupEmbedIvf, Some(
       s"""WITH ${oIvfAssign(8, 2)}, s AS (
          |  SELECT a.centroid_id, a.vec_id AS vec_a, b.vec_id AS vec_b,
          |    ${r4(oCos("a.embedding", "b.embedding"))} AS cos
          |  FROM assign a JOIN assign b
          |    ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
          |)
-         |SELECT centroid_id, vec_a, vec_b, cos FROM s WHERE cos >= 0.4""".stripMargin,
+         |SELECT centroid_id, vec_a, vec_b, cos FROM s WHERE cos >= 0.4""".stripMargin)),
     // SemDeDup mirror: same trained assignment (asg materialized — it is
     // referenced four times and DuckDB inlines the whole Lloyd chain per
     // reference), within-cluster pairs >= tau, recursive-CTE components
     // (the q_dedup_corpus reach idiom), keeper = lowest cosine-to-centroid
     // per component with vec_id tiebreak, singletons keep via coalesce
-    "q_semdedup" ->
+    Query("q_semdedup", qSemDedup, Some(
       s"""WITH RECURSIVE ${oIvfAssign(8, 2)},
          |asg AS MATERIALIZED (SELECT * FROM assign),
          |sc AS MATERIALIZED (
@@ -1101,10 +1076,10 @@ private[graft] object AnnEntries {
          |SELECT vec_id, centroid_id, cscore, component,
          |  row_number() OVER (PARTITION BY component
          |    ORDER BY cscore, vec_id) = 1 AS keep
-         |FROM j""".stripMargin,
+         |FROM j""".stripMargin)),
     // multi-assignment (arn <= 2) blocking: DISTINCT candidate pairs from
     // the replicated per-cluster self-join, verified with exact cosine
-    "q_dedup_embed_ivf2" ->
+    Query("q_dedup_embed_ivf2", qDedupEmbedIvf2, Some(
       s"""WITH ${oIvfAssign(8, 2)}, multi AS (
          |  SELECT vec_id, centroid_id FROM (
          |    SELECT e.vec_id, c.centroid_id,
@@ -1122,11 +1097,11 @@ private[graft] object AnnEntries {
          |  FROM cand JOIN embeddings ea ON ea.vec_id = cand.vec_a
          |            JOIN embeddings eb ON eb.vec_id = cand.vec_b
          |)
-         |SELECT vec_a, vec_b, cos FROM v WHERE cos >= 0.4""".stripMargin,
-    "q_dedup_embed_lsh" -> oDedupEmbedLsh,
-    "q_dedup_embed_lsh_mp" -> oDedupEmbedLshMp,
-    "q_dedup_embed_incremental" -> oDedupEmbedIncr,
-    "q_hybrid_search" ->
+         |SELECT vec_a, vec_b, cos FROM v WHERE cos >= 0.4""".stripMargin)),
+    Query("q_dedup_embed_lsh", qDedupEmbedLsh, Some(oDedupEmbedLsh)),
+    Query("q_dedup_embed_lsh_mp", qDedupEmbedLshMp, Some(oDedupEmbedLshMp)),
+    Query("q_dedup_embed_incremental", qDedupEmbedIncr, Some(oDedupEmbedIncr)),
+    Query("q_hybrid_search", qHybridSearch, Some(
       s"""WITH ${OracleSql.qualityScoreCte},
          |q AS (
          |  SELECT vec_id AS query_id, embedding AS qe
@@ -1146,6 +1121,6 @@ private[graft] object AnnEntries {
          |  FROM h
          |)
          |SELECT query_id, doc_id, cos, quality_score, hybrid, rk
-         |FROM rk WHERE rk <= 10""".stripMargin,
+         |FROM rk WHERE rk <= 10""".stripMargin)),
   )
 }

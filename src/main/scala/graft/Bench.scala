@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract). A small warmup pass first
   * amortizes classloading/JIT/codegen so the per-query numbers measure the
@@ -60,19 +58,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan strings of lineage-kept iterative loops are exponential to
-      // DESCRIBE (generateTreeString expands a DAG as a tree) — cap so the
-      // driver never OOMs stringifying a plan (r16 sweep, SCALE.md)
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     // The only WARN-level flood in a clean run is WindowExec's "No Partition
     // Defined" for the two allowlisted calendar-sized windows; it buried the
     // round-6 pointer line mid-token in the driver's capture window.
@@ -95,21 +81,11 @@ object Bench {
 
     val calBefore = calibrate()
 
-    // dev-only subset filter (unset for the driver's full run). An empty or
-    // whitespace-only value is treated as unset — Set("") would otherwise
-    // silently filter out EVERY query with no signal in the output.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
     // Verify-only oracle companions are excluded: they exist to hash-check a
     // sketch query's error contract at the correctness gate, and timing them
     // here would charge the sketch architecture for the cost of its oracle.
-    val all = (SparkEntry.queries.keySet -- SparkEntry.verifyOnly).toSeq.sorted
-    val names = all.filter(n => only.forall(_.contains(n)))
-    only.foreach { _ =>
-      System.err.println(
-        s"[bench] SPARK_GRAFT_ONLY active: running ${names.size}/${all.size} queries")
-    }
+    val names = SparkEntry.selectOnly("bench",
+      (SparkEntry.queries.keySet -- SparkEntry.verifyOnly).toSeq.sorted)
 
     // warmup: exercise scan + shuffle + window + join codepaths once
     try {

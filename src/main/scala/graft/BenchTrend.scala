@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-TREND bench: runs the most expensive queries at the base SF and at
   * a synthesized `copies`× SF ([[graft.sources.ScaleSynth]]) and reports the
   * per-SF time ratio — `scaled_sec / (copies × base_sec)`. A query whose
@@ -62,24 +60,12 @@ object BenchTrend {
     val synthDir = sys.env.getOrElse("SPARK_GRAFT_TREND_DIR",
       s"/tmp/graft_trend/${new java.io.File(baseDir).getName}x$copies")
     val flagAt = sys.env.getOrElse("SPARK_GRAFT_TREND_FLAG", "1.5").toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = sys.env.get("SPARK_GRAFT_TREND_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty).getOrElse(DefaultQueries)
       .filter(SparkEntry.queries.contains)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan strings of lineage-kept iterative loops are exponential to
-      // DESCRIBE (generateTreeString expands a DAG as a tree) — cap so the
-      // driver never OOMs stringifying a plan (r16 sweep, SCALE.md)
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)

@@ -9,7 +9,7 @@ import graft.sources.{Jsonl, Tables}
 /** Corpus-curation operators (sampling / vocabulary / TF-IDF / PII /
   * chunking / passage dedup), each with its DuckDB oracle — the
   * document→training-example half of an LLM data pipeline, alongside the
-  * dedup/similarity family in [[ExtendedEntries]]. */
+  * dedup/similarity family in [[TextDedupEntries]]. */
 object CorpusEntries {
 
   private def r4(e: String): String = s"floor(($e) * 10000 + 0.5) / 10000"
@@ -514,7 +514,7 @@ object CorpusEntries {
   private val BpeIters = 64
 
   /** One trained merge table per (session, sfDir) — the q_bpe pair
-    * shares it the way [[ExtendedEntries]]'s streamTopkRuns shares its
+    * shares it the way [[StreamEntries]]'s streamTopkRuns shares its
     * stream run: training is deterministic (greedy with a total-order
     * tie-break over exact integer counts), so q_bpe_encode re-training
     * what q_bpe_train just produced would reproduce the identical table
@@ -653,63 +653,6 @@ object CorpusEntries {
   private def qUnigramFertility(s: SparkSession, dir: String): DataFrame =
     operators.Unigram.fertility(Tables.documents(s, dir), trainedUnigram(s, dir))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bpe_train" -> qBpeTrain,
-    "q_bpe_encode" -> qBpeEncode,
-    "q_bpe_fertility" -> qBpeFertility,
-    "q_unigram_train" -> qUnigramTrain,
-    "q_unigram_encode" -> qUnigramEncode,
-    "q_unigram_fertility" -> qUnigramFertility,
-    "q_sample_hash" -> qSampleHash,
-    "q_vocab" -> qVocab,
-    "q_tfidf" -> qTfidf,
-    "q_tfidf_pairs" -> qTfidfPairs,
-    "q_char_entropy" -> qCharEntropy,
-    "q_bm25" -> qBm25,
-    "q_pii_redact" -> qPiiRedact,
-    "q_chunks" -> qChunks,
-    "q_passage_dedup" -> qPassageDedup,
-    "q_decontaminate" -> qDecontaminate,
-    "q_decontam_nsweep" -> qDecontamNsweep,
-    "q_decontaminate_bloom" -> qDecontaminateBloom,
-    "q_repetition" -> qRepetition,
-    "q_repetition_ngrams" -> qRepetitionNgrams,
-    "q_source_mix" -> qSourceMix,
-    "q_mix_plan" -> qMixPlan,
-    "q_dedup_incremental" -> qDedupIncremental,
-    "q_bigram_lm" -> qBigramLm,
-    "q_backoff_lm" -> qBackoffLm,
-    "q_kn_lm" -> qKnLm,
-    "q_kn3_lm" -> qKn3Lm,
-    "q_nb_classify" -> qNbClassify,
-    "q_nb_confusion" -> qNbConfusion,
-    "q_nb_margin" -> qNbMargin,
-    "q_blocklist" -> qBlocklist,
-    "q_data_card" -> qDataCard,
-    "q_ccnet_buckets" -> qCcnetBuckets,
-    "q_ccnet_fixed" -> qCcnetFixed,
-    "q_novelty" -> qNovelty,
-    "q_novelty_bloom" -> qNoveltyBloom,
-    "q_quality_deciles" -> qQualityDeciles,
-    "q_quality_rules" -> qQualityRules,
-    "q_rules_ablation" -> qRulesAblation,
-    "q_lm_score" -> qLmScore,
-    "q_pack" -> qPack,
-    "q_pack_stats" -> qPackStats,
-    "q_sample_exact_n" -> qSampleExactN,
-    "q_substring_dup" -> qSubstringDup,
-    "q_dsir" -> qDsir,
-    "q_dsir_resample" -> qDsirResample,
-    "q_substring_sa" -> qSubstringSa,
-    "q_sample_temperature" -> qSampleTemperature,
-    "q_drift" -> qDrift,
-    "q_split" -> qSplit,
-    "q_sample_weighted" -> qSampleWeighted,
-    "q_shuffle_shards" -> qShuffleShards,
-    "q_shards_stratified" -> qShardsStratified,
-    "q_jsonl_roundtrip" -> qJsonlRoundtrip,
-    "q_export_shards" -> qExportShards)
-
   // ---------------------------------------------------------------- oracle
 
   /** Chunk CTE shared by q_chunks and q_passage_dedup (mirrors
@@ -735,7 +678,7 @@ object CorpusEntries {
       |)""".stripMargin
 
   /** Distinct (doc_id, 31-bit hash) shingle index at width `n` (mirrors
-    * Dedup.shingleIndex; the 3-gram variant in ExtendedEntries is a fixed
+    * Dedup.shingleIndex; the 3-gram variant in TextDedupEntries is a fixed
     * specialization of this). */
   private def oShingleIdx(n: Int): String = {
     val grams = (0 until n).map(k => s"toks[i+$k]").mkString(", ")
@@ -1155,25 +1098,102 @@ object CorpusEntries {
          |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id
          |WHERE d.doc_id % 2 = 1""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "q_blocklist" -> {
-      val terms = BlockTerms.map(t => s"'$t'").mkString("[", ",", "]")
-      s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-         |b AS (
-         |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_filter(toks, t -> list_contains($terms, t))) AS BIGINT)
-         |      AS n_blocked
-         |  FROM tk
-         |)
-         |SELECT doc_id, n_tokens, n_blocked,
-         |  ${r4("CAST(n_blocked AS DOUBLE) / CAST(n_tokens AS DOUBLE)")}
-         |    AS blocked_frac,
-         |  (CAST(n_blocked AS DOUBLE) <= 0.0 * CAST(n_tokens AS DOUBLE))
-         |    AS keep
-         |FROM b""".stripMargin
-    },
+  /** Shared verbatim with q_stream_dsir ([[StreamEntries]]). */
+  private[graft] val dsirOracleSql: String =
+    s"""WITH $oDsirChain
+       |SELECT d.doc_id,
+       |  coalesce(per.n_grams, 0) AS n_grams,
+       |  coalesce(per.logw_q, 0) AS logw_q,
+       |  coalesce(per.logw_q, 0) > 0 AS selected
+       |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id""".stripMargin
 
-    "q_data_card" ->
+  /** Shared verbatim with q_stream_nb ([[StreamEntries]]). */
+  private[graft] val nbClassifyOracleSql: String =
+    s"""WITH $oNbChain
+       |SELECT doc_id, actual, pred, correct, nll, n_unseen FROM nbp""".stripMargin
+
+  /** Shared verbatim with q_stream_ccnet ([[StreamEntries]]). */
+  private[graft] val ccnetFixedOracleSql: String =
+    s"""WITH ${oKnChainFor("doc_id % 4 = 0",
+           "doc_id % 4 = 2 OR doc_id % 2 = 1")},
+       |thf AS (
+       |  SELECT quantile_cont(avg_nll, [$OneThird, $TwoThirds]) AS th
+       |  FROM knl WHERE avg_nll IS NOT NULL AND doc_id % 4 = 2
+       |)
+       |SELECT k.doc_id, k.avg_nll,
+       |  CASE WHEN k.avg_nll IS NULL THEN 'unscored'
+       |       WHEN k.avg_nll <= ${r4("thf.th[1]")} THEN 'head'
+       |       WHEN k.avg_nll <= ${r4("thf.th[2]")} THEN 'middle'
+       |       ELSE 'tail' END AS bucket
+       |FROM knl k, thf WHERE k.doc_id % 2 = 1""".stripMargin
+
+  /** Shared verbatim with q_stream_blocklist ([[StreamEntries]]). */
+  private[graft] val blocklistOracleSql: String = {
+    val terms = BlockTerms.map(t => s"'$t'").mkString("[", ",", "]")
+    s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+       |b AS (
+       |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
+       |    CAST(len(list_filter(toks, t -> list_contains($terms, t))) AS BIGINT)
+       |      AS n_blocked
+       |  FROM tk
+       |)
+       |SELECT doc_id, n_tokens, n_blocked,
+       |  ${r4("CAST(n_blocked AS DOUBLE) / CAST(n_tokens AS DOUBLE)")}
+       |    AS blocked_frac,
+       |  (CAST(n_blocked AS DOUBLE) <= 0.0 * CAST(n_tokens AS DOUBLE))
+       |    AS keep
+       |FROM b""".stripMargin
+  }
+
+  /** Shared verbatim with q_stream_repetition ([[StreamEntries]]). */
+  private[graft] val repetitionOracleSql: String =
+    s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+       |base AS (
+       |  SELECT doc_id, len(toks) AS n_tokens,
+       |    ${r4("1.0 - len(list_distinct(toks)) * 1.0 / len(toks)")}
+       |      AS token_dup_frac
+       |  FROM tk
+       |),
+       |bg AS (
+       |  SELECT doc_id, unnest(
+       |    CASE WHEN len(toks) < 2 THEN CAST([] AS VARCHAR[])
+       |         ELSE list_transform(range(1, len(toks)),
+       |                i -> concat_ws(' ', toks[i], toks[i+1])) END) AS g
+       |  FROM tk
+       |),
+       |c AS (SELECT doc_id, g, count(*) AS c FROM bg GROUP BY 1, 2),
+       |a AS (
+       |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n2,
+       |    CAST(sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS BIGINT) AS dup_occ,
+       |    max(c) AS top_c
+       |  FROM c GROUP BY 1
+       |)
+       |SELECT b.doc_id, b.n_tokens, b.token_dup_frac,
+       |  coalesce(${r4("dup_occ * 1.0 / n2")}, 0.0) AS dup_bigram_frac,
+       |  coalesce(${r4("top_c * 1.0 / n2")}, 0.0) AS top_bigram_frac,
+       |  (b.token_dup_frac <= $MaxTokenDup
+       |   AND coalesce(${r4("dup_occ * 1.0 / n2")}, 0.0) <= $MaxDupBigram
+       |   AND coalesce(${r4("top_c * 1.0 / n2")}, 0.0) <= $MaxTopBigram) AS keep
+       |FROM base b LEFT JOIN a ON a.doc_id = b.doc_id""".stripMargin
+
+  /** Shared verbatim with q_stream_rules ([[StreamEntries]]). */
+  private[graft] val qualityRulesOracleSql: String =
+    s"""WITH $oRulesChain
+       |SELECT *,
+       |  (ok_words AND ok_mean_len AND ok_word_len AND ok_stopwords AND ok_short)
+       |    AS keep,
+       |  CASE WHEN NOT ok_words THEN 'n_words'
+       |       WHEN NOT ok_mean_len THEN 'mean_word_len'
+       |       WHEN NOT ok_word_len THEN 'max_word_len'
+       |       WHEN NOT ok_stopwords THEN 'stopwords'
+       |       WHEN NOT ok_short THEN 'short_words'
+       |       ELSE NULL END AS fail_reason
+       |FROM f""".stripMargin
+
+  val entries: Seq[Query] = Seq(
+    Query("q_blocklist", qBlocklist, Some(blocklistOracleSql)),
+
+    Query("q_data_card", qDataCard, Some(
       s"""WITH ${OracleSql.qualityScoreCte},
          |base AS (
          |  SELECT d.source, d.lang, d.text, d.n_chars,
@@ -1199,21 +1219,19 @@ object CorpusEntries {
          |  ${r4("CAST(q4_sum AS DOUBLE) / 10000.0 / CAST(n_docs AS DOUBLE)")}
          |    AS mean_quality,
          |  ${r4("CAST(n_docs AS DOUBLE) / CAST(n_total AS DOUBLE)")} AS share_pct
-         |FROM g CROSS JOIN tot""".stripMargin,
+         |FROM g CROSS JOIN tot""".stripMargin)),
 
-    "q_nb_classify" ->
-      s"""WITH $oNbChain
-         |SELECT doc_id, actual, pred, correct, nll, n_unseen FROM nbp""".stripMargin,
+    Query("q_nb_classify", qNbClassify, Some(nbClassifyOracleSql)),
 
-    "q_nb_confusion" ->
+    Query("q_nb_confusion", qNbConfusion, Some(
       s"""WITH $oNbChain
          |SELECT actual, pred, CAST(count(*) AS BIGINT) AS n,
          |  CAST(sum(CASE WHEN correct THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
-         |FROM nbp GROUP BY actual, pred""".stripMargin,
+         |FROM nbp GROUP BY actual, pred""".stripMargin)),
 
     // margin = runner-up minus best nll4 (exact int64 micros off the
     // shared win CTE); docs with no runner-up land in the open top band
-    "q_nb_margin" ->
+    Query("q_nb_margin", qNbMargin, Some(
       s"""WITH $oNbChain,
          |sec AS (
          |  SELECT a.doc_id, a.label, a.nll4, b.nll4 AS nll4b
@@ -1241,20 +1259,20 @@ object CorpusEntries {
          |  ${r4("CAST(sum(n_docs) OVER wb AS DOUBLE) / total_docs")} AS coverage
          |FROM pb CROSS JOIN tt
          |WINDOW wb AS (ORDER BY band DESC
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin,
+         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin)),
 
     // arithmetic mirrored op-for-op with explicit DOUBLE casts and the
     // same parenthesization as TextAnalysis.kneserNeyLm; per-gram NLLs
     // 4dp-quantized before the per-doc sum (the backoff_lm idiom)
-    "q_kn_lm" ->
+    Query("q_kn_lm", qKnLm, Some(
       s"""WITH $oKnChain
-         |SELECT * FROM knl""".stripMargin,
+         |SELECT * FROM knl""".stripMargin)),
 
     // trigram interpolated KN mirrored op-for-op: counts coalesced before
     // the discount, the same left-assoc parenthesization as kneserNey3Lm,
     // DOUBLE all the way, 4dp-int64 NLL sums (the q_kn_lm idiom one
     // order up)
-    "q_kn3_lm" ->
+    Query("q_kn3_lm", qKn3Lm, Some(
       s"""WITH tr AS (SELECT string_split(text, ' ') AS toks FROM documents
          |  WHERE doc_id % 2 = 0),
          |sc AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
@@ -1342,30 +1360,18 @@ object CorpusEntries {
          |  CAST(coalesce(a3.n_ctx_unseen, 0) AS BIGINT) AS n_ctx_unseen,
          |  ${r4("a3.s4 / 10000.0 / a3.n_trigrams")} AS avg_nll
          |FROM documents d LEFT JOIN a3 USING (doc_id)
-         |WHERE d.doc_id % 2 = 1""".stripMargin,
+         |WHERE d.doc_id % 2 = 1""".stripMargin)),
 
     // fixed-threshold routing: the KN chain scores BOTH the calibration
     // slice (%4=2) and the routed corpus (odd) in one pass; thresholds =
     // r4-quantized terciles over the calibration rows only; the output
     // is the odd docs' buckets against those fixed cut-points
-    "q_ccnet_fixed" ->
-      s"""WITH ${oKnChainFor("doc_id % 4 = 0",
-             "doc_id % 4 = 2 OR doc_id % 2 = 1")},
-         |thf AS (
-         |  SELECT quantile_cont(avg_nll, [$OneThird, $TwoThirds]) AS th
-         |  FROM knl WHERE avg_nll IS NOT NULL AND doc_id % 4 = 2
-         |)
-         |SELECT k.doc_id, k.avg_nll,
-         |  CASE WHEN k.avg_nll IS NULL THEN 'unscored'
-         |       WHEN k.avg_nll <= ${r4("thf.th[1]")} THEN 'head'
-         |       WHEN k.avg_nll <= ${r4("thf.th[2]")} THEN 'middle'
-         |       ELSE 'tail' END AS bucket
-         |FROM knl k, thf WHERE k.doc_id % 2 = 1""".stripMargin,
+    Query("q_ccnet_fixed", qCcnetFixed, Some(ccnetFixedOracleSql)),
 
     // terciles over the KN scores; quantile_cont mirrors Spark's
     // interpolating percentile (the q_quality_deciles precedent), with
     // the same 16-digit third literals on both sides
-    "q_ccnet_buckets" ->
+    Query("q_ccnet_buckets", qCcnetBuckets, Some(
       s"""WITH $oKnChain,
          |th AS (
          |  SELECT quantile_cont(avg_nll, [$OneThird, $TwoThirds]) AS th
@@ -1376,28 +1382,22 @@ object CorpusEntries {
          |       WHEN k.avg_nll <= ${r4("th.th[1]")} THEN 'head'
          |       WHEN k.avg_nll <= ${r4("th.th[2]")} THEN 'middle'
          |       ELSE 'tail' END AS bucket
-         |FROM knl k, th""".stripMargin,
+         |FROM knl k, th""".stripMargin)),
 
     // score side = odd half's distinct-shingle index (the shingleIndex
     // mirror restricted to the split); reference side = even half's
     // distinct gram-hash set
-    "q_novelty" -> oNovelty,
+    Query("q_novelty", qNovelty, Some(oNovelty)),
     // bit-exact by the bloom no-false-negative contract: same oracle
-    "q_novelty_bloom" -> oNovelty,
+    Query("q_novelty_bloom", qNoveltyBloom, Some(oNovelty)),
 
 
     // gramless docs surface at weight 0, not absent (see oDsirChain)
-    "q_dsir" ->
-      s"""WITH $oDsirChain
-         |SELECT d.doc_id,
-         |  coalesce(per.n_grams, 0) AS n_grams,
-         |  coalesce(per.logw_q, 0) AS logw_q,
-         |  coalesce(per.logw_q, 0) > 0 AS selected
-         |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id""".stripMargin,
+    Query("q_dsir", qDsir, Some(dsirOracleSql)),
     // exponential-jitter weighted top-n: key_q = logw_q - lnu_q with u
     // the salted 16-bit md5 bucket uniform (the Sampling.hashBucket
     // mirror), ln quantized at 4dp; ties to the smaller doc_id
-    "q_dsir_resample" ->
+    Query("q_dsir_resample", qDsirResample, Some(
       s"""WITH $oDsirChain,
          |base AS (
          |  SELECT d.doc_id,
@@ -1412,25 +1412,25 @@ object CorpusEntries {
          |      / 65536.0) * 10000 + 0.5) AS BIGINT) AS key_q
          |FROM base
          |ORDER BY key_q DESC, doc_id
-         |LIMIT $DsirResampleN""".stripMargin,
-    "q_unigram_train" ->
+         |LIMIT $DsirResampleN""".stripMargin)),
+    Query("q_unigram_train", qUnigramTrain, Some(
       s"""WITH ${oUnigramChain(withEncodeChain = false)}
          |SELECT v2.piece, CAST(v2.u AS BIGINT) AS n_uses, vq2.lq AS logp_q
-         |FROM v2 JOIN vq2 USING (piece)""".stripMargin,
-    "q_unigram_encode" ->
+         |FROM v2 JOIN vq2 USING (piece)""".stripMargin)),
+    Query("q_unigram_encode", qUnigramEncode, Some(
       s"""WITH ${oUnigramChain(withEncodeChain = true)}
          |SELECT token, CAST(sum(cnt) AS BIGINT) AS n FROM (
          |  SELECT cnt, unnest(regexp_extract_all(seg,
          |    chr(1) || '([^' || chr(2) || ']+)' || chr(2), 1)) AS token
          |  FROM finc
-         |) GROUP BY 1""".stripMargin,
+         |) GROUP BY 1""".stripMargin)),
 
     // the q_bpe_fertility report over the Viterbi segmentation: per-word
     // piece counts from the encode chain's final DP layer, corpus side
     // identical to the BPE mirror (words over MaxWordLen drop via the
     // inner join — the dictionary contract excludes them from training
     // and encoding on both engines)
-    "q_unigram_fertility" ->
+    Query("q_unigram_fertility", qUnigramFertility, Some(
       s"""WITH ${oUnigramChain(withEncodeChain = true)},
          |wpu AS (
          |  SELECT word, CAST(len(regexp_extract_all(seg,
@@ -1459,24 +1459,24 @@ object CorpusEntries {
          |  ${r4("CAST(n_pieces AS DOUBLE) / CAST(n_words AS DOUBLE)")} AS fertility,
          |  ${r4("CAST(n_word_chars AS DOUBLE) / CAST(n_pieces AS DOUBLE)")}
          |    AS chars_per_piece
-         |FROM au""".stripMargin,
-    "q_bpe_train" ->
+         |FROM au""".stripMargin)),
+    Query("q_bpe_train", qBpeTrain, Some(
       s"""WITH $oBpeChain
          |${(1 to BpeIters).map(i =>
                s"SELECT CAST($i AS BIGINT) AS iter, left_sym, right_sym, " +
                  s"left_sym || right_sym AS merged, pair_count FROM b$i")
-             .mkString("\nUNION ALL\n")}""".stripMargin,
-    "q_bpe_encode" ->
+             .mkString("\nUNION ALL\n")}""".stripMargin)),
+    Query("q_bpe_encode", qBpeEncode, Some(
       s"""WITH $oBpeChain
          |SELECT token, CAST(sum(cnt) AS BIGINT) AS n FROM (
          |  SELECT cnt, unnest(regexp_extract_all(seq,
          |    chr(1) || '([^' || chr(2) || ']+)' || chr(2), 1)) AS token
          |  FROM d$BpeIters
-         |) GROUP BY 1""".stripMargin,
+         |) GROUP BY 1""".stripMargin)),
 
     // the word is recovered from the final bracketed seq by stripping the
     // marker chars; per-word piece count = bracketed symbol count
-    "q_bpe_fertility" ->
+    Query("q_bpe_fertility", qBpeFertility, Some(
       s"""WITH $oBpeChain,
          |wp AS (
          |  SELECT replace(replace(seq, chr(1), ''), chr(2), '') AS word,
@@ -1505,8 +1505,8 @@ object CorpusEntries {
          |  ${r4("CAST(n_pieces AS DOUBLE) / CAST(n_words AS DOUBLE)")} AS fertility,
          |  ${r4("CAST(n_word_chars AS DOUBLE) / CAST(n_pieces AS DOUBLE)")}
          |    AS chars_per_piece
-         |FROM a""".stripMargin,
-    "q_sample_weighted" ->
+         |FROM a""".stripMargin)),
+    Query("q_sample_weighted", qSampleWeighted, Some(
       s"""WITH pr AS (
          |  SELECT doc_id, n_chars,
          |    CAST(n_chars AS DOUBLE) /
@@ -1517,9 +1517,9 @@ object CorpusEntries {
          |)
          |SELECT doc_id, n_chars,
          |  floor(priority * 10000 + 0.5) / 10000 AS priority
-         |FROM pr ORDER BY pr.priority DESC, doc_id LIMIT $WeightedN""".stripMargin,
+         |FROM pr ORDER BY pr.priority DESC, doc_id LIMIT $WeightedN""".stripMargin)),
 
-    "q_split" ->
+    Query("q_split", qSplit, Some(
       s"""SELECT doc_id, source,
          |  CASE
          |    WHEN substr(md5('$SplitSalt' || CAST(doc_id AS VARCHAR)), 1, 4)
@@ -1528,11 +1528,11 @@ object CorpusEntries {
          |      < '${hex4(0.95)}' THEN 'val'
          |    ELSE 'test'
          |  END AS split
-         |FROM documents""".stripMargin,
+         |FROM documents""".stripMargin)),
 
     // global rank over (salted hash, doc_id) — the oracle's single-node
     // row_number IS the spec the bucket-offset construction must equal
-    "q_shuffle_shards" ->
+    Query("q_shuffle_shards", qShuffleShards, Some(
       s"""WITH h AS (
          |  SELECT doc_id,
          |    ${EntryMath.oHash60(s"concat('$ShardSalt', CAST(doc_id AS VARCHAR))")} AS h
@@ -1542,12 +1542,12 @@ object CorpusEntries {
          |  SELECT doc_id, row_number() OVER (ORDER BY h, doc_id) - 1 AS rk FROM h
          |)
          |SELECT doc_id, rk // $ShardSize AS shard, rk % $ShardSize AS pos
-         |FROM r""".stripMargin,
+         |FROM r""".stripMargin)),
 
     // the stride-interleave spec: in-stratum seeded rank → evenly-spaced
     // frac = (2r+1)/(2·n_s) → one global order over (frac, lang, doc_id);
     // the single-node row_number IS what the bucketed construction equals
-    "q_shards_stratified" ->
+    Query("q_shards_stratified", qShardsStratified, Some(
       s"""WITH h AS (
          |  SELECT doc_id, lang,
          |    ${EntryMath.oHash60(s"concat('$StratShardSalt', CAST(doc_id AS VARCHAR))")} AS h
@@ -1571,13 +1571,13 @@ object CorpusEntries {
          |)
          |SELECT doc_id, lang, rk // $StratShardSize AS shard,
          |  rk % $StratShardSize AS pos
-         |FROM g""".stripMargin,
+         |FROM g""".stripMargin)),
 
     // the oracle recomputes shard assignment AND both checksum copies from
     // the parquet originals: matching the Spark side's jsonl re-read ⊕
     // manifest join proves export losslessness, exact shard sizes, and
     // manifest agreement in one hash compare
-    "q_export_shards" ->
+    Query("q_export_shards", qExportShards, Some(
       s"""WITH h AS (
          |  SELECT doc_id, n_chars, text,
          |    ${EntryMath.oHash60(s"concat('$ExportSalt', CAST(doc_id AS VARCHAR))")} AS h
@@ -1601,19 +1601,19 @@ object CorpusEntries {
          |  CAST(count(*) AS BIGINT) AS m_n_rows,
          |  CAST(sum((pos + 1) * (${EntryMath.oHash60("text")} % 1000003)) AS BIGINT)
          |    AS m_checksum
-         |FROM a GROUP BY shard""".stripMargin,
+         |FROM a GROUP BY shard""".stripMargin)),
 
     // the oracle reads the PARQUET originals: matching the Spark side's
     // jsonl re-read proves the export→import path lossless
-    "q_jsonl_roundtrip" ->
+    Query("q_jsonl_roundtrip", qJsonlRoundtrip, Some(
       s"""SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
          |  CAST(sum(${EntryMath.oHash60("text")} % 1000003) AS BIGINT)
          |    AS text_hash_sum,
          |  min(doc_id) AS min_id, max(doc_id) AS max_id
-         |FROM documents GROUP BY 1, 2""".stripMargin,
+         |FROM documents GROUP BY 1, 2""".stripMargin)),
 
-    "q_drift" ->
+    Query("q_drift", qDrift, Some(
       """WITH hr AS (
         |  SELECT CAST(least(floor(CAST(n_chars AS DOUBLE) / 100), 14) AS INTEGER) AS bin,
         |    count(*) AS cnt_ref
@@ -1653,8 +1653,8 @@ object CorpusEntries {
         |  psi_term, js_term,
         |  floor(psi * 10000 + 0.5) / 10000 AS psi,
         |  floor(js * 10000 + 0.5) / 10000 AS js
-        |FROM terms, g""".stripMargin,
-    "q_pack" ->
+        |FROM terms, g""".stripMargin)),
+    Query("q_pack", qPack, Some(
       s"""WITH $oChunks,
          |o AS (
          |  SELECT doc_id, chunk_id, start_token, n_chunk_tokens, chunk_md5,
@@ -1668,11 +1668,11 @@ object CorpusEntries {
          |  global_offset // $PackSeqLen AS seq_id,
          |  global_offset % $PackSeqLen AS seq_offset,
          |  (global_offset % $PackSeqLen) + n_chunk_tokens > $PackSeqLen AS spans_seq
-         |FROM o""".stripMargin,
+         |FROM o""".stripMargin)),
 
     // the q_pack chain aggregated per sequence; fill_drop_frac = tokens of
     // NON-spanning chunks / seqLen (the drop-at-boundary survival rate)
-    "q_pack_stats" ->
+    Query("q_pack_stats", qPackStats, Some(
       s"""WITH $oChunks,
          |o AS (
          |  SELECT doc_id, chunk_id, n_chunk_tokens,
@@ -1695,9 +1695,9 @@ object CorpusEntries {
          |    AS n_spanning,
          |  ${r4(s"CAST(sum(CASE WHEN spans_seq THEN 0 ELSE n_chunk_tokens END) AS DOUBLE) / $PackSeqLen.0")}
          |    AS fill_drop_frac
-         |FROM p GROUP BY seq_id""".stripMargin,
+         |FROM p GROUP BY seq_id""".stripMargin)),
 
-    "q_substring_dup" -> {
+    Query("q_substring_dup", qSubstringDup, Some {
       val grams = (0 until SubstrN).map(k => s"toks[i+$k]").mkString(", ")
       s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
          |g AS (
@@ -1723,12 +1723,12 @@ object CorpusEntries {
          |  CAST(coalesce(a.n_dup_grams, 0) AS BIGINT) AS n_dup_grams,
          |  coalesce(${r4("a.n_dup_grams * 1.0 / a.n_grams")}, 0.0) AS dup_frac
          |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin
-    },
+    }),
 
     // suffix-window scrub spans: the same window→hash→distinct-doc→
     // run-merge pipeline, with DuckDB's lag/sum window pair doing the
     // maximal-run merge the Spark side does
-    "q_substring_sa" ->
+    Query("q_substring_sa", qSubstringSa, Some(
       s"""WITH pos AS (
          |  SELECT doc_id, text,
          |    unnest(range(1, length(text) - ${SubstrSpanLen - 1} + 1)) AS p
@@ -1760,9 +1760,9 @@ object CorpusEntries {
          |)
          |SELECT doc_id, CAST(min(p) AS BIGINT) AS span_start,
          |  CAST(max(p) - min(p) + $SubstrSpanLen AS BIGINT) AS span_len
-         |FROM grp GROUP BY doc_id, g""".stripMargin,
+         |FROM grp GROUP BY doc_id, g""".stripMargin)),
 
-    "q_sample_temperature" ->
+    Query("q_sample_temperature", qSampleTemperature, Some(
       s"""WITH g AS (
          |  SELECT source, lang, count(*) AS n_docs FROM documents GROUP BY 1, 2
          |), w AS (
@@ -1783,9 +1783,9 @@ object CorpusEntries {
          |    CAST(th.threshold AS BIGINT) AS threshold
          |  FROM documents d JOIN th USING (source, lang)
          |)
-         |SELECT * FROM b WHERE bucket < threshold""".stripMargin,
+         |SELECT * FROM b WHERE bucket < threshold""".stripMargin)),
 
-    "q_sample_exact_n" ->
+    Query("q_sample_exact_n", qSampleExactN, Some(
       s"""WITH r AS (
          |  SELECT doc_id, lang,
          |    CAST(row_number() OVER (PARTITION BY lang
@@ -1793,24 +1793,13 @@ object CorpusEntries {
          |      AS BIGINT) AS sample_rank
          |  FROM documents
          |)
-         |SELECT * FROM r WHERE sample_rank <= $ExactNPerLang""".stripMargin,
+         |SELECT * FROM r WHERE sample_rank <= $ExactNPerLang""".stripMargin)),
 
-    "q_quality_rules" ->
-      s"""WITH $oRulesChain
-         |SELECT *,
-         |  (ok_words AND ok_mean_len AND ok_word_len AND ok_stopwords AND ok_short)
-         |    AS keep,
-         |  CASE WHEN NOT ok_words THEN 'n_words'
-         |       WHEN NOT ok_mean_len THEN 'mean_word_len'
-         |       WHEN NOT ok_word_len THEN 'max_word_len'
-         |       WHEN NOT ok_stopwords THEN 'stopwords'
-         |       WHEN NOT ok_short THEN 'short_words'
-         |       ELSE NULL END AS fail_reason
-         |FROM f""".stripMargin,
+    Query("q_quality_rules", qQualityRules, Some(qualityRulesOracleSql)),
 
     // per-rule ablation off the same flags CTE: one aggregate row of
     // exact counts, unpivoted to one row per rule
-    "q_rules_ablation" -> {
+    Query("q_rules_ablation", qRulesAblation, Some {
       val rules = Seq("n_words" -> "ok_words",
         "mean_word_len" -> "ok_mean_len", "max_word_len" -> "ok_word_len",
         "stopwords" -> "ok_stopwords", "short_words" -> "ok_short")
@@ -1835,9 +1824,9 @@ object CorpusEntries {
          |  FROM f
          |)
          |$rows""".stripMargin
-    },
+    }),
 
-    "q_lm_score" ->
+    Query("q_lm_score", qLmScore, Some(
       s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
          |bg AS (
          |  SELECT doc_id, unnest(
@@ -1868,12 +1857,12 @@ object CorpusEntries {
          |  CAST(coalesce(a.n_unseen, 0) AS BIGINT) AS n_unseen,
          |  ${r4("a.s4 / 10000.0 / a.n_bigrams")} AS avg_nll,
          |  ${r4("exp(a.s4 / 10000.0 / a.n_bigrams)")} AS perplexity
-         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin,
+         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin)),
 
     // arithmetic mirrored op-for-op with explicit DOUBLE casts (DuckDB
     // would otherwise run 0.4 * n as DECIMAL math and diverge from
     // Spark's double); per-gram NLLs 4dp-quantized before the sum
-    "q_backoff_lm" ->
+    Query("q_backoff_lm", qBackoffLm, Some(
       s"""WITH tr AS (SELECT string_split(text, ' ') AS toks FROM documents
          |  WHERE doc_id % 2 = 0),
          |sc AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
@@ -1941,9 +1930,9 @@ object CorpusEntries {
          |  CAST(coalesce(a.n_unseen, 0) AS BIGINT) AS n_unseen,
          |  ${r4("a.s4 / 10000.0 / a.n_trigrams")} AS avg_nll
          |FROM documents d LEFT JOIN a USING (doc_id)
-         |WHERE d.doc_id % 2 = 1""".stripMargin,
+         |WHERE d.doc_id % 2 = 1""".stripMargin)),
 
-    "q_bigram_lm" ->
+    Query("q_bigram_lm", qBigramLm, Some(
       s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
          |bg AS (
          |  SELECT unnest(
@@ -1959,9 +1948,9 @@ object CorpusEntries {
          |pfx AS (SELECT w1, CAST(sum(n) AS BIGINT) AS n_prefix FROM bi GROUP BY w1)
          |SELECT bigram, n, n_prefix, ${r4("n * 1.0 / n_prefix")} AS cond_p
          |FROM bi JOIN pfx USING (w1)
-         |WHERE n >= $LmMinCount""".stripMargin,
+         |WHERE n >= $LmMinCount""".stripMargin)),
 
-    "q_quality_deciles" ->
+    Query("q_quality_deciles", qQualityDeciles, Some(
       s"""WITH ${OracleSql.qualityScoreCte},
          |th AS (
          |  SELECT quantile_cont(quality_score,
@@ -1971,12 +1960,12 @@ object CorpusEntries {
          |SELECT s.doc_id, s.quality_score,
          |  CAST(1 + len(list_filter(th.th, t -> s.quality_score >= t)) AS INTEGER)
          |    AS decile
-         |FROM qscore s, th""".stripMargin,
+         |FROM qscore s, th""".stripMargin)),
 
-    "q_decontaminate" -> decontamOracleSql,
+    Query("q_decontaminate", qDecontaminate, Some(decontamOracleSql)),
     // one idx block per n, unioned with an n tag; rates are ratios of
     // exact count sums (single division), mirroring screenNSweep
-    "q_decontam_nsweep" -> {
+    Query("q_decontam_nsweep", qDecontamNsweep, Some {
       def idxBlock(n: Int): String = {
         val grams = (0 until n).map(k => s"toks[i+$k]").mkString(", ")
         s"""sh$n AS (
@@ -2017,45 +2006,17 @@ object CorpusEntries {
          |  ${r4("CAST(sum(n_hits) AS DOUBLE) / CAST(sum(n_shingles) AS DOUBLE)")}
          |    AS pooled_hit_frac
          |FROM pd GROUP BY n""".stripMargin
-    },
+    }),
     // the bloom-prescreened variant must lose NOTHING: it is hash-checked
     // against the exact screen's own oracle, bit for bit
-    "q_decontaminate_bloom" -> decontamOracleSql,
+    Query("q_decontaminate_bloom", qDecontaminateBloom, Some(decontamOracleSql)),
 
-    "q_repetition" ->
-      s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-         |base AS (
-         |  SELECT doc_id, len(toks) AS n_tokens,
-         |    ${r4("1.0 - len(list_distinct(toks)) * 1.0 / len(toks)")}
-         |      AS token_dup_frac
-         |  FROM tk
-         |),
-         |bg AS (
-         |  SELECT doc_id, unnest(
-         |    CASE WHEN len(toks) < 2 THEN CAST([] AS VARCHAR[])
-         |         ELSE list_transform(range(1, len(toks)),
-         |                i -> concat_ws(' ', toks[i], toks[i+1])) END) AS g
-         |  FROM tk
-         |),
-         |c AS (SELECT doc_id, g, count(*) AS c FROM bg GROUP BY 1, 2),
-         |a AS (
-         |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n2,
-         |    CAST(sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS BIGINT) AS dup_occ,
-         |    max(c) AS top_c
-         |  FROM c GROUP BY 1
-         |)
-         |SELECT b.doc_id, b.n_tokens, b.token_dup_frac,
-         |  coalesce(${r4("dup_occ * 1.0 / n2")}, 0.0) AS dup_bigram_frac,
-         |  coalesce(${r4("top_c * 1.0 / n2")}, 0.0) AS top_bigram_frac,
-         |  (b.token_dup_frac <= $MaxTokenDup
-         |   AND coalesce(${r4("dup_occ * 1.0 / n2")}, 0.0) <= $MaxDupBigram
-         |   AND coalesce(${r4("top_c * 1.0 / n2")}, 0.0) <= $MaxTopBigram) AS keep
-         |FROM base b LEFT JOIN a ON a.doc_id = b.doc_id""".stripMargin,
+    Query("q_repetition", qRepetition, Some(repetitionOracleSql)),
 
     // one CTE block per n (DuckDB range(1, stop) is empty when stop <= 1,
     // so short docs just produce no grams); positions are 1-based here vs
     // Spark's 0-based — only their DISTINCT count enters the fractions
-    "q_repetition_ngrams" -> {
+    Query("q_repetition_ngrams", qRepetitionNgrams, Some {
       def block(n: Int): String =
         s"""g$n AS (
            |  SELECT doc_id, st,
@@ -2105,9 +2066,9 @@ object CorpusEntries {
          |  ${joins.mkString("\n  ")}
          |)
          |SELECT *, ($keep) AS keep FROM fr""".stripMargin
-    },
+    }),
 
-    "q_source_mix" ->
+    Query("q_source_mix", qSourceMix, Some(
       s"""WITH g AS (
          |  SELECT source, lang, count(*) AS n_docs,
          |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
@@ -2118,13 +2079,13 @@ object CorpusEntries {
          |  ${r4("n_tokens * 1.0 / n_docs")} AS mean_doc_tokens,
          |  ${r4(s"pow(n_docs, $MixAlpha) / sum(pow(n_docs, $MixAlpha)) OVER ()")}
          |    AS mix_weight
-         |FROM g""".stripMargin,
+         |FROM g""".stripMargin)),
 
     // water-filling mirror: weight quantized ONCE (int64), then the
     // rounds unroll as CTE pairs (pool aggregate, cap step) in pure
     // integer arithmetic — `//` floors exactly like Spark's `div` on the
     // non-negative operands the plan guarantees
-    "q_mix_plan" -> {
+    Query("q_mix_plan", qMixPlan, Some {
       def tblock(k: Int): String =
         s"""t$k AS (
            |  SELECT CAST(sum(CASE WHEN NOT capped THEN w ELSE 0 END) AS BIGINT) AS wsum,
@@ -2174,9 +2135,9 @@ object CorpusEntries {
          |  ${r4("CAST(quota_tokens AS DOUBLE) / n_tokens")} AS epochs,
          |  capped
          |FROM fin""".stripMargin
-    },
+    }),
 
-    "q_dedup_incremental" -> {
+    Query("q_dedup_incremental", qDedupIncremental, Some {
       val sig = (0 until Dedup.MinHashK)
         .map(j => s"min((h * ${Dedup.mhA(j)} + ${Dedup.mhB(j)}) % ${Dedup.MinHashP}) AS mh$j")
         .mkString(", ")
@@ -2233,9 +2194,9 @@ object CorpusEntries {
          |  coalesce(n_corpus_matches, 0) AS n_corpus_matches,
          |  coalesce(n_batch_matches, 0) AS n_batch_matches
          |FROM pop LEFT JOIN perdoc ON perdoc.doc_id = pop.doc_id""".stripMargin
-    },
+    }),
 
-    "q_sample_hash" ->
+    Query("q_sample_hash", qSampleHash, Some(
       s"""WITH b AS (
          |  SELECT doc_id, lang,
          |    substr(md5(concat('$SampleSalt', CAST(doc_id AS VARCHAR))), 1, 4)
@@ -2252,9 +2213,9 @@ object CorpusEntries {
          |WHERE bh < '${hex4(UniformRate)}'
          |   OR bh < (CASE lang WHEN 'en' THEN '${hex4(StratRates("en"))}'
          |                      WHEN 'de' THEN '${hex4(StratRates("de"))}'
-         |                      ELSE '${hex4(StratDefault)}' END)""".stripMargin,
+         |                      ELSE '${hex4(StratDefault)}' END)""".stripMargin)),
 
-    "q_vocab" ->
+    Query("q_vocab", qVocab, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
         |), g AS (
@@ -2265,9 +2226,9 @@ object CorpusEntries {
         |    CAST(row_number() OVER (ORDER BY freq DESC, token) AS INTEGER) AS rk
         |  FROM g
         |)
-        |SELECT token, freq, df, rk FROM rk WHERE rk <= 50""".stripMargin,
+        |SELECT token, freq, df, rk FROM rk WHERE rk <= 50""".stripMargin)),
 
-    "q_tfidf" ->
+    Query("q_tfidf", qTfidf, Some(
       s"""WITH tok AS (
          |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
          |), tf AS (
@@ -2285,11 +2246,11 @@ object CorpusEntries {
          |      ORDER BY tfidf DESC, token) AS INTEGER) AS rk
          |  FROM s
          |)
-         |SELECT doc_id, rk, token, tf, df, tfidf FROM rk WHERE rk <= 3""".stripMargin,
+         |SELECT doc_id, rk, token, tf, df, tfidf FROM rk WHERE rk <= 3""".stripMargin)),
 
     // mirrors TextAnalysis.charEntropy: per-position substr explode, each
     // −p·ln p term quantized at 1e12 before the per-doc sum
-    "q_char_entropy" ->
+    Query("q_char_entropy", qCharEntropy, Some(
       """WITH chars AS (
         |  SELECT doc_id, substr(text, CAST(i.i AS INTEGER), 1) AS ch
         |  FROM documents, unnest(range(1, length(text) + 1)) AS i(i)
@@ -2305,12 +2266,12 @@ object CorpusEntries {
         |      -(c.c / t.n_chars_total) * ln(c.c / t.n_chars_total) * 1e12 + 0.5
         |    ) AS BIGINT)) AS BIGINT) / 1e12) * 10000 + 0.5) / 10000 AS char_entropy
         |FROM counts c JOIN totals t USING (doc_id)
-        |GROUP BY 1, 2, 3""".stripMargin,
+        |GROUP BY 1, 2, 3""".stripMargin)),
 
     // mirrors Dedup.tfidfCosinePairs: df cap 100, w² quantized at 1e6 for
     // the norm, normalized products quantized at 1e12 for the similarity —
     // integer sums, so no float-order drift between engines
-    "q_tfidf_pairs" ->
+    Query("q_tfidf_pairs", qTfidfPairs, Some(
       s"""WITH tok AS (
          |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
          |), tf AS (
@@ -2336,12 +2297,12 @@ object CorpusEntries {
          |  GROUP BY 1, 2
          |)
          |SELECT doc_a, doc_b, floor(sim * 10000 + 0.5) / 10000 AS cosine
-         |FROM p WHERE sim >= 0.6""".stripMargin,
+         |FROM p WHERE sim >= 0.6""".stripMargin)),
 
     // mirrors TextAnalysis.bm25: same k1/b constants (interpolated from the
     // Scala values — Double.toString round-trips, so both engines parse the
     // identical double), token-ordered left-to-right per-doc sum
-    "q_bm25" ->
+    Query("q_bm25", qBm25, Some(
       s"""WITH tok AS (
          |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
          |), lens AS (
@@ -2372,9 +2333,9 @@ object CorpusEntries {
          |    CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INTEGER) AS rk
          |  FROM s
          |)
-         |SELECT doc_id, n_terms, score, rk FROM rk WHERE rk <= $Bm25TopK""".stripMargin,
+         |SELECT doc_id, n_terms, score, rk FROM rk WHERE rk <= $Bm25TopK""".stripMargin)),
 
-    "q_pii_redact" ->
+    Query("q_pii_redact", qPiiRedact, Some(
       s"""WITH a AS (
          |  SELECT doc_id,
          |    concat(text, ' contact ', source, '@example.com or call 555-',
@@ -2388,14 +2349,14 @@ object CorpusEntries {
          |    AS n_phones,
          |  regexp_replace(regexp_replace(aug, '${TextAnalysis.EmailRe}',
          |    '[EMAIL]', 'g'), '${TextAnalysis.PhoneRe}', '[PHONE]', 'g') AS redacted
-         |FROM a""".stripMargin,
+         |FROM a""".stripMargin)),
 
-    "q_chunks" ->
+    Query("q_chunks", qChunks, Some(
       s"""WITH $oChunks
          |SELECT doc_id, chunk_id, start_token, n_chunk_tokens, chunk_md5
-         |FROM chunks""".stripMargin,
+         |FROM chunks""".stripMargin)),
 
-    "q_passage_dedup" ->
+    Query("q_passage_dedup", qPassageDedup, Some(
       s"""WITH $oChunks
          |SELECT doc_id, chunk_id, chunk_md5,
          |  first_value(doc_id) OVER w AS canonical_doc_id,
@@ -2404,5 +2365,6 @@ object CorpusEntries {
          |   OR chunk_id != first_value(chunk_id) OVER w) AS is_duplicate
          |FROM chunks
          |WINDOW w AS (PARTITION BY chunk_md5 ORDER BY doc_id, chunk_id
-         |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin)
+         |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin)),
+  )
 }

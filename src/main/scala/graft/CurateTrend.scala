@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Composition-level scale check for the [[Curate]] pipeline (dev tooling,
   * sibling of [[BenchTrend]]): every Curate stage is individually trended
   * by its query-level twin, but the COMPOSITION feeds each stage the
@@ -30,19 +28,7 @@ object CurateTrend {
     // silently shrinks back to base size past stage 2)
     val synthDir = sys.env.getOrElse("SPARK_GRAFT_TREND_DIR",
       s"/tmp/graft_trend/${new java.io.File(baseDir).getName}x${copies}sw")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan strings of lineage-kept iterative loops are exponential to
-      // DESCRIBE (generateTreeString expands a DAG as a tree) — cap so the
-      // driver never OOMs stringifying a plan (r16 sweep, SCALE.md)
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     System.err.println(s"[curate-trend] synthesizing $synthDir = $baseDir x$copies (stopword-preserving)")
     sources.ScaleSynth.synthesize(spark, baseDir, synthDir, copies, keepStopwords = true)

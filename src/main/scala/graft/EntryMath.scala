@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Shared numeric/SQL helpers for the per-family entry objects (split out
-  * of the former monolithic ExtendedEntries): the 4dp floor-rounding rule,
-  * integer-cents money, and the DuckDB mirrors of hash60 and the
-  * left-to-right double dot product. See ExtendedEntries for the shared
-  * portability rules these implement. */
+/** Shared numeric/SQL helpers for the per-family entry objects: the 4dp
+  * floor-rounding rule, integer-cents money, and the DuckDB mirrors of
+  * hash60 and the left-to-right double dot product. See [[Query]]'s
+  * `oracle` for the shared portability rules these implement. */
 private[graft] object EntryMath {
 
   def r(c: Column): Column = floor(c * lit(10000) + lit(0.5)) / lit(10000)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions.{count, lit}
 
 /** Dev utility: print the formatted physical plan, wall time, and total
@@ -9,18 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan strings of lineage-kept iterative loops are exponential to
-      // DESCRIBE (generateTreeString expands a DAG as a tree) — cap so the
-      // driver never OOMs stringifying a plan (r16 sweep, SCALE.md)
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     val meter = new ShuffleMeter(spark.sparkContext)
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")

@@ -157,17 +157,8 @@ private[graft] object GraphEntries {
        |SELECT node, ${r4("rank * 1e6")} AS rank_ppm FROM r3""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fuzzy_join" -> qFuzzyJoin,
-    "q_pagerank" -> qPagerank,
-    "q_communities" -> qCommunities,
-    "q_kcore" -> qKcore,
-    "q_pagerank_dangling" -> qPagerankDangling,
-    "q_triangles" -> qTriangles,
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_fuzzy_join" ->
+  val entries: Seq[Query] = Seq(
+    Query("q_fuzzy_join", qFuzzyJoin, Some(
       """WITH names AS (
         |  SELECT DISTINCT p_name AS name FROM part WHERE p_name IS NOT NULL
         |), b AS (
@@ -179,10 +170,10 @@ private[graft] object GraphEntries {
         |  floor(jaro_winkler_similarity(a.name, c.name) * 10000 + 0.5) / 10000 AS sim
         |FROM capped a JOIN capped c
         |  ON a.blk = c.blk AND a.name < c.name AND abs(a.len - c.len) <= 2
-        |WHERE jaro_winkler_similarity(a.name, c.name) >= 0.85""".stripMargin,
+        |WHERE jaro_winkler_similarity(a.name, c.name) >= 0.85""".stripMargin)),
     // degree-oriented triangle census, same (deg, id) total order as
     // Graph.triangles so each triangle is counted exactly once
-    "q_triangles" ->
+    Query("q_triangles", qTriangles, Some(
       s"""WITH sup AS (
         |  SELECT DISTINCT l_partkey AS pk, l_suppkey AS sv FROM lineitem
         |), co AS (
@@ -215,25 +206,25 @@ private[graft] object GraphEntries {
         |SELECT n_nodes, n_edges, n_wedges, n_triangles,
         |  floor(3.0 * n_triangles / nullif(n_wedges, 0) * 10000 + 0.5) / 10000
         |    AS clustering
-        |FROM tot, t""".stripMargin,
-    "q_pagerank" -> pagerankUnrollSql(
+        |FROM tot, t""".stripMargin)),
+    Query("q_pagerank", qPagerank, Some(pagerankUnrollSql(
       """pairs AS (
         |  SELECT DISTINCT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b
         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         |), edges AS (
         |  SELECT a AS src, b AS dst FROM pairs
         |  UNION ALL SELECT b AS src, a AS dst FROM pairs
-        |)""".stripMargin),
-    "q_pagerank_dangling" -> pagerankUnrollSql(
+        |)""".stripMargin))),
+    Query("q_pagerank_dangling", qPagerankDangling, Some(pagerankUnrollSql(
       """pairs AS (
         |  SELECT DISTINCT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b
         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |), edges AS (SELECT a AS src, b AS dst FROM pairs)""".stripMargin),
+        |), edges AS (SELECT a AS src, b AS dst FROM pairs)""".stripMargin))),
     // k-core peel unrolled to exactly KcoreRounds rounds: each round
     // keeps edges whose BOTH endpoints had degree >= k in the previous
     // round's subgraph — post-fixpoint rounds are no-ops, so this equals
     // Graph.kcore's early-exiting loop
-    "q_kcore" -> {
+    Query("q_kcore", qKcore, Some {
       // AS MATERIALIZED is load-bearing: each round references the
       // previous one 3x, and inlined CTEs would re-expand the base scan
       // 3^rounds times ("too many open files" long before any result)
@@ -256,11 +247,11 @@ private[graft] object GraphEntries {
          |$rounds
          |SELECT src AS node, CAST(count(*) AS BIGINT) AS core_deg
          |FROM e$KcoreRounds GROUP BY src""".stripMargin
-    },
+    }),
     // synchronous LPA unrolled: per round, per node, the most frequent
     // neighbor label with smallest-label tiebreak — mirrors
     // Graph.labelPropagation exactly
-    "q_communities" -> {
+    Query("q_communities", qCommunities, Some {
       val rounds = (1 to 3).map { i =>
         s"""c$i AS (
            |  SELECT e.src AS node, l.label, count(*) AS c
@@ -290,6 +281,6 @@ private[graft] object GraphEntries {
          |SELECT node, label AS community,
          |  CAST(count(*) OVER (PARTITION BY label) AS BIGINT) AS community_size
          |FROM l3""".stripMargin
-    },
+    }),
   )
 }

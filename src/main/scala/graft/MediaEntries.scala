@@ -394,33 +394,8 @@ private[graft] object MediaEntries {
        |)""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_multimodal_meta" -> qMultimodalMeta,
-    "q_frame_sample" -> qFrameSample,
-    "q_media_wav" -> qMediaWav,
-    "q_media_bmp" -> qMediaBmp,
-    "q_media_decode" -> qMediaDecode,
-    "q_media_decode_wav" -> qMediaDecodeWav,
-    "q_audio_features" -> qAudioFeatures,
-    "q_image_ahash" -> qImageAhash,
-    "q_image_phash" -> qImagePhash,
-    "q_image_phash_neardup" -> qImagePhashNeardup,
-    "q_image_phash_classes" -> qImagePhashClasses,
-    "q_image_resize" -> qImageResize,
-    "q_image_neardup" -> qImageNeardup,
-    "q_media_decode_png" -> qMediaDecodePng,
-    "q_media_decode_jpeg" -> qMediaDecodeJpeg,
-    "q_media_stats" -> qMediaStats,
-    "q_media_png" -> qMediaPng,
-    "q_media_jpeg" -> qMediaJpeg,
-    "q_media_exif" -> qMediaExif,
-    "q_media_mp4" -> qMediaMp4,
-    "q_media_quarantine" -> qMediaQuarantine,
-    "q_pack_interleaved" -> qPackInterleaved,
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_multimodal_meta" ->
+  val entries: Seq[Query] = Seq(
+    Query("q_multimodal_meta", qMultimodalMeta, Some(
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         |  sha256(text) AS sha256,
@@ -432,8 +407,8 @@ private[graft] object MediaEntries {
         |    octet_length(encode(text)) // 4,
         |    octet_length(encode(text)) // 2,
         |    (octet_length(encode(text)) * 3) // 4) AS frame_offsets
-        |FROM documents""".stripMargin,
-    "q_frame_sample" ->
+        |FROM documents""".stripMargin)),
+    Query("q_frame_sample", qFrameSample, Some(
       """WITH f AS (
         |  SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
         |  FROM documents
@@ -446,8 +421,8 @@ private[graft] object MediaEntries {
         |  FROM f, range(4) r(i)
         |)
         |SELECT doc_id, frame_idx, frame_offset, n_bytes
-        |FROM fr WHERE frame_idx % 2 = 0""".stripMargin,
-    "q_media_wav" ->
+        |FROM fr WHERE frame_idx % 2 = 0""".stripMargin)),
+    Query("q_media_wav", qMediaWav, Some(
       s"""WITH f AS (
          |  SELECT doc_id,
          |    1 + doc_id % 2 AS channels,
@@ -475,8 +450,8 @@ private[graft] object MediaEntries {
          |    ${oLe("16", 2)}, '64617461', ${oLe("data_size", 4)})
          |    AS header_hex,
          |  CAST((data_size * 1000000) // byte_rate AS BIGINT) AS duration_us
-         |FROM g""".stripMargin,
-    "q_media_bmp" ->
+         |FROM g""".stripMargin)),
+    Query("q_media_bmp", qMediaBmp, Some(
       s"""WITH f AS (
          |  SELECT doc_id,
          |    16 + doc_id % 64 AS width,
@@ -506,12 +481,12 @@ private[graft] object MediaEntries {
          |    ${oLe("2835", 4)}, ${oLe("0", 4)}, ${oLe("0", 4)})
          |    AS header_hex,
          |  CAST(stride AS BIGINT) AS stride
-         |FROM h""".stripMargin,
+         |FROM h""".stripMargin)),
     // real-codec cross-check, audio: walked fields re-derived from the
     // generation rule; the Spark side REALLY decodes PCM frames via
     // javax.sound and folds exact sample stats (constant 0x5A body ⇒
     // every 16-bit LE sample is 23130)
-    "q_media_decode_wav" ->
+    Query("q_media_decode_wav", qMediaDecodeWav, Some(
       s"""WITH f AS (
          |  SELECT doc_id,
          |    1 + doc_id % 2 AS channels,
@@ -528,13 +503,13 @@ private[graft] object MediaEntries {
          |  CAST(data_size AS BIGINT) AS data_size,
          |  CAST(data_size // 2 AS BIGINT) AS n_samples,
          |  TRUE AS decode_agrees
-         |FROM g""".stripMargin,
+         |FROM g""".stripMargin)),
     // audio features over the patterned PCM: the closed-form sample rule
     // s(d,k) = ((d%16)*371 + k*97) % 2048 - 1024 re-derived per sample;
     // the Spark side REALLY decodes the WAV via javax.sound and folds the
     // same exact-integer stats (sum of squares is exact below 2^53, so
     // both engines take the same IEEE sqrt of the same value)
-    "q_audio_features" ->
+    Query("q_audio_features", qAudioFeatures, Some(
       s"""WITH f AS (
          |  SELECT doc_id, (doc_id % 100 + 1) * (1 + doc_id % 2) AS n
          |  FROM documents
@@ -554,11 +529,11 @@ private[graft] object MediaEntries {
          |    AS BIGINT) AS n_zero_cross,
          |  CAST(floor(sqrt(sum(CAST(s AS DOUBLE) * s) / count(*)) * 10000
          |    + 0.5) AS BIGINT) AS rms_q
-         |FROM w GROUP BY doc_id""".stripMargin,
+         |FROM w GROUP BY doc_id""".stripMargin)),
     // real-codec cross-check: walked fields re-derived from the shared
     // generation rule; decode_agrees is the in-band error contract — the
     // Spark side REALLY pixel-decodes via javax.imageio and compares
-    "q_media_decode" ->
+    Query("q_media_decode", qMediaDecode, Some(
       s"""WITH f AS (
          |  SELECT doc_id,
          |    16 + doc_id % 64 AS width,
@@ -575,24 +550,24 @@ private[graft] object MediaEntries {
          |  CAST(24 AS BIGINT) AS bpp,
          |  CAST(image_size + 54 AS BIGINT) AS n_bytes,
          |  TRUE AS decode_agrees
-         |FROM g""".stripMargin,
+         |FROM g""".stripMargin)),
     // aHash oracle: the pattern formula rendered in closed form — the
     // Spark side REALLY decodes the BMP bytes with javax.imageio, so a
     // hash match pins the whole decode→block-average→threshold path
-    "q_image_ahash" ->
+    Query("q_image_ahash", qImageAhash, Some(
       (s"WITH $oAhashBits\n" +
-        "SELECT doc_id, TRUE AS decoded_ok, ahash, mean_gray FROM bits"),
+        "SELECT doc_id, TRUE AS decoded_ok, ahash, mean_gray FROM bits"))),
     // pHash oracle: closed-form gray + the SAME quantized cosine table
     // (rendered from MediaDecode.DctC — one source of truth) through an
     // exact integer 2-D DCT; median = the 32nd smallest of the 63
     // non-DC coefficients, no interpolation anywhere
-    "q_image_phash" ->
+    Query("q_image_phash", qImagePhash, Some(
       s"""WITH $oPhashChain
          |SELECT doc_id, TRUE AS decoded_ok, phash, dct_median
-         |FROM pbits""".stripMargin,
+         |FROM pbits""".stripMargin)),
     // near-dup classes over the closed-form pHashes with the identical
     // 3x21-bit banding + exact-Hamming verify the Spark plan runs
-    "q_image_phash_neardup" ->
+    Query("q_image_phash_neardup", qImagePhashNeardup, Some(
       s"""WITH $oPhashChain,
          |ph AS (
          |  SELECT phash, CAST(count(*) AS BIGINT) AS n_members
@@ -619,12 +594,12 @@ private[graft] object MediaEntries {
          |  FROM pcand
          |)
          |SELECT hash_a, hash_b, hamming, n_a, n_b FROM psc
-         |WHERE hamming <= $PhashMaxHamming""".stripMargin,
+         |WHERE hamming <= $PhashMaxHamming""".stripMargin)),
     // same banded pairs → recursive components over the DISTINCT-HASH
     // graph (the q_simhash_classes reach idiom) → one row per duplicate
     // class; hashes with no near-dup neighbor label themselves, so
     // exact-dup-only classes surface too
-    "q_image_phash_classes" ->
+    Query("q_image_phash_classes", qImagePhashClasses, Some(
       s"""WITH RECURSIVE $oPhashChain,
          |ph AS (
          |  SELECT phash, CAST(count(*) AS BIGINT) AS n_members
@@ -665,11 +640,11 @@ private[graft] object MediaEntries {
          |SELECT class_id, CAST(count(*) AS BIGINT) AS n_hashes,
          |  CAST(sum(n_members) AS BIGINT) AS n_members
          |FROM lab GROUP BY class_id
-         |HAVING CAST(sum(n_members) AS BIGINT) >= 2""".stripMargin,
+         |HAVING CAST(sum(n_members) AS BIGINT) >= 2""".stripMargin)),
     // resize oracle: the bm CTE IS the closed-form 2x box average; the
     // digest compares every resized pixel (row-major), so one wrong
     // pixel anywhere in the real decode→resample path fails the hash
-    "q_image_resize" ->
+    Query("q_image_resize", qImageResize, Some(
       (s"WITH $oAhashBits\n" +
         """SELECT b.doc_id, TRUE AS decoded_ok,
           |  CAST(8 AS INTEGER) AS out_w, CAST(8 AS INTEGER) AS out_h,
@@ -677,23 +652,23 @@ private[graft] object MediaEntries {
           |    AS px_digest,
           |  m.mean_gray
           |FROM bm b JOIN mn m USING (doc_id)
-          |GROUP BY b.doc_id, m.mean_gray""".stripMargin),
+          |GROUP BY b.doc_id, m.mean_gray""".stripMargin))),
     // REAL PNG encode→decode round trip: lossless, so the decoded-pixel
     // aHash must equal the same closed-form pattern oracle as the BMP
     // path — one wrong byte in either direction of the codec fails it
-    "q_media_decode_png" ->
+    Query("q_media_decode_png", qMediaDecodePng, Some(
       (s"WITH $oAhashBits\n" +
-        "SELECT doc_id, TRUE AS decoded_ok, ahash, mean_gray FROM bits"),
+        "SELECT doc_id, TRUE AS decoded_ok, ahash, mean_gray FROM bits"))),
     // REAL JPEG round trip: lossy, so the contract is geometry + the
     // MAE-within-16-gray-levels boolean, all pinned as literals
-    "q_media_decode_jpeg" ->
+    Query("q_media_decode_jpeg", qMediaDecodeJpeg, Some(
       """SELECT doc_id, TRUE AS decoded_ok,
         |  CAST(16 AS BIGINT) AS dec_width, CAST(16 AS BIGINT) AS dec_height,
         |  TRUE AS mae_ok
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin)),
     // near-dup classes over the closed-form hashes with the identical
     // 4x16-bit banding + exact-Hamming verify the Spark plan runs
-    "q_image_neardup" -> s"""WITH $oAhashBits,
+    Query("q_image_neardup", qImageNeardup, Some(s"""WITH $oAhashBits,
          |h AS (
          |  SELECT ahash, CAST(count(*) AS BIGINT) AS n_members
          |  FROM bits GROUP BY ahash
@@ -719,12 +694,12 @@ private[graft] object MediaEntries {
          |  FROM cand
          |)
          |SELECT hash_a, hash_b, hamming, n_a, n_b FROM sc
-         |WHERE hamming <= $AhashMaxHamming""".stripMargin,
+         |WHERE hamming <= $AhashMaxHamming""".stripMargin)),
     // PNG walk oracle: expectations re-derived from the shared generation
     // rule (DuckDB has no crc32, so crc_ok/iend_ok are asserted from the
     // rule — the in-band error-contract pattern of the sketch queries; the
     // Spark side REALLY recomputes each CRC from the bytes)
-    "q_media_png" ->
+    Query("q_media_png", qMediaPng, Some(
       """WITH t AS (
         |  SELECT d.doc_id,
         |    CAST(sum(12 + 9 + (d.doc_id + j.i) % 21) AS BIGINT) AS text_bytes,
@@ -748,10 +723,10 @@ private[graft] object MediaEntries {
         |  TRUE AS crc_ok, TRUE AS iend_ok,
         |  CAST(8 + 25 + text_bytes + 12 + 1 + doc_id % 50 + 12 AS BIGINT)
         |    AS n_bytes
-        |FROM t""".stripMargin,
+        |FROM t""".stripMargin)),
     // JPEG walk oracle: every field re-derived from the shared generation
     // rule (marker chain + SOF0 + scanned entropy span), like q_media_png
-    "q_media_jpeg" ->
+    Query("q_media_jpeg", qMediaJpeg, Some(
       """WITH a AS (
         |  SELECT d.doc_id,
         |    CAST(sum(11 + (d.doc_id + j.i) % 19) AS BIGINT) AS app_bytes,
@@ -777,13 +752,13 @@ private[graft] object MediaEntries {
         |  CAST(elen AS BIGINT) AS entropy_len,
         |  TRUE AS eoi_ok,
         |  CAST(109 + app_bytes + 5 * ncomp + elen AS BIGINT) AS n_bytes
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin)),
     // EXIF oracle: byte order, IFD0 tag values, and the SOF0 cross-check
     // re-derived from the shared generation rule; the Spark side REALLY
     // reads them back endian-switched from the bytes
     // n_bytes: the r7 formula + 54 (TIFF grew 50 → 104 bytes: a 4th IFD0
     // entry carrying the 0x8769 ExifIFD pointer, plus the 42-byte sub-IFD)
-    "q_media_exif" ->
+    Query("q_media_exif", qMediaExif, Some(
       """SELECT doc_id, TRUE AS has_exif,
         |  CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS byte_order,
         |  CAST(4 AS BIGINT) AS n_tags,
@@ -800,10 +775,10 @@ private[graft] object MediaEntries {
         |  TRUE AS pixel_dims_match,
         |  CAST(205 + 5 * (1 + (doc_id % 2) * 2) + 5 + doc_id % 40 AS BIGINT)
         |    AS n_bytes
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin)),
     // MP4 oracle: every parsed field re-derived from the shared
     // generation rule; the Spark side walks the real nested box tree
-    "q_media_mp4" ->
+    Query("q_media_mp4", qMediaMp4, Some(
       """SELECT doc_id, TRUE AS is_mp4, 'isom' AS major_brand,
         |  CAST(3 AS BIGINT) AS n_top_boxes, TRUE AS sizes_ok,
         |  CAST(1000 AS BIGINT) AS timescale,
@@ -813,12 +788,12 @@ private[graft] object MediaEntries {
         |  CAST(120 + doc_id % 720 AS BIGINT) AS height,
         |  CAST(10 + doc_id % 80 AS BIGINT) AS mdat_len,
         |  CAST(244 + 10 + doc_id % 80 AS BIGINT) AS n_bytes
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin)),
     // corruption rule precedence (bad_crc > bad_magic > truncated for PNG,
     // bad_marker > bad_magic > truncated for JPEG) is the SYNTH-side
     // application order; the parse-side reason precedence maps 1:1 because
     // each corruption trips exactly its own gate
-    "q_media_quarantine" ->
+    Query("q_media_quarantine", qMediaQuarantine, Some(
       """WITH t AS (
         |  SELECT d.doc_id,
         |    CAST(sum(12 + 9 + (d.doc_id + j.i) % 21) AS BIGINT) AS text_bytes,
@@ -864,8 +839,8 @@ private[graft] object MediaEntries {
         |            WHEN reason = 'bad_marker' THEN 1 + k
         |            ELSE 4 + k END AS BIGINT) AS n_chunks,
         |  reason
-        |FROM jc WHERE reason IS NOT NULL""".stripMargin,
-    "q_media_stats" ->
+        |FROM jc WHERE reason IS NOT NULL""".stripMargin)),
+    Query("q_media_stats", qMediaStats, Some(
       """WITH w AS (
         |  SELECT doc_id,
         |    (doc_id % 100 + 1) * (1 + doc_id % 2) * 2 AS data_size,
@@ -886,8 +861,8 @@ private[graft] object MediaEntries {
         |  CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
         |  CAST(sum(units) AS BIGINT) AS total_units,
         |  CAST(sum(units) // count(*) AS BIGINT) AS avg_unit
-        |FROM u GROUP BY modality""".stripMargin,
-    "q_pack_interleaved" ->
+        |FROM u GROUP BY modality""".stripMargin)),
+    Query("q_pack_interleaved", qPackInterleaved, Some(
       """WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |st AS (
         |  SELECT doc_id, toks, unnest(range(1, len(toks) + 1, 30)) AS start
@@ -915,6 +890,6 @@ private[graft] object MediaEntries {
         |  global_offset // 512 AS seq_id,
         |  global_offset % 512 AS seq_offset,
         |  (global_offset % 512) + n_chunk_tokens > 512 AS spans_seq
-        |FROM o""".stripMargin,
+        |FROM o""".stripMargin)),
   )
 }

@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: generate PLANS.md — a per-query physical-plan inventory
   * (scans, shuffles, broadcasts, join/window/sort/aggregate node counts)
   * so plan-shape discipline is reviewable at a glance and diffable across
@@ -15,21 +13,10 @@ object PlanReport {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan strings of lineage-kept iterative loops are exponential to
-      // DESCRIBE (generateTreeString expands a DAG as a tree) — cap so the
-      // driver never OOMs stringifying a plan (r16 sweep, SCALE.md)
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      // AQE off so executedPlan is the complete static plan (exchanges and
-      // sorts included) without having to run every query
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE off so executedPlan is the complete static plan (exchanges and
+    // sorts included) without having to run every query
+    val spark = GraftSession.local(GraftSession.cpus,
+      "spark.sql.adaptive.enabled" -> "false")
 
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val plan = fn(spark, sfDir).queryExecution.executedPlan

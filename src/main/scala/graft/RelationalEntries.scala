@@ -267,81 +267,11 @@ private[graft] object RelationalEntries {
        |$rows""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_transitions" -> ((s, dir) =>
-      operators.EventAnalytics.transitions(Tables.events(s, dir))),
-    "q_paths" -> ((s, dir) =>
-      operators.EventAnalytics.topPaths(Tables.events(s, dir), 30, 3, 20)),
-    "q_peak_concurrency" -> ((s, dir) =>
-      operators.EventAnalytics.peakConcurrency(Tables.events(s, dir), 30)),
-    "q_winsorize" -> ((s, dir) =>
-      operators.Profile.winsorized(Tables.events(s, dir), "event_type", "value",
-        0.05, 0.95)),
-    "q_integrity" -> ((s, dir) => operators.Profile.integrity(Seq(
-      ("lineitem.l_orderkey -> orders.o_orderkey",
-        Tables.lineitem(s, dir), "l_orderkey", Tables.orders(s, dir), "o_orderkey"),
-      ("orders.o_custkey -> customer.c_custkey",
-        Tables.orders(s, dir), "o_custkey", Tables.customer(s, dir), "c_custkey"),
-      ("customer.c_nationkey -> nation.n_nationkey",
-        Tables.customer(s, dir), "c_nationkey", Tables.nation(s, dir), "n_nationkey"),
-      ("supplier.s_nationkey -> nation.n_nationkey",
-        Tables.supplier(s, dir), "s_nationkey", Tables.nation(s, dir), "n_nationkey")))),
-    "q_resample_ffill" -> qResampleFfill,
-    "q_gaps" -> ((s, dir) => Resample.gaps(
-      Tables.bars(s, dir), "symbol", "time", "1 hour")),
-    "q_unpivot" -> qUnpivot,
-    "q_range_join" -> qRangeJoin,
-    "q_zorder" -> qZorder,
-    "q_set_ops" -> qSetOps,
-    "q_pivot" -> qPivot,
-    "q_percentiles" -> qPercentiles,
-    "q_salted_agg" -> qSaltedAgg,
-    "q_asof_join" -> qAsofJoin,
-    "q_asof_fwd" -> qAsofFwd,
-    "q_asof_nearest" -> qAsofNearest,
-    "q_profile" -> qProfile,
-    "q_bars_incremental" -> qBarsIncremental,
-    "q_rollup_revenue" -> qRollupRevenue,
-    "q_cube_revenue" -> qCubeRevenue,
-    "q_topk_per_key" -> qTopkPerKey,
-    "q_agg_pricing" -> qAggPricing,
-    "q_join_revenue" -> qJoinRevenue,
-    "q_funnel" -> ((s, dir) => operators.EventAnalytics.funnel(
-      Tables.events(s, dir), FunnelSteps)),
-    "q_attribution" -> ((s, dir) => operators.EventAnalytics.attribution(
-      Tables.events(s, dir), "purchase")),
-    "q_cohort_retention" -> ((s, dir) => operators.EventAnalytics.cohortRetention(
-      Tables.events(s, dir))),
-    "q_scd2" -> ((s, dir) => operators.EventAnalytics.scd2(
-      Tables.events(s, dir), "user_id", "event_type")),
-    "q_zscore_outliers" -> ((s, dir) =>
-      Signals.zscoreOutliers(Tables.bars(s, dir), 20, 2.0)),
-    "q_cusum" -> ((s, dir) => Signals.cusum(Tables.bars(s, dir), 0.5, 5.0)),
-    "q_corr_matrix" -> ((s, dir) =>
-      Signals.corrMatrix(Tables.bars(s, dir), 10)),
-    "q_leadlag" -> ((s, dir) =>
-      Signals.leadLagMarket(Tables.bars(s, dir), 2, 10)),
-    "q_robust_outliers" -> ((s, dir) =>
-      Signals.robustOutliers(Tables.bars(s, dir), 20, 3.0)),
-    "q_rolling_ols" -> ((s, dir) =>
-      Signals.rollingOls(Tables.bars(s, dir), 20)),
-    "q_returns_vol" -> ((s, dir) =>
-      Signals.returnsVol(Tables.bars(s, dir), 20)),
-    "q_seasonality" -> ((s, dir) =>
-      Signals.seasonality(Tables.bars(s, dir))),
-    "q_rolling_beta" -> ((s, dir) =>
-      Signals.rollingBeta(Tables.bars(s, dir), 20)),
-    "q_sma_crossovers" -> ((s, dir) =>
-      Signals.smaCrossovers(Tables.bars(s, dir), 10, 20)),
-    "q_drawdown" -> ((s, dir) => Signals.drawdown(Tables.bars(s, dir))),
-    "q_rolling_corr" -> ((s, dir) => Signals.rollingCorrelation(
-      dailyTypeSeries(s, dir), CorrPairs, 20)),
-  )
-
-  def oracleSql: Map[String, String] = Map(
+  val entries: Seq[Query] = Seq(
     // same 30-min session cut as q_sessionize; path = first 3 event types
     // in (ts, event_id) order, top 20 by (count desc, path)
-    "q_paths" ->
+    Query("q_paths", (s, dir) =>
+      operators.EventAnalytics.topPaths(Tables.events(s, dir), 30, 3, 20), Some(
       """WITH e AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP))
@@ -362,12 +292,13 @@ private[graft] object RelationalEntries {
         |)
         |SELECT path, CAST(count(*) AS BIGINT) AS n_sessions
         |FROM p GROUP BY path
-        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin,
+        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin)),
     // same session CTE as q_sessionize, then the sweep: +1 at clipped
     // start / -1 after clipped end per overlapped day, running sum with
     // starts-first tie order, per-day max (tie order within a delta class
     // cannot move the max - see EventAnalytics.peakConcurrency)
-    "q_peak_concurrency" ->
+    Query("q_peak_concurrency", (s, dir) =>
+      operators.EventAnalytics.peakConcurrency(Tables.events(s, dir), 30), Some(
       """WITH e AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
         |    epoch_us(CAST(ts AS TIMESTAMP))
@@ -402,9 +333,11 @@ private[graft] object RelationalEntries {
         |)
         |SELECT day, CAST(max(c) AS BIGINT) AS peak_concurrent,
         |  CAST(count(*) / 2 AS BIGINT) AS n_sessions
-        |FROM sweep GROUP BY day""".stripMargin,
+        |FROM sweep GROUP BY day""".stripMargin)),
     // exact per-group percentile clip, integer-cents means
-    "q_winsorize" ->
+    Query("q_winsorize", (s, dir) =>
+      operators.Profile.winsorized(Tables.events(s, dir), "event_type", "value",
+        0.05, 0.95), Some(
       """WITH b AS (
         |  SELECT event_type, quantile_cont(value, 0.05) AS plo,
         |    quantile_cont(value, 0.95) AS phi
@@ -419,8 +352,9 @@ private[graft] object RelationalEntries {
         |  floor(min(b.plo) * 10000 + 0.5) / 10000 AS p_lo,
         |  floor(min(b.phi) * 10000 + 0.5) / 10000 AS p_hi
         |FROM events e JOIN b USING (event_type)
-        |GROUP BY e.event_type""".stripMargin,
-    "q_transitions" ->
+        |GROUP BY e.event_type""".stripMargin)),
+    Query("q_transitions", (s, dir) =>
+      operators.EventAnalytics.transitions(Tables.events(s, dir)), Some(
       """WITH nx AS (
         |  SELECT event_type AS from_type,
         |    lead(event_type) OVER (PARTITION BY user_id
@@ -433,8 +367,8 @@ private[graft] object RelationalEntries {
         |SELECT from_type, to_type, n,
         |  floor(n / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE)
         |    * 10000 + 0.5) / 10000 AS p
-        |FROM c""".stripMargin,
-    "q_resample_ffill" -> withTicksBars(
+        |FROM c""".stripMargin)),
+    Query("q_resample_ffill", qResampleFfill, Some(withTicksBars(
       """, span AS (
         |  SELECT symbol, min(time) AS t0, max(time) AS t1 FROM bars GROUP BY symbol
         |), grid AS (
@@ -450,9 +384,10 @@ private[graft] object RelationalEntries {
         |  CASE WHEN close IS NULL THEN 1 ELSE 0 END AS filled
         |FROM j
         |WINDOW w AS (PARTITION BY symbol ORDER BY time
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin),
+        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin))),
     // mirrors Resample.gaps: islands key = grid slot ordinal − row_number
-    "q_gaps" -> withTicksBars(
+    Query("q_gaps", (s, dir) => Resample.gaps(
+      Tables.bars(s, dir), "symbol", "time", "1 hour"), Some(withTicksBars(
       """, span AS (
         |  SELECT symbol, min(time) AS t0, max(time) AS t1 FROM bars GROUP BY symbol
         |), grid AS (
@@ -473,15 +408,23 @@ private[graft] object RelationalEntries {
         |)
         |SELECT symbol, min(time) AS gap_start, max(time) AS gap_end,
         |  count(*) AS gap_slots
-        |FROM isl GROUP BY symbol, island""".stripMargin),
-    "q_unpivot" -> withTicksBars(
+        |FROM isl GROUP BY symbol, island""".stripMargin))),
+    Query("q_unpivot", qUnpivot, Some(withTicksBars(
       """SELECT symbol, time, field, value FROM (
         |  SELECT symbol, time, 'open' AS field, open AS value FROM bars
         |  UNION ALL SELECT symbol, time, 'high', high FROM bars
         |  UNION ALL SELECT symbol, time, 'low', low FROM bars
         |  UNION ALL SELECT symbol, time, 'close', close FROM bars
-        |) u""".stripMargin),
-    "q_integrity" -> {
+        |) u""".stripMargin))),
+    Query("q_integrity", (s, dir) => operators.Profile.integrity(Seq(
+      ("lineitem.l_orderkey -> orders.o_orderkey",
+        Tables.lineitem(s, dir), "l_orderkey", Tables.orders(s, dir), "o_orderkey"),
+      ("orders.o_custkey -> customer.c_custkey",
+        Tables.orders(s, dir), "o_custkey", Tables.customer(s, dir), "c_custkey"),
+      ("customer.c_nationkey -> nation.n_nationkey",
+        Tables.customer(s, dir), "c_nationkey", Tables.nation(s, dir), "n_nationkey"),
+      ("supplier.s_nationkey -> nation.n_nationkey",
+        Tables.supplier(s, dir), "s_nationkey", Tables.nation(s, dir), "n_nationkey"))), Some {
       def chk(name: String, child: String, fk: String, parent: String,
           pk: String) =
         s"""SELECT '$name' AS relationship,
@@ -506,10 +449,11 @@ private[graft] object RelationalEntries {
         chk("supplier.s_nationkey -> nation.n_nationkey",
           "supplier", "s_nationkey", "nation", "n_nationkey"))
         .mkString("\nUNION ALL\n")
-    },
+    }),
     // same market CTE as q_rolling_beta; both return series 1e-4-quantized
     // to integers, hour-shifted equi-join, exact-long Pearson sums
-    "q_leadlag" -> withTicksBars(
+    Query("q_leadlag", (s, dir) =>
+      Signals.leadLagMarket(Tables.bars(s, dir), 2, 10), Some(withTicksBars(
       """, mkt AS (
         |  SELECT time,
         |    CAST(sum(CAST(floor(close * 100 + 0.5) AS BIGINT)) AS BIGINT)
@@ -546,10 +490,11 @@ private[graft] object RelationalEntries {
         |    / nullif(sqrt((CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
         |        * (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)), 0)
         |    * 10000 + 0.5) / 10000 AS corr
-        |FROM g""".stripMargin),
+        |FROM g""".stripMargin))),
     // exact-integer Pearson over 1e-4-quantized log returns, same guarded
     // log and quantization as the Spark side
-    "q_corr_matrix" -> withTicksBars(
+    Query("q_corr_matrix", (s, dir) =>
+      Signals.corrMatrix(Tables.bars(s, dir), 10), Some(withTicksBars(
       """, rr AS (
         |  SELECT symbol, time,
         |    CAST(floor(
@@ -574,10 +519,10 @@ private[graft] object RelationalEntries {
         |    / nullif(sqrt((CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
         |        * (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)), 0)
         |    * 10000 + 0.5) / 10000 AS corr
-        |FROM g""".stripMargin),
+        |FROM g""".stripMargin))),
     // CUSUM via the prefix-sum identity: running sum minus its running
     // minimum, same two-layer cumulative windows as the Spark side
-    "q_cusum" -> withTicksBars(
+    Query("q_cusum", (s, dir) => Signals.cusum(Tables.bars(s, dir), 0.5, 5.0), Some(withTicksBars(
       """, dd AS (
         |  SELECT symbol, time, close,
         |    close - lag(close) OVER (PARTITION BY symbol ORDER BY time) AS d
@@ -605,8 +550,9 @@ private[graft] object RelationalEntries {
         |)
         |SELECT symbol, time, close, z, cusum_pos, cusum_neg,
         |  cusum_pos > 5.0 OR cusum_neg > 5.0 AS alarm
-        |FROM mm WHERE z IS NOT NULL""".stripMargin),
-    "q_zscore_outliers" -> withTicksBars(
+        |FROM mm WHERE z IS NOT NULL""".stripMargin))),
+    Query("q_zscore_outliers", (s, dir) =>
+      Signals.zscoreOutliers(Tables.bars(s, dir), 20, 2.0), Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time, close,
         |    count(close) OVER wn AS c,
@@ -622,10 +568,11 @@ private[graft] object RelationalEntries {
         |  FROM w1
         |)
         |SELECT symbol, time, close, z, abs(z) > 2.0 AS is_outlier
-        |FROM zz WHERE z IS NOT NULL""".stripMargin),
+        |FROM zz WHERE z IS NOT NULL""".stripMargin))),
     // mirrors Signals.robustOutliers: same sorted-list median/MAD, same
     // 1.4826 consistency factor, threshold on the ROUNDED z
-    "q_robust_outliers" -> withTicksBars(
+    Query("q_robust_outliers", (s, dir) =>
+      Signals.robustOutliers(Tables.bars(s, dir), 20, 3.0), Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time, close,
         |    count(close) OVER wn AS cnt,
@@ -647,9 +594,10 @@ private[graft] object RelationalEntries {
         |  FROM w4 WHERE cnt = 20
         |)
         |SELECT symbol, time, close, robust_z, abs(robust_z) > 3.0 AS is_outlier
-        |FROM zz""".stripMargin),
+        |FROM zz""".stripMargin))),
     // mirrors Signals.returnsVol (incl. the positive-price guard)
-    "q_returns_vol" -> withTicksBars(
+    Query("q_returns_vol", (s, dir) =>
+      Signals.returnsVol(Tables.bars(s, dir), 20), Some(withTicksBars(
       """, w0 AS (
         |  SELECT symbol, time, close,
         |    CASE WHEN close > 0 AND (lag(close) OVER w) > 0
@@ -667,10 +615,11 @@ private[graft] object RelationalEntries {
         |SELECT symbol, time, close,
         |  floor(ret * 10000 + 0.5) / 10000 AS log_ret,
         |  floor((CASE WHEN cnt = 20 THEN sd END) * 10000 + 0.5) / 10000 AS vol_20
-        |FROM w1""".stripMargin),
+        |FROM w1""".stripMargin))),
     // mirrors Signals.seasonality: returns quantized at 1e9 before the
     // group mean (group sums are cross-partition, unlike window frames)
-    "q_seasonality" -> withTicksBars(
+    Query("q_seasonality", (s, dir) =>
+      Signals.seasonality(Tables.bars(s, dir)), Some(withTicksBars(
       """, w0 AS (
         |  SELECT symbol, time, volume,
         |    CASE WHEN close > 0 AND (lag(close) OVER w) > 0
@@ -683,10 +632,11 @@ private[graft] object RelationalEntries {
         |         / (count(ret) * 1e9)) * 10000 + 0.5) / 10000 AS mean_ret,
         |  CAST(sum(volume) AS BIGINT) AS volume,
         |  count(ret) AS n_rets
-        |FROM w0 GROUP BY 1, 2""".stripMargin),
+        |FROM w0 GROUP BY 1, 2""".stripMargin))),
     // mirrors Signals.rollingBeta: cents-quantized equal-weight index,
     // complete-case guaranteed by the cnt gate (see Scaladoc)
-    "q_rolling_beta" -> withTicksBars(
+    Query("q_rolling_beta", (s, dir) =>
+      Signals.rollingBeta(Tables.bars(s, dir), 20), Some(withTicksBars(
       """, mkt AS (
         |  SELECT time,
         |    CAST(sum(CAST(floor(close * 100 + 0.5) AS BIGINT)) AS BIGINT)
@@ -720,10 +670,11 @@ private[graft] object RelationalEntries {
         |  floor((CASE WHEN cnt = 20 AND (20 * sxx - sx * sx) <> 0
         |    THEN (20 * sxy - sx * sy) / (20 * sxx - sx * sx) END) * 10000 + 0.5) / 10000
         |    AS beta_20
-        |FROM w1""".stripMargin),
+        |FROM w1""".stripMargin))),
     // mirrors Signals.rollingOls: absolute row-number x (shift-invariant),
     // decomposable window sums only
-    "q_rolling_ols" -> withTicksBars(
+    Query("q_rolling_ols", (s, dir) =>
+      Signals.rollingOls(Tables.bars(s, dir), 20), Some(withTicksBars(
       """, w0 AS (
         |  SELECT symbol, time, close AS y,
         |    CAST(row_number() OVER (PARTITION BY symbol ORDER BY time) AS DOUBLE) AS x
@@ -746,8 +697,9 @@ private[graft] object RelationalEntries {
         |    THEN (20 * sxy - sx * sy) * (20 * sxy - sx * sy)
         |         / ((20 * sxx - sx * sx) * (20 * syy - sy * sy)) END) * 10000 + 0.5) / 10000
         |    AS r2_20
-        |FROM w1""".stripMargin),
-    "q_sma_crossovers" -> withTicksBars(
+        |FROM w1""".stripMargin))),
+    Query("q_sma_crossovers", (s, dir) =>
+      Signals.smaCrossovers(Tables.bars(s, dir), 10, 20), Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time,
         |    CASE WHEN count(close) OVER w10 = 10 THEN avg(close) OVER w10 END AS s10,
@@ -773,8 +725,8 @@ private[graft] object RelationalEntries {
         |       ELSE 'death_cross' END AS signal
         |FROM w3
         |WHERE spread IS NOT NULL AND ps IS NOT NULL
-        |  AND ((ps < 0 AND spread >= 0) OR (ps >= 0 AND spread < 0))""".stripMargin),
-    "q_drawdown" -> withTicksBars(
+        |  AND ((ps < 0 AND spread >= 0) OR (ps >= 0 AND spread < 0))""".stripMargin))),
+    Query("q_drawdown", (s, dir) => Signals.drawdown(Tables.bars(s, dir)), Some(withTicksBars(
       """, dbase AS (
         |  SELECT symbol, time, close,
         |    max(close) OVER wp AS peak,
@@ -790,8 +742,9 @@ private[graft] object RelationalEntries {
         |    AS underwater_bars
         |FROM dbase
         |WINDOW wc AS (PARTITION BY symbol ORDER BY time
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin),
-    "q_rolling_corr" ->
+        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin))),
+    Query("q_rolling_corr", (s, dir) => Signals.rollingCorrelation(
+      dailyTypeSeries(s, dir), CorrPairs, 20), Some(
       s"""WITH d AS (
          |  SELECT event_type AS key,
          |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS time,
@@ -817,11 +770,13 @@ private[graft] object RelationalEntries {
          |                ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
          |)
          |SELECT pair, time, floor(r * 10000 + 0.5) / 10000 AS corr
-         |FROM w WHERE c = 20 AND r IS NOT NULL AND NOT isnan(r)""".stripMargin,
-    "q_funnel" -> oFunnel(FunnelSteps),
+         |FROM w WHERE c = 20 AND r IS NOT NULL AND NOT isnan(r)""".stripMargin)),
+    Query("q_funnel", (s, dir) => operators.EventAnalytics.funnel(
+      Tables.events(s, dir), FunnelSteps), Some(oFunnel(FunnelSteps))),
     // mirrors EventAnalytics.attribution: same (ts, event_id) ordering,
     // same ROWS UNBOUNDED..1 PRECEDING frame, IGNORE NULLS first/last
-    "q_attribution" ->
+    Query("q_attribution", (s, dir) => operators.EventAnalytics.attribution(
+      Tables.events(s, dir), "purchase"), Some(
       """WITH ev AS (
         |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type
         |  FROM events
@@ -844,8 +799,9 @@ private[graft] object RelationalEntries {
         |SELECT user_id, event_id AS conversion_id, ts,
         |  first_touch_type, first_touch_id, last_touch_type, last_touch_id,
         |  epoch_ms(ts) - epoch_ms(last_touch_ts) AS gap_ms
-        |FROM w1 WHERE event_type = 'purchase'""".stripMargin,
-    "q_scd2" ->
+        |FROM w1 WHERE event_type = 'purchase'""".stripMargin)),
+    Query("q_scd2", (s, dir) => operators.EventAnalytics.scd2(
+      Tables.events(s, dir), "user_id", "event_type"), Some(
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, CAST(ts AS TIMESTAMP) AS ts
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
@@ -861,8 +817,9 @@ private[graft] object RelationalEntries {
         |  ts AS valid_from,
         |  lead(ts) OVER w AS valid_to,
         |  lead(ts) OVER w IS NULL AS is_current
-        |FROM opened WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
-    "q_cohort_retention" ->
+        |FROM opened WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin)),
+    Query("q_cohort_retention", (s, dir) => operators.EventAnalytics.cohortRetention(
+      Tables.events(s, dir)), Some(
       """WITH w AS (
         |  SELECT user_id, date_trunc('week', CAST(ts AS TIMESTAMP)) AS week
         |  FROM events
@@ -872,8 +829,8 @@ private[graft] object RelationalEntries {
         |  CAST(date_diff('day', f.cohort_week, d.week) // 7 AS INTEGER) AS week_offset,
         |  count(DISTINCT d.user_id) AS n_users
         |FROM d JOIN f USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
-    "q_set_ops" ->
+        |GROUP BY 1, 2""".stripMargin)),
+    Query("q_set_ops", qSetOps, Some(
       """SELECT user_id, 'purchase_no_error' AS cohort FROM (
         |  SELECT user_id FROM events WHERE event_type = 'purchase'
         |  EXCEPT
@@ -884,34 +841,34 @@ private[graft] object RelationalEntries {
         |  SELECT user_id FROM events WHERE event_type = 'purchase'
         |  INTERSECT
         |  SELECT user_id FROM events WHERE event_type = 'error'
-        |)""".stripMargin,
-    "q_pivot" ->
+        |)""".stripMargin)),
+    Query("q_pivot", qPivot, Some(
       """SELECT user_id,
         |  CAST(count(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS click,
         |  CAST(count(*) FILTER (WHERE event_type = 'error') AS BIGINT) AS error,
         |  CAST(count(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS purchase,
         |  CAST(count(*) FILTER (WHERE event_type = 'signup') AS BIGINT) AS signup,
         |  CAST(count(*) FILTER (WHERE event_type = 'view') AS BIGINT) AS view
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q_percentiles" ->
+        |FROM events GROUP BY user_id""".stripMargin)),
+    Query("q_percentiles", qPercentiles, Some(
       s"""SELECT event_type,
          |  ${r4("quantile_cont(value, 0.5)")} AS p50,
          |  ${r4("quantile_cont(value, 0.9)")} AS p90,
          |  ${r4("quantile_cont(value, 0.99)")} AS p99,
          |  count(*) AS n
-         |FROM events GROUP BY event_type""".stripMargin,
-    "q_salted_agg" ->
+         |FROM events GROUP BY event_type""".stripMargin)),
+    Query("q_salted_agg", qSaltedAgg, Some(
       """SELECT event_type,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0
         |    AS total_value,
         |  count(*) AS n
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_asof_join" -> OracleSql.withTicksBars(
+        |FROM events GROUP BY event_type""".stripMargin)),
+    Query("q_asof_join", qAsofJoin, Some(OracleSql.withTicksBars(
       """SELECT t.symbol, t.time, t.price,
         |  b.time AS asof_time, b.close AS asof_close, b.volume AS asof_volume
         |FROM ticks t ASOF LEFT JOIN bars b
-        |  ON t.symbol = b.symbol AND t.time >= b.time""".stripMargin),
-    "q_asof_fwd" -> OracleSql.withTicksBars(
+        |  ON t.symbol = b.symbol AND t.time >= b.time""".stripMargin))),
+    Query("q_asof_fwd", qAsofFwd, Some(OracleSql.withTicksBars(
       """SELECT t.symbol, t.time, t.price,
         |  CASE WHEN epoch_us(b.time) - epoch_us(t.time) <= 7200000000
         |    THEN b.time END AS asof_time,
@@ -920,8 +877,8 @@ private[graft] object RelationalEntries {
         |  CASE WHEN epoch_us(b.time) - epoch_us(t.time) <= 7200000000
         |    THEN b.volume END AS asof_volume
         |FROM ticks t ASOF LEFT JOIN bars b
-        |  ON t.symbol = b.symbol AND t.time <= b.time""".stripMargin),
-    "q_asof_nearest" -> OracleSql.withTicksBars(
+        |  ON t.symbol = b.symbol AND t.time <= b.time""".stripMargin))),
+    Query("q_asof_nearest", qAsofNearest, Some(OracleSql.withTicksBars(
       """, j AS (
         |  SELECT t.symbol, t.time, t.price,
         |    bb.time AS tb, bb.close AS cb, bb.volume AS vb,
@@ -948,8 +905,8 @@ private[graft] object RelationalEntries {
         |  CASE side WHEN 0 THEN tb WHEN 1 THEN tf END AS asof_time,
         |  CASE side WHEN 0 THEN cb WHEN 1 THEN cf END AS asof_close,
         |  CASE side WHEN 0 THEN vb WHEN 1 THEN vf END AS asof_volume
-        |FROM pick""".stripMargin),
-    "q_bars_incremental" ->
+        |FROM pick""".stripMargin))),
+    Query("q_bars_incremental", qBarsIncremental, Some(
       """WITH tk AS (
         |  SELECT CAST(user_id AS VARCHAR) AS symbol,
         |    CAST(ts AS TIMESTAMP) AS time,
@@ -969,37 +926,37 @@ private[graft] object RelationalEntries {
         |  max(CASE WHEN rn_d = 1 THEN price END) AS close,
         |  CAST(sum(volume) AS BIGINT) AS volume,
         |  count(*) AS n_ticks
-        |FROM w GROUP BY 1, 2""".stripMargin,
-    "q_profile" -> ProfileCols.map { c =>
+        |FROM w GROUP BY 1, 2""".stripMargin)),
+    Query("q_profile", qProfile, Some(ProfileCols.map { c =>
       s"""SELECT '$c' AS col_name, count(*) AS n_rows,
          |  count(*) - count($c) AS n_null,
          |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
          |  CAST(min($c) AS VARCHAR) AS min_s, CAST(max($c) AS VARCHAR) AS max_s
          |FROM orders""".stripMargin
-    }.mkString("\nUNION ALL\n"),
-    "q_rollup_revenue" ->
+    }.mkString("\nUNION ALL\n"))),
+    Query("q_rollup_revenue", qRollupRevenue, Some(
       """SELECT o_orderpriority, o_orderstatus,
         |  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0
         |    AS revenue,
         |  count(*) AS n_orders
         |FROM orders
-        |GROUP BY ROLLUP(o_orderpriority, o_orderstatus)""".stripMargin,
-    "q_cube_revenue" ->
+        |GROUP BY ROLLUP(o_orderpriority, o_orderstatus)""".stripMargin)),
+    Query("q_cube_revenue", qCubeRevenue, Some(
       """SELECT o_orderpriority, o_orderstatus,
         |  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0
         |    AS revenue,
         |  count(*) AS n_orders
         |FROM orders
-        |GROUP BY CUBE(o_orderpriority, o_orderstatus)""".stripMargin,
-    "q_topk_per_key" ->
+        |GROUP BY CUBE(o_orderpriority, o_orderstatus)""".stripMargin)),
+    Query("q_topk_per_key", qTopkPerKey, Some(
       """WITH w1 AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
         |    CAST(row_number() OVER (PARTITION BY user_id
         |      ORDER BY value DESC, event_id) AS INTEGER) AS rk
         |  FROM events WHERE event_type = 'purchase'
         |)
-        |SELECT user_id, rk, event_id, ts, value FROM w1 WHERE rk <= 3""".stripMargin,
-    "q_agg_pricing" ->
+        |SELECT user_id, rk, event_id, ts, value FROM w1 WHERE rk <= 3""".stripMargin)),
+    Query("q_agg_pricing", qAggPricing, Some(
       """WITH c AS (
         |  SELECT l_returnflag, l_linestatus,
         |    CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS qc,
@@ -1022,8 +979,8 @@ private[graft] object RelationalEntries {
         |  CAST(sch AS DOUBLE) / 1000000.0 AS sum_charge,
         |  sq / 100.0 / n AS avg_qty, se / 100.0 / n AS avg_price,
         |  sd / 100.0 / n AS avg_disc, n AS count_order
-        |FROM g""".stripMargin,
-    "q_join_revenue" ->
+        |FROM g""".stripMargin)),
+    Query("q_join_revenue", qJoinRevenue, Some(
       """SELECT n_name,
         |  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0
         |    AS revenue,
@@ -1032,8 +989,8 @@ private[graft] object RelationalEntries {
         |FROM orders
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-    "q_zorder" ->
+        |GROUP BY n_name""".stripMargin)),
+    Query("q_zorder", qZorder, Some(
       s"""WITH e AS (
          |  SELECT event_id,
          |    (CAST(floor(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0) AS BIGINT)
@@ -1043,8 +1000,8 @@ private[graft] object RelationalEntries {
          |)
          |SELECT event_id, hour_idx, user_bucket,
          |  ${Layout.zorder2Sql("hour_idx", "user_bucket", 16)} AS zkey
-         |FROM e""".stripMargin,
-    "q_range_join" ->
+         |FROM e""".stripMargin)),
+    Query("q_range_join", qRangeJoin, Some(
       """WITH e AS (
         |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events
         |), iv AS (
@@ -1056,6 +1013,6 @@ private[graft] object RelationalEntries {
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0
         |    AS sum_value
         |FROM iv JOIN e ON e.ts >= iv.start_ts AND e.ts < iv.end_ts
-        |GROUP BY 1, 2, 3""".stripMargin,
+        |GROUP BY 1, 2, 3""".stripMargin)),
   )
 }

@@ -11,10 +11,12 @@ import graft.OracleSql._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Every entry in [[queries]] is one operator from SURVEY §2 (or an
-  * extended-pipeline operator); [[oracleSql]] carries the equivalent DuckDB
-  * SQL the driver hash-compares against at sf0.01. All derived doubles are
-  * rounded to 4 dp on both sides; timestamps always go through µs precision.
+  * Every entry in [[registry]] is one operator from SURVEY §2 (or an
+  * extended-pipeline operator) declared once as a [[Query]]; [[queries]],
+  * [[oracleSql]] and [[verifyOnly]] are views of it. The oracle is the
+  * equivalent DuckDB SQL the Verify gate hash-compares against at sf0.01. All
+  * derived doubles are rounded to 4 dp on both sides; timestamps always go
+  * through µs precision.
   */
 object SparkEntry {
 
@@ -287,55 +289,7 @@ object SparkEntry {
       .select(graft.model.Model.DbColumns.map(col): _*)
   }
 
-  // ------------------------------------------------------------------ maps
-
-  /** Verify-gate-only queries, excluded from the bench sweep:
-    *  - the sketch _check companions hash-check a sketch query's error
-    *    contract (exact aggregates + in-band booleans) and deliberately
-    *    pay for the exact distinct/percentiles the sketch plan avoids —
-    *    timing them would charge the sketch for its oracle;
-    *  - q_stream_indicators runs the REAL streaming pipeline (file-replay
-    *    micro-batches, RocksDB state store, checkpointing, parquet sink)
-    *    to gate the sunk table — ~18 s at sf0.1 of trigger/state-store
-    *    machinery, not a query plan; benching it would dominate the sweep
-    *    while measuring Structured Streaming overhead, not this library.
-    *  - q_stream_cdc likewise replays the CDC changelog through the real
-    *    foreachBatch merge (StreamCdc) and gates the final snapshot
-    *    against the batch oracle — streaming machinery, not a plan. */
-  val verifyOnly: Set[String] =
-    Set("q_sketches_check", "q_sketch_rollup_check", "q_topk_sketch_check",
-      "q_stream_indicators", "q_stream_cdc", "q_stream_drift",
-      "q_stream_dsir", "q_stream_nb", "q_stream_ccnet",
-      "q_stream_blocklist", "q_stream_repetition", "q_stream_rules",
-      "q_stream_fuzzy_decontam",
-      "q_stream_sessionize", "q_stream_join", "q_stream_join_outer",
-      "q_stream_topk", "q_stream_topk_check")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ExtendedEntries.queries ++ CorpusEntries.queries ++ Map(
-    "q_ema" -> qEma,
-    "q_holt" -> qHolt,
-    "q_holt_winters" -> qHoltWinters,
-    "q_kalman" -> qKalman,
-    "q_macd" -> qMacd,
-    "q_rsi" -> qRsi,
-    "q_atr" -> qAtr,
-    "q_adx" -> qAdx,
-    "q_indicators" -> qIndicators,
-    "q_live_latest" -> qLiveLatest,
-    "q_stream_indicators" -> qStreamIndicators,
-    "q_tick_parse" -> qTickParse,
-    "q_bars_hourly" -> qBarsHourly,
-    "q_sma_bb" -> qSmaBb,
-    "q_stoch" -> qStoch,
-    "q_mfi" -> qMfi,
-    "q_obv" -> qObv,
-    "q_vwap" -> qVwap,
-    "q_indicators_ext" -> qIndicatorsExt,
-    "q_rolling_quantile" -> qRollingQuantile,
-    "q_latest_per_key" -> qLatestPerKey,
-    "q_time_range" -> qTimeRange,
-    "q_dedup_first_wins" -> qDedupFirstWins)
+  // --------------------------------------------------------------- registry
 
   /** Oracle for the streaming read path: the batch live-bars indicator SQL
     * over per-symbol rows 26..60 — exactly the warm-up-gated, untruncated
@@ -375,55 +329,55 @@ object SparkEntry {
        |FROM g WHERE rnd = 1""".stripMargin,
     live = true)
 
-  def oracleSql: Map[String, String] =
-    ExtendedEntries.oracleSql ++ CorpusEntries.oracleSql ++ Map(
-    "q_ema" -> recQuery(
+  /** The paper's own indicator, parity and read-path queries. */
+  val entries: Seq[Query] = Seq(
+    Query("q_ema", qEma, Some(recQuery(
       s"""SELECT symbol, time, ${r4(emaOut10)} AS ema_10, ${r4(emaOut20)} AS ema_20
-         |FROM rec""".stripMargin),
+         |FROM rec""".stripMargin))),
 
-    "q_holt" -> recQuery(
+    Query("q_holt", qHolt, Some(recQuery(
       s"""SELECT symbol, time, ${r4("hl")} AS holt_level,
          |  ${r4("hb")} AS holt_trend, ${r4("hl + hb")} AS holt_forecast
-         |FROM rec""".stripMargin),
+         |FROM rec""".stripMargin))),
 
-    "q_holt_winters" -> recQuery(
+    Query("q_holt_winters", qHoltWinters, Some(recQuery(
       s"""SELECT symbol, time,
          |  ${r4(s"CASE WHEN rn >= $HwM THEN hwl END")} AS hw_level,
          |  ${r4(s"CASE WHEN rn >= $HwM THEN hwb END")} AS hw_trend,
          |  ${r4(s"CASE WHEN rn >= $HwM THEN hws[((rn - 1) % $HwM) + 1] END")} AS hw_season,
          |  ${r4(s"CASE WHEN rn >= $HwM THEN hwl + hwb + hws[(rn % $HwM) + 1] END")} AS hw_forecast
-         |FROM rec""".stripMargin),
+         |FROM rec""".stripMargin))),
 
-    "q_kalman" -> recQuery(
+    Query("q_kalman", qKalman, Some(recQuery(
       s"""SELECT symbol, time, ${r4("kx")} AS kf_level,
          |  ${r4("kk")} AS kf_gain, ${r4("kp")} AS kf_cov
-         |FROM rec""".stripMargin),
+         |FROM rec""".stripMargin))),
 
-    "q_macd" -> recQuery(
-      s"SELECT symbol, time, ${r4(macdOut)} AS macd_line FROM rec"),
+    Query("q_macd", qMacd, Some(recQuery(
+      s"SELECT symbol, time, ${r4(macdOut)} AS macd_line FROM rec"))),
 
-    "q_rsi" -> recQuery(
-      s"SELECT symbol, time, ${r4(rsiOut)} AS rsi_14 FROM rec"),
+    Query("q_rsi", qRsi, Some(recQuery(
+      s"SELECT symbol, time, ${r4(rsiOut)} AS rsi_14 FROM rec"))),
 
-    "q_atr" -> recQuery(
-      s"SELECT symbol, time, ${r4(atrOut)} AS atr_14 FROM rec"),
+    Query("q_atr", qAtr, Some(recQuery(
+      s"SELECT symbol, time, ${r4(atrOut)} AS atr_14 FROM rec"))),
 
-    "q_adx" -> recQuery(
-      s"SELECT symbol, time, ${r4(adxOut)} AS adx_14 FROM rec"),
+    Query("q_adx", qAdx, Some(recQuery(
+      s"SELECT symbol, time, ${r4(adxOut)} AS adx_14 FROM rec"))),
 
-    "q_indicators" -> recWinQuery(fullIndicatorSelect),
+    Query("q_indicators", qIndicators, Some(recWinQuery(fullIndicatorSelect))),
 
-    "q_live_latest" -> liveLatestOracle,
-    "q_stream_indicators" -> streamIndicatorsOracle,
-    "q_tick_parse" ->
+    Query("q_live_latest", qLiveLatest, Some(liveLatestOracle)),
+    Query("q_stream_indicators", qStreamIndicators, Some(streamIndicatorsOracle), benched = false),
+    Query("q_tick_parse", qTickParse, Some(
       """SELECT event_id, CAST(user_id AS VARCHAR) AS symbol, value AS price,
         |  epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms,
         |  CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-        |FROM events WHERE value IS NOT NULL AND ts IS NOT NULL""".stripMargin,
+        |FROM events WHERE value IS NOT NULL AND ts IS NOT NULL""".stripMargin)),
 
-    "q_bars_hourly" -> withTicksBars("SELECT * FROM bars"),
+    Query("q_bars_hourly", qBarsHourly, Some(withTicksBars("SELECT * FROM bars"))),
 
-    "q_sma_bb" -> withTicksBars(
+    Query("q_sma_bb", qSmaBb, Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time,
         |    count(close) OVER w20 AS c20,
@@ -436,9 +390,9 @@ object SparkEntry {
         |  floor((CASE WHEN c20 = 20 THEN m20 END) * 10000 + 0.5) / 10000 AS sma_20,
         |  floor((CASE WHEN c20 = 20 THEN m20 + 2 * sd20 END) * 10000 + 0.5) / 10000 AS bb_upper,
         |  floor((CASE WHEN c20 = 20 THEN m20 - 2 * sd20 END) * 10000 + 0.5) / 10000 AS bb_lower
-        |FROM w1""".stripMargin),
+        |FROM w1""".stripMargin))),
 
-    "q_stoch" -> withTicksBars(
+    Query("q_stoch", qStoch, Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time, close,
         |    count(close) OVER w14 AS c14,
@@ -455,9 +409,9 @@ object SparkEntry {
         |  FROM w2
         |  WINDOW ws AS (PARTITION BY symbol ORDER BY time ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
         |)
-        |SELECT symbol, time, floor((CASE WHEN c3 = 3 THEN k3 END) * 10000 + 0.5) / 10000 AS stoch_k_14 FROM w3""".stripMargin),
+        |SELECT symbol, time, floor((CASE WHEN c3 = 3 THEN k3 END) * 10000 + 0.5) / 10000 AS stoch_k_14 FROM w3""".stripMargin))),
 
-    "q_mfi" -> withTicksBars(
+    Query("q_mfi", qMfi, Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time, volume,
         |    (high + low + close) / 3 AS tp,
@@ -474,9 +428,9 @@ object SparkEntry {
         |)
         |SELECT symbol, time,
         |  floor((CASE WHEN c14 = 14 THEN 100 * pos / nullif(pos + neg, 0) END) * 10000 + 0.5) / 10000 AS mfi_14
-        |FROM w2""".stripMargin),
+        |FROM w2""".stripMargin))),
 
-    "q_obv" -> withTicksBars(
+    Query("q_obv", qObv, Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time, volume,
         |    close - lag(close) OVER (PARTITION BY symbol ORDER BY time) AS d
@@ -487,9 +441,9 @@ object SparkEntry {
         |                WHEN d < 0 THEN -volume ELSE 0 END)
         |    OVER (PARTITION BY symbol ORDER BY time
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS obv
-        |FROM w1""".stripMargin),
+        |FROM w1""".stripMargin))),
 
-    "q_vwap" -> withTicksBars(
+    Query("q_vwap", qVwap, Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time, volume, (high + low + close) / 3 AS tp FROM bars
         |)
@@ -497,9 +451,9 @@ object SparkEntry {
         |  floor((sum(tp * volume) OVER wd / sum(volume) OVER wd) * 10000 + 0.5) / 10000 AS vwap
         |FROM w1
         |WINDOW wd AS (PARTITION BY symbol, CAST(time AS DATE) ORDER BY time
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin),
+        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin))),
 
-    "q_rolling_quantile" -> {
+    Query("q_rolling_quantile", qRollingQuantile, Some {
       val (lo5, a5, b5) = WI.quantileWeights(20, 0.5)
       val (lo9, a9, b9) = WI.quantileWeights(20, 0.9)
       withTicksBars(
@@ -515,9 +469,9 @@ object SparkEntry {
            |  ${r4(s"CASE WHEN cnt = 20 THEN l[${lo5 + 1}] * $a5 + l[${lo5 + 2}] * $b5 END")} AS med_20,
            |  ${r4(s"CASE WHEN cnt = 20 THEN l[${lo9 + 1}] * $a9 + l[${lo9 + 2}] * $b9 END")} AS p90_20
            |FROM w1""".stripMargin)
-    },
+    }),
 
-    "q_indicators_ext" -> withTicksBars(
+    Query("q_indicators_ext", qIndicatorsExt, Some(withTicksBars(
       s""", w1 AS (
          |  SELECT symbol, time, high, low, close,
          |    (high + low + close) / 3 AS tp,
@@ -566,30 +520,64 @@ object SparkEntry {
          |  ${r4("CASE WHEN cnt20 = 20 AND cnt10 = 10 THEN mtp20 + 2 * atr10 END")} AS kelt_up,
          |  ${r4("CASE WHEN cnt20 = 20 AND cnt10 = 10 THEN mtp20 - 2 * atr10 END")} AS kelt_lo,
          |  ${r4("CASE WHEN cnt20 = 20 AND mad20 <> 0 THEN (tp - mtp20) / (0.015 * mad20) END")} AS cci_20
-         |FROM w4""".stripMargin),
+         |FROM w4""".stripMargin))),
 
-    "q_latest_per_key" ->
+    Query("q_latest_per_key", qLatestPerKey, Some(
       """WITH w1 AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value,
         |    row_number() OVER (PARTITION BY user_id
         |                       ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
         |  FROM events
         |)
-        |SELECT user_id, event_id, ts, event_type, value FROM w1 WHERE rn = 1""".stripMargin,
+        |SELECT user_id, event_id, ts, event_type, value FROM w1 WHERE rn = 1""".stripMargin)),
 
-    "q_time_range" ->
+    Query("q_time_range", qTimeRange, Some(
       """SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
         |FROM events
         |WHERE CAST(ts AS TIMESTAMP) >= TIMESTAMP '2024-01-10 00:00:00'
         |  AND CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-20 00:00:00'
-        |  AND event_type = 'purchase'""".stripMargin,
+        |  AND event_type = 'purchase'""".stripMargin)),
 
-    "q_dedup_first_wins" ->
+    Query("q_dedup_first_wins", qDedupFirstWins, Some(
       """WITH w1 AS (
         |  SELECT user_id, event_type, event_id, CAST(ts AS TIMESTAMP) AS first_time, value,
         |    row_number() OVER (PARTITION BY user_id, event_type
         |                       ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
         |  FROM events
         |)
-        |SELECT user_id, event_type, event_id, first_time, value FROM w1 WHERE rn = 1""".stripMargin)
+        |SELECT user_id, event_type, event_id, first_time, value FROM w1 WHERE rn = 1""".stripMargin)),
+  )
+
+  /** Every query, each declared once; a name declared twice fails
+    * this object's initialisation. */
+  val registry: Seq[Query] = Query.concat(entries, AnnEntries.entries,
+    CorpusEntries.entries, GraphEntries.entries, MediaEntries.entries,
+    RelationalEntries.entries, StreamEntries.entries, TextDedupEntries.entries)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.body).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** Verify-gate-only queries, excluded from the bench sweep (see
+    * [[Query.benched]]). */
+  lazy val verifyOnly: Set[String] =
+    registry.filterNot(_.benched).map(_.name).toSet
+
+  /** `names` narrowed to the dev-only SPARK_GRAFT_ONLY subset (unset for
+    * a full run), noting the narrowing on stderr under `tag`.
+    * An empty or whitespace-only value is treated as unset — Set("") would
+    * otherwise silently filter out EVERY query (empty output, no error). */
+  def selectOnly(tag: String, names: Seq[String]): Seq[String] =
+    sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .filter(_.nonEmpty) match {
+      case None => names
+      case Some(only) =>
+        val kept = names.filter(only)
+        System.err.println(
+          s"[$tag] SPARK_GRAFT_ONLY active: running ${kept.size}/${names.size} queries")
+        kept
+    }
 }

@@ -697,33 +697,7 @@ private[graft] object StreamEntries {
       |SELECT user_id, event_id, ts, event_type, value
       |FROM latest WHERE op != 'D'""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sketches" -> qSketches,
-    "q_sketches_check" -> qSketchesCheck,
-    "q_sketch_rollup" -> qSketchRollup,
-    "q_sketch_rollup_check" -> qSketchRollupCheck,
-    "q_topk_sketch" -> qTopkSketch,
-    "q_topk_sketch_check" -> qTopkSketchCheck,
-    "q_stream_topk" -> qStreamTopk,
-    "q_stream_topk_check" -> qStreamTopkCheck,
-    "q_cdc_apply" -> qCdcApply,
-    "q_cdc_diff" -> qCdcDiff,
-    "q_stream_cdc" -> qStreamCdc,
-    "q_stream_drift" -> qStreamDrift,
-    "q_stream_dsir" -> qStreamDsir,
-    "q_stream_nb" -> qStreamNb,
-    "q_stream_ccnet" -> qStreamCcnet,
-    "q_stream_blocklist" -> qStreamBlocklist,
-    "q_stream_repetition" -> qStreamRepetition,
-    "q_stream_rules" -> qStreamRules,
-    "q_stream_fuzzy_decontam" -> qStreamFuzzyDecontam,
-    "q_stream_sessionize" -> qStreamSessionize,
-    "q_stream_join" -> qStreamJoin,
-    "q_stream_join_outer" -> qStreamJoinOuter,
-    "q_sessionize" -> qSessionize,
-  )
-
-  def oracleSql: Map[String, String] = Map(
+  val entries: Seq[Query] = Seq(
     // Sketch queries: the shipped q_sketches / q_sketch_rollup plans are
     // sketch-only (engine-specific estimates, no DuckDB mirror → rows-only
     // at the oracle gate, so the bench measures the sketch, not its
@@ -732,28 +706,32 @@ private[graft] object StreamEntries {
     // qSketchesCheck scaladoc) — the oracle asserts the exact aggregates
     // AND that every estimate honors its error contract (literal TRUE: a
     // sketch out of band flips the hash).
-    "q_sketches_check" ->
+    Query("q_sketches", qSketches, None),
+    Query("q_sketch_rollup", qSketchRollup, None),
+    Query("q_sketches_check", qSketchesCheck, Some(
       """SELECT event_type, count(*) AS n,
         |  count(DISTINCT user_id) AS exact_users,
         |  TRUE AS users_in_band, TRUE AS p50_in_band, TRUE AS p99_in_band
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_sketch_rollup_check" ->
+        |FROM events GROUP BY event_type""".stripMargin), benched = false),
+    Query("q_sketch_rollup_check", qSketchRollupCheck, Some(
       """SELECT event_type, count(*) AS n_events,
         |  count(DISTINCT CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS n_days,
         |  count(DISTINCT user_id) AS exact_users,
         |  TRUE AS merged_in_band
-        |FROM events GROUP BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type""".stripMargin), benched = false),
+    Query("q_topk_sketch", qTopkSketch, None),
     // q_topk_sketch ships sketch-only (Misra-Gries estimates are
     // arrival/merge-order dependent → rows-only); its hash-gated error
     // contract is this companion: exact top-10 token counts + the
     // order-independent MG theorems as literal-TRUE booleans.
-    "q_topk_sketch_check" -> mgContractOracleSql,
+    Query("q_topk_sketch_check", qTopkSketchCheck, Some(mgContractOracleSql), benched = false),
+    Query("q_stream_topk", qStreamTopk, None, benched = false),
     // identical oracle on purpose: the MG theorems are merge-tree-
     // independent, so batch rollup and streamed segments share one gate
-    "q_stream_topk_check" -> mgContractOracleSql,
+    Query("q_stream_topk_check", qStreamTopkCheck, Some(mgContractOracleSql), benched = false),
     // the stream-stream interval join must emit exactly the batch join's
     // match set — hash-gated against plain batch SQL
-    "q_stream_join" ->
+    Query("q_stream_join", qStreamJoin, Some(
       """SELECT a.user_id, a.event_id AS left_id, e.event_id AS right_id,
         |  epoch_us(CAST(e.ts AS TIMESTAMP)) - epoch_us(CAST(a.ts AS TIMESTAMP))
         |    AS gap_us
@@ -761,9 +739,9 @@ private[graft] object StreamEntries {
         |  AND e.event_type = 'error' AND a.event_type != 'error'
         |  AND CAST(e.ts AS TIMESTAMP) >= CAST(a.ts AS TIMESTAMP)
         |  AND CAST(e.ts AS TIMESTAMP)
-        |    <= CAST(a.ts AS TIMESTAMP) + INTERVAL 30 MINUTE""".stripMargin,
+        |    <= CAST(a.ts AS TIMESTAMP) + INTERVAL 30 MINUTE""".stripMargin), benched = false),
     // left-outer variant: unmatched actions surface with NULL matches
-    "q_stream_join_outer" ->
+    Query("q_stream_join_outer", qStreamJoinOuter, Some(
       """SELECT a.user_id, a.event_id AS left_id, e.event_id AS right_id,
         |  epoch_us(CAST(e.ts AS TIMESTAMP)) - epoch_us(CAST(a.ts AS TIMESTAMP))
         |    AS gap_us
@@ -772,30 +750,36 @@ private[graft] object StreamEntries {
         |  AND CAST(e.ts AS TIMESTAMP) >= CAST(a.ts AS TIMESTAMP)
         |  AND CAST(e.ts AS TIMESTAMP)
         |    <= CAST(a.ts AS TIMESTAMP) + INTERVAL 30 MINUTE
-        |WHERE a.event_type != 'error'""".stripMargin,
-    "q_cdc_apply" -> cdcOracleSql,
+        |WHERE a.event_type != 'error'""".stripMargin), benched = false),
+    Query("q_cdc_apply", qCdcApply, Some(cdcOracleSql)),
     // the streaming CDC path must merge to the SAME snapshot: hash-gated
     // against the batch query's oracle unchanged
-    "q_stream_cdc" -> cdcOracleSql,
-    "q_stream_drift" -> oStreamDriftSql,
+    Query("q_stream_cdc", qStreamCdc, Some(cdcOracleSql), benched = false),
+    Query("q_stream_drift", qStreamDrift, Some(oStreamDriftSql), benched = false),
     // fixed-LM stateless scoring over exactly-once-partitioned slices ==
     // the batch scorer, so the oracle is q_dsir's, verbatim
-    "q_stream_dsir" -> CorpusEntries.oracleSql("q_dsir"),
+    Query("q_stream_dsir", qStreamDsir, Some(CorpusEntries.dsirOracleSql), benched = false),
     // fixed-model stateless scoring — the oracle is q_nb_classify's,
     // verbatim (same held-out split, same model, any slicing)
-    "q_stream_nb" -> CorpusEntries.oracleSql("q_nb_classify"),
+    Query("q_stream_nb", qStreamNb,
+      Some(CorpusEntries.nbClassifyOracleSql), benched = false),
     // fixed model + fixed thresholds, stateless routing — the oracle is
     // q_ccnet_fixed's, verbatim (same splits, any slicing)
-    "q_stream_ccnet" -> CorpusEntries.oracleSql("q_ccnet_fixed"),
+    Query("q_stream_ccnet", qStreamCcnet,
+      Some(CorpusEntries.ccnetFixedOracleSql), benched = false),
     // constant-closure stateless scans — the oracles are the batch
     // gates', verbatim (full corpus, any slicing)
-    "q_stream_blocklist" -> CorpusEntries.oracleSql("q_blocklist"),
-    "q_stream_repetition" -> CorpusEntries.oracleSql("q_repetition"),
-    "q_stream_rules" -> CorpusEntries.oracleSql("q_quality_rules"),
+    Query("q_stream_blocklist", qStreamBlocklist,
+      Some(CorpusEntries.blocklistOracleSql), benched = false),
+    Query("q_stream_repetition", qStreamRepetition,
+      Some(CorpusEntries.repetitionOracleSql), benched = false),
+    Query("q_stream_rules", qStreamRules,
+      Some(CorpusEntries.qualityRulesOracleSql), benched = false),
     // the streamed fuzzy screen accumulates the SAME per-doc report the
     // batch query emits (stateless vs a fixed eval set) — shared oracle
-    "q_stream_fuzzy_decontam" -> TextDedupEntries.oracleSql("q_decontaminate_fuzzy"),
-    "q_cdc_diff" ->
+    Query("q_stream_fuzzy_decontam", qStreamFuzzyDecontam,
+      Some(TextDedupEntries.fuzzyDecontamOracleSql), benched = false),
+    Query("q_cdc_diff", qCdcDiff, Some(
       s"""WITH applied AS ($cdcOracleSql),
          |ev2 AS (
          |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
@@ -812,10 +796,10 @@ private[graft] object StreamEntries {
          |)
          |UNION ALL
          |SELECT b.user_id, b.event_id, b.ts, b.event_type, b.value, 'D' AS op
-         |FROM base2 b ANTI JOIN applied a ON b.user_id = a.user_id""".stripMargin,
-    "q_sessionize" -> sessionizeOracleSql,
+         |FROM base2 b ANTI JOIN applied a ON b.user_id = a.user_id""".stripMargin)),
+    Query("q_sessionize", qSessionize, Some(sessionizeOracleSql)),
     // the streaming session_window path must produce the SAME sessions:
     // hash-gated against the batch query's oracle unchanged
-    "q_stream_sessionize" -> sessionizeOracleSql,
+    Query("q_stream_sessionize", qStreamSessionize, Some(sessionizeOracleSql), benched = false),
   )
 }

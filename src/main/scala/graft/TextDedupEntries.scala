@@ -192,44 +192,73 @@ private[graft] object TextDedupEntries {
        |)""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dedup_corpus" -> qDedupCorpus,
-    "q_dedup_keep_best" -> ((s, dir) =>
-      Dedup.dedupCorpusKeepBest(Tables.documents(s, dir), 0.7)),
-    "q_split_safe" -> ((s, dir) =>
-      Dedup.leakageSafeSplit(Tables.documents(s, dir), 0.7,
-        CorpusEntries.SplitSalt, CorpusEntries.SplitCuts)),
-    "q_sample_dedup" -> ((s, dir) =>
-      Dedup.dedupWeightedSample(Tables.documents(s, dir), 0.7, "dw1:", 0.5)),
-    "q_dup_sources" -> ((s, dir) =>
-      Dedup.dupSourceMatrix(Tables.documents(s, dir), 0.7)),
-    "q_pmi" -> ((s, dir) =>
-      TextAnalysis.pmiCollocations(Tables.documents(s, dir), 5)),
-    "q_dedup_exact" -> qDedupExact,
-    "q_text_stats" -> qTextStats,
-    "q_token_count" -> qTokenCount,
-    "q_lang_id" -> qLangId,
-    "q_fingerprint" -> qFingerprint,
-    "q_jaccard_pairs" -> qJaccardPairs,
-    "q_containment" -> qContainment,
-    "q_minhash_lsh" -> qMinhashLsh,
-    "q_minhash_recall" -> qMinhashRecall,
-    "q_decontaminate_fuzzy" -> qDecontaminateFuzzy,
-    "q_simhash" -> qSimhash,
-    "q_simhash_mp" -> qSimhashMp,
-    "q_simhash_classes" -> qSimhashClasses,
-  )
+  /** Shared with q_stream_fuzzy_decontam ([[StreamEntries]]). */
+  private[graft] val fuzzyDecontamOracleSql: String =
+    s"""WITH $oShingleIdx,
+       |$oMinhashXEval,
+       |inter AS (
+       |  SELECT c.doc_a, c.doc_b, count(*) AS i
+       |  FROM cand c JOIN shidx ia ON ia.doc_id = c.doc_a
+       |              JOIN shidx ib ON ib.doc_id = c.doc_b AND ib.h = ia.h
+       |  GROUP BY 1, 2
+       |),
+       |jac AS (
+       |  SELECT doc_a, doc_b, i / (sa.sz + sb.sz - i) AS jraw,
+       |    ${r4("i / (sa.sz + sb.sz - i)")} AS jaccard
+       |  FROM inter JOIN shsz sa ON sa.doc_id = doc_a
+       |             JOIN shsz sb ON sb.doc_id = doc_b
+       |),
+       |jp AS (SELECT * FROM jac WHERE jraw >= $FuzzyDecontamTau),
+       |rk AS (
+       |  SELECT doc_a, doc_b, jaccard,
+       |    row_number() OVER (PARTITION BY doc_a ORDER BY jaccard DESC, doc_b) AS rn,
+       |    count(*) OVER (PARTITION BY doc_a) AS nm
+       |  FROM jp
+       |)
+       |SELECT doc_a AS doc_id, doc_b AS eval_match, jaccard AS max_jaccard,
+       |  CAST(nm AS BIGINT) AS n_eval_matches
+       |FROM rk WHERE rn = 1""".stripMargin
+
+  /** Shared DuckDB CTE chain for the 60-bit shingle SimHash signature
+    * (mirrors [[Dedup.simhash]]) — feeds both the pair and class oracles. */
+  private val oSimhashSig: String =
+    """tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      |tok0 AS (
+      |  SELECT doc_id, unnest(list_distinct(
+      |    CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
+      |         ELSE list_transform(range(1, len(toks) - 1),
+      |                i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) END)) AS tok
+      |  FROM tk
+      |), tokh AS (
+      |  SELECT DISTINCT doc_id,
+      |    CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS h
+      |  FROM tok0
+      |), bits AS (
+      |  SELECT doc_id, r.i AS i,
+      |    sum(CASE WHEN (h >> CAST(r.i AS INT)) & 1 = 1 THEN 1 ELSE -1 END) AS v
+      |  FROM tokh, range(60) r(i) GROUP BY doc_id, r.i
+      |), sh AS (
+      |  SELECT doc_id,
+      |    CAST(sum(CASE WHEN v >= 0
+      |      THEN (CAST(1 AS BIGINT) << CAST(i AS INT)) ELSE 0 END) AS BIGINT) AS simhash
+      |  FROM bits GROUP BY doc_id
+      |)""".stripMargin
 
   /** q_simhash_mp is EXACTLY complete like q_simhash (multi-index +
     * Hamming-1 probes relax the pigeonhole without weakening it), so the
     * two share one oracle verbatim. */
-  def oracleSql: Map[String, String] = oracleSqlBase +
-    ("q_simhash_mp" -> oracleSqlBase("q_simhash"))
+  private val simhashOracleSql: String =
+    s"""WITH $oSimhashSig
+      |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
+      |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+      |WHERE bit_count(xor(a.simhash, b.simhash)) <= 10""".stripMargin
 
-  private def oracleSqlBase: Map[String, String] = Map(
+  val entries: Seq[Query] = Seq(
     // LSH pairs (cand ∩ jaccard >= tau) joined to each side's source;
     // mean over integer 4dp-quantized jaccards, same as the Spark side
-    "q_dup_sources" ->
+    Query("q_dup_sources", (s, dir) =>
+      Dedup.dupSourceMatrix(Tables.documents(s, dir), 0.7), Some(
       s"""WITH $oShingleIdx,
          |$oMinhash,
          |${oJaccard(0.7)},
@@ -246,8 +275,9 @@ private[graft] object TextDedupEntries {
          |)
          |SELECT source_x, source_y, CAST(count(*) AS BIGINT) AS n_pairs,
          |  floor(CAST(sum(j4) AS DOUBLE) / count(*) + 0.5) / 10000 AS avg_jaccard
-         |FROM lab GROUP BY 1, 2""".stripMargin,
-    "q_pmi" ->
+         |FROM lab GROUP BY 1, 2""".stripMargin)),
+    Query("q_pmi", (s, dir) =>
+      TextAnalysis.pmiCollocations(Tables.documents(s, dir), 5), Some(
       """WITH tk AS (SELECT string_split(text, ' ') AS toks FROM documents),
         |uni AS (
         |  SELECT unnest(toks) AS token FROM tk
@@ -271,8 +301,8 @@ private[graft] object TextDedupEntries {
         |FROM bc
         |JOIN uc ua ON ua.token = string_split(bc.bigram, ' ')[1]
         |JOIN uc ub ON ub.token = string_split(bc.bigram, ' ')[2]
-        |, tot""".stripMargin,
-    "q_dedup_corpus" ->
+        |, tot""".stripMargin)),
+    Query("q_dedup_corpus", qDedupCorpus, Some(
       s"""WITH RECURSIVE $oShingleIdx,
          |$oMinhash,
          |${oJaccard(0.7)},
@@ -290,10 +320,11 @@ private[graft] object TextDedupEntries {
          |  SELECT reach.d, und.dst FROM reach JOIN und ON und.src = reach.r
          |)
          |SELECT d AS doc_id, min(r) AS canonical_id, d != min(r) AS is_duplicate
-         |FROM reach GROUP BY d""".stripMargin,
+         |FROM reach GROUP BY d""".stripMargin)),
     // same CC as q_dedup_corpus + the q_text_stats quality formula; winner
     // per cluster by (4dp quality DESC, doc_id) row_number
-    "q_dedup_keep_best" ->
+    Query("q_dedup_keep_best", (s, dir) =>
+      Dedup.dedupCorpusKeepBest(Tables.documents(s, dir), 0.7), Some(
       s"""WITH RECURSIVE $oShingleIdx,
          |$oMinhash,
          |${oJaccard(0.7)},
@@ -338,10 +369,12 @@ private[graft] object TextDedupEntries {
          |      ORDER BY q.quality_score DESC, cc.doc_id) AS rn
          |  FROM cc JOIN q USING (doc_id)
          |)
-         |SELECT doc_id, cluster_id, quality_score, rn = 1 AS keep FROM jn""".stripMargin,
+         |SELECT doc_id, cluster_id, quality_score, rn = 1 AS keep FROM jn""".stripMargin)),
     // same CC clusters; split cut on the CLUSTER id's salted bucket
     // (thresholds/salt shared with q_split via CorpusEntries constants)
-    "q_split_safe" ->
+    Query("q_split_safe", (s, dir) =>
+      Dedup.leakageSafeSplit(Tables.documents(s, dir), 0.7,
+        CorpusEntries.SplitSalt, CorpusEntries.SplitCuts), Some(
       s"""WITH RECURSIVE $oShingleIdx,
          |$oMinhash,
          |${oJaccard(0.7)},
@@ -365,10 +398,11 @@ private[graft] object TextDedupEntries {
          |)
          |SELECT doc_id, cluster_id,
          |  ${oSplitCase("cluster_id")} AS split
-         |FROM jn""".stripMargin,
+         |FROM jn""".stripMargin)),
     // same CC clusters; keep iff the doc's salted bucket clears the
     // cluster-size-discounted threshold floor(round(rate*65536)/|cluster|)
-    "q_sample_dedup" ->
+    Query("q_sample_dedup", (s, dir) =>
+      Dedup.dedupWeightedSample(Tables.documents(s, dir), 0.7, "dw1:", 0.5), Some(
       s"""WITH RECURSIVE $oShingleIdx,
          |$oMinhash,
          |${oJaccard(0.7)},
@@ -400,12 +434,12 @@ private[graft] object TextDedupEntries {
          |FROM j2
          |WHERE CAST(concat('0x',
          |    substr(md5(concat('dw1:', CAST(doc_id AS VARCHAR))), 1, 4)) AS BIGINT)
-         |  < floor(32768.0 / cluster_size)""".stripMargin,
-    "q_dedup_exact" ->
+         |  < floor(32768.0 / cluster_size)""".stripMargin)),
+    Query("q_dedup_exact", qDedupExact, Some(
       """SELECT md5(text) AS text_md5, min(doc_id) AS canonical_id,
         |  count(*) AS n_docs
-        |FROM documents GROUP BY 1""".stripMargin,
-    "q_text_stats" ->
+        |FROM documents GROUP BY 1""".stripMargin)),
+    Query("q_text_stats", qTextStats, Some(
       s"""WITH t AS (
          |  SELECT doc_id, text, string_split(text, ' ') AS toks,
          |    len(string_split(text, ' ')) AS n_tokens,
@@ -427,8 +461,8 @@ private[graft] object TextDedupEntries {
          |  ${r4("distinct_ratio")} AS distinct_ratio,
          |  ${r4("0.4 * len_score + 0.4 * distinct_ratio + 0.2 * (1.0 - abs(stopword_ratio - 0.1))")}
          |    AS quality_score
-         |FROM u""".stripMargin,
-    "q_token_count" ->
+         |FROM u""".stripMargin)),
+    Query("q_token_count", qTokenCount, Some(
       """SELECT doc_id,
         |  len(string_split(text, ' ')) AS n_ws_tokens,
         |  len(list_filter(string_split(text, ' '), t -> regexp_matches(t, '^[a-z]+$')))
@@ -436,8 +470,8 @@ private[graft] object TextDedupEntries {
         |  CAST(list_reduce(list_transform(string_split(text, ' '),
         |    t -> CAST((length(t) + 3) // 4 AS BIGINT)), (a, b) -> a + b) AS BIGINT)
         |    AS n_bpe_est
-        |FROM documents""".stripMargin,
-    "q_lang_id" ->
+        |FROM documents""".stripMargin)),
+    Query("q_lang_id", qLangId, Some(
       s"""WITH t AS (
          |  SELECT doc_id, lang AS lang_label,
          |    len(list_filter(string_split(text, ' '), x -> list_contains(
@@ -449,8 +483,8 @@ private[graft] object TextDedupEntries {
          |  CASE WHEN ratio >= 0.10 THEN 'en'
          |       WHEN ratio >= 0.05 THEN 'mixed'
          |       ELSE 'other' END AS lang_pred
-         |FROM t""".stripMargin,
-    "q_fingerprint" ->
+         |FROM t""".stripMargin)),
+    Query("q_fingerprint", qFingerprint, Some(
       s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
          |SELECT doc_id,
          |  len(toks) AS n_tokens,
@@ -458,20 +492,20 @@ private[graft] object TextDedupEntries {
          |    list_transform(range(1, len(toks) + 1),
          |      i -> (${oHash60("toks[i]")} % 1000000007) * ((i % 97) + 1)),
          |    (a, b) -> (a + b) % 1000000007) % 1000000007 AS BIGINT) AS fingerprint
-         |FROM t""".stripMargin,
+         |FROM t""".stripMargin)),
     // stop-shingle removal mirror of Dedup.jaccardPairs: shingles with
     // df > 100 are dropped BEFORE sizes and intersections, so both engines
     // compute Jaccard over the same capped sets
-    "q_jaccard_pairs" ->
+    Query("q_jaccard_pairs", qJaccardPairs, Some(
       s"""WITH $oShingleIdx,
          |$oCappedIdx
          |SELECT doc_a, doc_b, ${r4("i / (sa.sz + sb.sz - i)")} AS jaccard
          |FROM cinter JOIN csz sa ON sa.doc_id = doc_a
          |            JOIN csz sb ON sb.doc_id = doc_b
-         |WHERE i / (sa.sz + sb.sz - i) >= 0.7""".stripMargin,
+         |WHERE i / (sa.sz + sb.sz - i) >= 0.7""".stripMargin)),
     // mirrors Dedup.containmentPairs: the same capped index/intersection,
     // each unordered pair fanned to its two directions, |A∩B|/|A| per side
-    "q_containment" ->
+    Query("q_containment", qContainment, Some(
       s"""WITH $oShingleIdx,
          |$oCappedIdx,
          |j AS (
@@ -487,18 +521,18 @@ private[graft] object TextDedupEntries {
          |  FROM j
          |)
          |SELECT contained_id, container_id, ${r4("craw")} AS containment
-         |FROM d WHERE craw >= $ContainTheta""".stripMargin,
-    "q_minhash_lsh" ->
+         |FROM d WHERE craw >= $ContainTheta""".stripMargin)),
+    Query("q_minhash_lsh", qMinhashLsh, Some(
       s"""WITH $oShingleIdx,
          |$oMinhash,
          |${oJaccard(0.7)}
          |SELECT c.doc_a, c.doc_b, j.jaccard
-         |FROM cand c JOIN jpairs j ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b""".stripMargin,
+         |FROM cand c JOIN jpairs j ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b""".stripMargin)),
     // recall audit: exact integer banding (b20 = 20*|∩| // |∪|) over the
     // df-capped truth pairs, LSH candidates from the SAME signature
     // machinery, expected-recall literals computed once in Scala
     // (Dedup.lshExpectedRecall) and inlined into both engines
-    "q_minhash_recall" -> {
+    Query("q_minhash_recall", qMinhashRecall, Some {
       val expCase = graft.operators.Dedup.lshExpectedRecall(5)
         .map { case (b, p) => s"WHEN $b THEN $p" }.mkString(" ")
       s"""WITH $oShingleIdx,
@@ -522,45 +556,17 @@ private[graft] object TextDedupEntries {
          |  ${r4("CAST(n_caught AS DOUBLE) / n_true")} AS recall,
          |  CASE b20 $expCase END AS expected_recall
          |FROM per""".stripMargin
-    },
+    }),
     // cross-set candidates → exact Jaccard ≥ tau → best eval match per
     // training doc by (4dp jaccard desc, eval id) — mirrors
     // Dedup.fuzzyDecontaminate's window exactly
-    "q_decontaminate_fuzzy" ->
-      s"""WITH $oShingleIdx,
-         |$oMinhashXEval,
-         |inter AS (
-         |  SELECT c.doc_a, c.doc_b, count(*) AS i
-         |  FROM cand c JOIN shidx ia ON ia.doc_id = c.doc_a
-         |              JOIN shidx ib ON ib.doc_id = c.doc_b AND ib.h = ia.h
-         |  GROUP BY 1, 2
-         |),
-         |jac AS (
-         |  SELECT doc_a, doc_b, i / (sa.sz + sb.sz - i) AS jraw,
-         |    ${r4("i / (sa.sz + sb.sz - i)")} AS jaccard
-         |  FROM inter JOIN shsz sa ON sa.doc_id = doc_a
-         |             JOIN shsz sb ON sb.doc_id = doc_b
-         |),
-         |jp AS (SELECT * FROM jac WHERE jraw >= $FuzzyDecontamTau),
-         |rk AS (
-         |  SELECT doc_a, doc_b, jaccard,
-         |    row_number() OVER (PARTITION BY doc_a ORDER BY jaccard DESC, doc_b) AS rn,
-         |    count(*) OVER (PARTITION BY doc_a) AS nm
-         |  FROM jp
-         |)
-         |SELECT doc_a AS doc_id, doc_b AS eval_match, jaccard AS max_jaccard,
-         |  CAST(nm AS BIGINT) AS n_eval_matches
-         |FROM rk WHERE rn = 1""".stripMargin,
-    "q_simhash" ->
-      s"""WITH $oSimhashSig
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 10""".stripMargin,
+    Query("q_decontaminate_fuzzy", qDecontaminateFuzzy, Some(fuzzyDecontamOracleSql)),
+    Query("q_simhash", qSimhash, Some(simhashOracleSql)),
+    Query("q_simhash_mp", qSimhashMp, Some(simhashOracleSql)),
     // same simhash signatures → all-pairs Hamming graph (the oracle may
     // brute-force what the engine bands) → recursive components (the
     // q_dedup_corpus reach idiom) → one row per class of >= 2 members
-    "q_simhash_classes" ->
+    Query("q_simhash_classes", qSimhashClasses, Some(
       s"""WITH RECURSIVE $oSimhashSig,
         |prs AS (
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -580,31 +586,6 @@ private[graft] object TextDedupEntries {
         |SELECT class_id, CAST(count(*) AS BIGINT) AS n_members,
         |  CAST(count(DISTINCT dd.source) AS BIGINT) AS n_sources
         |FROM cc JOIN documents dd USING (doc_id)
-        |GROUP BY class_id""".stripMargin,
+        |GROUP BY class_id""".stripMargin)),
   )
-
-  /** Shared DuckDB CTE chain for the 60-bit shingle SimHash signature
-    * (mirrors [[Dedup.simhash]]) — feeds both the pair and class oracles. */
-  private val oSimhashSig: String =
-    """tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      |tok0 AS (
-      |  SELECT doc_id, unnest(list_distinct(
-      |    CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
-      |         ELSE list_transform(range(1, len(toks) - 1),
-      |                i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) END)) AS tok
-      |  FROM tk
-      |), tokh AS (
-      |  SELECT DISTINCT doc_id,
-      |    CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS h
-      |  FROM tok0
-      |), bits AS (
-      |  SELECT doc_id, r.i AS i,
-      |    sum(CASE WHEN (h >> CAST(r.i AS INT)) & 1 = 1 THEN 1 ELSE -1 END) AS v
-      |  FROM tokh, range(60) r(i) GROUP BY doc_id, r.i
-      |), sh AS (
-      |  SELECT doc_id,
-      |    CAST(sum(CASE WHEN v >= 0
-      |      THEN (CAST(1 AS BIGINT) << CAST(i AS INT)) ELSE 0 END) AS BIGINT) AS simhash
-      |  FROM bits GROUP BY doc_id
-      |)""".stripMargin
 }

@@ -320,7 +320,11 @@ abstract class TokenGramExpression extends UnaryExpression {
   * drop-in for `shinglesFromTokens(split(text,' '), n)`. */
 case class TokenGramStrings(child: Expression, n: Int)
   extends TokenGramExpression {
-  require(n >= 1, s"n $n must be positive")
+  // n reaches here straight from SQL (`token_grams(s, 0)`), so it is
+  // rejected at analysis with a clear message rather than by a require
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (n < 1) TypeCheckResult.TypeCheckFailure(s"$prettyName needs n >= 1 (got $n)")
+    else super.checkInputDataTypes()
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "token_grams"
   override def nullSafeEval(a: Any): Any =

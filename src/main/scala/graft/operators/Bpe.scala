@@ -91,8 +91,8 @@ object Bpe {
     * candidate is always safe: it IS the greedy choice.
     *
     * Three acceptance rules exist because the plain-disjointness
-    * argument has holes the 512-merge plateau A/B (BpeSweep) caught
-    * live, plus one it could not have (the vocab-collision close, found
+    * argument has holes the 512-merge plateau A/B (SCALE.md, "BPE at
+    * ≥512 merges") caught live, plus one it could not have (the vocab-collision close, found
     * by review — BpeSpec pins a constructed corpus for it):
     *  - a SELF-merge (a,a) creates the brand-new pair (aa,aa), whose
     *    count is bounded only by the self-merge's OWN count — far above
@@ -201,7 +201,7 @@ object Bpe {
     * and a `batched = false` mode forcing one merge per refresh — the
     * sequential-greedy reference the batched mode must match bit for bit
     * (BpeSpec) and the A/B baseline for the ≥512-merge amortization
-    * demo ([[graft.BpeSweep]]). */
+    * measurement (SCALE.md, "BPE at ≥512 merges"). */
   private[graft] def trainMergesStats(docs: DataFrame, iters: Int,
       batched: Boolean = true): (DataFrame, Int) = {
     require(iters >= 1, "iters must be >= 1")

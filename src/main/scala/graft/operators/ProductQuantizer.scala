@@ -41,8 +41,8 @@ import graft.operators.Similarity.dot
 object ProductQuantizer {
 
   /** Shipped IVFADC operating point, chosen from the measured
-    * (subspaces × codebook × nprobe) sweep at sf0.1 (graft.PqSweep;
-    * frontier table in SCALE.md): 16 subspaces of 4 dims with 64-entry
+    * (subspaces × codebook × nprobe) sweep at sf0.1 (frontier table in
+    * SCALE.md, "IVFADC operating-point sweep (r9)"): 16 subspaces of 4 dims with 64-entry
     * codebooks = 96-bit codes (21× smaller than the 384-byte float
     * vector), probing 2 of 4 clusters. Recall@5 vs exact cosine over 50
     * queries: 0.388 at sf0.1 (vs 0.124 for the previous 8×8×16 point)
@@ -290,8 +290,8 @@ object ProductQuantizer {
     // stage 2 broadcasts the nQueries×shortlist candidate list to every
     // executor — the same every-executor-OOM hazard the other ANN entry
     // points guard with MaxBroadcastQueries, except here the broadcast is
-    // the PRODUCT of the two knobs (RerankSweep legitimately passes
-    // shortlist up to 10^6 with a single query)
+    // the PRODUCT of the two knobs (the rerank sweep recorded in SCALE.md
+    // legitimately passed shortlist up to 10^6 with a single query)
     require(nQueries.toLong * shortlist <= Similarity.MaxBroadcastQueries.toLong * 16,
       s"rerank shortlist of ${nQueries.toLong * shortlist} rows " +
         s"(nQueries=$nQueries × shortlist=$shortlist) exceeds " +

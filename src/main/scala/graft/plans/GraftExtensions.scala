@@ -15,8 +15,9 @@ import graft.functions.{BloomSet, FloatDotProduct, FreqSketch, JaroWinklerSimila
   *   SELECT wilder_rma(tr, 14) OVER (...), wilder_adx(pdm, ndm, tr, 14) OVER (...)
   *   SELECT float_dot(a.embedding, b.embedding) FROM ...
   *
-  * Install via `SparkSession.builder().withExtensions(new GraftExtensions)`
-  * or `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
+  * Install via `--conf spark.sql.extensions=graft.plans.GraftExtensions`
+  * (the conf `graft.SqlShell` passes to [[graft.GraftSession.local]]), or
+  * call `GraftExtensions.register(spark)` on an existing session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

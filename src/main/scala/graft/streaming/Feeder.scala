@@ -75,9 +75,7 @@ object Feeder {
   /** Write messages as JSON-lines text for file-based stream sources. */
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     tickMessages(spark, sfDir).select(col("value")).write.mode("overwrite").text(outDir)
     spark.stop()
   }

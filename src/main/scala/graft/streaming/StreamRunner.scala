@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sinks.IdempotentSink
@@ -21,14 +20,7 @@ import graft.sinks.IdempotentSink
 object StreamRunner {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, workDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(StreamIngest.rocksdbConf._1, StreamIngest.rocksdbConf._2)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus, StreamIngest.rocksdbConf)
 
     Feeder.tickMessages(spark, sfDir).select(col("value"))
       .write.mode("overwrite").text(s"$workDir/ticks")

@@ -171,11 +171,11 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("a self-merge closes the batch: (aa,aa) outranks the pre-merge runner-up") {
-    // The 512-merge A/B regression (BpeSweep) in miniature: merging the
-    // head (a,a) creates the brand-new pair (aa,aa) at half its count —
-    // far above the pre-merge runner-up (x,z) — so sequential greedy
-    // picks it SECOND. A batch that had accepted (x,z) alongside the
-    // self-merge shipped a wrong merge order.
+    // The 512-merge A/B regression (SCALE.md, "BPE at ≥512 merges") in
+    // miniature: merging the head (a,a) creates the brand-new pair (aa,aa)
+    // at half its count — far above the pre-merge runner-up (x,z) — so
+    // sequential greedy picks it SECOND. A batch that had accepted (x,z)
+    // alongside the self-merge shipped a wrong merge order.
     val docs = docsOf(("aaaa " * 100) + ("xz " * 40) + ("uv " * 30))
     val batched = Bpe.trainMerges(docs, 3).orderBy("iter").collect()
       .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq

@@ -2,28 +2,28 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Structural guards for the per-family entry split (r14): the aggregate
-  * maps in [[ExtendedEntries]] are `++` unions, so a query key accidentally
-  * registered in two family objects would silently LAST-WIN — one family's
-  * implementation (or oracle) would shadow the other with no error
-  * anywhere. These asserts make that a loud test failure instead. */
+/** Structural guards for the per-family entry split: each family object
+  * declares its own `entries`, and [[SparkEntry.registry]] joins them. A
+  * query name declared in two families must be a loud failure rather than
+  * one family's body (or oracle) silently shadowing the other's in the
+  * name-keyed views. */
 class EntrySplitSpec extends AnyFunSuite {
 
-  private val queryFamilies = Seq(
-    "AnnEntries" -> AnnEntries.queries.keySet,
-    "MediaEntries" -> MediaEntries.queries.keySet,
-    "TextDedupEntries" -> TextDedupEntries.queries.keySet,
-    "GraphEntries" -> GraphEntries.queries.keySet,
-    "StreamEntries" -> StreamEntries.queries.keySet,
-    "RelationalEntries" -> RelationalEntries.queries.keySet)
+  private val families: Seq[(String, Seq[Query])] = Seq(
+    "SparkEntry" -> SparkEntry.entries,
+    "AnnEntries" -> AnnEntries.entries,
+    "CorpusEntries" -> CorpusEntries.entries,
+    "GraphEntries" -> GraphEntries.entries,
+    "MediaEntries" -> MediaEntries.entries,
+    "RelationalEntries" -> RelationalEntries.entries,
+    "StreamEntries" -> StreamEntries.entries,
+    "TextDedupEntries" -> TextDedupEntries.entries)
 
-  private val oracleFamilies = Seq(
-    "AnnEntries" -> AnnEntries.oracleSql.keySet,
-    "MediaEntries" -> MediaEntries.oracleSql.keySet,
-    "TextDedupEntries" -> TextDedupEntries.oracleSql.keySet,
-    "GraphEntries" -> GraphEntries.oracleSql.keySet,
-    "StreamEntries" -> StreamEntries.oracleSql.keySet,
-    "RelationalEntries" -> RelationalEntries.oracleSql.keySet)
+  private val queryFamilies: Seq[(String, Set[String])] =
+    families.map { case (n, qs) => n -> qs.map(_.name).toSet }
+
+  private val oracleFamilies: Seq[(String, Set[String])] =
+    families.map { case (n, qs) => n -> qs.filter(_.oracle.isDefined).map(_.name).toSet }
 
   private def assertDisjoint(fams: Seq[(String, Set[String])]): Unit =
     for {
@@ -33,21 +33,12 @@ class EntrySplitSpec extends AnyFunSuite {
 
   test("family query maps are pairwise disjoint (no silent shadowing)") {
     assertDisjoint(queryFamilies)
-    assert(ExtendedEntries.queries.size == queryFamilies.map(_._2.size).sum)
+    assert(SparkEntry.queries.size == queryFamilies.map(_._2.size).sum)
+    assert(SparkEntry.registry.size == families.map(_._2.size).sum)
   }
 
   test("family oracle maps are pairwise disjoint (no silent shadowing)") {
     assertDisjoint(oracleFamilies)
-    assert(ExtendedEntries.oracleSql.size == oracleFamilies.map(_._2.size).sum)
-  }
-
-  test("every family oracle key has a query (and the registry stays aligned)") {
-    val q = ExtendedEntries.queries.keySet
-    val o = ExtendedEntries.oracleSql.keySet
-    val orphans = o.diff(q)
-    assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
-    // and the driver-facing union (SparkEntry) must cover both
-    assert(o.subsetOf(SparkEntry.oracleSql.keySet))
-    assert(q.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.oracleSql.size == oracleFamilies.map(_._2.size).sum)
   }
 }

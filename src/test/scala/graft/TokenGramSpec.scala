@@ -41,6 +41,14 @@ class TokenGramSpec extends AnyFunSuite {
     }
   }
 
+  test("token_grams(s, 0) fails at analysis with a clear message") {
+    graft.plans.GraftExtensions.register(spark)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT token_grams('a b c', 0)").collect()
+    }
+    assert(e.getMessage.contains("token_grams needs n >= 1 (got 0)"))
+  }
+
   test("token_gram_structs equals the tagged union of per-n gram lists") {
     val ns = Seq(1, 2, 3)
     for (t <- texts) {

@@ -9,25 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{WindowIndicators => WI}
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan strings of lineage-kept iterative loops are exponential to
-      // DESCRIBE (generateTreeString expands a DAG as a tree) — cap so the
-      // driver never OOMs stringifying a plan (r16 sweep, SCALE.md)
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      .config("spark.sql.warehouse.dir",
-        graft.SessionScoped.scratchDir("graft_wh"))
-      .config("spark.ui.enabled", "false")
-      .config(graft.streaming.StreamIngest.rocksdbConf._1,
-        graft.streaming.StreamIngest.rocksdbConf._2)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4,
+    "spark.sql.warehouse.dir" -> SessionScoped.scratchDir("graft_wh"),
+    graft.streaming.StreamIngest.rocksdbConf)
 }
 
 class WindowIndicatorsSpec extends AnyFunSuite {
