@@ -42,12 +42,24 @@ def norm(v):
         return v
     return v
 
+def duckdb_memory_limit():
+    """Half the host's MemTotal, clamped to 2..48 GB — the rule that sizes
+    SPARK_DRIVER_MEM for the test suite (ROADMAP's tier-1 command). A fixed
+    limit above physical memory lets DuckDB grow until the OS kills it
+    instead of spilling."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "2GB"
+    return f"{min(48, max(2, kb // 2097152))}GB"
+
 def compare():
     con = duckdb.connect()
     # let heavy oracles (the unrolled two-stage PQ mirrors at sf0.1)
     # spill to disk instead of dying on DuckDB's in-memory limit
     con.execute("SET temp_directory='/tmp/duckdb_spill'")
-    con.execute("SET memory_limit='48GB'")
+    con.execute(f"SET memory_limit='{duckdb_memory_limit()}'")
     for t in TABLES:
         f = f"{SF_DIR}/{t}.parquet"
         if os.path.exists(f):

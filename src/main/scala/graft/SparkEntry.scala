@@ -48,48 +48,6 @@ object SparkEntry {
   private def qBarsHourly(s: SparkSession, dir: String): DataFrame =
     Tables.bars(s, dir)
 
-  /** A1 + A6: sma_20 and Bollinger bands (backfill.py:17,30-37). */
-  private def qSmaBb(s: SparkSession, dir: String): DataFrame = {
-    val spec = WI.w()
-    val (_, up, lo) = WI.bollinger(col("close"), 20, 2.0, spec)
-    Tables.bars(s, dir).select(
-      col("symbol"), col("time"),
-      r(WI.sma(col("close"), 20, spec)).as("sma_20"),
-      r(up).as("bb_upper"),
-      r(lo).as("bb_lower"))
-  }
-
-  /** A8: stochastic %K(14) with SMA(3) smoothing (backfill.py:46-53). */
-  private def qStoch(s: SparkSession, dir: String): DataFrame = {
-    val spec = WI.w()
-    Tables.bars(s, dir).select(
-      col("symbol"), col("time"),
-      r(WI.stochK(col("high"), col("low"), col("close"), 14, 3, spec)).as("stoch_k_14"))
-  }
-
-  /** A10: money flow index (backfill.py:58-60). */
-  private def qMfi(s: SparkSession, dir: String): DataFrame = {
-    val spec = WI.w()
-    Tables.bars(s, dir).select(
-      col("symbol"), col("time"),
-      r(WI.mfi(col("high"), col("low"), col("close"), col("volume"), 14, spec)).as("mfi_14"))
-  }
-
-  /** A11: on-balance volume — exact integer math (backfill.py:61). */
-  private def qObv(s: SparkSession, dir: String): DataFrame = {
-    val spec = WI.w()
-    Tables.bars(s, dir).select(
-      col("symbol"), col("time"),
-      WI.obv(col("close"), col("volume"), spec).as("obv"))
-  }
-
-  /** A12: daily-anchored VWAP (backfill.py:62). */
-  private def qVwap(s: SparkSession, dir: String): DataFrame =
-    Tables.bars(s, dir).select(
-      col("symbol"), col("time"),
-      r(WI.vwap(col("time"), col("symbol"), col("high"), col("low"), col("close"),
-        col("volume"))).as("vwap"))
-
   /** Extended window-indicator family beyond the reference's 13 (same
     * pandas-ta catalog the reference draws from): Williams %R(14), ROC(12),
     * momentum(10), Donchian(20) channel, Keltner(20, ATR-SMA 10) channel,
@@ -155,15 +113,6 @@ object SparkEntry {
 
   import graft.functions.SeededAggs
 
-  /** A2/A3: SMA-seeded EMA (backfill.py:18-19) — custom window aggregate. */
-  private def qEma(s: SparkSession, dir: String): DataFrame = {
-    val spec = WI.w()
-    Tables.bars(s, dir).select(
-      col("symbol"), col("time"),
-      r(SeededAggs.ema(col("close"), 10, spec)).as("ema_10"),
-      r(SeededAggs.ema(col("close"), 20, spec)).as("ema_20"))
-  }
-
   /** Holt linear-trend smoothing + one-step forecast per symbol
     * ([[SeededAggs.HoltAgg]]) — the forecasting extension of the EMA
     * family: level and trend folded together over the running frame,
@@ -206,30 +155,6 @@ object SparkEntry {
       r(kf(2)).as("kf_cov"))
   }
 
-  /** A5: MACD line = EMA(12) − EMA(26) (backfill.py:23-27). */
-  private def qMacd(s: SparkSession, dir: String): DataFrame = {
-    val spec = WI.w()
-    Tables.bars(s, dir).select(
-      col("symbol"), col("time"),
-      r(SeededAggs.ema(col("close"), 12, spec) -
-        SeededAggs.ema(col("close"), 26, spec)).as("macd_line"))
-  }
-
-  /** A4: RSI(14) via Wilder RMA of gains/losses (backfill.py:20). */
-  private def qRsi(s: SparkSession, dir: String): DataFrame =
-    IndicatorPipeline.withRsi14(Tables.bars(s, dir)).select(
-      col("symbol"), col("time"), r(col("rsi_14")).as("rsi_14"))
-
-  /** A9: ATR(14) = RMA of true range (backfill.py:55). */
-  private def qAtr(s: SparkSession, dir: String): DataFrame =
-    IndicatorPipeline.withAtr14(Tables.bars(s, dir)).select(
-      col("symbol"), col("time"), r(col("atr_14")).as("atr_14"))
-
-  /** A7: Wilder ADX(14), doubly recursive (backfill.py:39-44). */
-  private def qAdx(s: SparkSession, dir: String): DataFrame =
-    IndicatorPipeline.withAdx14(Tables.bars(s, dir)).select(
-      col("symbol"), col("time"), r(col("adx_14")).as("adx_14"))
-
   private val doubleIndicatorCols = Seq("sma_20", "ema_10", "ema_20", "macd_line",
     "adx_14", "rsi_14", "stoch_k_14", "mfi_14", "bb_upper", "bb_lower", "atr_14", "vwap")
 
@@ -240,6 +165,14 @@ object SparkEntry {
     * (backfill.py:12-64,137) over hourly bars. */
   private def qIndicators(s: SparkSession, dir: String): DataFrame =
     roundIndicators(IndicatorPipeline.full(Tables.bars(s, dir)))
+
+  /** A single-indicator query (SURVEY §2.3 A1-A12): `symbol`, `time` and
+    * the named columns of the rounded [[qIndicators]] row, so each of the
+    * reference's indicators has one Catalyst definition
+    * ([[IndicatorPipeline.full]]). Column pruning drops every window
+    * expression the projection does not read. */
+  private def indicatorQuery(cols: String*): (SparkSession, String) => DataFrame =
+    (s, dir) => qIndicators(s, dir).select(("symbol" +: "time" +: cols).map(col): _*)
 
   /** The live-path terminal query (consumer.py:135-173): tick-derived bars
     * (OHLC = price, volume null ⇒ mfi/obv/vwap null), warm-up gate ≥26 rows
@@ -331,7 +264,7 @@ object SparkEntry {
 
   /** The paper's own indicator, parity and read-path queries. */
   val entries: Seq[Query] = Seq(
-    Query("q_ema", qEma, Some(recQuery(
+    Query("q_ema", indicatorQuery("ema_10", "ema_20"), Some(recQuery(
       s"""SELECT symbol, time, ${r4(emaOut10)} AS ema_10, ${r4(emaOut20)} AS ema_20
          |FROM rec""".stripMargin))),
 
@@ -353,16 +286,16 @@ object SparkEntry {
          |  ${r4("kk")} AS kf_gain, ${r4("kp")} AS kf_cov
          |FROM rec""".stripMargin))),
 
-    Query("q_macd", qMacd, Some(recQuery(
+    Query("q_macd", indicatorQuery("macd_line"), Some(recQuery(
       s"SELECT symbol, time, ${r4(macdOut)} AS macd_line FROM rec"))),
 
-    Query("q_rsi", qRsi, Some(recQuery(
+    Query("q_rsi", indicatorQuery("rsi_14"), Some(recQuery(
       s"SELECT symbol, time, ${r4(rsiOut)} AS rsi_14 FROM rec"))),
 
-    Query("q_atr", qAtr, Some(recQuery(
+    Query("q_atr", indicatorQuery("atr_14"), Some(recQuery(
       s"SELECT symbol, time, ${r4(atrOut)} AS atr_14 FROM rec"))),
 
-    Query("q_adx", qAdx, Some(recQuery(
+    Query("q_adx", indicatorQuery("adx_14"), Some(recQuery(
       s"SELECT symbol, time, ${r4(adxOut)} AS adx_14 FROM rec"))),
 
     Query("q_indicators", qIndicators, Some(recWinQuery(fullIndicatorSelect))),
@@ -377,7 +310,7 @@ object SparkEntry {
 
     Query("q_bars_hourly", qBarsHourly, Some(withTicksBars("SELECT * FROM bars"))),
 
-    Query("q_sma_bb", qSmaBb, Some(withTicksBars(
+    Query("q_sma_bb", indicatorQuery("sma_20", "bb_upper", "bb_lower"), Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time,
         |    count(close) OVER w20 AS c20,
@@ -392,7 +325,7 @@ object SparkEntry {
         |  floor((CASE WHEN c20 = 20 THEN m20 - 2 * sd20 END) * 10000 + 0.5) / 10000 AS bb_lower
         |FROM w1""".stripMargin))),
 
-    Query("q_stoch", qStoch, Some(withTicksBars(
+    Query("q_stoch", indicatorQuery("stoch_k_14"), Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time, close,
         |    count(close) OVER w14 AS c14,
@@ -411,7 +344,7 @@ object SparkEntry {
         |)
         |SELECT symbol, time, floor((CASE WHEN c3 = 3 THEN k3 END) * 10000 + 0.5) / 10000 AS stoch_k_14 FROM w3""".stripMargin))),
 
-    Query("q_mfi", qMfi, Some(withTicksBars(
+    Query("q_mfi", indicatorQuery("mfi_14"), Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time, volume,
         |    (high + low + close) / 3 AS tp,
@@ -430,7 +363,7 @@ object SparkEntry {
         |  floor((CASE WHEN c14 = 14 THEN 100 * pos / nullif(pos + neg, 0) END) * 10000 + 0.5) / 10000 AS mfi_14
         |FROM w2""".stripMargin))),
 
-    Query("q_obv", qObv, Some(withTicksBars(
+    Query("q_obv", indicatorQuery("obv"), Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time, volume,
         |    close - lag(close) OVER (PARTITION BY symbol ORDER BY time) AS d
@@ -443,7 +376,7 @@ object SparkEntry {
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS obv
         |FROM w1""".stripMargin))),
 
-    Query("q_vwap", qVwap, Some(withTicksBars(
+    Query("q_vwap", indicatorQuery("vwap"), Some(withTicksBars(
       """, w1 AS (
         |  SELECT symbol, time, volume, (high + low + close) / 3 AS tp FROM bars
         |)

@@ -78,7 +78,12 @@ object TokenGram {
     (v << 4) | ((d(7) >> 4) & 0xfL)
   }
 
-  /** All word n-grams as zero-copy UTF8String slices. */
+  /** All word n-grams as zero-copy UTF8String slices. Every slice shares
+    * the whole document's byte array, so a consumer that RETAINS the
+    * returned array (caching it, collect_list of grams, a driver collect)
+    * pins the full document once per gram. Today's callers explode the
+    * array at once, which copies each gram into its own UnsafeRow; copy a
+    * slice (`UTF8String.clone`) before keeping it any longer. */
   def grams(s: UTF8String, n: Int): Array[UTF8String] = {
     val bytes = s.getBytes
     val starts = tokenStarts(bytes)
@@ -317,7 +322,9 @@ abstract class TokenGramExpression extends UnaryExpression {
 }
 
 /** All word n-grams of a single-space-joined text, as zero-copy slices —
-  * drop-in for `shinglesFromTokens(split(text,' '), n)`. */
+  * drop-in for `shinglesFromTokens(split(text,' '), n)`. Explode the
+  * result; a retained array pins the whole document (see
+  * [[TokenGram.grams]]). */
 case class TokenGramStrings(child: Expression, n: Int)
   extends TokenGramExpression {
   // n reaches here straight from SQL (`token_grams(s, 0)`), so it is

@@ -1,11 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-/** Window-expressible technical indicators (SURVEY §2.3 A1, A6, A8, A10-A12).
+/** Shared window helpers and the extended window-indicator family
+  * (Williams %R, ROC, momentum, Donchian, Keltner, CCI, rolling quantiles).
+  * The reference's 13 indicators (SURVEY §2.3 A1-A12) are defined once, in
+  * [[graft.operators.IndicatorPipeline]]; this object supplies the
+  * per-symbol spec [[w]] it shares, and the helpers [[sma]],
+  * [[typicalPrice]] and [[trueRange]] that the extended family and
+  * `Signals` build on.
   *
   * Every indicator runs over `Window.partitionBy(symbol).orderBy(time)` —
   * Catalyst merges all of them into a single WindowExec, so the whole family
@@ -33,85 +38,19 @@ object WindowIndicators {
 
   private def last(n: Int, spec: WindowSpec): WindowSpec = spec.rowsBetween(-(n - 1), 0)
 
-  /** Row count within the symbol so far (1-based) — gating primitive. */
-  def rowIndex(spec: WindowSpec): Column = row_number().over(spec)
-
   /** Simple moving average over the trailing `n` rows; null until `n` rows. */
   def sma(c: Column, n: Int, spec: WindowSpec): Column = {
     val full = count(c).over(last(n, spec)) === n
     when(full, avg(c).over(last(n, spec)))
   }
 
-  /** Bollinger middle/upper/lower: SMA(n) ± k·stddev_samp(n) (pandas-ta
-    * bbands default ddof=1, backfill.py:30-37). */
-  def bollinger(c: Column, n: Int, k: Double, spec: WindowSpec): (Column, Column, Column) = {
-    val full = count(c).over(last(n, spec)) === n
-    val mid = when(full, avg(c).over(last(n, spec)))
-    val sd = when(full, stddev_samp(c).over(last(n, spec)))
-    (mid, mid + lit(k) * sd, mid - lit(k) * sd)
-  }
-
-  /** Stochastic %K with SMA smoothing (pandas-ta stoch k=14, smooth_k=3,
-    * backfill.py:46-53; %D discarded). Null until 14+3-1 rows. */
-  def stochK(high: Column, low: Column, close: Column, n: Int, smooth: Int,
-      spec: WindowSpec): Column = {
-    val fullN = count(close).over(last(n, spec)) === n
-    val lo = min(low).over(last(n, spec))
-    val hi = max(high).over(last(n, spec))
-    val rawK = when(fullN, lit(100) * (close - lo) / nullif(hi - lo, lit(0)))
-    val fullS = count(rawK).over(last(smooth, spec)) === smooth
-    when(fullS, avg(rawK).over(last(smooth, spec)))
-  }
-
-  /** Typical price (h+l+c)/3 — shared by mfi and vwap. */
+  /** Typical price (h+l+c)/3 — shared by keltner and cci. */
   def typicalPrice(high: Column, low: Column, close: Column): Column =
     (high + low + close) / lit(3)
 
-  /** Money Flow Index over `n` rows (backfill.py:58-60). Signed money flow
-    * uses the typical-price diff; flat diffs contribute to neither side.
-    * Volume-null handling: an all-null volume column (the live path,
-    * consumer.py:124-127) nulls the result; isolated null-volume rows
-    * inside an otherwise-populated window are excluded from the money-flow
-    * sums (sum skips nulls) rather than NaN-poisoning the window — a
-    * documented deviation from pandas' NaN propagation, matched by the
-    * oracle. */
-  def mfi(high: Column, low: Column, close: Column, volume: Column, n: Int,
-      spec: WindowSpec): Column = {
-    val tp = typicalPrice(high, low, close)
-    val d = tp - lag(tp, 1).over(spec)
-    val raw = tp * volume
-    val pos = when(d > 0, raw).otherwise(lit(0.0))
-    val neg = when(d < 0, raw).otherwise(lit(0.0))
-    // d is null on each symbol's first row ⇒ require n non-null diffs.
-    val full = count(d).over(last(n, spec)) === n
-    val posSum = sum(when(d.isNotNull, pos)).over(last(n, spec))
-    val negSum = sum(when(d.isNotNull, neg)).over(last(n, spec))
-    when(full, lit(100) * posSum / nullif(posSum + negSum, lit(0)))
-  }
-
-  /** On-balance volume: cumulative sign(Δclose)·volume, seeded with the
-    * first row's volume (classic OBV; backfill.py:61). Long-typed. */
-  def obv(close: Column, volume: Column, spec: WindowSpec): Column = {
-    val d = close - lag(close, 1).over(spec)
-    val signed = when(d.isNull, volume)
-      .when(d > 0, volume)
-      .when(d < 0, -volume)
-      .otherwise(lit(0L))
-    sum(signed).over(spec.rowsBetween(Window.unboundedPreceding, 0)).cast("long")
-  }
-
-  /** Daily-anchored VWAP: Σ(tp·vol)/Σ(vol) running within (symbol, calendar
-    * day) — pandas-ta anchor "D" (backfill.py:62, SURVEY §2.3 A12). */
-  def vwap(time: Column, symbol: Column, high: Column, low: Column, close: Column,
-      volume: Column): Column = {
-    val wd = Window.partitionBy(symbol, to_date(time)).orderBy(time)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val tp = typicalPrice(high, low, close)
-    sum(tp * volume).over(wd) / sum(volume).over(wd)
-  }
-
   /** True range: max(h−l, |h−prev c|, |l−prev c|); h−l on each symbol's
-    * first row (prev close undefined). Input to ATR (backfill.py:55). */
+    * first row (prev close undefined); the ATR of backfill.py:55 smooths
+    * the same series (IndicatorPipeline computes it over its layered lag). */
   def trueRange(high: Column, low: Column, close: Column, spec: WindowSpec): Column = {
     val pc = lag(close, 1).over(spec)
     when(pc.isNull, high - low)
@@ -207,21 +146,5 @@ object WindowIndicators {
     val lo = math.floor(pos).toInt
     val frac = pos - lo
     (lo, 1 - frac, frac)
-  }
-
-  /** Append the window-expressible indicator family to a bars frame
-    * (time, symbol, open, high, low, close, volume). */
-  def withAll(bars: DataFrame): DataFrame = {
-    val spec = w()
-    val (_, up, lo) = bollinger(col("close"), 20, 2.0, spec)
-    bars
-      .withColumn("sma_20", sma(col("close"), 20, spec))
-      .withColumn("bb_upper", up)
-      .withColumn("bb_lower", lo)
-      .withColumn("stoch_k_14", stochK(col("high"), col("low"), col("close"), 14, 3, spec))
-      .withColumn("mfi_14", mfi(col("high"), col("low"), col("close"), col("volume"), 14, spec))
-      .withColumn("obv", obv(col("close"), col("volume"), spec))
-      .withColumn("vwap", vwap(col("time"), col("symbol"), col("high"), col("low"),
-        col("close"), col("volume")))
   }
 }

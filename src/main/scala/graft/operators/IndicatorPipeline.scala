@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 
@@ -50,85 +50,6 @@ object IndicatorPipeline {
       .select(Model.DbColumns.map(col): _*)
   }
 
-  // The single-Column forms below inline their lag/RMA sub-expressions, and
-  // Catalyst extracts — but does not common-subexpression-eliminate —
-  // repeated window expressions: the inlined RSI plans 4 identical lags and
-  // 3 seeded RMAs where 1 and 2 suffice. The with*14 DataFrame forms layer
-  // the selects so each lag and each custom aggregate is evaluated exactly
-  // once; both window layers share one shuffle + sort on (symbol, time).
-
-  /** rsi_14 appended via layered selects — the plan-efficient form. */
-  def withRsi14(bars: DataFrame): DataFrame = {
-    val spec = WI.w()
-    val l1 = bars.select(col("*"), lag(col("close"), 1).over(spec).as("_pc"))
-    val d = col("close") - col("_pc")
-    val gain = when(d.isNotNull, greatest(d, lit(0.0)))
-    val loss = when(d.isNotNull, greatest(-d, lit(0.0)))
-    val l2 = l1.select(col("*"),
-      SeededAggs.rma(gain, 14, spec).as("_ag"),
-      SeededAggs.rma(loss, 14, spec).as("_al"))
-    l2.select(col("*"),
-      when(col("_al") === 0, lit(100.0))
-        .otherwise(lit(100.0) - lit(100.0) / (lit(1.0) + col("_ag") / col("_al")))
-        .as("rsi_14"))
-  }
-
-  /** atr_14 appended via layered selects — the plan-efficient form. */
-  def withAtr14(bars: DataFrame): DataFrame = {
-    val spec = WI.w()
-    val l1 = bars.select(col("*"), lag(col("close"), 1).over(spec).as("_pc"))
-    val hl = col("high") - col("low")
-    val tr = when(col("_pc").isNull, hl)
-      .otherwise(greatest(hl, abs(col("high") - col("_pc")), abs(col("low") - col("_pc"))))
-    l1.select(col("*"), SeededAggs.rma(tr, 14, spec).as("atr_14"))
-  }
-
-  /** adx_14 appended via layered selects — the plan-efficient form. */
-  def withAdx14(bars: DataFrame): DataFrame = {
-    val spec = WI.w()
-    val l1 = bars.select(col("*"),
-      lag(col("close"), 1).over(spec).as("_pc"),
-      lag(col("high"), 1).over(spec).as("_ph"),
-      lag(col("low"), 1).over(spec).as("_pl"))
-    val up = col("high") - col("_ph")
-    val dn = col("_pl") - col("low")
-    val pdm = when(up.isNotNull, when(up > dn && up > 0, up).otherwise(lit(0.0)))
-    val ndm = when(dn.isNotNull, when(dn > up && dn > 0, dn).otherwise(lit(0.0)))
-    val hl = col("high") - col("low")
-    val tr = when(col("_pc").isNull, hl)
-      .otherwise(greatest(hl, abs(col("high") - col("_pc")), abs(col("low") - col("_pc"))))
-    l1.select(col("*"), SeededAggs.adx(pdm, ndm, when(up.isNotNull, tr), 14, spec).as("adx_14"))
-  }
-
-  /** RSI(14): Wilder RMA of gains/losses over close diffs (backfill.py:20);
-    * zero average loss ⇒ 100. Inline-Column form (see [[withRsi14]]). */
-  def rsi14(spec: WindowSpec): Column = {
-    val d = col("close") - lag(col("close"), 1).over(spec)
-    val gain = when(d.isNotNull, greatest(d, lit(0.0)))
-    val loss = when(d.isNotNull, greatest(-d, lit(0.0)))
-    val avgGain = SeededAggs.rma(gain, 14, spec)
-    val avgLoss = SeededAggs.rma(loss, 14, spec)
-    when(avgLoss === 0, lit(100.0))
-      .otherwise(lit(100.0) - lit(100.0) / (lit(1.0) + avgGain / avgLoss))
-  }
-
-  /** ATR(14): Wilder RMA of the full true-range series (backfill.py:55). */
-  def atr14(spec: WindowSpec): Column =
-    SeededAggs.rma(WI.trueRange(col("high"), col("low"), col("close"), spec), 14, spec)
-
-  /** ADX(14) over lag-derived (+DM, −DM, TR) (backfill.py:39-44). The TR
-    * series starts at row 2 where ±DM are defined, matching the
-    * diff-aligned Wilder recursion; ATR smooths the full TR series. */
-  def adx14(spec: WindowSpec): Column = {
-    val high = col("high"); val low = col("low")
-    val up = high - lag(high, 1).over(spec)
-    val dn = lag(low, 1).over(spec) - low
-    val pdm = when(up.isNotNull, when(up > dn && up > 0, up).otherwise(lit(0.0)))
-    val ndm = when(dn.isNotNull, when(dn > up && dn > 0, dn).otherwise(lit(0.0)))
-    val tr = WI.trueRange(high, low, col("close"), spec)
-    SeededAggs.adx(pdm, ndm, when(up.isNotNull, tr), 14, spec)
-  }
-
   /** Three explicit window layers so Catalyst places all independent window
     * expressions of a layer in ONE WindowExec (sequential withColumn chains
     * defeat CollapseWindow and yielded 9 Window operators; this shape gives
@@ -136,7 +57,33 @@ object IndicatorPipeline {
     * shuffle and at most two sorts — the vwap spec's (symbol, day)
     * clustering is satisfied by the symbol hash partitioning).
     * Expression-for-expression identical to the naive chain (oracle
-    * parity unaffected). */
+    * parity unaffected).
+    *
+    * This is the engine's one Catalyst definition of the reference's 13
+    * indicators (SURVEY §2.3 A1-A12). The single-indicator queries
+    * are projections of [[full]]; Catalyst's column pruning drops every
+    * window expression a projection does not read. Per-indicator notes:
+    *  - sma_20 / bb_upper / bb_lower (A1, A6): SMA(20) ± 2·stddev_samp(20),
+    *    pandas-ta bbands ddof=1 (backfill.py:17,30-37).
+    *  - ema_10 / ema_20 (A2, A3): SMA-seeded EMA (backfill.py:18-19);
+    *    macd_line (A5): EMA(12) − EMA(26) (backfill.py:23-27).
+    *  - rsi_14 (A4): Wilder RMA of gains/losses over close diffs; zero
+    *    average loss ⇒ 100 (backfill.py:20).
+    *  - adx_14 (A7): the TR series fed to ADX starts at row 2 where ±DM are
+    *    defined, matching the diff-aligned Wilder recursion; atr_14 (A9)
+    *    smooths the full TR series (backfill.py:39-44,55).
+    *  - stoch_k_14 (A8): %K(14) with SMA(3) smoothing, %D discarded; null
+    *    until 14+3-1 rows (backfill.py:46-53).
+    *  - mfi_14 (A10): signed money flow on the typical-price diff; flat
+    *    diffs count on neither side. An all-null volume column (the live
+    *    path, consumer.py:124-127) nulls the result; isolated null-volume
+    *    rows are skipped by the sums rather than NaN-poisoning the window —
+    *    a documented deviation from pandas, matched by the oracle
+    *    (backfill.py:58-60).
+    *  - obv (A11): cumulative sign(Δclose)·volume seeded with the first
+    *    row's volume (classic OBV), exact long math (backfill.py:61).
+    *  - vwap (A12): Σ(tp·vol)/Σ(vol) running within (symbol, calendar day),
+    *    pandas-ta anchor "D" (backfill.py:62). */
   private def withIndicators(bars: DataFrame, spec: WindowSpec): DataFrame = {
     val close = col("close"); val high = col("high"); val low = col("low")
     def w(n: Int) = spec.rowsBetween(-(n - 1), 0)

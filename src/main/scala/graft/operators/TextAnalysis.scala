@@ -271,12 +271,18 @@ object TextAnalysis {
     * Shape at scale (optimization r19, guide §2.4): every metric is
     * PER-DOCUMENT, so the whole gate is ONE pure-codegen scan — the
     * native [[graft.functions.TokenGramRepStats]] kernel computes the
-    * bigram counts inside the scan task (xxhash64 gram keys, the same
-    * intra-doc hashed-key approximation as [[repetitionNgrams]],
-    * oracle-pinned at all SFs) and the former explode → two keyed
-    * shuffles → join-back collapse to zero exchanges. A document is kept
-    * when every metric is under its threshold. Fractions are 4-dp
-    * rounded so the flags are float-noise-stable across engines. */
+    * bigram counts inside the scan task and the former explode → two
+    * keyed shuffles → join-back collapse to zero exchanges. A document is
+    * kept when every metric is under its threshold. Fractions are 4-dp
+    * rounded so the flags are float-noise-stable across engines.
+    *
+    * APPROXIMATION NOTE (hashed gram keys, r19): bigrams are counted by
+    * their xxhash64 key, not their text. A 64-bit collision between two
+    * DISTINCT bigrams of one document (~n²/2⁶⁵ per doc, below 10⁻¹⁶ at
+    * realistic doc lengths) would merge their counts, inflating
+    * dup_bigram_frac or top_bigram_frac and possibly flipping `keep`.
+    * The oracle gate pins the shipped corpora bit-identical at
+    * sf0.001/0.01/0.1; [[repetitionNgrams]] makes the same trade. */
   def repetition(docs: DataFrame, maxTokenDup: Double = 0.30,
       maxDupBigram: Double = 0.10, maxTopBigram: Double = 0.10): DataFrame = {
     val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
@@ -314,23 +320,18 @@ object TextAnalysis {
     * positions mirror exactly across engines). `keep` applies the paper's
     * per-n thresholds, each relaxable.
     *
-    * Shape at scale (fused r18, native generators r19): the nine per-n
-    * passes collapse into TWO generator scans over one materialized base.
-    * The top side emits every (n, gram-hash) for n ∈ {2,3,4} in one pass
-    * into a single (doc, n, gram) count → per-(doc, n) max. The dup side
-    * emits every (n, start, gram-hash) for n ∈ {5..10} in one pass; the
-    * (doc, n, gram) count aggregate ALSO collects the start positions,
-    * and the covered-position count is an interval-union fold over the
-    * sorted starts of the c>1 rows (equal by construction to the former
-    * explode-positions → distinct → count, without shuffling Σc·n
-    * position rows). Both generators are the native [[
-    * graft.functions.TokenGramXx64s]] expression — one linear byte scan
-    * per document emitting (n, i, xxhash64) rows, replacing the r18
-    * interpreted transform-lambda chain that built and hashed every gram
-    * string (guide §1.2 step 2: per-task work).
+    * Shape at scale (optimization r19): ONE scan, zero exchanges. Every
+    * metric is per-document, so the native
+    * [[graft.functions.TokenGramRepStats]] kernel computes all nine per-n
+    * statistics inside the scan task: it finds the token starts once per
+    * document, then for each n counts the xxhash64 keys of its windows in
+    * a per-document hash map — the max count gives top_c, and an
+    * interval-union fold over the duplicated grams' start positions
+    * (already sorted, in scan order) gives the covered-position count.
+    * The plan is scan → project.
     *
-    * APPROXIMATION NOTE (hashed gram keys, r18): grams are xxhash64-keyed
-    * through the count aggregates — the gram text is only an intra-
+    * APPROXIMATION NOTE (hashed gram keys, r18): grams are counted by
+    * their xxhash64 key — the gram text is only an intra-
     * document grouping key (outputs carry counts and fractions, never
     * grams), so top_c / dup coverage are probabilistically exact: a
     * 64-bit collision between two DISTINCT grams of one document

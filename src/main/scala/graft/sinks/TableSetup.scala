@@ -12,8 +12,9 @@ import graft.model.Model
   *    Model.DbColumns;
   *  - `create_hypertable('stock_indicators', by_range('time'))` → parquet
   *    `PARTITIONED BY (day)`: time-range queries prune partitions exactly
-  *    like hypertable chunk exclusion, and at 100 TB the partition column
-  *    also scopes the idempotent sink's anti-join.
+  *    like hypertable chunk exclusion. [[writeIndicators]]' first-write-
+  *    wins anti-join is not scoped by it: it reads the keys of every `day`
+  *    partition (ROADMAP direction 2).
   */
 object TableSetup {
 
@@ -26,8 +27,11 @@ object TableSetup {
 
   /** Append indicator rows with PK(time,symbol) first-write-wins semantics
     * (within the batch AND against prior appends — the ON CONFLICT DO
-    * NOTHING analog), partitioned by calendar day. At scale the anti-join
-    * reads only the key columns of the partitions the batch touches. */
+    * NOTHING analog), partitioned by calendar day. The anti-join reads
+    * the key columns of EVERY `day` partition already written: its
+    * existing-side scan carries no `PartitionFilters` (checked with EXPLAIN
+    * FORMATTED), so its cost grows with the table, not with the batch.
+    * Scoping it to the days the batch touches is ROADMAP direction 2. */
   def writeIndicators(df: DataFrame, path: String): Unit = {
     val spark = df.sparkSession
     // deterministic in-batch dedup: smallest full-row tuple per key

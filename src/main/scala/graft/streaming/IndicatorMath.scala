@@ -11,7 +11,8 @@ import graft.model.Model.IndicatorRow
   * recompute, keep `iloc[-1]`).
   *
   * Float discipline: every fold uses the same operation order as the batch
-  * Catalyst implementations (SeededAggs / WindowIndicators), so streaming
+  * Catalyst definition (IndicatorPipeline's window layers over the
+  * SeededAggs folds), so streaming
   * and batch agree bit-for-bit while the frame is untruncated; stddev uses
   * Spark's CentralMomentAgg update recurrence for the same reason.
   */

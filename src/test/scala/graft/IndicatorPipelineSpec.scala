@@ -58,6 +58,22 @@ class IndicatorPipelineSpec extends AnyFunSuite {
     assert(out.filter(col("sma_20").isNull).count() == 19)
   }
 
+  test("single-indicator queries plan only the window expressions they read") {
+    // Each of these queries is a projection of IndicatorPipeline.full; the
+    // design relies on column pruning reaching through its layered selects.
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    val maxWindowExprs = Map("q_rsi" -> 3, "q_atr" -> 2, "q_adx" -> 4,
+      "q_sma_bb" -> 3, "q_stoch" -> 5, "q_mfi" -> 4, "q_obv" -> 2,
+      "q_vwap" -> 2, "q_ema" -> 2, "q_macd" -> 2)
+    val over = maxWindowExprs.toSeq.sorted.flatMap { case (q, max) =>
+      val plan = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+        .queryExecution.optimizedPlan
+      val n = plan.collect { case w: Window => w.windowExpressions.size }.sum
+      if (n > max) Some(s"$q plans $n window expressions, at most $max expected") else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
+  }
+
   test("flagship entry() runs and returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).limit(5).count() > 0)
   }

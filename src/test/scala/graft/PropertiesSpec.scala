@@ -8,6 +8,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{SeededAggs, WindowIndicators => WI}
+import graft.operators.IndicatorPipeline
 
 /** ScalaCheck-generated property tests from SURVEY §5's plan: indicator
   * invariants under arbitrary 2-dp price series (raw Gen sampling — the
@@ -31,11 +32,12 @@ class PropertiesSpec extends AnyFunSuite {
     samples(5).foreach { vals =>
       val spec = WI.w()
       val wcum = spec.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val rows = df(vals)
+      val bars = CloseBars(df(vals).withColumn("volume", lit(null).cast("long")))
+      val rows = IndicatorPipeline.full(bars)
         .withColumn("sma", WI.sma(col("close"), 14, spec))
         .withColumn("mn", min(col("close")).over(spec.rowsBetween(-13, 0)))
         .withColumn("mx", max(col("close")).over(spec.rowsBetween(-13, 0)))
-        .withColumn("rsi", graft.operators.IndicatorPipeline.rsi14(spec))
+        .withColumn("rsi", col("rsi_14"))
         .withColumn("ema", SeededAggs.ema(col("close"), 10, spec))
         .withColumn("rmn", min(col("close")).over(wcum))
         .withColumn("rmx", max(col("close")).over(wcum))
@@ -156,8 +158,8 @@ class PropertiesSpec extends AnyFunSuite {
       val withVol = vals.zipWithIndex.map { case (v, i) =>
         (new Timestamp(i * 1000L), "S", v, (i % 50 + 1).toLong)
       }.toDF("time", "symbol", "close", "volume")
-      val lastObv = withVol
-        .select(col("time"), WI.obv(col("close"), col("volume"), WI.w()).as("obv"))
+      val lastObv = IndicatorPipeline.full(CloseBars(withVol))
+        .select(col("time"), col("obv"))
         .orderBy(col("time").desc).limit(1).head().getLong(1)
       var acc = 1L // volume at i=0 is (0 % 50) + 1
       (1 until vals.length).foreach { i =>

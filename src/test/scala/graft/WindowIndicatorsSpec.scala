@@ -2,16 +2,25 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{WindowIndicators => WI}
+import graft.operators.IndicatorPipeline
 
 object SparkTestSession {
   lazy val spark: SparkSession = GraftSession.local(4,
     "spark.sql.warehouse.dir" -> SessionScoped.scratchDir("graft_wh"),
     graft.streaming.StreamIngest.rocksdbConf)
+}
+
+/** The [[IndicatorPipeline.full]] input built from a
+  * (time, symbol, close, volume) frame: open, high and low all = close. */
+object CloseBars {
+  def apply(df: DataFrame): DataFrame = df.select(col("time"), col("symbol"),
+    col("close").as("open"), col("close").as("high"), col("close").as("low"),
+    col("close"), col("volume"))
 }
 
 class WindowIndicatorsSpec extends AnyFunSuite {
@@ -57,7 +66,7 @@ class WindowIndicatorsSpec extends AnyFunSuite {
       (new Timestamp(0L), "S", 1.0, 10L), (new Timestamp(1000L), "S", 2.0, 20L),
       (new Timestamp(2000L), "S", 3.0, 30L), (new Timestamp(3000L), "S", 2.0, 40L))
       .toDF("time", "symbol", "close", "volume")
-    val got = df.select(WI.obv(col("close"), col("volume"), WI.w()).as("obv"))
+    val got = IndicatorPipeline.full(CloseBars(df)).select(col("obv"))
       .orderBy("obv").collect().map(_.getLong(0))
     // +10, +20, +30, -40 → running 10, 30, 60, 20
     assert(got.toSeq == Seq(10L, 20L, 30L, 60L))
@@ -65,15 +74,9 @@ class WindowIndicatorsSpec extends AnyFunSuite {
 
   test("null volume (live path) nulls mfi/obv/vwap — consumer.py:124-127 contract") {
     val vals = (1 to 40).map(i => 100.0 + i % 7)
-    val df = series(vals)
-      .withColumn("high", col("close")).withColumn("low", col("close"))
-      .withColumn("volume", lit(null).cast("long"))
-    val spec = WI.w()
-    val out = df.select(
-      WI.mfi(col("high"), col("low"), col("close"), col("volume"), 14, spec).as("mfi"),
-      WI.obv(col("close"), col("volume"), spec).as("obv"),
-      WI.vwap(col("time"), col("symbol"), col("high"), col("low"), col("close"),
-        col("volume")).as("vwap"))
+    val df = series(vals).withColumn("volume", lit(null).cast("long"))
+    val out = IndicatorPipeline.full(CloseBars(df)).select(
+      col("mfi_14").as("mfi"), col("obv"), col("vwap"))
     assert(out.filter(col("mfi").isNotNull || col("obv").isNotNull || col("vwap").isNotNull).count() == 0)
   }
 }
