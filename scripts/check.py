@@ -23,10 +23,10 @@ def run_verify():
               "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
               "java.base/sun.util.calendar"]:
         opens += ["--add-opens", p + "=ALL-UNNAMED"]
-    cmd = ["java"] + opens + ["-Xmx8g", "-Dspark.ui.enabled=false",
+    # cores: GraftSession.cpus (SPARK_GRAFT_CPUS, else the host's count)
+    cmd = ["java"] + opens + [f"-Xmx{half_mem_gb(8)}g", "-Dspark.ui.enabled=false",
            "-Dspark.sql.session.timeZone=UTC", "-cp", cp, "graft.Verify", SF_DIR, OUT]
-    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
-    r = subprocess.run(cmd, capture_output=True, text=True, env=env)
+    r = subprocess.run(cmd, capture_output=True, text=True)
     for line in r.stderr.splitlines():
         if "[verify]" in line or "Exception" in line:
             print(line)
@@ -42,17 +42,21 @@ def norm(v):
         return v
     return v
 
-def duckdb_memory_limit():
-    """Half the host's MemTotal, clamped to 2..48 GB — the rule that sizes
-    SPARK_DRIVER_MEM for the test suite (ROADMAP's tier-1 command). A fixed
-    limit above physical memory lets DuckDB grow until the OS kills it
-    instead of spilling."""
+def half_mem_gb(cap):
+    """Half the host's MemTotal in GB, clamped to 2..cap — the rule that
+    sizes SPARK_DRIVER_MEM for the test suite (ROADMAP's tier-1 command,
+    cap 8). A fixed size above physical memory lets the process grow
+    until the OS kills it."""
     try:
         with open("/proc/meminfo") as f:
             kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
     except (OSError, StopIteration, ValueError):
-        return "2GB"
-    return f"{min(48, max(2, kb // 2097152))}GB"
+        return 2
+    return min(cap, max(2, kb // 2097152))
+
+def duckdb_memory_limit():
+    """DuckDB spills instead of dying when its limit fits the host."""
+    return f"{half_mem_gb(48)}GB"
 
 def compare():
     con = duckdb.connect()

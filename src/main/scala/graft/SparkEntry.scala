@@ -192,7 +192,6 @@ object SparkEntry {
     * batch indicator SQL. Stream == batch parity was spec-proven
     * (StreamingSpec); this makes it a gated, oracle-checked query. */
   private def qStreamIndicators(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     s.conf.set(graft.streaming.StreamIngest.rocksdbConf._1,
       graft.streaming.StreamIngest.rocksdbConf._2)
     val work = SessionScoped.scratchDir("graft_stream_ind")
@@ -205,19 +204,14 @@ object SparkEntry {
         unix_millis(col("time")).as("ms"))
     // three time-range replay micro-batches (per-symbol time order is
     // preserved because the split is by time) — shared feed machinery
-    graft.streaming.Feeder.writeTimeSlicedFeed(ticks, "ms", work, slices = 3)
-    val raw = s.readStream
-      .schema(StructType(Seq(StructField("value", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$work/feed")
-    val q = graft.streaming.StreamIngest.fromRaw(raw)
-      .select(col("row.*"))
-      .writeStream
-      .option("checkpointLocation", s"$work/ckpt")
-      .format("parquet").option("path", s"$work/out")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    graft.streaming.Feeder.replay(ticks, "ms", work) { feed =>
+      graft.streaming.StreamIngest.fromRaw(feed())
+        .select(col("row.*"))
+        .writeStream
+        .option("checkpointLocation", s"$work/ckpt")
+        .format("parquet").option("path", s"$work/out")
+        .start()
+    }
     roundIndicators(s.read.parquet(s"$work/out"))
       .select(graft.model.Model.DbColumns.map(col): _*)
   }

@@ -8,6 +8,7 @@ import graft.EntryMath._
 import graft.functions.FreqSketch
 import graft.operators.TextAnalysis
 import graft.sources.Tables
+import graft.streaming.{Feeder, StreamGate}
 
 /** Streaming / sketch / CDC query entries (split from ExtendedEntries):
   * mergeable sketches (HLL, KLL, Misra-Gries) with their verify-only
@@ -193,24 +194,38 @@ private[graft] object StreamEntries {
   private val streamTopkRuns =
     new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
-  /** Replay the document token stream through [[graft.streaming
-    * .StreamTopk]] (doc_id-sliced file feed, 3 micro-batches, per-batch
-    * MG segments) and return the merged summary — the shared engine of
-    * the q_stream_topk pair. */
+  /** Replay the document token stream through [[StreamGate]]
+    * (doc_id-sliced file feed, 3 micro-batches, one O(k) MG sketch
+    * segment per batch tagged with its batch id) and return the
+    * summary merged at read time — the shared engine of the q_stream_topk
+    * pair. A replayed batch b overwrites b's segment with the identical
+    * sketch of the identical slice: no read-modify-write state to
+    * double-merge, the failure mode a running-summary design would have.
+    * The rollup is one associative mg_merge over the O(k) segments, never
+    * a raw-data rescan.
+    *
+    * Exactness: MG item estimates are merge-order dependent, but the
+    * summary THEOREMS — est ≤ true ≤ est + d for every reported item,
+    * presence of every item with true > d, d ≤ n/k, and n exactly the
+    * total mass — hold under arbitrary merge trees (Agarwal et al.,
+    * Mergeable Summaries, PODS'12), so the per-batch/merge-at-read split
+    * changes nothing the contract-gated companion checks. With k larger
+    * than the live vocabulary no trim ever fires and the merged summary is
+    * EXACT and merge-order independent (stream == batch bit-for-bit,
+    * pinned in StreamTopkSpec). */
   private def streamTopkSummary(s: SparkSession, dir: String): DataFrame = {
     val work = streamTopkRuns.computeIfAbsent((SessionScoped.key(s), dir), { _ =>
       val w = SessionScoped.scratchDir("graft_stream_topk")
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      graft.streaming.Feeder.writeTimeSlicedFeed(
-        docs.withColumn("_ms", col("doc_id")), "_ms", w, slices = 3)
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$w/feed")
-        .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
-      val q = graft.streaming.StreamTopk.run(stream, "token", MgK, w)
-      q.processAllAvailable(); q.stop()
+      Feeder.replay(docs.withColumn("_ms", col("doc_id")), "_ms", w) { feed =>
+        StreamGate.run(
+          feed().select(explode(TextAnalysis.tokens(col("text"))).as("token")),
+          (mb, batchId) => mb.agg(FreqSketch.mgSketch(col("token"), MgK).as("sk"))
+            .withColumn("batch_id", lit(batchId)), w)
+      }
       w
     })
-    graft.streaming.StreamTopk.merged(s, work, MgK)
+    StreamGate.report(s, work).agg(FreqSketch.mgMerge(col("sk"), MgK).as("s"))
   }
 
   /** Top-10 presentation of a one-row MG summary frame — shared by the
@@ -295,13 +310,11 @@ private[graft] object StreamEntries {
     val (base, changes) = cdcFrames(s, dir)
     // three time-range replay files → three in-(ts)-order micro-batches
     // (the slice-order precondition of Cdc's associativity law)
-    graft.streaming.Feeder.writeTimeSlicedFeed(
-      changes.withColumn("_ms", unix_millis(col("ts"))), "_ms", work, slices = 3)
-    val stream = s.readStream.schema(changes.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = graft.streaming.StreamCdc.run(stream, base, work,
-      keyCols = Seq("user_id"), tsCol = "ts", seqCol = "event_id", opCol = "op")
-    q.processAllAvailable(); q.stop()
+    Feeder.replay(
+        changes.withColumn("_ms", unix_millis(col("ts"))), "_ms", work) { feed =>
+      graft.streaming.StreamCdc.run(feed(), base, work,
+        keyCols = Seq("user_id"), tsCol = "ts", seqCol = "event_id", opCol = "op")
+    }
     graft.streaming.StreamCdc.snapshot(s, work, base)
   }
 
@@ -316,18 +329,15 @@ private[graft] object StreamEntries {
   private def qStreamSessionize(s: SparkSession, dir: String): DataFrame = {
     val work = SessionScoped.scratchDir("graft_stream_sess")
     val ev = Tables.events(s, dir).select(col("user_id"), col("ts"), col("value"))
-    graft.streaming.Feeder.writeTimeSlicedFeed(
-      ev.withColumn("_ms", unix_millis(col("ts"))), "_ms", work, slices = 3)
     val maxUs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
     val sentinel = s.range(1).select(
       lit(graft.streaming.StreamSessionize.SentinelUser).as("user_id"),
       timestamp_micros(lit(maxUs + 8640000000000L)).as("ts"), // +100 days
       lit(0.0).as("value"))
-    graft.streaming.Feeder.appendFeedFile(sentinel, work, 3)
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = graft.streaming.StreamSessionize.run(stream, work)
-    q.processAllAvailable(); q.stop()
+    Feeder.replay(ev.withColumn("_ms", unix_millis(col("ts"))), "_ms", work,
+        Some(sentinel)) { feed =>
+      graft.streaming.StreamSessionize.run(feed(), work)
+    }
     graft.streaming.StreamSessionize.report(s, work)
   }
 
@@ -343,15 +353,12 @@ private[graft] object StreamEntries {
     val work = SessionScoped.scratchDir("graft_stream_join")
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-    graft.streaming.Feeder.writeTimeSlicedFeed(
-      ev.withColumn("_ms", unix_millis(col("ts"))), "_ms", work, slices = 3)
-    def stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = graft.streaming.StreamJoin.run(
-      stream.filter(col("event_type") =!= "error"),
-      stream.filter(col("event_type") === "error"),
-      "user_id", "event_id", windowUs = 1800000000L, workDir = work)
-    q.processAllAvailable(); q.stop()
+    Feeder.replay(ev.withColumn("_ms", unix_millis(col("ts"))), "_ms", work) { feed =>
+      graft.streaming.StreamJoin.run(
+        feed().filter(col("event_type") =!= "error"),
+        feed().filter(col("event_type") === "error"),
+        "user_id", "event_id", windowUs = 1800000000L, workDir = work)
+    }
     graft.streaming.StreamJoin.report(s, work)
   }
 
@@ -365,29 +372,26 @@ private[graft] object StreamEntries {
     val work = SessionScoped.scratchDir("graft_stream_joino")
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-    graft.streaming.Feeder.writeTimeSlicedFeed(
-      ev.withColumn("_ms", unix_millis(col("ts"))), "_ms", work, slices = 3)
     val maxUs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
     val sentinel = s.range(2).select( // one row for EACH stream's filter
       lit(-1L).as("user_id"), (-col("id") - 1).as("event_id"),
       timestamp_micros(lit(maxUs + 8640000000000L)).as("ts"),
       when(col("id") === 0, lit("error")).otherwise(lit("click"))
         .as("event_type"))
-    graft.streaming.Feeder.appendFeedFile(sentinel, work, 3)
-    def stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = graft.streaming.StreamJoin.run(
-      stream.filter(col("event_type") =!= "error"),
-      stream.filter(col("event_type") === "error"),
-      "user_id", "event_id", windowUs = 1800000000L, workDir = work,
-      joinType = "left_outer")
-    q.processAllAvailable(); q.stop()
+    Feeder.replay(ev.withColumn("_ms", unix_millis(col("ts"))), "_ms", work,
+        Some(sentinel)) { feed =>
+      graft.streaming.StreamJoin.run(
+        feed().filter(col("event_type") =!= "error"),
+        feed().filter(col("event_type") === "error"),
+        "user_id", "event_id", windowUs = 1800000000L, workDir = work,
+        joinType = "left_outer")
+    }
     graft.streaming.StreamJoin.report(s, work).filter(col("user_id") =!= -1L)
   }
 
   /** The STREAMING DSIR quality gate, gated like q_stream_drift: the
     * documents table replayed as three doc_id-sliced micro-batches
-    * through [[graft.streaming.StreamDsir]] — per-batch target-vs-raw
+    * through [[TextAnalysis.dsirGate]] — per-batch target-vs-raw
     * importance weights against the two bucket LMs estimated once at
     * stream start from the full reference corpus. Because each doc lands
     * in exactly one slice and the LMs are fixed, the unioned report is
@@ -397,22 +401,17 @@ private[graft] object StreamEntries {
   private def qStreamDsir(s: SparkSession, dir: String): DataFrame = {
     val work = SessionScoped.scratchDir("graft_stream_dsir")
     val docs = Tables.documents(s, dir)
-    graft.streaming.Feeder.writeTimeSlicedFeed(
-      docs.select(col("doc_id"), col("text"), col("doc_id").as("_ms")),
-      "_ms", work, slices = 3)
-    val feedSchema = org.apache.spark.sql.types.StructType(
-      docs.select(col("doc_id"), col("text")).schema)
-    val stream = s.readStream.schema(feedSchema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = graft.streaming.StreamDsir.run(stream, docs,
-      col("lang") === "en", CorpusEntries.DsirBuckets, work)
-    q.processAllAvailable(); q.stop()
-    graft.streaming.StreamDsir.report(s, work)
+    Feeder.replay(docs.select(col("doc_id"), col("text"), col("doc_id").as("_ms")),
+        "_ms", work) { feed =>
+      StreamGate.run(feed(), TextAnalysis.dsirGate(docs,
+        col("lang") === "en", CorpusEntries.DsirBuckets), work)
+    }
+    StreamGate.report(s, work)
   }
 
   /** The STREAMING NB classification gate: the odd-id half (the batch
     * query's scoring split) replayed as three id-ordered micro-batches
-    * through [[graft.streaming.StreamClassify]] under the model trained
+    * through [[StreamGate]] under the model trained
     * once from the even-id half. Stateless across batches (a doc's
     * prediction depends only on its tokens and the fixed model), so the
     * accumulated report is hash-gated against q_nb_classify's batch
@@ -421,22 +420,16 @@ private[graft] object StreamEntries {
     val work = SessionScoped.scratchDir("graft_stream_nb")
     val docs = Tables.documents(s, dir)
     val score = docs.filter(col("doc_id") % 2 === 1)
-    graft.streaming.Feeder.writeTimeSlicedFeed(
-      score.select(col("doc_id"), col("text"), col("lang"),
-        col("doc_id").as("_ms")),
-      "_ms", work, slices = 3)
-    val feedSchema = org.apache.spark.sql.types.StructType(
-      score.select(col("doc_id"), col("text"), col("lang")).schema)
-    val stream = s.readStream.schema(feedSchema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = graft.streaming.StreamClassify.run(stream,
-      docs.filter(col("doc_id") % 2 === 0), "lang", work)
-    q.processAllAvailable(); q.stop()
-    graft.streaming.StreamClassify.report(s, work)
+    Feeder.replay(score.select(col("doc_id"), col("text"), col("lang"),
+        col("doc_id").as("_ms")), "_ms", work) { feed =>
+      val model = TextAnalysis.nbModel(docs.filter(col("doc_id") % 2 === 0), "lang")
+      StreamGate.run(feed(), (mb, _) => TextAnalysis.nbScore(mb, model, "lang"), work)
+    }
+    StreamGate.report(s, work)
   }
 
   /** The STREAMING perplexity gate: odd docs replayed as three id-ordered
-    * micro-batches through [[graft.streaming.StreamPerplexity]] — KN
+    * micro-batches through [[StreamGate]] — KN
     * model from doc_id%4==0, thresholds calibrated once on doc_id%4==2,
     * every batch routed statelessly against the fixed cut-points.
     * Hash-gated against q_ccnet_fixed's batch oracle (stream == batch at
@@ -445,22 +438,17 @@ private[graft] object StreamEntries {
     val work = SessionScoped.scratchDir("graft_stream_ccnet")
     val docs = Tables.documents(s, dir)
     val score = docs.filter(col("doc_id") % 2 === 1)
-    graft.streaming.Feeder.writeTimeSlicedFeed(
-      score.select(col("doc_id"), col("text"), col("doc_id").as("_ms")),
-      "_ms", work, slices = 3)
-    val feedSchema = org.apache.spark.sql.types.StructType(
-      score.select(col("doc_id"), col("text")).schema)
-    val stream = s.readStream.schema(feedSchema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = graft.streaming.StreamPerplexity.run(stream,
-      docs.filter(col("doc_id") % 4 === 0),
-      docs.filter(col("doc_id") % 4 === 2), work)
-    q.processAllAvailable(); q.stop()
-    graft.streaming.StreamPerplexity.report(s, work)
+    Feeder.replay(score.select(col("doc_id"), col("text"), col("doc_id").as("_ms")),
+        "_ms", work) { feed =>
+      val model = TextAnalysis.knModel(docs.filter(col("doc_id") % 4 === 0))
+      val th = TextAnalysis.ccnetThresholds(model, docs.filter(col("doc_id") % 4 === 2))
+      StreamGate.run(feed(), (mb, _) => TextAnalysis.ccnetRoute(mb, model, th), work)
+    }
+    StreamGate.report(s, work)
   }
 
   /** The STREAMING blocklist gate: the full corpus replayed as three
-    * id-ordered micro-batches through [[graft.streaming.StreamGate]]
+    * id-ordered micro-batches through [[StreamGate]]
     * applying the batch blocklist scan verbatim. The gate closes over
     * nothing but the constant term list, so stream == batch at any
     * slicing by construction; hash-gated against q_blocklist's batch
@@ -468,21 +456,16 @@ private[graft] object StreamEntries {
   private def qStreamBlocklist(s: SparkSession, dir: String): DataFrame = {
     val work = SessionScoped.scratchDir("graft_stream_blocklist")
     val docs = Tables.documents(s, dir)
-    graft.streaming.Feeder.writeTimeSlicedFeed(
-      docs.select(col("doc_id"), col("text"), col("doc_id").as("_ms")),
-      "_ms", work, slices = 3)
-    val feedSchema = org.apache.spark.sql.types.StructType(
-      docs.select(col("doc_id"), col("text")).schema)
-    val stream = s.readStream.schema(feedSchema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = graft.streaming.StreamGate.run(stream,
-      TextAnalysis.blocklist(_, CorpusEntries.BlockTerms), work)
-    q.processAllAvailable(); q.stop()
-    graft.streaming.StreamGate.report(s, work)
+    Feeder.replay(docs.select(col("doc_id"), col("text"), col("doc_id").as("_ms")),
+        "_ms", work) { feed =>
+      StreamGate.run(feed(),
+        (mb, _) => TextAnalysis.blocklist(mb, CorpusEntries.BlockTerms), work)
+    }
+    StreamGate.report(s, work)
   }
 
   /** The STREAMING repetition gate: the full corpus replayed as three
-    * id-ordered micro-batches through [[graft.streaming.StreamGate]]
+    * id-ordered micro-batches through [[StreamGate]]
     * applying the batch Gopher-style repetition filter verbatim. Gram
     * counts are per-document (micro-batch-local keyed aggregates, no
     * cross-batch state), so stream == batch at any slicing; hash-gated
@@ -490,23 +473,18 @@ private[graft] object StreamEntries {
   private def qStreamRepetition(s: SparkSession, dir: String): DataFrame = {
     val work = SessionScoped.scratchDir("graft_stream_repetition")
     val docs = Tables.documents(s, dir)
-    graft.streaming.Feeder.writeTimeSlicedFeed(
-      docs.select(col("doc_id"), col("text"), col("doc_id").as("_ms")),
-      "_ms", work, slices = 3)
-    val feedSchema = org.apache.spark.sql.types.StructType(
-      docs.select(col("doc_id"), col("text")).schema)
-    val stream = s.readStream.schema(feedSchema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = graft.streaming.StreamGate.run(stream,
-      TextAnalysis.repetition(_, maxTokenDup = CorpusEntries.MaxTokenDup,
-        maxDupBigram = CorpusEntries.MaxDupBigram,
-        maxTopBigram = CorpusEntries.MaxTopBigram), work)
-    q.processAllAvailable(); q.stop()
-    graft.streaming.StreamGate.report(s, work)
+    Feeder.replay(docs.select(col("doc_id"), col("text"), col("doc_id").as("_ms")),
+        "_ms", work) { feed =>
+      StreamGate.run(feed(),
+        (mb, _) => TextAnalysis.repetition(mb, maxTokenDup = CorpusEntries.MaxTokenDup,
+          maxDupBigram = CorpusEntries.MaxDupBigram,
+          maxTopBigram = CorpusEntries.MaxTopBigram), work)
+    }
+    StreamGate.report(s, work)
   }
 
   /** The STREAMING structural rule gate: the full corpus replayed as
-    * three id-ordered micro-batches through [[graft.streaming.StreamGate]]
+    * three id-ordered micro-batches through [[StreamGate]]
     * applying the batch Gopher/C4 rule gate verbatim — the third
     * constant-closure member, completing the family (every stateless
     * per-document gate now has its streaming form). Hash-gated against
@@ -514,15 +492,9 @@ private[graft] object StreamEntries {
   private def qStreamRules(s: SparkSession, dir: String): DataFrame = {
     val work = SessionScoped.scratchDir("graft_stream_rules")
     val docs = Tables.documents(s, dir)
-    graft.streaming.Feeder.writeTimeSlicedFeed(
-      docs.select(col("doc_id"), col("text"), col("doc_id").as("_ms")),
-      "_ms", work, slices = 3)
-    val feedSchema = org.apache.spark.sql.types.StructType(
-      docs.select(col("doc_id"), col("text")).schema)
-    val stream = s.readStream.schema(feedSchema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = graft.streaming.StreamGate.run(stream,
-      TextAnalysis.qualityRules(_,
+    Feeder.replay(docs.select(col("doc_id"), col("text"), col("doc_id").as("_ms")),
+        "_ms", work) { feed =>
+      StreamGate.run(feed(), (mb, _) => TextAnalysis.qualityRules(mb,
         minWords = CorpusEntries.RuleMinWords,
         maxWords = CorpusEntries.RuleMaxWords,
         minMeanLen = CorpusEntries.RuleMinMeanLen,
@@ -530,13 +502,13 @@ private[graft] object StreamEntries {
         maxWordLen = CorpusEntries.RuleMaxWordLen,
         minStopDistinct = CorpusEntries.RuleMinStop,
         maxShortFrac = CorpusEntries.RuleMaxShortFrac), work)
-    q.processAllAvailable(); q.stop()
-    graft.streaming.StreamGate.report(s, work)
+    }
+    StreamGate.report(s, work)
   }
 
   /** The STREAMING near-dup decontamination gate: training docs replayed
     * as three id-ordered micro-batches through
-    * [[graft.streaming.StreamFuzzyDecontam]] against the fixed eval set
+    * [[operators.Dedup.fuzzyDecontamGate]] against the fixed eval set
     * (doc_id % 10 = 0). Stateless across batches (the eval set is fixed,
     * a doc's report depends only on itself), so the accumulated report is
     * hash-gated against q_decontaminate_fuzzy's batch oracle — stream ==
@@ -545,18 +517,12 @@ private[graft] object StreamEntries {
     val work = SessionScoped.scratchDir("graft_stream_fuzzy")
     val docs = Tables.documents(s, dir)
     val evalPred = pmod(col("doc_id"), lit(10)) === 0
-    graft.streaming.Feeder.writeTimeSlicedFeed(
-      docs.filter(!evalPred)
-        .select(col("doc_id"), col("text"), col("doc_id").as("_ms")),
-      "_ms", work, slices = 3)
-    val feedSchema = org.apache.spark.sql.types.StructType(
-      docs.select(col("doc_id"), col("text")).schema)
-    val stream = s.readStream.schema(feedSchema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = graft.streaming.StreamFuzzyDecontam.run(stream,
-      docs.filter(evalPred), work, TextDedupEntries.FuzzyDecontamTau)
-    q.processAllAvailable(); q.stop()
-    graft.streaming.StreamFuzzyDecontam.report(s, work)
+    Feeder.replay(docs.filter(!evalPred)
+        .select(col("doc_id"), col("text"), col("doc_id").as("_ms")), "_ms", work) { feed =>
+      StreamGate.run(feed(), operators.Dedup.fuzzyDecontamGate(docs.filter(evalPred),
+        TextDedupEntries.FuzzyDecontamTau), work)
+    }
+    StreamGate.report(s, work)
   }
 
   /** Streaming drift parameters shared by q_stream_drift's query and
@@ -566,11 +532,17 @@ private[graft] object StreamEntries {
 
   /** The STREAMING data-quality gate: post-cut events replayed as three
     * time-sliced micro-batches, each emitting its full per-bin PSI/JS
-    * drift table vs the pre-cut reference ([[graft.streaming
-    * .StreamDrift]]). Every batch's table is hash-checked against a
-    * DuckDB mirror that recomputes the same slice boundaries — so the
-    * gate covers the slicing, the binning and the drift math at once.
-    * Verify-only: streaming machinery, not a query plan. */
+    * drift table ([[operators.Drift]]) vs the pre-cut reference, tagged
+    * with its batch id — the per-arrival signal a pipeline pages on when
+    * an upstream schema/unit/source change skews a feed. Each batch is
+    * compared to the reference, not to its predecessors, so the gate is
+    * stateless; the reference is materialized once at start (at 100 TB
+    * you persist its binned counts instead, and the per-batch cost is one
+    * scan of the batch plus a k-bin join). Every batch's table is
+    * hash-checked against a DuckDB mirror that recomputes the same slice
+    * boundaries — so the gate covers the slicing, the binning and the
+    * drift math at once. Verify-only: streaming machinery, not a query
+    * plan. */
   private def qStreamDrift(s: SparkSession, dir: String): DataFrame = {
     val work = SessionScoped.scratchDir("graft_stream_drift")
     val ev = Tables.events(s, dir)
@@ -578,13 +550,13 @@ private[graft] object StreamEntries {
     val ref = ev.filter(col("ts") < cut).select(col("value"))
     val cur = ev.filter(col("ts") >= cut)
       .select(col("value"), unix_millis(col("ts")).as("_ms"))
-    graft.streaming.Feeder.writeTimeSlicedFeed(cur, "_ms", work, slices = 3)
-    val stream = s.readStream.schema(ref.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = graft.streaming.StreamDrift.run(stream, ref, "value",
-      binWidth = SdBinW, maxBin = SdMaxBin, workDir = work)
-    q.processAllAvailable(); q.stop()
-    graft.streaming.StreamDrift.report(s, work)
+    Feeder.replay(cur, "_ms", work) { feed =>
+      val refM = operators.Materialize(ref) // one histogram source, scanned per batch
+      StreamGate.run(feed(), (mb, batchId) =>
+        operators.Drift.drift(refM, mb, "value", SdBinW, SdMaxBin)
+          .withColumn("batch_id", lit(batchId)), work)
+    }
+    StreamGate.report(s, work)
   }
 
   /** Oracle for [[qStreamDrift]]: the q_drift skeleton instantiated once

@@ -49,13 +49,12 @@ object WindowIndicators {
     (high + low + close) / lit(3)
 
   /** True range: max(h−l, |h−prev c|, |l−prev c|); h−l on each symbol's
-    * first row (prev close undefined); the ATR of backfill.py:55 smooths
-    * the same series (IndicatorPipeline computes it over its layered lag). */
-  def trueRange(high: Column, low: Column, close: Column, spec: WindowSpec): Column = {
-    val pc = lag(close, 1).over(spec)
-    when(pc.isNull, high - low)
-      .otherwise(greatest(high - low, abs(high - pc), abs(low - pc)))
-  }
+    * first row (prev close undefined). The one definition: the ATR of
+    * backfill.py:55 (IndicatorPipeline, over its layered `_pc` lag column)
+    * and [[keltner]] (over its own lag) both pass their previous close. */
+  def trueRange(high: Column, low: Column, prevClose: Column): Column =
+    when(prevClose.isNull, high - low)
+      .otherwise(greatest(high - low, abs(high - prevClose), abs(low - prevClose)))
 
   /** Williams %R(n): -100·(HH−close)/(HH−LL) over the trailing n rows;
     * null until n rows or when the range is flat (zero denominator → null,
@@ -95,7 +94,7 @@ object WindowIndicators {
       k: Double, spec: WindowSpec): (Column, Column, Column) = {
     val tp = typicalPrice(high, low, close)
     val mid = sma(tp, n, spec)
-    val tr = trueRange(high, low, close, spec)
+    val tr = trueRange(high, low, lag(close, 1).over(spec))
     val atrFull = count(close).over(last(atrN, spec)) === atrN
     val atr = when(atrFull, avg(tr).over(last(atrN, spec)))
     (mid, mid + lit(k) * atr, mid - lit(k) * atr)

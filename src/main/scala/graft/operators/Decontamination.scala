@@ -103,12 +103,6 @@ object Decontamination {
       .withColumn("contaminated", col("n_eval_hits") >= minHits)
   }
 
-  /** The screening pass against a PREBUILT eval-gram set — shared by the
-    * one-shot path above and the streaming ingest screen
-    * ([[graft.streaming.StreamDecontaminate]]), which precomputes the
-    * eval grams once at stream start and reuses them every micro-batch.
-    * Stateless per training shingle-index row: one broadcast mark + one
-    * per-doc aggregate. */
   /** Cross-corpus n-gram NOVELTY score — the memorization-risk audit
     * (what fraction of a document's n-grams are NOT already present in a
     * reference corpus): the lens run over model-generated or newly-crawled
@@ -262,6 +256,13 @@ object Decontamination {
           .as("pooled_hit_frac"))
   }
 
+  /** The screening pass against a PREBUILT eval-gram set — shared by the
+    * one-shot path above and the streaming ingest screen (a
+    * [[graft.streaming.StreamGate]] gate, pinned in StreamDedupSpec), which
+    * builds the distinct eval grams once at stream start and reuses them
+    * every micro-batch: contamination is membership in a FIXED set, so
+    * micro-batch boundaries cannot matter. Stateless per training
+    * shingle-index row: one broadcast mark + one per-doc aggregate. */
   def screenAgainst(trainIdx: DataFrame, evalGrams: DataFrame,
       minHits: Int): DataFrame =
     trainIdx

@@ -763,6 +763,35 @@ object Dedup {
     fuzzyScreenBands(tBands, eBands, tIdx.unionByName(eIdx), tau)
   }
 
+  /** The ingest-time form of [[fuzzyDecontaminateDocs]]: a
+    * [[graft.streaming.StreamGate]] gate screening each micro-batch
+    * against the FIXED eval set, whose shingle index and band table are
+    * built once here (a benchmark suite is thousands of docs; both
+    * broadcast). Each batch is one cross-set band probe + candidate
+    * verify, and a doc's report depends only on (doc, eval set), so
+    * stream == batch regardless of micro-batch boundaries.
+    *
+    * CONTRACT: stream doc_ids must be DISJOINT from eval doc_ids — the
+    * verify step unions both sides' shingle indexes, so a shared id would
+    * silently merge the two documents' shingle sets and corrupt every
+    * Jaccard it participates in. Asserted per batch (one broadcast
+    * semi-probe against the benchmark-sized eval id set; limit-1 action). */
+  def fuzzyDecontamGate(evalDocs: DataFrame,
+      tau: Double): (DataFrame, Long) => DataFrame = {
+    val evalIdx = shingleIndex(evalDocs).materialize
+    val evalIds = evalIdx.select(col("doc_id")).distinct().materialize
+    val evalBands = bandsOf(minhashSignaturesFromIndex(evalIdx)).materialize
+    (mb, batchId) => {
+      val batchIdx = shingleIndex(mb).materialize
+      require(batchIdx.select(col("doc_id")).distinct()
+          .join(broadcast(evalIds), "doc_id").isEmpty,
+        s"batch $batchId carries doc_ids that collide with the eval set " +
+          "— stream and eval ids must be disjoint")
+      fuzzyScreenBands(bandsOf(minhashSignaturesFromIndex(batchIdx)),
+        evalBands, batchIdx.unionByName(evalIdx), tau)
+    }
+  }
+
   /** Core of the fuzzy screen, shared with the streaming gate: candidate
     * cross-set band join (probe docs × eval docs — never a self-join) →
     * exact-Jaccard verify on `idx` (which must cover BOTH sides' doc_ids)

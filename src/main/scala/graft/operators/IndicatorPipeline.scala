@@ -108,8 +108,7 @@ object IndicatorPipeline {
 
     // plain expressions over L1 (no window)
     val d = close - col("_pc")
-    val trRaw = greatest(high - low, abs(high - col("_pc")), abs(low - col("_pc")))
-    val tr = when(col("_pc").isNull, high - low).otherwise(trRaw)
+    val tr = WI.trueRange(high, low, col("_pc"))
     val up = high - col("_ph")
     val dn = col("_pl") - low
     val pdm = when(up.isNotNull, when(up > dn && up > 0, up).otherwise(lit(0.0)))

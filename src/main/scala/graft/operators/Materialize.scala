@@ -40,19 +40,16 @@ object Materialize {
     }
 
   /** Under `persist`, truncate an iterative loop's lineage every this
-    * many iterations (see [[loop]]); 0 disables the protection. Default
-    * 2 — measured as the binding value: the 2-round Lloyd loop inside
-    * q_semdedup is already past the describe-time horizon at sf0.1
-    * (probe: non-viable untruncated, 0.8 s at every=2). */
-  val LoopTruncateEveryKey = "spark.graft.materializer.loopTruncateEvery"
-
-  /** Default for [[LoopTruncateEveryKey]]. */
-  val LoopTruncateEveryDefault = 2
+    * many iterations (see [[loop]]). 2 is measured as the binding value:
+    * the 2-round Lloyd loop inside q_semdedup is already past the
+    * describe-time horizon at sf0.1 (probe: non-viable untruncated, 0.8 s
+    * at every=2). */
+  val LoopTruncateEvery = 2
 
   /** Materialization INSIDE an iterative loop — `depth` is the 1-based
     * iteration index. Same contract as [[apply]] for `local`/`checkpoint`;
     * under `persist` the lineage is AUTO-TRUNCATED every
-    * [[LoopTruncateEveryKey]] iterations (default 2) instead of kept
+    * [[LoopTruncateEvery]] iterations instead of kept
     * forever. Why this is mechanical rather than advisory (r16 sweep,
     * SCALE.md): a loop body that references its predecessor more than
     * once makes the logical plan a self-referencing DAG, and
@@ -69,9 +66,7 @@ object Materialize {
   def loop(df: DataFrame, depth: Int): DataFrame =
     df.sparkSession.conf.get(ConfKey, "local") match {
       case "persist" =>
-        val every = df.sparkSession.conf
-          .get(LoopTruncateEveryKey, LoopTruncateEveryDefault.toString).toInt
-        if (every > 0 && depth % every == 0) {
+        if (depth % LoopTruncateEvery == 0) {
           if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
             df.checkpoint()
           else df.localCheckpoint()

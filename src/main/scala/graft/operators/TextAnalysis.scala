@@ -695,6 +695,24 @@ object TextAnalysis {
     dsirScore(docs, grams, tgt, raw)
   }
 
+  /** The ingest-time form of [[dsirWeights]]: a [[graft.streaming
+    * .StreamGate]] gate scoring each micro-batch against the two bucket
+    * LMs, estimated ONCE here from `refDocs` (target = the slice matching
+    * `targetPred`, raw = all of it). Each LM is exactly nBuckets rows, so
+    * both broadcast into every batch; the per-batch pass shares
+    * [[dsirBuckets]]/[[dsirScore]] with the batch operator, so stream ==
+    * batch at any slicing by construction, with zero streaming state. */
+  def dsirGate(refDocs: DataFrame, targetPred: Column,
+      nBuckets: Int): (DataFrame, Long) => DataFrame = {
+    // one feature-extraction pass over the reference corpus, reused by
+    // both LM estimates
+    val refGrams = dsirBuckets(refDocs, nBuckets).materialize
+    val tgt = dsirModel(refGrams.join(
+      refDocs.filter(targetPred).select("doc_id"), "doc_id"), nBuckets).materialize
+    val raw = dsirModel(refGrams, nBuckets).materialize
+    (mb, _) => dsirScore(mb, dsirBuckets(mb, nBuckets), tgt, raw)
+  }
+
   /** DSIR selection layer — the paper's importance RESAMPLING on top of
     * [[dsirWeights]] (Xie et al. 2023 select the corpus subset by
     * Gumbel-top-k over the log importance weights; the hard `selected`
@@ -728,7 +746,7 @@ object TextAnalysis {
   /** DSIR feature extraction: one (doc_id, bucket) row per gram
     * occurrence — unigrams + adjacent bigrams, hash60-bucketed mod
     * `nBuckets`. Shared by [[dsirWeights]] and the streaming gate
-    * ([[graft.streaming.StreamDsir]]) so batch and stream score the
+    * ([[dsirGate]]) so batch and stream score the
     * exact same features by construction. */
   private[graft] def dsirBuckets(docs: DataFrame, nBuckets: Int): DataFrame =
     // native generator (r19): hash60 % nBuckets computed in the same
@@ -804,7 +822,8 @@ object TextAnalysis {
   /** The trained NB model: the C-row class table (priors + per-class
     * token totals), the ≤C·V-row per-(class, token) count table, and the
     * two scalars the smoothing needs. Train once, score any number of
-    * frames/micro-batches ([[graft.streaming.StreamClassify]]). */
+    * frames/micro-batches (q_stream_nb through [[graft.streaming
+    * .StreamGate]]). */
   final case class NbModel(classes: DataFrame, wc: DataFrame,
       nTrainDocs: Long, vocab: Long)
 

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.Tables
 
@@ -27,11 +28,11 @@ object Feeder {
     * `b00000.parquet..bNNNNN.parquet` under `workDir/feed` — lexically
     * increasing names with increasing mtimes, so a file stream with
     * `maxFilesPerTrigger=1` replays them as DETERMINISTIC in-time-order
-    * micro-batches. Shared by q_stream_indicators and q_stream_cdc (both
-    * rely on the same invariants: span+1 so the max row is included, and
-    * the rename from the part file to a stable lexical name). Slices can
-    * come out empty for skewed time ranges; empty parquet files still
-    * trigger (empty) micro-batches, preserving batch numbering. */
+    * micro-batches. Shared by every [[replay]] (all rely on the same
+    * invariants: span+1 so the max row is included, and the rename from
+    * the part file to a stable lexical name). Slices can come out empty
+    * for skewed time ranges; empty parquet files still trigger (empty)
+    * micro-batches, preserving batch numbering. */
   def writeTimeSlicedFeed(df: DataFrame, msCol: String, workDir: String,
       slices: Int): Unit = {
     val Array(t0, t1) = df.agg(min(col(msCol)), max(col(msCol))).head()
@@ -44,6 +45,29 @@ object Feeder {
           .drop(msCol), workDir, i)
     }
   }
+
+  /** The replay every q_stream_* query runs: write `df` (minus `msCol`)
+    * as [[ReplaySlices]] time-sliced feed files, then `sentinel` (when
+    * given) as the last file — a watermark-flush batch for the streams
+    * whose output waits on event time — then drain `start`'s query to
+    * completion and stop it. `start` gets an opener for the feed: each
+    * call opens its own `maxFilesPerTrigger=1` parquet file stream, with
+    * the schema of the frame written, so a stream-stream join opens one
+    * per side. */
+  def replay(df: DataFrame, msCol: String, workDir: String,
+      sentinel: Option[DataFrame] = None)(
+      start: (() => DataFrame) => StreamingQuery): Unit = {
+    writeTimeSlicedFeed(df, msCol, workDir, ReplaySlices)
+    sentinel.foreach(appendFeedFile(_, workDir, ReplaySlices))
+    val schema = df.drop(msCol).schema
+    val q = start(() => df.sparkSession.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$workDir/feed"))
+    q.processAllAvailable(); q.stop()
+  }
+
+  /** Micro-batches per [[replay]] (the q_stream_drift oracle recomputes
+    * the same three slice boundaries). */
+  private val ReplaySlices = 3
 
   /** Write ONE feed file (slice `index`) holding `df` coalesced: write
     * to a tmp dir, find the part file, rename to the stable lexical name

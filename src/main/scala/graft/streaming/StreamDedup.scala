@@ -25,9 +25,9 @@ import graft.operators.Materialize.MatOps
   * self-joins the corpus.
   *
   * foreachBatch is at-least-once on restart, so BOTH sinks are idempotent
-  * by construction: decisions and seen-index rows are written to
-  * per-batch dirs keyed by batch id (overwrite, not append), and a
-  * replayed batch reads state AS OF its own id
+  * by construction: decisions ([[StreamGate.writeBatch]]) and seen-index
+  * rows are written to per-batch dirs keyed by batch id (overwrite, not
+  * append), and a replayed batch reads state AS OF its own id
   * ([[SegmentedState.readAsOf]]) — its first attempt's partial writes are
   * invisible to it, so the replay reproduces the original decisions
   * bit-for-bit and leaves no duplicate rows anywhere. Every
@@ -42,7 +42,7 @@ object StreamDedup {
     StructField("doc_id", LongType), StructField("h", LongType)))
 
   /** docs (doc_id LONG, text STRING) stream → per-micro-batch screening
-    * decisions under `workDir/decisions`, seen-index state under
+    * decisions under `workDir/report`, seen-index state under
     * `workDir/seen_idx`, checkpoint under `workDir/ckpt`. */
   def run(stream: DataFrame, corpusDocs: DataFrame, workDir: String,
       tau: Double, n: Int = 3, compactEvery: Int = 16): StreamingQuery = {
@@ -60,8 +60,8 @@ object StreamDedup {
           batchId, IdxSchema)
         val refIdx = corpusIdx.unionByName(
           seen.select(col("doc_id"), col("h"), lit(false).as("is_corpus")))
-        Dedup.screenBatch(refIdx, batchIdx, tau)
-          .write.mode("overwrite").parquet(f"$workDir/decisions/b-$batchId%09d")
+        StreamGate.writeBatch(Dedup.screenBatch(refIdx, batchIdx, tau),
+          workDir, batchId)
         SegmentedState.maybeCompact(spark, s"$workDir/seen_idx", batchId,
           compactEvery, sortKeys = Seq("h"))
         SegmentedState.write(batchIdx, s"$workDir/seen_idx", batchId)
@@ -79,6 +79,5 @@ object StreamDedup {
 
   /** All decisions emitted so far (the queryable output table). */
   def decisions(spark: SparkSession, workDir: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$workDir/decisions")
+    StreamGate.report(spark, workDir)
 }

@@ -43,7 +43,7 @@ object StreamEmbedDedup {
     StructField("code", ArrayType(IntegerType))))
 
   /** (vec_id LONG, embedding ARRAY<FLOAT>) stream → decisions under
-    * `workDir/decisions`, coded-state under `workDir/seen_coded`.
+    * `workDir/report`, coded-state under `workDir/seen_coded`.
     *
     * CODE LAYOUT — band width AND probe variant — is sized ONCE, at the
     * FIRST stream setup (width from the standing corpus via
@@ -79,8 +79,9 @@ object StreamEmbedDedup {
         val batchCoded = Materialize(Similarity.srpCoded(mb, bb, nBands))
         val ref = corpusCoded.unionByName(
           seenCodedAsOf(spark, workDir, batchId).withColumn("is_corpus", lit(false)))
-        Similarity.screenEmbedBatch(ref, batchCoded, tau, probeBits)
-          .write.mode("overwrite").parquet(f"$workDir/decisions/b-$batchId%09d")
+        StreamGate.writeBatch(
+          Similarity.screenEmbedBatch(ref, batchCoded, tau, probeBits),
+          workDir, batchId)
         SegmentedState.maybeCompact(spark, s"$workDir/seen_coded", batchId,
           compactEvery, sortKeys = Seq("code"))
         SegmentedState.write(batchCoded.select(CodedSchema.fieldNames.map(col): _*),
@@ -138,7 +139,7 @@ object StreamEmbedDedup {
       // legacy writer that put it on a different FS than the state),
       // silently re-deriving a layout would mis-join every persisted
       // code — exactly the duplicate-miss this guard exists to prevent.
-      val stateDirs = Seq("seen_coded", "decisions")
+      val stateDirs = Seq("seen_coded", "report")
         .map(d => new org.apache.hadoop.fs.Path(workDir, d))
         .filter(fs.exists)
       require(stateDirs.isEmpty,
@@ -169,6 +170,5 @@ object StreamEmbedDedup {
     SegmentedState.readAll(spark, s"$workDir/seen_coded", CodedSchema)
 
   def decisions(spark: SparkSession, workDir: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$workDir/decisions")
+    StreamGate.report(spark, workDir)
 }

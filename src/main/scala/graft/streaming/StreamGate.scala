@@ -3,50 +3,72 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming form of the STATELESS per-document quality gates — the
-  * blocklist and repetition filters are pure scans (a document's verdict
-  * depends only on its own tokens: no model, no thresholds learned from
-  * other documents, no cross-document state), so their ingest-time form
-  * is the thinnest member of the streaming gate family
-  * ([[StreamDedup]]/[[StreamDecontaminate]]/[[StreamDsir]]/
-  * [[StreamClassify]]/[[StreamPerplexity]]): one foreachBatch applying
-  * the SAME batch operator to every micro-batch.
+/** The streaming form of every STATELESS per-micro-batch screen, and the
+  * one owner of the per-batch report layout.
   *
-  * Because the gate closes over nothing but constants (the term list /
-  * the thresholds), stream == batch at ANY slicing or arrival order by
-  * construction — stronger than the fixed-model gates, which at least
-  * need their model materialized at stream start. Pinned empirically in
-  * StreamDedupSpec and hash-gated against the batch oracles as
-  * q_stream_blocklist / q_stream_repetition.
+  * A stateless screen's verdict for a row depends only on that row (or on
+  * the micro-batch it arrived in) and on inputs FIXED at stream start —
+  * never on earlier batches. The gate family run through here:
+  *  - constant-closure document gates (blocklist, repetition, structural
+  *    rules): the gate closes over nothing but constants, so stream ==
+  *    batch at ANY slicing or arrival order by construction;
+  *  - fixed-model gates — NB classification ([[graft.operators
+  *    .TextAnalysis.nbScore]]), CCNet perplexity routing
+  *    ([[graft.operators.TextAnalysis.ccnetRoute]]), DSIR weighting
+  *    ([[graft.operators.TextAnalysis.dsirGate]]): the model is estimated
+  *    once at stream start, then every batch is scored against it;
+  *  - eval-set screens — exact-gram decontamination ([[graft.operators
+  *    .Decontamination.screenAgainst]]) and near-dup decontamination
+  *    ([[graft.operators.Dedup.fuzzyDecontamGate]]): the eval index is
+  *    built once (a benchmark suite broadcasts);
+  *  - per-batch monitors — the drift table ([[graft.operators.Drift]])
+  *    and the Misra–Gries heavy-hitter segment ([[graft.functions
+  *    .FreqSketch]]), whose rows carry the batch id.
+  * All but exact decontamination are hash-gated against their batch
+  * oracles as q_stream_* queries, and all are pinned stream == batch in
+  * StreamDedupSpec / StreamDriftSpec / StreamTopkSpec.
   *
-  * At 100 TB these are the gates to run FIRST at the ingest edge (the
-  * same reasoning that put blocklist first in [[graft.Curate]]): zero
-  * shuffle for blocklist, one keyed micro-batch-local aggregate for
-  * repetition's gram counts, zero streaming state, so back-pressure is
-  * bounded by scan throughput alone.
+  * At 100 TB the constant-closure gates are the ones to run FIRST at the
+  * ingest edge (the same reasoning that put blocklist first in
+  * [[graft.Curate]]): zero shuffle for blocklist, one keyed
+  * micro-batch-local aggregate for repetition's gram counts, zero
+  * streaming state, so back-pressure is bounded by scan throughput alone.
+  * The fixed-model and eval-set gates pay their one corpus-sized job
+  * (model estimation, eval indexing) once, offline.
+  *
+  * Report layout: each micro-batch's rows OVERWRITE `report/b-%09d`
+  * keyed by batch id, so an at-least-once replay of batch b rewrites b's
+  * report identically and never duplicates rows; [[report]] reads every
+  * batch back. The stateful screens ([[StreamDedup]],
+  * [[StreamEmbedDedup]]) write their decisions through [[writeBatch]]
+  * too, before their state writes.
   *
   * Reference lineage: the reference validates each polled record
   * stateless-ly at ingest, before any stateful transform
   * (trading-etl-python src/processing/consumer.py:146-149 — parse +
-  * field checks per message, malformed rows skipped); this generalizes
-  * that per-record validate-at-ingest shape to per-document content
-  * gates. */
+  * field checks per message, malformed rows skipped) and relies on an
+  * idempotent write per poll (consumer.py:195-210); this generalizes that
+  * per-record validate-at-ingest shape to per-document content gates. */
 object StreamGate {
 
-  /** docs stream → per-doc gate report under `workDir/report`, one
-    * overwrite-keyed dir per batch so an at-least-once replay cannot
-    * duplicate report rows. `gate` must be a stateless per-document
-    * DataFrame transform (every output row derived from one input doc). */
-  def run(stream: DataFrame, gate: DataFrame => DataFrame,
+  /** rows stream → per-batch gate report under `workDir/report`,
+    * checkpoint under `workDir/ckpt`. `gate(mb, batchId)` must not read
+    * earlier batches' output: every output row is derived from the
+    * micro-batch and inputs fixed at stream start. */
+  def run(stream: DataFrame, gate: (DataFrame, Long) => DataFrame,
       workDir: String): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (mb: DataFrame, batchId: Long) =>
-        gate(mb).write.mode("overwrite").parquet(f"$workDir/report/b-$batchId%09d")
-        ()
+        writeBatch(gate(mb, batchId), workDir, batchId)
       }
       .start()
 
+  /** Write batch `batchId`'s report, replacing any earlier attempt's. */
+  def writeBatch(df: DataFrame, workDir: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(f"$workDir/report/b-$batchId%09d")
+
+  /** Every batch's report so far (the queryable output table). */
   def report(spark: SparkSession, workDir: String): DataFrame =
     spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$workDir/report")

@@ -68,7 +68,7 @@ class MaterializeSpec extends AnyFunSuite {
     // self-referencing DAG whose describe-time expansion is exponential
     // in rounds (r16 sweep: driver OOM uncapped; >20 min plan walk
     // capped). The loop-depth-aware truncation bounds lineage to
-    // loopTruncateEvery segments, so this run must finish in seconds AND
+    // Materialize.LoopTruncateEvery segments, so this run must finish in seconds AND
     // produce the exact frame the local strategy produces.
     spark.sparkContext.setCheckpointDir(
       graft.SessionScoped.scratchDir("graft_ckpt_lloyd"))

@@ -134,8 +134,8 @@ class StreamDedupSpec extends AnyFunSuite {
   }
 
   test("streamed decontamination matches the one-shot screen") {
-    import graft.operators.Decontamination
-    import graft.streaming.StreamDecontaminate
+    import graft.operators.{Decontamination, Materialize}
+    import graft.streaming.StreamGate
     val s = spark
     import s.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -149,14 +149,16 @@ class StreamDedupSpec extends AnyFunSuite {
     val dir = graft.SessionScoped.scratchDir("graft_sdecon")
     implicit val sq = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val q = StreamDecontaminate.run(input.toDF().toDF("doc_id", "text"),
-      docs.filter(evalPred), dir, n = 5, minHits = 1)
+    val evalGrams = Materialize(
+      Dedup.shingleIndex(docs.filter(evalPred), 5).select(col("h")).distinct())
+    val q = StreamGate.run(input.toDF().toDF("doc_id", "text"), (mb, _) =>
+      Decontamination.screenAgainst(Dedup.shingleIndex(mb, 5), evalGrams, 1), dir)
     try {
       Seq(trainDocs.take(7), trainDocs.drop(7))
         .foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
     } finally q.stop()
 
-    val stream = StreamDecontaminate.report(spark, dir).orderBy("doc_id").collect()
+    val stream = StreamGate.report(spark, dir).orderBy("doc_id").collect()
     assert(stream.length == batch.length && stream.nonEmpty)
     stream.zip(batch).foreach { case (sr, br) =>
       assert(sr.getAs[Long]("doc_id") == br.getAs[Long]("doc_id"))
@@ -169,7 +171,7 @@ class StreamDedupSpec extends AnyFunSuite {
 
   test("streamed fuzzy decontamination matches the one-shot screen") {
     import graft.operators.Dedup
-    import graft.streaming.StreamFuzzyDecontam
+    import graft.streaming.StreamGate
     val s = spark
     import s.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -184,14 +186,14 @@ class StreamDedupSpec extends AnyFunSuite {
     val dir = graft.SessionScoped.scratchDir("graft_sfuzzy")
     implicit val sq = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val q = StreamFuzzyDecontam.run(input.toDF().toDF("doc_id", "text"),
-      docs.filter(evalPred), dir, tau = 0.6)
+    val q = StreamGate.run(input.toDF().toDF("doc_id", "text"),
+      Dedup.fuzzyDecontamGate(docs.filter(evalPred), tau = 0.6), dir)
     try {
       Seq(trainDocs.take(100), trainDocs.drop(100))
         .foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
     } finally q.stop()
 
-    val stream = StreamFuzzyDecontam.report(spark, dir)
+    val stream = StreamGate.report(spark, dir)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(stream sameElements batch.map(r =>
@@ -203,7 +205,7 @@ class StreamDedupSpec extends AnyFunSuite {
     // a hard stop mid-replay + restart from the same checkpoint re-emits
     // its micro-batch into the overwrite-keyed report dir — nothing lost,
     // nothing duplicated
-    import graft.streaming.{Feeder, StreamFuzzyDecontam}
+    import graft.streaming.{Feeder, StreamGate}
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
     val evalPred = pmod(col("doc_id"), lit(10)) === 0
@@ -215,26 +217,58 @@ class StreamDedupSpec extends AnyFunSuite {
       spark.readStream.schema(feedCols.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
     def rows(work: String): Seq[String] =
-      StreamFuzzyDecontam.report(spark, work).collect()
+      StreamGate.report(spark, work).collect()
         .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
 
     val one = graft.SessionScoped.scratchDir("graft_sfuzzy_rs1")
     feed(one)
-    val q1 = StreamFuzzyDecontam.run(stream(one), evalDocs, one, tau = 0.6)
+    val q1 = StreamGate.run(stream(one),
+      Dedup.fuzzyDecontamGate(evalDocs, tau = 0.6), one)
     q1.processAllAvailable(); q1.stop()
 
     val re = graft.SessionScoped.scratchDir("graft_sfuzzy_rs2")
     feed(re)
-    val q2a = StreamFuzzyDecontam.run(stream(re), evalDocs, re, tau = 0.6)
+    val q2a = StreamGate.run(stream(re),
+      Dedup.fuzzyDecontamGate(evalDocs, tau = 0.6), re)
     var waited = 0
     while (q2a.recentProgress.length < 2 && waited < 300) {
       Thread.sleep(100); waited += 1
     }
     q2a.stop() // hard stop mid-replay
-    val q2b = StreamFuzzyDecontam.run(stream(re), evalDocs, re, tau = 0.6)
+    val q2b = StreamGate.run(stream(re),
+      Dedup.fuzzyDecontamGate(evalDocs, tau = 0.6), re)
     q2b.processAllAvailable(); q2b.stop()
     val (o, r) = (rows(one), rows(re))
     assert(o.nonEmpty && o == r)
+  }
+
+  test("fuzzy decontamination gate: a batch carrying an eval doc_id fails the query") {
+    // the gate's disjoint-id contract: a shared id would merge the two
+    // documents' shingle sets in the verify index, so the batch must fail
+    // loudly instead of reporting corrupted Jaccards
+    import graft.streaming.StreamGate
+    val s = spark
+    import s.implicits._
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val evalPred = pmod(col("doc_id"), lit(10)) === 0
+    val evalRow = docs.filter(evalPred).orderBy("doc_id").head()
+    val trainRow = docs.filter(!evalPred).orderBy("doc_id").head()
+    val dir = graft.SessionScoped.scratchDir("graft_sfuzzy_ids")
+    implicit val sq = spark.sqlContext
+    val input = MemoryStream[(Long, String)]
+    val q = StreamGate.run(input.toDF().toDF("doc_id", "text"),
+      Dedup.fuzzyDecontamGate(docs.filter(evalPred), tau = 0.6), dir)
+    val e = try {
+      input.addData((trainRow.getLong(0), trainRow.getString(1)),
+        (evalRow.getLong(0), "an unrelated training text reusing an eval id"))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+    } finally q.stop()
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).flatMap(t => Option(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("collide with the eval set")),
+      s"expected the disjoint-id failure, got: ${msgs.mkString(" / ")}")
   }
 
   test("streamed embedding micro-batches reproduce the one-shot incremental report") {
@@ -418,7 +452,7 @@ class StreamDedupSpec extends AnyFunSuite {
 
   test("streamed DSIR weights match the one-shot scorer in any arrival order") {
     import graft.operators.TextAnalysis
-    import graft.streaming.StreamDsir
+    import graft.streaming.StreamGate
     val s = spark
     import s.implicits._
     val nBuckets = 256
@@ -436,12 +470,12 @@ class StreamDedupSpec extends AnyFunSuite {
       val dir = SessionScoped.scratchDir(s"graft_sdsir_$name")
       implicit val sq = spark.sqlContext
       val input = MemoryStream[(Long, String)]
-      val q = StreamDsir.run(input.toDF().toDF("doc_id", "text"),
-        docs, target, nBuckets, dir)
+      val q = StreamGate.run(input.toDF().toDF("doc_id", "text"),
+        TextAnalysis.dsirGate(docs, target, nBuckets), dir)
       try Seq(order.take(splitAt), order.drop(splitAt)).foreach { b =>
         input.addData(b.toSeq); q.processAllAvailable()
       } finally q.stop()
-      StreamDsir.report(spark, dir).orderBy("doc_id").collect()
+      StreamGate.report(spark, dir).orderBy("doc_id").collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_grams"),
           r.getAs[Long]("logw_q"), r.getAs[Boolean]("selected")))
     }
@@ -458,7 +492,7 @@ class StreamDedupSpec extends AnyFunSuite {
 
   test("streamed NB predictions match the one-shot classifier in any arrival order") {
     import graft.operators.TextAnalysis
-    import graft.streaming.StreamClassify
+    import graft.streaming.StreamGate
     val s = spark
     import s.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -477,12 +511,13 @@ class StreamDedupSpec extends AnyFunSuite {
       val dir = SessionScoped.scratchDir(s"graft_snb_$name")
       implicit val sq = spark.sqlContext
       val input = MemoryStream[(Long, String, String)]
-      val q = StreamClassify.run(
-        input.toDF().toDF("doc_id", "text", "lang"), train, "lang", dir)
+      val model = TextAnalysis.nbModel(train, "lang")
+      val q = StreamGate.run(input.toDF().toDF("doc_id", "text", "lang"),
+        (mb, _) => TextAnalysis.nbScore(mb, model, "lang"), dir)
       try Seq(order.take(splitAt), order.drop(splitAt)).foreach { b =>
         input.addData(b.toSeq); q.processAllAvailable()
       } finally q.stop()
-      StreamClassify.report(spark, dir).orderBy("doc_id").collect()
+      StreamGate.report(spark, dir).orderBy("doc_id").collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("pred"),
           r.getAs[Boolean]("correct"), r.getAs[Double]("nll")))
     }
@@ -511,7 +546,8 @@ class StreamDedupSpec extends AnyFunSuite {
       val dir = SessionScoped.scratchDir(s"graft_sgate_$name")
       implicit val sq = spark.sqlContext
       val input = MemoryStream[(Long, String)]
-      val q = StreamGate.run(input.toDF().toDF("doc_id", "text"), gate, dir)
+      val q = StreamGate.run(input.toDF().toDF("doc_id", "text"),
+        (mb, _) => gate(mb), dir)
       try Seq(order.take(splitAt), order.drop(splitAt)).foreach { b =>
         input.addData(b.toSeq); q.processAllAvailable()
       } finally q.stop()
@@ -558,7 +594,7 @@ class StreamDedupSpec extends AnyFunSuite {
 
   test("streamed CCNet routing matches the fixed-threshold batch router in any order") {
     import graft.operators.TextAnalysis
-    import graft.streaming.StreamPerplexity
+    import graft.streaming.StreamGate
     val s = spark
     import s.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -579,12 +615,14 @@ class StreamDedupSpec extends AnyFunSuite {
       val dir = SessionScoped.scratchDir(s"graft_sccnet_$name")
       implicit val sq = spark.sqlContext
       val input = MemoryStream[(Long, String)]
-      val q = StreamPerplexity.run(
-        input.toDF().toDF("doc_id", "text"), train, calib, dir)
+      val model = TextAnalysis.knModel(train)
+      val th = TextAnalysis.ccnetThresholds(model, calib)
+      val q = StreamGate.run(input.toDF().toDF("doc_id", "text"),
+        (mb, _) => TextAnalysis.ccnetRoute(mb, model, th), dir)
       try Seq(order.take(splitAt), order.drop(splitAt)).foreach { b =>
         input.addData(b.toSeq); q.processAllAvailable()
       } finally q.stop()
-      StreamPerplexity.report(spark, dir).orderBy("doc_id").collect()
+      StreamGate.report(spark, dir).orderBy("doc_id").collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("bucket")))
     }
 

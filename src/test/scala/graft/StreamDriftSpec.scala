@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Drift
-import graft.streaming.{Feeder, StreamDrift}
+import graft.streaming.{Feeder, StreamGate}
 
 /** The streaming drift monitor must emit, per micro-batch, EXACTLY the
   * batch operator's table for that batch's rows — stateless parity, the
@@ -23,15 +23,17 @@ class StreamDriftSpec extends AnyFunSuite {
     Feeder.writeTimeSlicedFeed(cur, "_ms", work, slices = 3)
     val stream = spark.readStream.schema(ref.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = StreamDrift.run(stream, ref, "value", binWidth = 10.0,
-      maxBin = 7, workDir = work)
+    val refM = graft.operators.Materialize(ref)
+    val q = StreamGate.run(stream, (mb, batchId) =>
+      Drift.drift(refM, mb, "value", 10.0, 7)
+        .withColumn("batch_id", lit(batchId)), work)
     q.processAllAvailable(); q.stop()
 
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("bin", "cnt_ref", "cnt_cur", "p_ref", "p_cur",
         "psi_term", "js_term", "psi", "js")
         .collect().map(_.toSeq).sortBy(_.toString()).toSeq
-    val report = StreamDrift.report(spark, work)
+    val report = StreamGate.report(spark, work)
     val span = 300 / 3
     for (i <- 0 until 3) {
       val slice = cur.filter(col("_ms") >= i * span &&
@@ -50,11 +52,10 @@ class StreamDriftSpec extends AnyFunSuite {
 
     // replay: rewriting a batch's dir (overwrite-keyed) changes nothing
     val before = canon(report.filter(col("batch_id") === 1))
-    Drift.drift(ref, cur.filter(col("_ms") >= span &&
+    StreamGate.writeBatch(Drift.drift(ref, cur.filter(col("_ms") >= span &&
         col("_ms") < 2 * span).select("value"), "value", 10.0, 7)
-      .withColumn("batch_id", lit(1L))
-      .write.mode("overwrite").parquet(f"$work/drift/b-${1L}%09d")
-    assert(canon(StreamDrift.report(spark, work)
+      .withColumn("batch_id", lit(1L)), work, 1L)
+    assert(canon(StreamGate.report(spark, work)
       .filter(col("batch_id") === 1)) == before)
   }
 }

@@ -101,7 +101,8 @@ class StreamRestartSpec extends AnyFunSuite {
     // gate: the checkpoint resumes batch numbering and the overwrite-keyed
     // per-batch report dirs make the re-emitted micro-batch idempotent, so
     // a hard stop mid-replay loses nothing and duplicates nothing
-    import graft.streaming.StreamDsir
+    import graft.operators.TextAnalysis
+    import graft.streaming.StreamGate
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val feedCols = docs.select(col("doc_id"), col("text"))
     def feed(work: String): Unit = Feeder.writeTimeSlicedFeed(
@@ -112,26 +113,26 @@ class StreamRestartSpec extends AnyFunSuite {
       r.parquet(s"$work/feed")
     }
     def rows(work: String): Seq[String] =
-      graft.streaming.StreamDsir.report(spark, work).collect()
+      StreamGate.report(spark, work).collect()
         .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
 
     val one = graft.SessionScoped.scratchDir("graft_dsir_rs1")
     feed(one)
-    val q1 = StreamDsir.run(stream(one, Some(1)), docs,
-      col("lang") === "en", 256, one)
+    val q1 = StreamGate.run(stream(one, Some(1)),
+      TextAnalysis.dsirGate(docs, col("lang") === "en", 256), one)
     q1.processAllAvailable(); q1.stop()
 
     val re = graft.SessionScoped.scratchDir("graft_dsir_rs2")
     feed(re)
-    val q2a = StreamDsir.run(stream(re, Some(1)), docs,
-      col("lang") === "en", 256, re)
+    val q2a = StreamGate.run(stream(re, Some(1)),
+      TextAnalysis.dsirGate(docs, col("lang") === "en", 256), re)
     var waited = 0
     while (q2a.recentProgress.length < 2 && waited < 300) {
       Thread.sleep(100); waited += 1
     }
     q2a.stop() // hard stop mid-replay
-    val q2b = StreamDsir.run(stream(re, None), docs,
-      col("lang") === "en", 256, re)
+    val q2b = StreamGate.run(stream(re, None),
+      TextAnalysis.dsirGate(docs, col("lang") === "en", 256), re)
     q2b.processAllAvailable(); q2b.stop()
     assert(rows(one).nonEmpty && rows(one) == rows(re))
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.FreqSketch
-import graft.streaming.{Feeder, StreamTopk}
+import graft.streaming.{Feeder, StreamGate}
 
 /** The streaming Misra–Gries accumulator's contracts: with k above the
   * live vocabulary the merged stream summary is EXACT (no trim ever
@@ -34,7 +34,9 @@ class StreamTopkSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StructField("item",
           org.apache.spark.sql.types.StringType))))
       .option("maxFilesPerTrigger", "1").parquet(s"$work/feed")
-    val q = StreamTopk.run(stream, "item", k, work)
+    val q = StreamGate.run(stream, (mb, batchId) =>
+      mb.agg(FreqSketch.mgSketch(col("item"), k).as("sk"))
+        .withColumn("batch_id", lit(batchId)), work)
     q.processAllAvailable(); q.stop()
   }
 
@@ -42,7 +44,8 @@ class StreamTopkSpec extends AnyFunSuite {
     val work = graft.SessionScoped.scratchDir("graft_stopk1")
     val df = feed(work)
     runStream(work, k = 32) // vocab is 10 — no trim can ever fire
-    val got = StreamTopk.merged(spark, work, 32)
+    val got = StreamGate.report(spark, work)
+      .agg(FreqSketch.mgMerge(col("sk"), 32).as("s"))
       .select(explode(col("s.items")).as("it"), col("s.d"), col("s.n"))
       .select(col("it.item"), col("it.est"), col("d"), col("n"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -63,7 +66,8 @@ class StreamTopkSpec extends AnyFunSuite {
     val df = feed(work)
     val k = 4
     runStream(work, k)
-    val s = StreamTopk.merged(spark, work, k)
+    val s = StreamGate.report(spark, work)
+      .agg(FreqSketch.mgMerge(col("sk"), k).as("s"))
       .select(col("s.items"), col("s.d"), col("s.n")).head()
     val (items, d, n) = (s.getSeq[org.apache.spark.sql.Row](0), s.getLong(1), s.getLong(2))
     val truth = df.groupBy("item").agg(count(lit(1)).as("cnt"))
@@ -85,7 +89,8 @@ class StreamTopkSpec extends AnyFunSuite {
     val work = graft.SessionScoped.scratchDir("graft_stopk3")
     feed(work)
     runStream(work, k = 4)
-    def merged() = StreamTopk.merged(spark, work, 4)
+    def merged() = StreamGate.report(spark, work)
+      .agg(FreqSketch.mgMerge(col("sk"), 4).as("s"))
       .select(col("s.items"), col("s.d"), col("s.n"))
       .collect().map(_.toSeq.toString).toSeq
     val before = merged()
@@ -93,7 +98,7 @@ class StreamTopkSpec extends AnyFunSuite {
     val b1 = spark.read.parquet(s"$work/feed/b00001.parquet")
       .agg(FreqSketch.mgSketch(col("item"), 4).as("sk"))
       .withColumn("batch_id", lit(1L))
-    b1.write.mode("overwrite").parquet(f"$work/topk/b-${1L}%09d")
+    StreamGate.writeBatch(b1, work, 1L)
     assert(merged() == before, "replayed segment must be a no-op")
   }
 }
