@@ -59,6 +59,16 @@ if git grep -n 'SparkSession\.builder' -- src ':!src/main/scala/graft/GraftSessi
   exit 1
 fi
 
+echo "== one first-write-wins writer =="
+# Both parquet sinks land through IdempotentSink.firstWriteWins; a second
+# left-anti join under sinks/ is a hand-copied rule that would drift.
+fww=$(git grep -n left_anti -- src/main/scala/graft/sinks || true)
+if [[ $(printf '%s' "$fww" | grep -c .) -gt 1 ]]; then
+  echo "$fww"
+  echo "CI FAILED: more than one left_anti under sinks/ (use IdempotentSink.firstWriteWins)" >&2
+  exit 1
+fi
+
 echo "== sbt Test/compile =="
 sbt -batch Test/compile
 

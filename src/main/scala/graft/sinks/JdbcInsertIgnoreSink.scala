@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.sql.{Connection, SQLException}
+import java.sql.{Connection, SQLException, Types}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -43,24 +43,10 @@ object PostgresInsertIgnoreDialect extends InsertIgnoreDialect {
   * [[JdbcInsertIgnoreSink.write]] absorbs row-by-row (first write still
   * wins). Without it, racing writers insert silent duplicates. */
 object AnsiInsertIgnoreDialect extends InsertIgnoreDialect {
-  private def sqlType(dt: DataType): String = dt match {
-    case LongType => "BIGINT"
-    case IntegerType => "INTEGER"
-    case DoubleType => "DOUBLE"
-    case FloatType => "REAL"
-    case StringType => "VARCHAR(1024)"
-    case BooleanType => "BOOLEAN"
-    case TimestampType => "TIMESTAMP"
-    case DateType => "DATE"
-    case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
-    case other =>
-      throw new IllegalArgumentException(s"unsupported sink column type $other")
-  }
-
   override def insertIgnoreSql(table: String, columns: Seq[String],
       keys: Seq[String], schema: StructType): String = {
-    val casts = columns
-      .map(c => s"CAST(? AS ${sqlType(schema(c).dataType)})").mkString(", ")
+    val casts = columns.map(c =>
+      s"CAST(? AS ${JdbcInsertIgnoreSink.sqlTypeOf(schema(c).dataType).get._2})").mkString(", ")
     val vcols = columns.mkString(", ")
     val sel = columns.map(c => s"v.$c").mkString(", ")
     val probe = keys.map(k => s"t.$k = v.$k").mkString(" AND ")
@@ -71,7 +57,7 @@ object AnsiInsertIgnoreDialect extends InsertIgnoreDialect {
 
 /** First-write-wins JDBC sink: `foreachPartition` + one connection + one
   * PreparedStatement per partition, rows added to JDBC batches of
-  * `batchSize`, one transaction per partition with rollback-on-failure —
+  * [[BatchSize]], one transaction per partition with rollback-on-failure —
   * the Spark shape of the reference consumer's
   * `execute_values(cur, "INSERT … ON CONFLICT DO NOTHING", records)` +
   * `db_conn.commit()` / `db_conn.rollback()`
@@ -84,16 +70,22 @@ object AnsiInsertIgnoreDialect extends InsertIgnoreDialect {
   */
 object JdbcInsertIgnoreSink {
 
-  private def jdbcTypeOf(dt: DataType): Option[Int] = dt match {
-    case LongType => Some(java.sql.Types.BIGINT)
-    case IntegerType => Some(java.sql.Types.INTEGER)
-    case DoubleType => Some(java.sql.Types.DOUBLE)
-    case FloatType => Some(java.sql.Types.REAL)
-    case StringType => Some(java.sql.Types.VARCHAR)
-    case BooleanType => Some(java.sql.Types.BOOLEAN)
-    case TimestampType => Some(java.sql.Types.TIMESTAMP)
-    case DateType => Some(java.sql.Types.DATE)
-    case _: DecimalType => Some(java.sql.Types.DECIMAL)
+  /** Rows per JDBC batch. */
+  private val BatchSize = 500
+
+  /** The supported column types: the `java.sql.Types` code (for
+    * `setNull`) and the ANSI SQL type name (for the ANSI dialect's
+    * casts); None = unsupported, rejected by [[write]] on the driver. */
+  private[sinks] def sqlTypeOf(dt: DataType): Option[(Int, String)] = dt match {
+    case LongType => Some((Types.BIGINT, "BIGINT"))
+    case IntegerType => Some((Types.INTEGER, "INTEGER"))
+    case DoubleType => Some((Types.DOUBLE, "DOUBLE"))
+    case FloatType => Some((Types.REAL, "REAL"))
+    case StringType => Some((Types.VARCHAR, "VARCHAR(1024)"))
+    case BooleanType => Some((Types.BOOLEAN, "BOOLEAN"))
+    case TimestampType => Some((Types.TIMESTAMP, "TIMESTAMP"))
+    case DateType => Some((Types.DATE, "DATE"))
+    case d: DecimalType => Some((Types.DECIMAL, s"DECIMAL(${d.precision},${d.scale})"))
     case _ => None
   }
 
@@ -123,27 +115,25 @@ object JdbcInsertIgnoreSink {
     * stream land exactly-once rows without sink-side coordination. */
   def foreachBatchWriter(connect: () => Connection, table: String,
       keys: Seq[String],
-      dialect: InsertIgnoreDialect = PostgresInsertIgnoreDialect,
-      batchSize: Int = 500): (DataFrame, Long) => Unit =
-    (batch, _) => write(batch, connect, table, keys, dialect, batchSize)
+      dialect: InsertIgnoreDialect = PostgresInsertIgnoreDialect): (DataFrame, Long) => Unit =
+    (batch, _) => write(batch, connect, table, keys, dialect)
 
   /** @param connect serializable connection factory, invoked once per
     *                partition on the executor (capture only strings/configs,
     *                never a Connection). */
   def write(df: DataFrame, connect: () => Connection, table: String,
       keys: Seq[String],
-      dialect: InsertIgnoreDialect = PostgresInsertIgnoreDialect,
-      batchSize: Int = 500): Unit = {
+      dialect: InsertIgnoreDialect = PostgresInsertIgnoreDialect): Unit = {
     val schema = df.schema
     val columns = schema.fieldNames.toSeq
     // Fail on the driver, before any job launches: complex types (array/
     // map/struct/binary) would pass setObject but die per-row on the
     // executor with an obscure driver error.
-    val bad = schema.fields.filter(f => jdbcTypeOf(f.dataType).isEmpty)
+    val bad = schema.fields.filter(f => sqlTypeOf(f.dataType).isEmpty)
     require(bad.isEmpty,
       s"unsupported JDBC sink column types: ${bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ")}")
     val sql = dialect.insertIgnoreSql(table, columns, keys, schema)
-    val jdbcTypes = schema.fields.map(f => jdbcTypeOf(f.dataType).get)
+    val jdbcTypes = schema.fields.map(f => sqlTypeOf(f.dataType).get._1)
     df.foreachPartition { rows: Iterator[Row] =>
       if (rows.hasNext) {
         val conn = connect()
@@ -165,7 +155,7 @@ object JdbcInsertIgnoreSink {
             // probe and its insert) can be replayed row-at-a-time: the
             // duplicate rows are skipped (first write wins), everything
             // else still lands. Non-duplicate failures propagate → rollback.
-            val buf = new ArrayBuffer[Row](batchSize)
+            val buf = new ArrayBuffer[Row](BatchSize)
             def flush(): Unit = if (buf.nonEmpty) {
               buf.foreach { row => bind(row); ps.addBatch() }
               try ps.executeBatch()
@@ -182,7 +172,7 @@ object JdbcInsertIgnoreSink {
             }
             rows.foreach { row =>
               buf += row
-              if (buf.length == batchSize) flush()
+              if (buf.length == BatchSize) flush()
             }
             flush()
             conn.commit()

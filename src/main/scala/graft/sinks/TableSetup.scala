@@ -13,8 +13,7 @@ import graft.model.Model
   *  - `create_hypertable('stock_indicators', by_range('time'))` → parquet
   *    `PARTITIONED BY (day)`: time-range queries prune partitions exactly
   *    like hypertable chunk exclusion. [[writeIndicators]]' first-write-
-  *    wins anti-join is not scoped by it: it reads the keys of every `day`
-  *    partition (ROADMAP direction 2).
+  *    wins probe is not scoped by it (see [[IdempotentSink]]).
   */
 object TableSetup {
 
@@ -26,31 +25,15 @@ object TableSetup {
   }
 
   /** Append indicator rows with PK(time,symbol) first-write-wins semantics
-    * (within the batch AND against prior appends — the ON CONFLICT DO
-    * NOTHING analog), partitioned by calendar day. The anti-join reads
-    * the key columns of EVERY `day` partition already written: its
-    * existing-side scan carries no `PartitionFilters` (checked with EXPLAIN
-    * FORMATTED), so its cost grows with the table, not with the batch.
-    * Scoping it to the days the batch touches is ROADMAP direction 2. */
-  def writeIndicators(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    // deterministic in-batch dedup: smallest full-row tuple per key
-    // (dropDuplicates keeps an arbitrary row and varies run to run)
-    val keyW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("time"), col("symbol"))
-      .orderBy(struct(Model.DbColumns.map(col): _*))
-    val batch = df.select(Model.DbColumns.map(col): _*)
-      .withColumn("day", to_date(col("time")))
-      .withColumn("__rn", row_number().over(keyW))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-    val fresh =
-      try {
-        val existing = spark.read.parquet(path).select(col("time"), col("symbol")).distinct()
-        batch.join(existing, Seq("time", "symbol"), "left_anti")
-      } catch { case _: org.apache.spark.sql.AnalysisException => batch }
-    fresh.write.mode(SaveMode.Append).partitionBy("day").parquet(path)
-  }
+    * (the ON CONFLICT DO NOTHING analog, [[IdempotentSink]]), partitioned by
+    * calendar day. Within the batch the smallest full-row tuple per key
+    * wins (dropDuplicates keeps an arbitrary row and varies run to run). */
+  def writeIndicators(df: DataFrame, path: String): Unit =
+    IdempotentSink.firstWriteWins(
+      df.select(Model.DbColumns.map(col): _*)
+        .withColumn("day", to_date(col("time")))
+        .withColumn("__first", struct(Model.DbColumns.map(col): _*)),
+      path, Seq("time", "symbol"), "__first", Seq("day"))
 
   /** Idempotent backfill: overwrite ONLY the partitions present in the
     * batch (dynamic partition overwrite), leaving every other partition

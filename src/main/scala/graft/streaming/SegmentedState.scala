@@ -149,19 +149,4 @@ object SegmentedState {
     val k = base.getOrElse(0L)
     base.size + segs.count(_ >= k)
   }
-
-  /** Parquet data-file count across live dirs — spec observability. */
-  def parquetFileCount(spark: SparkSession, stateDir: String): Int = {
-    val (base, segs) = listSegments(spark, stateDir)
-    val k = base.getOrElse(0L)
-    val fs = fsFor(spark, stateDir)
-    val dirs = base.map(b => s"$stateDir/${baseName(b)}").toSeq ++
-      segs.filter(_ >= k).map(s => s"$stateDir/${segName(s)}")
-    dirs.map { d =>
-      val it = fs.listFiles(new Path(d), true)
-      var n = 0
-      while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      n
-    }.sum
-  }
 }

@@ -35,9 +35,11 @@ import graft.streaming.IndicatorMath.BarState
   * first-write-wins deterministically (ST4).
   *
   * Kafka binding (no broker in this environment, wiring documented):
-  * `spark.readStream.format("kafka").option("subscribe", topic)
+  * `spark.readStream.format("kafka").option("subscribe", "raw_stock_prices")
+  * .option("kafka.group.id", "indicator_calculators_v2")
   * .option("startingOffsets","earliest").option("maxOffsetsPerTrigger",500)`
-  * then `parse(df)` — the 500-record cap mirrors consumer.py:28.
+  * then `parse(df)` — the reference's topic (settings.py) and consumer
+  * group, earliest offsets and 500-record cap (consumer.py:218-224, :28).
   */
 object StreamIngest {
 
@@ -121,7 +123,7 @@ object StreamIngest {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** In-stream replay dedup: drop repeats of the FULL tick payload
-    * (symbol, timestamp, price) while the event is inside the watermark —
+    * (symbol, timestamp, price) inside a 10-minute watermark —
     * the streaming half of the reference's at-least-once contract. The
     * reference absorbs producer replays at the DATABASE (ON CONFLICT DO
     * NOTHING, consumer.py:200); dropping identical payloads upstream means
@@ -133,15 +135,14 @@ object StreamIngest {
     *
     * Scale: dedup state shares the symbol-keyed partitioning of the
     * indicator state downstream and is EVICTED at the watermark — bounded
-    * by event-rate × delay, not by stream lifetime, which is what makes it
-    * safe on an unbounded 100 TB/day feed. */
-  def dedupWithinWatermark(ticks: Dataset[TickEvent],
-      delay: String = "10 minutes"): Dataset[TickEvent] = {
+    * by event-rate × 10 minutes, not by stream lifetime, which is what
+    * makes it safe on an unbounded 100 TB/day feed. */
+  def dedupWithinWatermark(ticks: Dataset[TickEvent]): Dataset[TickEvent] = {
     val spark = ticks.sparkSession
     import spark.implicits._
     ticks
       .withColumn("event_time", timestamp_millis(col("timestamp")))
-      .withWatermark("event_time", delay)
+      .withWatermark("event_time", "10 minutes")
       .dropDuplicatesWithinWatermark("symbol", "timestamp", "price")
       .drop("event_time")
       .as[TickEvent]
@@ -152,6 +153,6 @@ object StreamIngest {
     * indicator state, so a re-delivered offset never recomputes (the sink's
     * first-write-wins remains as the second, idempotency-of-last-resort
     * layer). */
-  def fromRaw(raw: DataFrame, dedupDelay: String = "10 minutes"): Dataset[SeqRow] =
-    pipeline(dedupWithinWatermark(parse(raw), dedupDelay))
+  def fromRaw(raw: DataFrame): Dataset[SeqRow] =
+    pipeline(dedupWithinWatermark(parse(raw)))
 }

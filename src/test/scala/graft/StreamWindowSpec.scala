@@ -83,7 +83,7 @@ class StreamWindowSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     val input = MemoryStream[graft.streaming.StreamIngest.TickEvent]
     val deduped = graft.streaming.StreamIngest
-      .dedupWithinWatermark(input.toDS(), delay = "10 minutes")
+      .dedupWithinWatermark(input.toDS())
     val q = deduped.writeStream.format("memory").queryName("dedupstream")
       .outputMode("append").start()
     try {

@@ -128,6 +128,30 @@ class StreamingSpec extends AnyFunSuite {
       Seq((1000L, 1.0), (2000L, 3.0), (3000L, 4.0)))
   }
 
+  test("IdempotentSink: a sink lacking a key column fails the append, not first-write-wins") {
+    val dir = graft.SessionScoped.scratchDir("graft_sink_nokey") + "/out"
+    Seq((new Timestamp(1000L), "A", 1.0)).toDF("time", "sym", "close").write.parquet(dir)
+    val b = Seq((new Timestamp(1000L), "A", 2.0, 1L)).toDF("time", "symbol", "close", "seq")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      graft.sinks.IdempotentSink.append(b, dir, Seq("time", "symbol"), "seq")
+    }
+    assert(e.getMessage.contains("symbol"), e.getMessage)
+    assert(spark.read.parquet(dir).count() == 1)
+  }
+
+  test("IdempotentSink: an empty sink dir (crashed first append) takes the first write") {
+    val dir = graft.SessionScoped.scratchDir("graft_sink_empty") + "/out"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val b1 = Seq((new Timestamp(1000L), "A", 1.0, 1L)).toDF("time", "symbol", "close", "seq")
+    graft.sinks.IdempotentSink.append(b1, dir, Seq("time", "symbol"), "seq")
+    val b2 = Seq((new Timestamp(1000L), "A", 9.0, 2L), (new Timestamp(2000L), "A", 3.0, 3L))
+      .toDF("time", "symbol", "close", "seq")
+    graft.sinks.IdempotentSink.append(b2, dir, Seq("time", "symbol"), "seq")
+    val out = spark.read.parquet(dir).orderBy("time").collect()
+    assert(out.map(r => (r.getAs[Timestamp]("time").getTime, r.getAs[Double]("close"))).toSeq ==
+      Seq((1000L, 1.0), (2000L, 3.0)))
+  }
+
   test("streaming CUSUM == batch CUSUM bit-for-bit across micro-batch splits") {
     import graft.streaming.CusumMonitor
     import graft.operators.Signals
