@@ -69,6 +69,18 @@ if [[ $(printf '%s' "$fww" | grep -c .) -gt 1 ]]; then
   exit 1
 fi
 
+echo "== run artifacts under plans/ =="
+# Trend, curate-trend, key-scale and sweep outputs live under plans/ (the
+# trend mains default there); the root keeps bench_out.json, the driver's
+# artifact, and nothing else of the kind.
+stray=$(find . -maxdepth 1 -type f \( -name 'trend*' -o -name 'curate_trend*' \
+  -o -name 'keyscale*' -o -name '*sweep*' \) | sort)
+if [[ -n "$stray" ]]; then
+  echo "$stray"
+  echo "CI FAILED: run artifacts at the repo root (move them under plans/)" >&2
+  exit 1
+fi
+
 echo "== sbt Test/compile =="
 sbt -batch Test/compile
 

@@ -92,16 +92,6 @@ object Bench {
       materialize("q_bars_hourly")
       materialize("q_join_revenue")
     } catch { case _: Throwable => () }
-    // Shared trained-table pre-warm: in sorted order each tokenizer pair's
-    // encode query runs before its train sibling, so whichever sweep includes
-    // an encode query would otherwise pay the full training loop inside that
-    // encode measurement (q_bpe_encode first-sample was 7× its converged
-    // value in the r14 driver sweep). Training stays timed where it belongs:
-    // q_bpe_train / q_unigram_train retrain unconditionally.
-    if (names.exists(Set("q_bpe_encode", "q_unigram_encode"))) {
-      try CorpusEntries.prewarmTrained(spark, sfDir)
-      catch { case _: Throwable => () }
-    }
 
     def timeOnce(name: String): (Boolean, Double) = {
       val t0 = System.nanoTime()

@@ -20,7 +20,7 @@ package graft
   *   SPARK_GRAFT_TREND_COPIES  scale multiple (default 3)
   *   SPARK_GRAFT_TREND_ONLY    comma list of queries (default: the heavy set)
   *   SPARK_GRAFT_TREND_FLAG    per-SF ratio flag threshold (default 1.5)
-  *   SPARK_GRAFT_TREND_OUT     full JSON artifact (default trend_out.json)
+  *   SPARK_GRAFT_TREND_OUT     full JSON artifact (default plans/trend_out.json)
   */
 object BenchTrend {
 
@@ -112,7 +112,7 @@ object BenchTrend {
         s""""flagged":${flagged.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""queries":$qjson}"""
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_TREND_OUT", "trend_out.json")
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_TREND_OUT", "plans/trend_out.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
     // exactly ONE JSON line on stdout (unlike graft.Bench's deliberate
     // double print for clipped capture windows, nothing machine-parses

@@ -1,18 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Chunking, CorpusStats, Decontamination, Dedup, Drift, Layout, Packing, Sampling, TextAnalysis}
 import graft.sources.{Jsonl, Tables}
+import graft.EntryMath.r4
 
 /** Corpus-curation operators (sampling / vocabulary / TF-IDF / PII /
   * chunking / passage dedup), each with its DuckDB oracle — the
   * document→training-example half of an LLM data pipeline, alongside the
   * dedup/similarity family in [[TextDedupEntries]]. */
 object CorpusEntries {
-
-  private def r4(e: String): String = s"floor(($e) * 10000 + 0.5) / 10000"
 
   /** Shared sampling parameters (query and oracle read the same values). */
   private val SampleSalt = "s1:"
@@ -505,153 +504,60 @@ object CorpusEntries {
       "n_chars", binWidth = 100.0, maxBin = 14)
   }
 
-  /** Merge count shared by the q_bpe pair's queries and oracles. 64 is
-    * deliberately past Bpe.EncodeMaterializeEvery (16), so the shipped
-    * query exercises encode's lineage-bounding cadence — and past any
-    * toy count: the oracle CTE chain scales mechanically (one
-    * MATERIALIZED layer per merge; without MATERIALIZED, DuckDB inlines
-    * each doubly-referenced layer and the chain is exponential). */
+  /** Merge count shared by the q_bpe pair's queries and oracles. The
+    * oracle CTE chain scales mechanically (one MATERIALIZED layer per
+    * merge; without MATERIALIZED, DuckDB inlines each doubly-referenced
+    * layer and the chain is exponential). */
   private val BpeIters = 64
 
-  /** One trained merge table per (session, sfDir) — the q_bpe pair
-    * shares it the way [[StreamEntries]]'s streamTopkRuns shares its
-    * stream run: training is deterministic (greedy with a total-order
-    * tie-break over exact integer counts), so q_bpe_encode re-training
-    * what q_bpe_train just produced would reproduce the identical table
-    * while paying the full ~60-refresh driver loop a second time. The
-    * cached value is the collected rows (≤ BpeIters of them — the
-    * artifact a tokenizer ships is driver-sized by definition). */
-  // keyed by session UUID, not the session object — a session-keyed map
-  // would pin every closed session's state graph for the JVM lifetime
-  private val bpeMergeRuns = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Array[(Long, String, String, String, Long)]]()
-
-  private def trainedMerges(s: SparkSession, dir: String): DataFrame = {
-    val key = (SessionScoped.key(s), dir)
-    var rows = bpeMergeRuns.get(key)
-    if (rows == null) {
-      // cold path: q_bpe_encode ran before q_bpe_train in this session,
-      // so the encode measurement is about to pay the full ~60-refresh
-      // training loop — say so, or a skewed bench time is unattributable.
-      // Training runs OUTSIDE the map (putIfAbsent, not computeIfAbsent):
-      // holding the bin lock across a distributed job would block every
-      // concurrent reader of the bin for its duration.
-      Console.err.println(
-        s"[graft] trainedMerges cache miss for $dir — cold-training " +
-          "BPE merges inside the calling query's measurement")
-      val trained = collectMerges(s, dir)
-      rows = Option(bpeMergeRuns.putIfAbsent(key, trained)).getOrElse(trained)
-    }
-    import s.implicits._
-    rows.toSeq.toDF("iter", "left_sym", "right_sym", "merged", "pair_count")
-  }
-
-  private def collectMerges(
-      s: SparkSession, dir: String): Array[(Long, String, String, String, Long)] =
-    operators.Bpe.trainMerges(Tables.documents(s, dir), BpeIters)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getLong(4)))
-
   /** Tokenizer learning ([[operators.Bpe]]): the 64 highest-count BPE
-    * merges over the corpus — one distributed word count, then
-    * dictionary-sized iterations; the learned merge table is the
-    * artifact a tokenizer ships. Always retrains (q_bpe_train is the
-    * query that MEASURES training) and refreshes the shared cache. */
-  private def qBpeTrain(s: SparkSession, dir: String): DataFrame = {
-    val merges = operators.Bpe.trainMerges(Tables.documents(s, dir), BpeIters)
-    bpeMergeRuns.put((SessionScoped.key(s), dir), merges.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getLong(4))))
-    merges
-  }
+    * merges over the corpus — one distributed word count, then an
+    * in-process merge loop; the learned merge table is the artifact a
+    * tokenizer ships. */
+  private def qBpeTrain(s: SparkSession, dir: String): DataFrame =
+    operators.Bpe.trainMerges(Tables.documents(s, dir), BpeIters)
 
   /** The corpus tokenized with the learned merges: exact per-subword
-    * counts (the subword-vocabulary view). Reuses the pair's shared
-    * merge table so the query measures ENCODING, not a redundant
-    * second training run. */
-  private def qBpeEncode(s: SparkSession, dir: String): DataFrame =
-    operators.Bpe.encode(Tables.documents(s, dir), trainedMerges(s, dir))
+    * counts (the subword-vocabulary view). */
+  private def qBpeEncode(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    operators.Bpe.encode(docs, operators.Bpe.trainMerges(docs, BpeIters))
+  }
 
-  /** Tokenizer fertility report per (source, lang) under the shared
-    * trained merge table — measures ENCODING-side tokenizer quality,
-    * reusing the q_bpe pair's cached merges like q_bpe_encode. */
-  private def qBpeFertility(s: SparkSession, dir: String): DataFrame =
-    operators.Bpe.fertility(Tables.documents(s, dir), trainedMerges(s, dir))
+  /** Tokenizer fertility report per (source, lang) under the trained
+    * merge table — measures ENCODING-side tokenizer quality. */
+  private def qBpeFertility(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    operators.Bpe.fertility(docs, operators.Bpe.trainMerges(docs, BpeIters))
+  }
 
   /** Unigram-LM parameters shared by the q_unigram pair's queries and
     * oracles: seed 96 multi-char pieces, two hard-EM rounds pruning to
     * 64 then 48 — past one round so the oracle's per-round CTE blocks
-    * prove the LOOP, not a single pass (the BpeIters > 16 reasoning). */
+    * prove the LOOP, not a single pass. */
   private val UnigramSeedMulti = 96
   private val UnigramKeep = Seq(64, 48)
 
-  /** One trained unigram table per (session, sfDir) — the q_unigram pair
-    * shares it exactly like [[bpeMergeRuns]]: training is deterministic,
-    * so q_unigram_encode re-training would reproduce the identical table
-    * while paying the EM loop a second time. */
-  private val unigramRuns = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Array[(String, Long, Long)]]()
-
-  private def trainUnigram(s: SparkSession, dir: String): Array[(String, Long, Long)] =
-    operators.Unigram.train(Tables.documents(s, dir),
-      UnigramSeedMulti, UnigramKeep)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-
-  private def trainedUnigram(s: SparkSession, dir: String): DataFrame = {
-    val key = (SessionScoped.key(s), dir)
-    var rows = unigramRuns.get(key)
-    if (rows == null) {
-      Console.err.println(
-        s"[graft] trainedUnigram cache miss for $dir — cold-training the " +
-          "unigram table inside the calling query's measurement")
-      val trained = trainUnigram(s, dir)
-      rows = Option(unigramRuns.putIfAbsent(key, trained)).getOrElse(trained)
-    }
-    import s.implicits._
-    rows.toSeq.toDF("piece", "n_uses", "logp_q")
-  }
-
-  /** Populate BOTH shared trained-table caches outside any timed
-    * measurement. In a sorted bench sweep the encode query of each
-    * tokenizer pair runs BEFORE its train sibling (q_bpe_encode <
-    * q_bpe_train, q_unigram_encode < q_unigram_train), so without a
-    * pre-warm the first encode measurement silently absorbs the full
-    * training loop — the r14 sweep measured q_bpe_encode at 7× its
-    * converged value for exactly this reason. Benchers call this once
-    * during warmup so encode floors measure steady-state encoding; the
-    * train queries still retrain unconditionally (training IS what they
-    * measure). Idempotent and quiet — the cache-miss warnings in
-    * [[trainedMerges]]/[[trainedUnigram]] stay reserved for the
-    * unattributed cold path this hook exists to prevent. */
-  private[graft] def prewarmTrained(s: SparkSession, dir: String): Unit = {
-    val key = (SessionScoped.key(s), dir)
-    if (!bpeMergeRuns.containsKey(key))
-      bpeMergeRuns.putIfAbsent(key, collectMerges(s, dir))
-    if (!unigramRuns.containsKey(key))
-      unigramRuns.putIfAbsent(key, trainUnigram(s, dir))
-  }
-
   /** Unigram-LM tokenizer training ([[operators.Unigram]]): seed + two
-    * hard-EM Viterbi/prune rounds. Always retrains (this query MEASURES
-    * training) and refreshes the shared cache. */
-  private def qUnigramTrain(s: SparkSession, dir: String): DataFrame = {
-    val rows = trainUnigram(s, dir)
-    unigramRuns.put((SessionScoped.key(s), dir), rows)
-    import s.implicits._
-    rows.toSeq.toDF("piece", "n_uses", "logp_q")
-  }
+    * hard-EM Viterbi/prune rounds. */
+  private def qUnigramTrain(s: SparkSession, dir: String): DataFrame =
+    operators.Unigram.train(Tables.documents(s, dir), UnigramSeedMulti, UnigramKeep)
 
   /** The corpus Viterbi-tokenized with the learned unigram table: exact
     * per-piece counts (the subword-vocabulary view, like q_bpe_encode). */
-  private def qUnigramEncode(s: SparkSession, dir: String): DataFrame =
-    operators.Unigram.encode(Tables.documents(s, dir), trainedUnigram(s, dir))
+  private def qUnigramEncode(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    operators.Unigram.encode(docs,
+      operators.Unigram.train(docs, UnigramSeedMulti, UnigramKeep))
+  }
 
   /** Unigram-tokenizer fertility per (source, lang) — the q_bpe_fertility
-    * disparity report over the Viterbi segmentation, sharing the trained
-    * table with the q_unigram pair. */
-  private def qUnigramFertility(s: SparkSession, dir: String): DataFrame =
-    operators.Unigram.fertility(Tables.documents(s, dir), trainedUnigram(s, dir))
+    * disparity report over the Viterbi segmentation. */
+  private def qUnigramFertility(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    operators.Unigram.fertility(docs,
+      operators.Unigram.train(docs, UnigramSeedMulti, UnigramKeep))
+  }
 
   // ---------------------------------------------------------------- oracle
 

@@ -16,7 +16,7 @@ package graft
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_TREND_COPIES
   * (default 10), SPARK_GRAFT_TREND_DIR, SPARK_GRAFT_TREND_OUT (default
-  * curate_trend.json).
+  * plans/curate_trend.json).
   */
 object CurateTrend {
   def main(args: Array[String]): Unit = {
@@ -78,7 +78,7 @@ object CurateTrend {
         s""""wall_per_sf_ratio":${f3(ws / (copies * wb))},""" +
         s""""funnel_base":${funnelJson(fb)},"funnel_scaled":${funnelJson(fs)},""" +
         s""""stages":$stageJson}"""
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_TREND_OUT", "curate_trend.json")
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_TREND_OUT", "plans/curate_trend.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
     spark.stop()
     println(json)

@@ -9,7 +9,13 @@ import org.apache.spark.sql.functions._
   * `oracle` for the shared portability rules these implement. */
 private[graft] object EntryMath {
 
+  /** Deterministic 4-dp rounding: floor(x·10⁴+0.5)/10⁴ in pure double
+    * arithmetic — bitwise-identical in Spark and DuckDB, unlike round(),
+    * whose half-case handling differs (Spark: decimal-string HALF_UP;
+    * DuckDB: IEEE double). One definition per form: Column, driver-side
+    * Double, and the oracle's SQL text. */
   def r(c: Column): Column = floor(c * lit(10000) + lit(0.5)) / lit(10000)
+  def r(x: Double): Double = math.floor(x * 10000 + 0.5) / 10000
   def r4(e: String): String = s"floor(($e) * 10000 + 0.5) / 10000"
 
   /** Exact integer cents — order-independent money aggregation. */

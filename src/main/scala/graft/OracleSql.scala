@@ -1,5 +1,7 @@
 package graft
 
+import graft.EntryMath.r4
+
 /** DuckDB oracle SQL building blocks shared across queries.
   *
   * Parity rules with the Spark side (see Verify/driver contract):
@@ -258,8 +260,6 @@ object OracleSql {
       |    wd AS (PARTITION BY symbol, CAST(time AS DATE) ORDER BY time
       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |)""".stripMargin
-
-  def r4(e: String): String = s"floor(($e) * 10000 + 0.5) / 10000"
 
   /** Per-document composite quality score CTE (mirrors
     * graft.operators.TextAnalysis.stats's quality_score, 4dp-rounded):

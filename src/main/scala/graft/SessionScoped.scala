@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session-identity and scratch-directory plumbing shared by the
-  * per-session query caches (streamTopkRuns, bpeMergeRuns) and every
-  * query that replays through a file feed. */
+  * per-session query cache (streamTopkRuns) and every query that
+  * replays through a file feed. */
 object SessionScoped {
 
   /** Stable string identity for a session, usable as a cache key WITHOUT

@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{WindowIndicators => WI}
 import graft.operators.IndicatorPipeline
 import graft.sources.Tables
+import graft.EntryMath.{r, r4}
 import graft.OracleSql._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -19,12 +20,6 @@ import graft.OracleSql._
   * through µs precision.
   */
 object SparkEntry {
-
-  /** Deterministic 4-dp rounding: floor(x·10⁴+0.5)/10⁴ in pure double
-    * arithmetic — bitwise-identical in Spark and DuckDB, unlike round(),
-    * whose half-case handling differs (Spark: decimal-string HALF_UP;
-    * DuckDB: IEEE double). Oracle SQL uses the same formula. */
-  private def r(c: Column): Column = floor(c * lit(10000) + lit(0.5)) / lit(10000)
 
   /** Flagship: full 13-indicator backfill over sf0.001 bars. */
   def entry(spark: SparkSession): DataFrame =

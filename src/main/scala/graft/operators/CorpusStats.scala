@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Materialize.MatOps
+import graft.EntryMath.{r => r4}
 
 /** Corpus-composition statistics: the "data mixing" view of a training
   * corpus — per-(source, lang) volumes plus temperature-scaled resampling
@@ -17,7 +18,6 @@ import graft.operators.Materialize.MatOps
   */
 object CorpusStats {
 
-  private def r4(c: Column): Column = floor(c * lit(10000) + lit(0.5)) / lit(10000)
 
   /** Per-(source, lang): document/token/char volumes, mean doc length, and
     * the α-temperature resampling weight normalized across all strata. */

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Materialize.MatOps
+import graft.EntryMath.{r => r4}
 
 /** Benchmark decontamination: flag training documents that share word
   * n-grams with a held-out evaluation set — the standard pre-training
@@ -99,7 +100,7 @@ object Decontamination {
       .select(col("doc_id"), col("n_shingles"),
         coalesce(col("n_eval_hits"), lit(0L)).as("n_eval_hits"))
       .withColumn("contamination_frac",
-        floor(col("n_eval_hits").cast("double") / col("n_shingles") * 10000 + 0.5) / 10000)
+        r4(col("n_eval_hits").cast("double") / col("n_shingles")))
       .withColumn("contaminated", col("n_eval_hits") >= minHits)
   }
 
@@ -117,7 +118,6 @@ object Decontamination {
     * Per doc: distinct n-grams, how many exist in the reference, and the
     * 4dp novel fraction (NULL for docs too short to have an n-gram). */
   def noveltyScore(docs: DataFrame, refDocs: DataFrame, n: Int): DataFrame = {
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val refGrams = Dedup.shingleIndex(refDocs, n).select(col("h")).distinct()
     val perDoc = Dedup.shingleIndex(docs, n)
       .join(refGrams.withColumn("_hit", lit(1)), Seq("h"), "left")
@@ -158,7 +158,6 @@ object Decontamination {
     * `numBits` explicitly. */
   def noveltyScoreBloom(docs: DataFrame, refDocs: DataFrame, n: Int,
       numBits: Int = 0, k: Int = 5): DataFrame = {
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val refGrams = Dedup.shingleIndex(refDocs, n).select(col("h")).distinct()
       .materializeHuge // three consumers: sizing count + bloom build + recheck
     val m =
@@ -214,7 +213,6 @@ object Decontamination {
   def screenNSweep(trainDocs: DataFrame, evalDocs: DataFrame,
       ns: Seq[Int] = Seq(5, 7, 9, 11, 13), minHits: Int = 1): DataFrame = {
     require(ns.nonEmpty && ns.forall(_ >= 2), s"bad ns: $ns")
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     // native generator (r19): one linear byte scan per document emits the
     // per-n md5-distinct (n, hash60 % m) rows for EVERY n — replacing the
     // 5-way interpreted array_distinct + transform-lambda chain that built
@@ -270,6 +268,6 @@ object Decontamination {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shingles"), count(col("_hit")).as("n_eval_hits"))
       .withColumn("contamination_frac",
-        floor(col("n_eval_hits").cast("double") / col("n_shingles") * 10000 + 0.5) / 10000)
+        r4(col("n_eval_hits").cast("double") / col("n_shingles")))
       .withColumn("contaminated", col("n_eval_hits") >= minHits)
 }

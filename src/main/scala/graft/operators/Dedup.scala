@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Materialize.MatOps
+import graft.EntryMath.{r => r4}
 
 /** Deduplication family for the training-data pipeline: exact, n-gram
   * Jaccard, MinHash+LSH, SimHash.
@@ -61,8 +62,6 @@ object Dedup {
     * a multi-stage scrub job writes between passes anyway). No pairwise
     * join anywhere: cost is linear in corpus positions. */
   def substringDup(docs: DataFrame, n: Int = 5): DataFrame = {
-    val r4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000) + lit(0.5)) / lit(10000)
     // native generator (r19): hash60 per gram byte-slice in one linear
     // pass — values bit-equal to hash60(gram string) (TokenGramSpec)
     val grams = docs.select(col("doc_id"),
@@ -226,7 +225,7 @@ object Dedup {
         col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
       .filter(col("jaccard") >= tau)
       .select(col("doc_a"), col("doc_b"),
-        (floor(col("jaccard") * 10000 + 0.5) / 10000).as("jaccard"))
+        r4(col("jaccard")).as("jaccard"))
   }
 
   /** Pairwise n-gram Jaccard ≥ tau over the df-capped shingle index:
@@ -257,7 +256,7 @@ object Dedup {
         col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
       .filter(col("jaccard") >= tau)
       .select(col("doc_a"), col("doc_b"),
-        (floor(col("jaccard") * 10000 + 0.5) / 10000).as("jaccard"))
+        r4(col("jaccard")).as("jaccard"))
   }
 
   /** Directional containment pairs over the df-capped shingle index:
@@ -290,7 +289,7 @@ object Dedup {
     ab.unionByName(ba)
       .filter(col("craw") >= theta)
       .select(col("contained_id"), col("container_id"),
-        (floor(col("craw") * 10000 + 0.5) / 10000).as("containment"))
+        r4(col("craw")).as("containment"))
   }
 
   /** Quantization scales shared with the DuckDB oracle: squared weights at
@@ -339,7 +338,7 @@ object Dedup {
       .agg((sum(col("pq")) / lit(CosProdScale)).as("sim"))
       .filter(col("sim") >= tau)
       .select(col("doc_a"), col("doc_b"),
-        (floor(col("sim") * 10000 + 0.5) / 10000).as("cosine"))
+        r4(col("sim")).as("cosine"))
   }
 
   /** Drop shingles with document frequency > maxDf. */
@@ -438,7 +437,6 @@ object Dedup {
     * is a property of the hash family and tau, not of corpus size. */
   def lshRecallAudit(docs: DataFrame, n: Int = 3, maxDf: Int = 100,
       minB20: Int = 5): DataFrame = {
-    val r4c = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val idx = shingleIndex(docs, n).materialize // sigs + capped truth
     val capped = cappedIndex(idx, maxDf).materialize
     val sizes = capped.groupBy("doc_id").agg(count(lit(1)).as("sz"))
@@ -466,9 +464,9 @@ object Dedup {
     val expected = lshExpectedRecall(minB20).foldLeft(lit(null).cast("double")) {
       case (acc, (b, p)) => when(col("b20") === b, lit(p)).otherwise(acc)
     }
-    per.select(col("b20"), r4c(col("b20").cast("double") / lit(20.0)).as("j_lo"),
+    per.select(col("b20"), r4(col("b20").cast("double") / lit(20.0)).as("j_lo"),
       col("n_true"), col("n_caught"),
-      r4c(col("n_caught").cast("double") / col("n_true")).as("recall"),
+      r4(col("n_caught").cast("double") / col("n_true")).as("recall"),
       expected.as("expected_recall"))
   }
 
@@ -479,7 +477,7 @@ object Dedup {
     (minB20 to 20).map { b =>
       val s = if (b == 20) 1.0 else b / 20.0 + 0.025
       val p = 1.0 - math.pow(1.0 - s * s, MinHashK / 2)
-      b -> math.floor(p * 10000 + 0.5) / 10000
+      b -> r4(p)
     }
 
   /** Connected components over an undirected near-dup pair graph by
@@ -565,7 +563,7 @@ object Dedup {
     val cc = connectedComponents(minhashLshPairs(docs, tau))
       .select(col("doc_id"), col("canonical_id").as("cluster_id"))
     val q = TextAnalysis.stats(docs).select(col("doc_id"),
-      (floor(col("quality_score") * 10000 + 0.5) / 10000).as("quality_score"))
+      r4(col("quality_score")).as("quality_score"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cluster_id"))
       .orderBy(col("quality_score").desc, col("doc_id"))

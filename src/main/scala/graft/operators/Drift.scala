@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.EntryMath.r
+
 /** Dataset drift metrics between two corpus snapshots (reference vs
   * current): per-bin population stability index (PSI) terms and
   * Jensen-Shannon divergence terms over a fixed-width histogram of a
@@ -30,9 +32,6 @@ import org.apache.spark.sql.functions._
 object Drift {
 
   private val Eps = 1e-6
-
-  private def r(c: org.apache.spark.sql.Column) =
-    floor(c * lit(10000) + lit(0.5)) / lit(10000)
 
   /** Per-bin drift table between `ref` and `cur` on `valueCol`.
     * Output: bin, cnt_ref, cnt_cur, p_ref, p_cur, psi_term, js_term,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.EntryMath.{r => r4}
+
 /** Event-stream analytics beyond sessionization: ordered funnels and
   * cohort retention — the two standard product-analytics queries over a
   * (user_id, event_type, ts) stream.
@@ -215,7 +217,7 @@ object EventAnalytics {
       .filter(col("to_type").isNotNull)
       .groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
     counts.select(col("from_type"), col("to_type"), col("n"),
-      (floor(col("n") / sum(col("n")).over(Window.partitionBy(col("from_type")))
-        * 10000 + lit(0.5)) / 10000).as("p"))
+      r4(col("n") / sum(col("n")).over(Window.partitionBy(col("from_type"))))
+        .as("p"))
   }
 }

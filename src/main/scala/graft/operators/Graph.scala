@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Materialize.MatOps
+import graft.EntryMath.{r => r4}
 
 /** Iterative graph analytics on edge lists (beyond the connected-components
   * pass in [[Dedup]]): fixed-iteration PageRank.
@@ -271,7 +272,7 @@ object Graph {
       sum(expr("(deg * (deg - 1)) div 2")).cast("long").as("n_wedges"))
     totals.crossJoin(broadcast(tri))
       .select(col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"),
-        (floor(lit(3.0) * col("n_triangles") / nullif(col("n_wedges"), lit(0L))
-          * 10000 + lit(0.5)) / 10000).as("clustering"))
+        r4(lit(3.0) * col("n_triangles") / nullif(col("n_wedges"), lit(0L)))
+          .as("clustering"))
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.EntryMath.{r => r4}
+
 /** Sequence packing: lay training chunks end-to-end in a fixed global
   * order and slice the concatenated token stream into fixed-length
   * training sequences (the GPT-lineage "concatenate and chunk" packing
@@ -73,8 +75,6 @@ object Packing {
     * aggregate (map-side combinable) — no new scale terms. */
   def packStats(chunks: DataFrame, seqLen: Int,
       docsPerBucket: Int = 1024): DataFrame = {
-    val r4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000) + lit(0.5)) / lit(10000)
     pack(chunks, seqLen, docsPerBucket)
       .groupBy(col("seq_id"))
       .agg(count(lit(1)).as("n_chunks"),

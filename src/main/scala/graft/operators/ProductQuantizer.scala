@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.Materialize.MatOps
 import graft.operators.Similarity.dot
+import graft.EntryMath.{r => r4}
 
 /** Product quantization (PQ) — the memory-side scale path for embedding
   * search, complementing IVF (the compute-side path): split each
@@ -55,7 +56,6 @@ object ProductQuantizer {
   val DefaultK = 64
   val DefaultNprobe = 2
 
-  private def r4(c: Column): Column = floor(c * lit(10000) + lit(0.5)) / lit(10000)
 
   /** L2-normalize the embedding column (full-vector norm, double math,
     * float cast back). */

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.EntryMath.{r => r4}
+
 /** Table profiling (the ANALYZE/data-quality primitive): per-column
   * row/null/distinct counts and min/max, in ONE scan of the table.
   *
@@ -126,11 +128,11 @@ object Profile {
       .agg(count(lit(1)).as("n"),
         (sum(cents(col(value))) / 100.0 / count(lit(1))).as("mean_raw"),
         (sum(cents(col("__clip"))) / 100.0 / count(lit(1))).as("mean_wins"),
-        (floor(min(col("p_lo")) * 10000 + lit(0.5)) / 10000).as("p_lo"),
-        (floor(min(col("p_hi")) * 10000 + lit(0.5)) / 10000).as("p_hi"))
+        r4(min(col("p_lo"))).as("p_lo"),
+        r4(min(col("p_hi"))).as("p_hi"))
       .select(col(group), col("n"),
-        (floor(col("mean_raw") * 10000 + lit(0.5)) / 10000).as("mean_raw"),
-        (floor(col("mean_wins") * 10000 + lit(0.5)) / 10000).as("mean_wins"),
+        r4(col("mean_raw")).as("mean_raw"),
+        r4(col("mean_wins")).as("mean_wins"),
         col("p_lo"), col("p_hi"))
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{WindowIndicators => WI}
 import graft.operators.Materialize.MatOps
+import graft.EntryMath.{r => r4}
 
 /** Derived trading signals on top of the indicator machinery: rolling
   * z-score outliers and moving-average crossover events — the alert-side
@@ -19,7 +20,6 @@ import graft.operators.Materialize.MatOps
   */
 object Signals {
 
-  private def r4(c: Column): Column = floor(c * lit(10000) + lit(0.5)) / lit(10000)
 
   /** ln(c/p) guarded against the zero/negative prices ANSI mode turns into
     * runtime DIVIDE_BY_ZERO errors (the synthetic feed contains exact-0
@@ -305,7 +305,7 @@ object Signals {
     val vx = nD * col("sxx") - col("sx").cast("double") * col("sx")
     val vy = nD * col("syy") - col("sy").cast("double") * col("sy")
     g.select(col("symbol"), col("lag"), col("n"),
-      (floor(cov / nullif(sqrt(vx * vy), lit(0.0)) * 10000 + lit(0.5)) / 10000)
+      r4(cov / nullif(sqrt(vx * vy), lit(0.0)))
         .as("corr"))
   }
 
@@ -361,7 +361,7 @@ object Signals {
     g.join(broadcast(ids.select(col("sid").as("sa"), col("symbol").as("symbol_a"))), "sa")
       .join(broadcast(ids.select(col("sid").as("sb"), col("symbol").as("symbol_b"))), "sb")
       .select(col("symbol_a"), col("symbol_b"), col("n"),
-        (floor(cov / nullif(sqrt(vx * vy), lit(0.0)) * 10000 + lit(0.5)) / 10000)
+        r4(cov / nullif(sqrt(vx * vy), lit(0.0)))
           .as("corr"))
   }
 

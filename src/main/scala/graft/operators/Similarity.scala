@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Materialize.MatOps
+import graft.EntryMath.{r => r4}
 
 /** Similarity search over an embedding column (`ARRAY<FLOAT>`).
   *
@@ -143,7 +144,6 @@ object Similarity {
   def cosinePre(a: Column, b: Column, na: Column, nb: Column): Column =
     dot(a, b) / (na * nb)
 
-  private def r4(c: Column): Column = floor(c * lit(10000) + lit(0.5)) / lit(10000)
 
   /** Top singular direction of the (uncentered) embedding cloud by
     * QUANTIZED power iteration — the one-component PCA view an embedding
@@ -204,9 +204,8 @@ object Similarity {
     var j = 0
     while (j < dim) { n2 += s(j).toDouble * s(j).toDouble; j += 1 }
     val lambda = math.sqrt(n2) / 1e8
-    val r4d = (x: Double) => math.floor(x * 10000 + 0.5) / 10000
     (1 to dim).map(p =>
-      (p.toLong, r4d(v(p - 1).toDouble), r4d(lambda)))
+      (p.toLong, r4(v(p - 1).toDouble), r4(lambda)))
       .toDF("pos", "loading", "lambda")
   }
 

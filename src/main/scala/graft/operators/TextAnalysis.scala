@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TokenGrams.{tokenGrams, tokenGramStructs, tokenGramXx64, tokenGramHash60, tokenGramRepStats}
 import graft.operators.Materialize.MatOps
+import graft.EntryMath.{r => r4}
 
 /** Text-analysis operators for the large-scale training-data pipeline:
   * language ID, quality scoring, token counting, fingerprinting.
@@ -124,7 +125,7 @@ object TextAnalysis {
       .agg((sum(floor(-p * log(p) * lit(1e12) + lit(0.5)).cast("long")) /
         lit(1e12)).as("raw"))
       .select(col("doc_id"), col("n_chars_total"), col("n_distinct_chars"),
-        (floor(col("raw") * 10000 + 0.5) / 10000).as("char_entropy"))
+        r4(col("raw")).as("char_entropy"))
   }
 
   def vocab(docs: DataFrame, k: Int): DataFrame = {
@@ -153,7 +154,6 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val total = docs.agg(count(lit(1)).as("n_docs"))
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("token"))
     tf.join(dfreq, "token")
@@ -183,7 +183,6 @@ object TextAnalysis {
     * tokens), df/N/avgdl are tiny aggregates broadcast to the scorer, and
     * the global top-k plans as TakeOrderedAndProject — no full sort. */
   def bm25(docs: DataFrame, terms: Seq[String], k: Int): DataFrame = {
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val termArr = array(terms.map(lit): _*)
     val lens = docs.select(col("doc_id"), size(tokens(col("text"))).as("dl"))
     val corpus = lens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_dl"))
@@ -227,7 +226,6 @@ object TextAnalysis {
     * Scale: two map-side-combinable word-count aggregates; the prefix table
     * is vocabulary-sized, so AQE broadcasts the join at any corpus size. */
   def bigramLm(docs: DataFrame, minCount: Long): DataFrame = {
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     // the count table feeds both the cutoff filter and the prefix sums;
     // materialize it once (vocabulary-sized) so the corpus-wide explode +
     // aggregate isn't recomputed per consumer — broadcast conversion of
@@ -285,7 +283,6 @@ object TextAnalysis {
     * sf0.001/0.01/0.1; [[repetitionNgrams]] makes the same trade. */
   def repetition(docs: DataFrame, maxTokenDup: Double = 0.30,
       maxDupBigram: Double = 0.10, maxTopBigram: Double = 0.10): DataFrame = {
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val toks = tokens(col("text"))
     val st = element_at(tokenGramRepStats(col("text"), Seq(2)), 1)
     // docs with < 2 tokens have no bigrams: dup fractions are 0 by
@@ -343,7 +340,6 @@ object TextAnalysis {
       maxTopFrac: Map[Int, Double] = Map(2 -> 0.20, 3 -> 0.18, 4 -> 0.16),
       maxDupFrac: Map[Int, Double] = Map(5 -> 0.15, 6 -> 0.14, 7 -> 0.13,
         8 -> 0.12, 9 -> 0.11, 10 -> 0.10)): DataFrame = {
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val topNs = maxTopFrac.keys.toSeq.sorted
     val dupNs = maxDupFrac.keys.toSeq.sorted
     // ONE native linear pass per document computes every per-n statistic
@@ -391,7 +387,6 @@ object TextAnalysis {
       minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
       maxWordLen: Int = 20, minStopDistinct: Int = 2,
       maxShortFrac: Double = 0.30): DataFrame = {
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val toks = tokens(col("text"))
     val nW = size(toks)
     val stopArr = array(Stopwords.map(lit): _*)
@@ -441,7 +436,6 @@ object TextAnalysis {
       minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
       maxWordLen: Int = 20, minStopDistinct: Int = 2,
       maxShortFrac: Double = 0.30): DataFrame = {
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val flags = qualityRules(docs, minWords, maxWords, minMeanLen,
       maxMeanLen, maxWordLen, minStopDistinct, maxShortFrac)
     val rules = Seq("n_words" -> "ok_words", "mean_word_len" -> "ok_mean_len",
@@ -478,7 +472,6 @@ object TextAnalysis {
     * arithmetic — no float-summation order sensitivity between engines. */
   def lmScore(docs: DataFrame, lm: DataFrame,
       unseenP: Double = 0.0001): DataFrame = {
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val grams = docs
       .select(col("doc_id"), explode(tokenGrams(col("text"), 2)).as("bigram"))
     val p = coalesce(col("cond_p"), lit(unseenP))
@@ -533,7 +526,6 @@ object TextAnalysis {
       alpha: Double = 0.4, unseenP: Double = 0.0001,
       broadcastDims: Boolean = false): DataFrame = {
     import graft.operators.Materialize.MatOps
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     // ONE fused unigram+bigram+trigram count pass (optimization r18,
     // guide §1.2 step 1 / §2.3): the three model tables previously each
     // paid a full corpus scan, gram explode, gram-keyed exchange and an
@@ -650,7 +642,6 @@ object TextAnalysis {
     val totals = uni.agg(sum(col("cnt")).as("n_uni"))
       .crossJoin(txt.select(explode(tokenGrams(col("text"), 2)).as("bg"))
         .agg(count(lit(1)).as("n_bi")))
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     bi.join(uni.select(col("token").as("w1"), col("cnt").as("ca")), "w1")
       .join(uni.select(col("token").as("w2"), col("cnt").as("cb")), "w2")
       .crossJoin(broadcast(totals))
@@ -875,7 +866,6 @@ object TextAnalysis {
     * the formula and the determinism contract). */
   def nbScore(score: DataFrame, m: NbModel,
       labelCol: String = "lang"): DataFrame = {
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val perDocClass = nbPerClass(score, m)
     // argmin over the C candidate rows per doc; label asc breaks exact ties
     val w = org.apache.spark.sql.expressions.Window
@@ -912,7 +902,6 @@ object TextAnalysis {
       nBands: Int = 10): DataFrame = {
     require(bandMicros >= 1 && nBands >= 2,
       s"nbRiskCoverage params out of range: bandMicros=$bandMicros nBands=$nBands")
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val pdc = nbPerClass(score, nbModel(train, labelCol))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("nll4"), col("label"))
@@ -975,7 +964,6 @@ object TextAnalysis {
     // thresholds re-quantized to 4dp BEFORE the <= (ADVICE r16): boundary
     // membership is decided on exact 4dp values on both engines, never on
     // the last ulp of each engine's lo+(hi-lo)·frac interpolation
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val scored = kneserNeyLm(train, score, d, unseenP)
       .select(col("doc_id"), col("avg_nll"))
     val th = scored.filter(col("avg_nll").isNotNull)
@@ -1021,8 +1009,7 @@ object TextAnalysis {
         "(every doc too short for a bigram) — routing thresholds would " +
         "be undefined; calibrate on a corpus with real text")
     val th = rows.getSeq[Double](0)
-    def q4(x: Double) = math.floor(x * 10000 + 0.5) / 10000
-    CcnetThresholds(q4(th.head), q4(th(1)))
+    CcnetThresholds(r4(th.head), r4(th(1)))
   }
 
   /** Route `score` docs head/middle/tail against FIXED thresholds under a
@@ -1060,7 +1047,6 @@ object TextAnalysis {
   def blocklist(docs: DataFrame, terms: Seq[String],
       maxFrac: Double = 0.0): DataFrame = {
     require(terms.nonEmpty, "blocklist terms must be non-empty")
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val blockArr = array(terms.map(lit): _*)
     val toks = tokens(col("text"))
     val nTok = size(toks).cast("long")
@@ -1132,7 +1118,6 @@ object TextAnalysis {
     * replays it micro-batch by micro-batch unchanged). */
   def knScore(score: DataFrame, m: KnModel, unseenP: Double = 0.0001)
       : DataFrame = {
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     val (bi, pfx, cont, nTypes, d) = (m.bi, m.pfx, m.cont, m.nTypes, m.d)
     val grams = score
       .select(col("doc_id"), explode(tokenGrams(col("text"), 2)).as("g"))
@@ -1211,7 +1196,6 @@ object TextAnalysis {
     * (context unseen, middle seen), `n_ctx_unseen` (both unseen). */
   def kneserNey3Lm(train: DataFrame, score: DataFrame, d: Double = 0.75,
       unseenP: Double = 0.0001): DataFrame = {
-    val r4 = (c: Column) => floor(c * lit(10000) + lit(0.5)) / lit(10000)
     // ONE fused bigram+trigram count pass (optimization r18, guide §1.2
     // step 1 / §2.3): the bigram and trigram tables previously each paid a
     // full corpus scan, gram explode, gram-keyed exchange and an eager

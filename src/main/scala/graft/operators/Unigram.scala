@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Materialize.MatOps
-
 /** Unigram-LM tokenizer training (the SentencePiece family: Kudo 2018,
   * "Subword Regularization") — the second trainable tokenizer next to
   * [[Bpe]], here in its deterministic hard-EM form: seed a substring
@@ -15,13 +13,12 @@ import graft.operators.Materialize.MatOps
   * which is what lets the DuckDB oracle mirror the whole loop as
   * materialized CTE layers (the BPE precedent).
   *
-  * Scale shape (the same one [[Bpe]] proved out): the ONLY corpus-sized
-  * pass is the distributed word count; seeding is one aggregate over the
-  * word dictionary; each EM iteration is one dictionary-sized distributed
-  * Viterbi pass (vocabulary broadcast in the task closure — a tokenizer
-  * vocabulary is driver-sized by definition, 32k pieces at deployment)
-  * followed by a vocabulary-sized aggregate collect — the bounded-driver-
-  * probe pattern, never a data-sized collect.
+  * Scale shape (the same as [[Bpe]]'s, see [[Subword]]): the ONLY
+  * corpus-sized pass is the distributed word count, collected once;
+  * seeding and every EM round run in-process on that dictionary (a
+  * tokenizer vocabulary is driver-sized by definition, 32k pieces at
+  * deployment), and encoding is one distributed per-word Viterbi pass
+  * with the vocabulary broadcast.
   *
   * Determinism contract (mirrored in the oracle):
   *  - words: whitespace tokens, 0 < length ≤ [[MaxWordLen]], bracket
@@ -49,34 +46,13 @@ object Unigram {
     * BOTH engines (bounds every Viterbi unroll, incl. the oracle's). */
   val MaxWordLen = 20
 
-  // symbol brackets for the segmentation strings (as Bpe)
-  private val L = "\u0001"
-  private val R = "\u0002"
-
   /** The learned artifact: piece, its final-E-step usage, and its
     * quantized log-probability. */
   final case class Piece(piece: String, n_uses: Long, logp_q: Long)
 
   /** (word, cnt) dictionary — the only corpus-sized pass. */
   private def wordDict(docs: DataFrame): DataFrame =
-    docs.select(explode(TextAnalysis.tokens(col("text"))).as("word"))
-      .filter(length(col("word")) > 0 && length(col("word")) <= MaxWordLen &&
-        !col("word").contains(L) && !col("word").contains(R))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-
-  /** Seed piece weights: one distributed aggregate over the dictionary —
-    * every substring of length 1..MaxPiece, weight = Σ cnt × multiplicity. */
-  private def seedWeights(wd: DataFrame): DataFrame =
-    wd.select(col("word"), col("cnt"),
-        explode(sequence(lit(1), length(col("word")))).as("i"))
-      .select(col("word"), col("cnt"),
-        col("word").substr(col("i"),
-          least(lit(MaxPiece), length(col("word")) - col("i") + lit(1)))
-          .as("win"), col("i"))
-      .select(explode(sequence(lit(1), length(col("win")))).as("l"),
-        col("win"), col("cnt"))
-      .select(col("win").substr(lit(1), col("l")).as("piece"), col("cnt"))
-      .groupBy("piece").agg(sum(col("cnt")).as("u"))
+    Subword.wordCounts(docs, w => Subword.isWord(w) && length(w) <= MaxWordLen)
 
   /** floor(ln(c / Σc) · 10⁴ + 0.5) per piece — exact int64 scores. */
   private def logq(vocab: Seq[(String, Long)]): Map[String, Long] = {
@@ -86,14 +62,16 @@ object Unigram {
     }.toMap
   }
 
-  /** Exact Viterbi over one word: max Σ lq, ties → smallest split i
-    * (iterating i ascending with a strict `>` keeps the first winner).
-    * Reachability is guaranteed by single-char coverage; a char outside
-    * the vocabulary (impossible in train/encode over the same corpus)
-    * fails loudly rather than silently skipping the word. */
+  /** Exact Viterbi over one word's code points: max Σ lq, ties →
+    * smallest split i (iterating i ascending with a strict `>` keeps the
+    * first winner). Reachability is guaranteed by single-char coverage; a
+    * char outside the vocabulary (impossible in train/encode over the
+    * same corpus) fails loudly rather than silently skipping the word. */
   private[graft] def viterbiPieces(word: String,
       lq: collection.Map[String, Long]): Seq[String] = {
-    val n = word.length
+    val cps = Subword.codePoints(word)
+    val n = cps.length
+    def piece(i: Int, j: Int): String = cps.slice(i, j).mkString
     val sc = Array.fill(n + 1)(Long.MinValue)
     val back = Array.fill(n + 1)(-1)
     sc(0) = 0L
@@ -102,7 +80,7 @@ object Unigram {
       var i = math.max(0, j - MaxPiece)
       while (i < j) {
         if (sc(i) != Long.MinValue) {
-          lq.get(word.substring(i, j)) match {
+          lq.get(piece(i, j)) match {
             case Some(s) =>
               val cand = sc(i) + s
               if (cand > sc(j)) { sc(j) = cand; back(j) = i }
@@ -117,39 +95,33 @@ object Unigram {
       s"Unigram.viterbi: word '$word' not coverable — a character is " +
         "missing from the vocabulary (single-char pieces are never pruned, " +
         "so this means encode ran against a foreign corpus)")
-    val out = List.newBuilder[String]
     val rev = collection.mutable.ArrayBuffer.empty[String]
     var p = n
-    while (p > 0) { rev += word.substring(back(p), p); p = back(p) }
-    out ++= rev.reverse
-    out.result()
+    while (p > 0) { rev += piece(back(p), p); p = back(p) }
+    rev.reverse.toList
   }
 
-  /** One distributed E-step: Viterbi usage counts over the dictionary.
-    * The vocabulary ships as an explicit broadcast (not a task-closure
-    * capture): at the deployment-scale 32k-piece vocabulary a closure
-    * copy would re-serialize per task, a broadcast once per executor. */
-  private def viterbiUsage(wd: DataFrame,
-      lq: Map[String, Long]): Array[(String, Long)] = {
-    val spark = wd.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(lq)
-    try {
-      wd.select(col("word"), col("cnt")).as[(String, Long)]
-        .mapPartitions { it =>
-          it.flatMap { case (w, c) => viterbiPieces(w, bc.value).map(p => (p, c)) }
-        }
-        .toDF("piece", "cnt")
-        .groupBy("piece").agg(sum(col("cnt")).as("u"))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-    } finally bc.destroy()
+  /** Σ cnt per key over (key, cnt) pairs. */
+  private def sumBy(kv: Iterator[(String, Long)]): Map[String, Long] = {
+    val m = collection.mutable.HashMap.empty[String, Long]
+    kv.foreach { case (k, c) => m(k) = m.getOrElse(k, 0L) + c }
+    m.toMap.withDefaultValue(0L)
   }
+
+  private def isChar(p: String): Boolean = p.codePointCount(0, p.length) == 1
+
+  /** The top `k` multi-char pieces by (weight DESC, piece ASC). */
+  private def topMulti(w: Map[String, Long], k: Int): Seq[(String, Long)] =
+    w.toSeq.filterNot(pu => isChar(pu._1))
+      .sorted(Ordering.Tuple2(Ordering.Long, Subword.codePointOrder)
+        .on[(String, Long)] { case (p, u) => (-u, p) })
+      .take(k)
 
   /** Train: seed → `keep.size` hard-EM iterations, pruning the multi-char
     * vocabulary to keep(t) pieces each round. Returns one row per final
-    * piece: (piece, n_uses, logp_q). Work shape: 1 corpus pass + 1
-    * dictionary aggregate + keep.size dictionary Viterbi passes. */
+    * piece: (piece, n_uses, logp_q). Work shape: 1 corpus pass, collected
+    * once; the seed weights and every EM round run in-process on that
+    * dictionary. */
   def train(docs: DataFrame, seedMulti: Int, keep: Seq[Int]): DataFrame = {
     // zero EM rounds would leave lastUsage empty and die at lastUsage(p)
     // with an opaque NoSuchElementException — fail like the other
@@ -159,10 +131,14 @@ object Unigram {
         "(each entry is that round's multi-char vocabulary size)")
     val spark = docs.sparkSession
     import spark.implicits._
-    val wd = wordDict(docs).materialize
-    val seed = seedWeights(wd).materialize
-    val chars: Array[String] = seed.filter(length(col("piece")) === 1)
-      .select("piece").collect().map(_.getString(0)).sorted
+    val wd = Subword.collectDict(wordDict(docs))
+    // seed weights: every substring of length 1..MaxPiece, Σ cnt × multiplicity
+    val seed = sumBy(wd.iterator.flatMap { case (w, c) =>
+      val cps = Subword.codePoints(w)
+      for (i <- cps.indices.iterator; l <- 1 to math.min(MaxPiece, cps.length - i))
+        yield (cps.slice(i, i + l).mkString, c)
+    })
+    val chars: Seq[String] = seed.keys.filter(isChar).toSeq.sorted(Subword.codePointOrder)
     // an empty char set means NO word survived the wordDict filters — a
     // tokenizer trained on nothing is always a configuration error
     // (wrong column, over-aggressive MaxWordLen); fail loudly rather
@@ -171,23 +147,16 @@ object Unigram {
       "Unigram.train: no words survive the dictionary filters " +
         s"(0 < length <= $MaxWordLen, no bracket control chars) — " +
         "empty corpus or misconfigured input column")
-    val seedMultiTop: Array[(String, Long)] = seed
-      .filter(length(col("piece")) > 1)
-      .orderBy(col("u").desc, col("piece"))
-      .limit(seedMulti)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val charWeights = seed.filter(length(col("piece")) === 1)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
 
-    var vocab: Seq[(String, Long)] =
-      chars.map(c => (c, charWeights(c))).toSeq ++ seedMultiTop
+    var vocab: Seq[(String, Long)] = chars.map(c => (c, seed(c))) ++ topMulti(seed, seedMulti)
     var lastUsage: Map[String, Long] = Map.empty
     keep.foreach { k =>
-      val usage = viterbiUsage(wd, logq(vocab)).toMap
-      val multiKept = usage.toSeq.filter(_._1.length > 1)
-        .sortBy { case (p, u) => (-u, p) }.take(k)
-      lastUsage = chars.map(c => c -> usage.getOrElse(c, 0L)).toMap ++ multiKept
-      vocab = chars.map(c => (c, usage.getOrElse(c, 0L) + 1L)).toSeq ++
+      val lq = logq(vocab)
+      val usage = sumBy(wd.iterator.flatMap { case (w, c) =>
+        viterbiPieces(w, lq).map(p => (p, c)) })
+      val multiKept = topMulti(usage, k)
+      lastUsage = chars.map(c => c -> usage(c)).toMap ++ multiKept
+      vocab = chars.map(c => (c, usage(c) + 1L)) ++
         multiKept.map { case (p, u) => (p, u + 1L) }
     }
     val lqF = logq(vocab)
@@ -195,44 +164,24 @@ object Unigram {
       .toDF("piece", "n_uses", "logp_q")
   }
 
+  /** The trained table's piece scores, for [[viterbiPieces]]. */
+  private def scores(trained: DataFrame): Map[String, Long] =
+    trained.select("piece", "logp_q").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
   /** Encode the corpus with a trained table: Viterbi-segment every
     * DISTINCT word (dictionary-sized, like [[Bpe.encode]]) and report
     * exact per-piece corpus counts — the subword-vocabulary view. */
-  def encode(docs: DataFrame, trained: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // explicit broadcast, not a task-closure copy: a closure re-serializes
-    // the piece table per task at the deployment-scale 32k-piece vocabulary
-    val bc = spark.sparkContext.broadcast(
-      trained.select("piece", "logp_q").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap)
-    wordDict(docs).select(col("word"), col("cnt")).as[(String, Long)]
-      .mapPartitions { it =>
-        it.flatMap { case (w, c) => viterbiPieces(w, bc.value).map(p => (p, c)) }
-      }
-      .toDF("token", "cnt")
-      .groupBy("token").agg(sum(col("cnt")).as("n"))
-  }
+  def encode(docs: DataFrame, trained: DataFrame): DataFrame =
+    Subword.encode(wordDict(docs), scores(trained))(viterbiPieces)
 
   /** Per-word Viterbi piece counts under a trained table:
     * (word, n_pieces). Dictionary-sized output — the Unigram analogue of
     * [[Bpe.wordPieces]]. Words over [[MaxWordLen]] are excluded by the
     * dictionary contract (they are excluded from training too, so the
     * tokenizer has no defined segmentation for them). */
-  def wordPieces(docs: DataFrame, trained: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // broadcast for the same reason as viterbiUsage/encode: one copy per
-    // executor instead of one serialized piece table per task
-    val bc = spark.sparkContext.broadcast(
-      trained.select("piece", "logp_q").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap)
-    wordDict(docs).select(col("word"), col("cnt")).as[(String, Long)]
-      .mapPartitions { it =>
-        it.map { case (w, _) => (w, viterbiPieces(w, bc.value).length.toLong) }
-      }
-      .toDF("word", "n_pieces")
-  }
+  def wordPieces(docs: DataFrame, trained: DataFrame): DataFrame =
+    Subword.wordPieces(wordDict(docs), scores(trained))(viterbiPieces)
 
   /** Tokenizer fertility report per (source, lang) stratum for the
     * Unigram tokenizer — the same disparity signal as [[Bpe.fertility]]
@@ -242,5 +191,5 @@ object Unigram {
     * one ships. Same scale shape: dictionary-sized piece table,
     * word-keyed equi-join against one corpus explode. */
   def fertility(docs: DataFrame, trained: DataFrame): DataFrame =
-    Bpe.fertilityReport(docs, wordPieces(docs, trained))
+    Subword.fertilityReport(docs, wordPieces(docs, trained))
 }

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,7 +33,9 @@ object IdempotentSink {
     * `orderCol` ranks a key's rows (smallest wins) and is not written. Only
     * a missing path or one with no committed parquet file (a crashed first
     * append) holds no keys yet; any other read error, say a sink lacking a
-    * key column, propagates rather than silently turn first-write-wins off. */
+    * key column, propagates rather than silently turn first-write-wins off.
+    * The path is checked before the read: reading a missing path makes
+    * Spark log a WARN with a full stack trace on every first append. */
   private[sinks] def firstWriteWins(batch: DataFrame, path: String, keys: Seq[String],
       orderCol: String, partitionBy: Seq[String]): Unit = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol))
@@ -40,14 +43,15 @@ object IdempotentSink {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", orderCol)
+    val spark = batch.sparkSession
+    val hpath = new Path(path)
     val existing =
-      try Some(batch.sparkSession.read.parquet(path).select(keys.map(col): _*))
-      catch { case e: AnalysisException if NoKeysYet(e.getCondition) => None }
+      if (!hpath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hpath)) None
+      else try Some(spark.read.parquet(path).select(keys.map(col): _*))
+      catch { case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None }
     // no `distinct` on the existing side: a left-anti join's output does
     // not depend on duplicate keys there (and the sink's keys are unique)
     existing.fold(inBatch)(inBatch.join(_, keys, "left_anti"))
       .write.mode(SaveMode.Append).partitionBy(partitionBy: _*).parquet(path)
   }
-
-  private val NoKeysYet = Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 }

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
+import graft.EntryMath.{r => r4}
+
 /** Streaming CUSUM changepoint monitor — the online half of
   * [[graft.operators.Signals.cusum]], and the payoff of its prefix-sum
   * identity: because batch CUSUM is "running sum minus running minimum",
@@ -31,8 +33,6 @@ object CusumMonitor {
   final case class CusumState(sp: Double, minSp: Double, sn: Double, minSn: Double)
   final case class CusumRow(symbol: String, ts: Long, z: Double,
       cusum_pos: Double, cusum_neg: Double, alarm: Boolean)
-
-  private def r4(x: Double): Double = math.floor(x * 10000 + 0.5) / 10000
 
   private class Processor(mu: Double, sigma: Double, k: Double, h: Double)
       extends StatefulProcessor[String, Obs, CusumRow] {

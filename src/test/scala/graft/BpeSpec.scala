@@ -54,10 +54,9 @@ class BpeSpec extends AnyFunSuite {
     assert(enc == 3 + 3 + 3)
   }
 
-  /** Pure-Scala one-merge-at-a-time greedy BPE — the sequential
-    * reference the BATCHED distributed trainer must match bit for bit
-    * (same tokenization rule as Bpe.wordDict / the oracle: split on
-    * single spaces, drop empties). */
+  /** Pure-Scala one-merge-at-a-time greedy BPE — an independent
+    * reference the trainer must match bit for bit (same tokenization rule
+    * as Bpe.wordDict / the oracle: split on single spaces, drop empties). */
   private def sequentialMerges(text: String, iters: Int): Seq[(String, String, Long)] = {
     def mergeList(syms: List[String], a: String, b: String): List[String] =
       syms match { // leftmost-greedy, consecutive pairs both merge
@@ -88,9 +87,9 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("batched refresh training is bit-identical to sequential greedy") {
-    // corpora chosen to stress the batch-acceptance rules: long disjoint
-    // tie runs (threshold cut), overlapping ties (conflict stop), merge
-    // cascades that create new high-count pairs, and a plain-text mix
+    // corpora chosen to stress greedy order: long disjoint tie runs,
+    // overlapping ties, merge cascades that create new high-count pairs,
+    // and a plain-text mix
     val corpora = Seq(
       "the quick brown fox jumps over the lazy dog the quick brown fox",
       "aaa aab abab bab baba abc bca cab aaa aaa bb",
@@ -98,11 +97,9 @@ class BpeSpec extends AnyFunSuite {
       "ab ab ba ba aa bb ab",
       "abcdefgh abcdefgh abcd efgh abcdefgh",
       (1 to 60).map(i => s"w${i % 7}x${i % 5}").mkString(" "),
-      // adversarial maxN-exit shape: head (a,z,10), disjoint (c,d,9),
-      // UNSCANNED conflict (z,x,9) whose merged symbol "az" outsorts "c"
+      // head (a,z,10), disjoint (c,d,9), then (z,x,9)'s merged symbol
+      // "az" outsorts "c" at the tied count
       (Seq.fill(9)("azx") ++ Seq("az") ++ Seq.fill(9)("cd")).mkString(" "))
-    // iters=2 matters: the adversarial corpus only diverges when the
-    // scan exits at maxN=2 BEFORE reaching the conflicting candidate
     for (c <- corpora; iters <- Seq(2, 3, 12, 30)) {
       val got = Bpe.trainMerges(docsOf(c), iters).orderBy("iter").collect()
         .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq
@@ -143,8 +140,7 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("encode bounds its replace lineage to the materialize cadence") {
-    // a corpus whose single 40-char word yields 39 distinct merges: past
-    // EncodeMaterializeEvery (16), so the fold must have cut the chain
+    // a corpus whose single 40-char word yields 39 distinct merges
     val word = ('a' to 'z').take(20).mkString + ('A' to 'Z').take(20).mkString
     val docs = docsOf(word)
     val merges = Bpe.trainMerges(docs, 39)
@@ -153,14 +149,15 @@ class BpeSpec extends AnyFunSuite {
     // correctness: 39 merges collapse the 40-char word to one token
     val toks = encoded.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(toks == Map(word -> 1L))
-    // cadence: the FINAL plan segment holds at most the post-cut tail of
-    // replace calls (39 - 2*16 = 7 here), never all 39 — the bounded-
-    // lineage guarantee a 32k-merge vocabulary depends on
-    val nReplace = "replace\\(".r
-      .findAllIn(encoded.queryExecution.analyzed.toString).size
-    assert(nReplace <= Bpe.EncodeMaterializeEvery,
-      s"expected <= ${Bpe.EncodeMaterializeEvery} chained replaces in the " +
-        s"final segment, found $nReplace")
+    // encode's plan does not grow with the merge count: the merge list
+    // is data (broadcast), not one plan expression per merge — the
+    // guarantee a 32k-merge vocabulary depends on
+    def planSize(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case n =>
+        1 + n.expressions.map(_.collect { case e => e }.size).sum
+      }.sum
+    assert(planSize(encoded) ==
+      planSize(Bpe.encode(docs, merges.filter(col("iter") === 1))))
   }
 
   test("tie on count breaks by (left, right) symbol order") {
@@ -180,57 +177,41 @@ class BpeSpec extends AnyFunSuite {
     val batched = Bpe.trainMerges(docs, 3).orderBy("iter").collect()
       .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq
     assert(batched == Seq(("a", "a", 300L), ("aa", "aa", 100L), ("x", "z", 40L)))
-    val (seqDf, _) = Bpe.trainMergesStats(docs, 3, batched = false)
-    assert(batched == seqDf.orderBy("iter").collect()
-      .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq)
-  }
-
-  test("a merged symbol colliding with the existing vocabulary closes the batch") {
-    // Mechanism pin for acceptBatch's vocab-collision close (review
-    // finding): if an accepted candidate's a+b already exists as a
-    // dictionary symbol z, unscanned pre-existing (w,z) pairs can GROW
-    // by up to the conflict bound when the candidate merges — so
-    // nothing after that candidate is provably safe and the batch must
-    // close at its own count. Reachability note: for non-self-
-    // overlapping symbols this state is provably unreachable in real
-    // training (two free occurrences of the same char span always
-    // segment identically, so [a][b] cannot coexist with an earlier
-    // fully-merged [a+b] — see Bpe.acceptBatch's scaladoc), and the
-    // self-overlapping run cases collapse into the self-merge close;
-    // the close is cheap insurance, pinned here at the unit level
-    // because no organic corpus can exercise it.
-    val top = Seq(("p", "q", 100L), ("a", "bc", 30L), ("e", "f", 25L))
-    // without a colliding vocabulary: all three are disjoint → all ride
-    assert(Bpe.acceptBatch(top, maxN = 8) == top)
-    // with "abc" pre-existing: accepting (a,bc) closes the batch at 30,
-    // the strict cut drops it (re-picked next refresh), (e,f) never rides
-    assert(Bpe.acceptBatch(top, maxN = 8, vocab = Set("abc")) ==
-      Seq(("p", "q", 100L)))
-    // a colliding HEAD still ships alone (it IS the greedy choice)
-    assert(Bpe.acceptBatch(top.tail, maxN = 8, vocab = Set("abc")) ==
-      Seq(("a", "bc", 30L)))
+    assert(batched == sequentialMerges(("aaaa " * 100) + ("xz " * 40) + ("uv " * 30), 3))
   }
 
   test("wide-plateau batching: >=128 merges, few refreshes, sequential-exact") {
-    // the amortization case a production vocabulary's early rounds hit:
-    // disjoint near-tie pairs over a wide symbol population — many
-    // merges must ride each pair-count refresh AND the table must stay
-    // bit-identical to one-merge-per-round greedy
-    val s = spark
-    import s.implicits._
-    val wide = (0 until 400).map { i =>
+    // the shape a production vocabulary's early rounds hit: disjoint
+    // near-tie pairs over a wide symbol population — the table must stay
+    // bit-identical to one-merge-per-round greedy, and training must cost
+    // the same Spark jobs (one word count) however many merges it learns
+    val texts = (0 until 400).map { i =>
       val a = (0x4E00 + (i * 2) % 600).toChar
       val b = (0x4E00 + (i * 2 + 1) % 600).toChar
-      (i.toLong, s"$a$b " * (1200 / (i + 1) + 1))
-    }.toDF("doc_id", "text")
-    val (mb, rb) = Bpe.trainMergesStats(wide, 128)
-    val (ms, rs) = Bpe.trainMergesStats(wide, 128, batched = false)
-    assert(mb.orderBy("iter").collect().map(_.toSeq).toSeq ==
-      ms.orderBy("iter").collect().map(_.toSeq).toSeq,
-      "batched merge table diverged from sequential greedy")
-    assert(rs >= 128, s"sequential must refresh per merge, got $rs")
-    assert(rb <= rs / 4,
-      s"wide plateau should amortize >=4x: $rb refreshes vs $rs")
+      s"$a$b " * (1200 / (i + 1) + 1)
+    }
+    val wide = docsOf(texts: _*)
+    val mb = Bpe.trainMerges(wide, 128)
+    assert(mb.orderBy("iter").collect()
+      .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq ==
+      sequentialMerges(texts.mkString(" "), 128),
+      "merge table diverged from sequential greedy")
+    assert(mb.count() == 128)
+    val jobs128 = SparkJobs.count(spark)(Bpe.trainMerges(wide, 128))
+    val jobs2 = SparkJobs.count(spark)(Bpe.trainMerges(wide, 2))
+    assert(jobs128 == jobs2, s"128 merges fired $jobs128 jobs, 2 merges $jobs2")
+  }
+
+  test("merge ties break by code point, not by UTF-16 unit") {
+    // U+E000 sorts before U+1F600 by code point (and by UTF-8 bytes, as
+    // Spark and DuckDB order strings), but after its surrogate pair
+    // \uD83D\uDE00 by UTF-16 unit; the emoji is one symbol, never two
+    val e = new String(Character.toChars(0x1F600))
+    val p = "\uE000"
+    val docs = docsOf(s"$e$e $e$e x$p x$p x$e x$e")
+    val m = Bpe.trainMerges(docs, 4).orderBy("iter").collect()
+      .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq
+    assert(m == Seq(("x", p, 2L), ("x", e, 2L), (e, e, 2L)))
   }
 
   test("fertility report: hand-checkable pieces, ratios, per-stratum split") {

@@ -152,6 +152,31 @@ class StreamingSpec extends AnyFunSuite {
       Seq((1000L, 1.0), (2000L, 3.0)))
   }
 
+  test("IdempotentSink: a first append to a fresh path logs no FileStreamSink WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("fww-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) warns.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.setLevel(Level.INFO)
+    logger.addAppender(capture)
+    val dir = graft.SessionScoped.scratchDir("graft_sink_fresh") + "/out"
+    try graft.sinks.IdempotentSink.append(
+      Seq((new Timestamp(1000L), "A", 1.0, 1L)).toDF("time", "symbol", "close", "seq"),
+      dir, Seq("time", "symbol"), "seq")
+    finally { logger.removeAppender(capture); logger.setLevel(level); capture.stop() }
+    assert(warns.isEmpty, warns)
+    assert(spark.read.parquet(dir).count() == 1)
+  }
+
   test("streaming CUSUM == batch CUSUM bit-for-bit across micro-batch splits") {
     import graft.streaming.CusumMonitor
     import graft.operators.Signals

@@ -76,6 +76,34 @@ class UnigramSpec extends AnyFunSuite {
     assert(e.getMessage.contains("at least one EM round"))
   }
 
+  test("a supplementary-plane character is one single-char piece") {
+    // U+1F600 is one code point (one Spark/DuckDB char) but two UTF-16
+    // units: it must be listed once, as a single-char piece, never also
+    // take a multi-char slot
+    val e = new String(Character.toChars(0x1F600))
+    val docs = Seq((1L, s"a$e a$e a$e b$e b"), (2L, s"ab ab $e$e")).toDF("doc_id", "text")
+    val trained = Unigram.train(docs, seedMulti = 4, keep = Seq(2))
+    val pieces = trained.collect().map(_.getString(0)).toSeq
+    assert(pieces.count(_ == e) == 1, pieces)
+    assert(pieces.count(p => p.codePointCount(0, p.length) > 1) <= 2, pieces)
+    // encode covers every word: token mass in code points = the corpus's
+    val enc = Unigram.encode(docs, trained).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    enc.foreach { case (t, _) => assert(pieces.contains(t), s"token $t") }
+    val words = Seq(s"a$e a$e a$e b$e b", s"ab ab $e$e").flatMap(_.split(" "))
+    assert(enc.map { case (t, n) => t.codePointCount(0, t.length) * n }.sum ==
+      words.map(w => w.codePointCount(0, w.length)).sum)
+  }
+
+  test("training fires the same Spark jobs for one EM round as for many") {
+    val docs = Seq((1L, "alpha beta alpha gamma"), (2L, "beta beta alpha delta"))
+      .toDF("doc_id", "text")
+    val one = SparkJobs.count(spark)(Unigram.train(docs, seedMulti = 16, keep = Seq(8)))
+    val many = SparkJobs.count(spark)(
+      Unigram.train(docs, seedMulti = 16, keep = Seq(12, 10, 8, 6, 4)))
+    assert(one == many, s"1 round fired $one jobs, 5 rounds $many")
+  }
+
   test("fertility: viterbi piece counts per stratum, BPE corpus-side parity") {
     import org.apache.spark.sql.functions._
     import graft.operators.Bpe
