@@ -69,6 +69,17 @@ if [[ $(printf '%s' "$fww" | grep -c .) -gt 1 ]]; then
   exit 1
 fi
 
+echo "== materializeLoop only in the graph and CC fixpoint loops =="
+# IVF and PQ Lloyd fit in-process (Similarity.lloyd); a materializeLoop
+# anywhere else is a per-round Spark loop over a bounded model coming back.
+ml=$(git grep -n materializeLoop -- src/main \
+  | grep -vE '^src/main/scala/graft/operators/(Graph|Dedup|Materialize)\.scala:' || true)
+if [[ -n "$ml" ]]; then
+  echo "$ml"
+  echo "CI FAILED: materializeLoop outside Graph/Dedup/Materialize" >&2
+  exit 1
+fi
+
 echo "== run artifacts under plans/ =="
 # Trend, curate-trend, key-scale and sweep outputs live under plans/ (the
 # trend mains default there); the root keeps bench_out.json, the driver's

@@ -76,4 +76,16 @@ object ArrayMath {
     * tight loop; ≡ aggregate(zip_with(...)) and the DuckDB list_reduce). */
   def dotF(a: Column, b: Column): Column =
     ColumnBridge.column(FloatDotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** [[FloatDotProduct]]'s fold over two in-memory arrays (same doubles). */
+  def dot(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += a(i).toDouble * b(i).toDouble
+      i += 1
+    }
+    acc
+  }
 }

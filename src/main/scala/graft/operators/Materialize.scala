@@ -40,10 +40,12 @@ object Materialize {
     }
 
   /** Under `persist`, truncate an iterative loop's lineage every this
-    * many iterations (see [[loop]]). 2 is measured as the binding value:
-    * the 2-round Lloyd loop inside q_semdedup is already past the
-    * describe-time horizon at sf0.1 (probe: non-viable untruncated, 0.8 s
-    * at every=2). */
+    * many iterations (see [[loop]]). The loops that use it are the
+    * connected-components fixpoint ([[Dedup]]), label propagation and the
+    * k-core peel ([[Graph]]). 2 was measured as the binding value on a
+    * 2-round Spark Lloyd loop (IVF training before it moved in-process),
+    * already past the describe-time horizon at sf0.1 (probe: non-viable
+    * untruncated, 0.8 s at every=2). */
   val LoopTruncateEvery = 2
 
   /** Materialization INSIDE an iterative loop — `depth` is the 1-based

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
+import graft.functions.ArrayMath
 import graft.operators.Materialize.MatOps
 import graft.operators.Similarity.dot
 import graft.EntryMath.{r => r4}
@@ -20,12 +22,12 @@ import graft.EntryMath.{r => r4}
   * the full vectors are L2-normalized first, Σ_m dot_m(q, c_{m,code_m(x)})
   * approximates cos(q, x) directly.
   *
-  * Plan shape: the M subspaces are NOT M separate job chains — all
-  * subvectors live in one (vec_id, m, sv) frame, so each Lloyd round is
-  * ONE broadcast join + ONE aggregate regardless of M (a per-subspace
-  * loop measured 8.4 s at sf0.1 on scheduling overhead alone; this shape
-  * runs the same math in ~1 s). Encode is one broadcast-join pass over
-  * the corpus; ADC search shuffles only the code table.
+  * Fit: the training frame is collected once under
+  * [[Similarity.MaxTrainRows]], and each subspace's codebook is one
+  * in-process [[Similarity.lloyd]] over its slices of the collected
+  * vectors, with the L2 rule of the distributed assignment. Encode is one
+  * broadcast-join pass over the corpus; ADC search shuffles only the code
+  * table.
   *
   * Determinism contract (same idioms as [[Similarity.ivfTrain]], mirrored
   * in the DuckDB oracle):
@@ -112,35 +114,34 @@ object ProductQuantizer {
     * subvectors, iters rounds of L2 assign → exact integer-micro
     * elementwise mean (empty codes drop out, k shrinks — mirrored by the
     * oracle). Returns (m, code, ce) — M×K rows, the broadcastable
-    * "index"; at corpus scale Lloyd runs on a bounded sample. */
+    * "index"; at corpus scale pass a bounded sample (a training frame
+    * over [[Similarity.MaxTrainRows]] fails). */
   def train(emb: DataFrame, subspaces: Int, subDim: Int, k: Int,
       iters: Int = 2): DataFrame = trainOn(normalize(emb), subspaces, subDim, k, iters)
 
   /** [[train]] without the normalization step — for callers that already
     * preprocessed the vectors (e.g. IVFADC trains codebooks on CLUSTER
-    * RESIDUALS, which must not be re-normalized). `seedBound` widens the
-    * seed id range past k for SAMPLED training frames whose vec_ids have
-    * gaps (e.g. an evens-only sample seeds k codebook entries from
-    * vec_id < 2k); codes are labels, so gapped code values are fine. */
+    * RESIDUALS, which must not be re-normalized). Seeds are the rows with
+    * vec_id < k, so a SAMPLED frame whose vec_ids have gaps passes the
+    * widened bound (an evens-only sample seeds K codes with k = 2K);
+    * codes are labels, so gapped code values are fine. */
   def trainOn(pre: DataFrame, subspaces: Int, subDim: Int, k: Int,
-      iters: Int, seedBound: Option[Int] = None): DataFrame = {
-    val subs = subvectors(pre, subspaces, subDim)
-      .materialize // consumed every Lloyd round
-    var cent = subs.filter(col("vec_id") < seedBound.getOrElse(k))
-      .select(col("m"), col("vec_id").as("code"), col("sv").as("ce"))
-    for (_ <- 1 to iters) {
-      cent = l2Assign(subs, cent).join(subs, Seq("vec_id", "m"))
-        .select(col("m"), col("code"), posexplode(col("sv")).as(Seq("i", "x")))
-        .groupBy("m", "code", "i")
-        .agg(sum(floor(col("x").cast("double") * 1000000 + lit(0.5)).cast("long")).as("s"),
-          count(lit(1)).as("n"))
-        .withColumn("c", (col("s").cast("double") / (col("n") * lit(1000000.0))).cast("float"))
-        .groupBy("m", "code")
-        .agg(array_sort(collect_list(struct(col("i"), col("c")))).as("sc"))
-        .select(col("m"), col("code"), expr("transform(sc, e -> e.c)").as("ce"))
-        .materialize // M×K rows; truncates the iterative lineage
+      iters: Int): DataFrame = {
+    val pts = Similarity.collectTraining(pre)
+    val rows = (0 until subspaces).flatMap { m =>
+      val sub = pts.map { case (id, v) => id -> v.slice(m * subDim, (m + 1) * subDim) }
+      Similarity.lloyd(sub, k, iters, l2Nearest).map { case (code, ce) => Row(m, code, ce) }
     }
-    cent
+    pre.sparkSession.createDataFrame(rows.asJava,
+      StructType.fromDDL("m INT NOT NULL, code BIGINT, ce ARRAY<FLOAT> NOT NULL"))
+  }
+
+  /** [[l2Assign]]'s rule in-process: the nearest code by the same 4dp
+    * ‖c‖² − 2·v·c doubles, lowest code on ties. */
+  private def l2Nearest(cb: Array[(Long, Array[Float])]): Array[Float] => Int = {
+    val cc = cb.map(c => ArrayMath.dot(c._2, c._2))
+    v => cb.indices.minByOption(c => math.floor(
+      (cc(c) - 2.0 * ArrayMath.dot(v, cb(c)._2)) * 10000 + 0.5).toLong).getOrElse(-1)
   }
 
   /** Encode every vector as M codes: (vec_id, m, code) — one broadcast
@@ -171,48 +172,41 @@ object ProductQuantizer {
     * like the plain IVF index. */
   def ivfPqIndex(emb: DataFrame, nClusters: Int, ivfIters: Int,
       subspaces: Int, subDim: Int, k: Int, pqIters: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val normed = normalize(emb).materialize
-    val cent = Similarity.ivfTrain(normed, nClusters, ivfIters)
-    val assign = Similarity.ivfAssign(normed, cent)
-      .select(col("vec_id"), col("centroid_id"))
-    val residuals = normed.join(assign, "vec_id")
-      .join(broadcast(cent), "centroid_id")
-      .select(col("vec_id"), expr(residualExpr).as("embedding"))
-      .materialize // codebook training + encoding both consume it
-    val codebooks = trainOn(residuals, subspaces, subDim, k, pqIters)
-    val codes = encodeOn(residuals, codebooks, subspaces, subDim)
-      .join(assign, "vec_id")
-    (cent, codebooks, codes)
-  }
+      : (DataFrame, DataFrame, DataFrame) =
+    ivfPqIndexOn(emb, nClusters, ivfIters, subspaces, subDim, k, pqIters, 1)
 
   /** [[ivfPqIndex]] with Lloyd TRAINING (IVF centroids + residual PQ
     * codebooks) restricted to the deterministic 50% sample
     * vec_id % 2 = 0, while assignment and encoding still cover EVERY
-    * vector — the 100 TB shape: training cost is O(sample), the
-    * expensive full-corpus passes are the two one-shot broadcast
-    * assigns. Seeds widen to the evens below 2C / 2K so the sampled
-    * frame still yields C centroids and K codes per subspace. Same
-    * determinism contract as the full trainer; q_cosine_ivfpq_sampled
-    * hash-gates the whole composition against a DuckDB mirror of the
-    * sampled training, and PqSpec pins that sampled-train recall stays
-    * at the shipped operating point's floor. */
+    * vector — the 100 TB shape: training cost is O(sample) (the sample
+    * must fit [[Similarity.MaxTrainRows]]), the expensive full-corpus
+    * passes are the two one-shot broadcast assigns. Seeds widen to the
+    * evens below 2C / 2K so the sampled frame still yields C centroids
+    * and K codes per subspace. Same determinism contract as the full
+    * trainer; q_cosine_ivfpq_sampled hash-gates the whole composition
+    * against a DuckDB mirror of the sampled training, and PqSpec pins
+    * that sampled-train recall stays at the shipped operating point's
+    * floor. */
   def ivfPqIndexSampled(emb: DataFrame, nClusters: Int, ivfIters: Int,
       subspaces: Int, subDim: Int, k: Int, pqIters: Int)
+      : (DataFrame, DataFrame, DataFrame) =
+    ivfPqIndexOn(emb, nClusters, ivfIters, subspaces, subDim, k, pqIters, 2)
+
+  /** The IVFADC build with Lloyd trained on the rows with
+    * vec_id % stride = 0, seeded from ids below stride·C and stride·K. */
+  private def ivfPqIndexOn(emb: DataFrame, nClusters: Int, ivfIters: Int,
+      subspaces: Int, subDim: Int, k: Int, pqIters: Int, stride: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    val trainPred = pmod(col("vec_id"), lit(2)) === 0
+    def sample(df: DataFrame) = df.filter(pmod(col("vec_id"), lit(stride)) === 0)
     val normed = normalize(emb).materialize
-    val trainSet = normed.filter(trainPred)
-    val cent = Similarity.ivfTrainFrom(trainSet,
-      Similarity.ivfSeed(trainSet, 2 * nClusters), ivfIters)
+    val cent = Similarity.ivfTrain(sample(normed), stride * nClusters, ivfIters)
     val assign = Similarity.ivfAssign(normed, cent)
       .select(col("vec_id"), col("centroid_id"))
     val residuals = normed.join(assign, "vec_id")
       .join(broadcast(cent), "centroid_id")
       .select(col("vec_id"), expr(residualExpr).as("embedding"))
       .materialize // codebook training + encoding both consume it
-    val codebooks = trainOn(residuals.filter(trainPred),
-      subspaces, subDim, k, pqIters, seedBound = Some(2 * k))
+    val codebooks = trainOn(sample(residuals), subspaces, subDim, stride * k, pqIters)
     val codes = encodeOn(residuals, codebooks, subspaces, subDim)
       .join(assign, "vec_id")
     (cent, codebooks, codes)
@@ -230,10 +224,7 @@ object ProductQuantizer {
       subDim: Int, nprobe: Int): DataFrame = {
     val scored = adcScored(emb, cent, codebooks, codes, nQueries,
       subspaces, subDim, nprobe)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_ivfpq").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= topK)
-      .select(col("query_id"), col("neighbor_id"), col("score_ivfpq"), col("rk"))
+    Similarity.topK(scored, "score_ivfpq", topK)
   }
 
   /** The probe-scoped ADC-scored candidate frame (query_id, neighbor_id,
@@ -242,8 +233,7 @@ object ProductQuantizer {
   private def adcScored(emb: DataFrame, cent: DataFrame,
       codebooks: DataFrame, codes: DataFrame, nQueries: Int,
       subspaces: Int, subDim: Int, nprobe: Int): DataFrame = {
-    require(nQueries <= Similarity.MaxBroadcastQueries,
-      s"query side of $nQueries rows would be broadcast — too large")
+    Similarity.requireProbeFits(nQueries)
     val queries = normalize(emb.filter(col("vec_id") < nQueries))
     val probes = Similarity.ivfAssignTop(queries, cent, nprobe)
       .select(col("vec_id").as("query_id"), col("centroid_id"))
@@ -300,10 +290,7 @@ object ProductQuantizer {
         "or shard the query set")
     val scored = adcScored(emb, cent, codebooks, codes, nQueries,
       subspaces, subDim, nprobe)
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_ivfpq").desc, col("neighbor_id"))
-    val short = scored.withColumn("srn", row_number().over(wAdc))
-      .filter(col("srn") <= shortlist)
+    val short = Similarity.topK(scored, "score_ivfpq", shortlist)
       .select(col("query_id"), col("neighbor_id"))
     val normed = normalize(emb)
     val exact = normed.select(col("vec_id").as("neighbor_id"),
@@ -314,10 +301,7 @@ object ProductQuantizer {
         "query_id")
       .select(col("query_id"), col("neighbor_id"),
         r4(dot(col("qe"), col("ne"))).as("score"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    exact.withColumn("rk", row_number().over(w)).filter(col("rk") <= topK)
-      .select(col("query_id"), col("neighbor_id"), col("score"), col("rk"))
+    Similarity.topK(exact, "score", topK)
   }
 
   /** ADC top-k from CODES ONLY (plus the M×K codebook and the exact
@@ -327,8 +311,7 @@ object ProductQuantizer {
     * shuffle over the code table; the float corpus is never rescanned. */
   def searchAdc(emb: DataFrame, codebooks: DataFrame, nQueries: Int,
       topK: Int, subspaces: Int, subDim: Int): DataFrame = {
-    require(nQueries <= Similarity.MaxBroadcastQueries,
-      s"query side of $nQueries rows would be broadcast — too large")
+    Similarity.requireProbeFits(nQueries)
     val codes = encode(emb, codebooks, subspaces, subDim)
     val qSubs = subvectors(normalize(emb.filter(col("vec_id") < nQueries)),
       subspaces, subDim)
@@ -343,9 +326,6 @@ object ProductQuantizer {
       .agg(sum(col("pd")).as("sd"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         r4(col("sd").cast("double") / lit(1000000.0)).as("score_pq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_pq").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= topK)
-      .select(col("query_id"), col("neighbor_id"), col("score_pq"), col("rk"))
+    Similarity.topK(scored, "score_pq", topK)
   }
 }

@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import graft.operators.Materialize.MatOps
 import graft.EntryMath.{r => r4}
+import graft.functions.ArrayMath
 
 /** Similarity search over an embedding column (`ARRAY<FLOAT>`).
   *
@@ -13,8 +17,11 @@ import graft.EntryMath.{r => r4}
   *    the big side;
   *  - IVF: assign every vector to its nearest centroid (broadcast of the
   *    centroid table), then search only within the probe's cluster — the
-  *    100 TB path, because the corpus is partitioned by centroid id and the
-  *    per-query work drops from O(N) to O(N/C).
+  *    100 TB path for assignment and search, because the corpus is
+  *    partitioned by centroid id and the per-query work drops from O(N) to
+  *    O(N/C). The centroids fit in the driver on at most [[MaxTrainRows]]
+  *    vectors, so the shapes below that train on their whole input stop
+  *    there.
   *
   * Float discipline for oracle parity: elementwise products are computed in
   * DOUBLE and folded strictly left-to-right (`aggregate` with a 0.0 seed ≡
@@ -125,7 +132,7 @@ object Similarity {
     * shapes instead. */
   val MaxBroadcastQueries = 1 << 16
 
-  private def requireProbeFits(nProbeRows: Int): Unit =
+  private[operators] def requireProbeFits(nProbeRows: Int): Unit =
     require(nProbeRows >= 0 && nProbeRows <= MaxBroadcastQueries,
       s"probe side of $nProbeRows rows exceeds MaxBroadcastQueries=" +
         s"$MaxBroadcastQueries — a probe set this large would be broadcast " +
@@ -133,7 +140,7 @@ object Similarity {
 
   /** Left-to-right double dot product of two float arrays (native
     * expression; ≡ aggregate(zip_with(...)) bit-for-bit). */
-  def dot(a: Column, b: Column): Column = graft.functions.ArrayMath.dotF(a, b)
+  def dot(a: Column, b: Column): Column = ArrayMath.dotF(a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -143,6 +150,15 @@ object Similarity {
     * pair in quadratic joins; same doubles as [[cosine]]. */
   def cosinePre(a: Column, b: Column, na: Column, nb: Column): Column =
     dot(a, b) / (na * nb)
+
+  /** The `k` best rows per query_id by `score` desc, neighbor_id asc:
+    * (query_id, neighbor_id, score, rk). */
+  private[operators] def topK(scored: DataFrame, score: String, k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id")).orderBy(col(score).desc, col("neighbor_id"))
+    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+      .select(col("query_id"), col("neighbor_id"), col(score), col("rk"))
+  }
 
 
   /** Top singular direction of the (uncentered) embedding cloud by
@@ -225,13 +241,11 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         r4(cosinePre(col("qe"), col("embedding"), col("_qn"), col("_n")))
           .as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"), col("rk"))
+    topK(scored, "score", k)
   }
 
-  /** Seed centroids = first k vectors (deterministic; Lloyd refines them). */
+  /** Seed centroids = first k vectors (deterministic; [[ivfTrain]] seeds
+    * from the same rows and refines them). */
   def ivfSeed(emb: DataFrame, k: Int): DataFrame =
     emb.filter(col("vec_id") < k)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("ce"))
@@ -305,41 +319,100 @@ object Similarity {
   def ivfAssign(emb: DataFrame, nCentroids: Int): DataFrame =
     ivfAssign(emb, ivfSeed(emb, nCentroids))
 
-  /** Lloyd-trained IVF centroids: iters rounds of assign → elementwise
-    * mean. The mean is computed in exact integer micro-units
-    * (floor(x·10⁶+0.5) summed as BIGINT, divided once in double, cast to
-    * float), so it is order-independent across partitions and
-    * bit-reproducible in the DuckDB oracle — a naive double sum would
-    * depend on Spark's partition fold order. Empty clusters drop out (k
-    * shrinks), mirrored identically by the oracle. At corpus scale Lloyd
-    * runs on a bounded sample; assignment of the full corpus stays one
-    * broadcast pass. */
-  def ivfTrain(emb: DataFrame, k: Int, iters: Int = 2): DataFrame =
-    ivfTrainFrom(emb, ivfSeed(emb, k), iters)
+  /** Lloyd-trained IVF centroids: seeds are the rows with `vec_id < k`,
+    * refined by `iters` rounds of assign → elementwise mean, fitted
+    * in-process by [[lloyd]] with the cosine rule of [[ivfAssign]]. The
+    * mean is exact integer micro-units, so it is bit-reproducible in the
+    * DuckDB oracle; empty clusters drop out (k shrinks), as in the
+    * oracle. A sampled frame whose vec_ids have gaps passes the widened
+    * bound (an evens-only sample seeds C centroids with k = 2C). The
+    * frame is collected whole, so it must fit [[MaxTrainRows]]: at corpus
+    * scale train on a bounded sample. Returns (centroid_id, ce), a local
+    * frame. */
+  def ivfTrain(emb: DataFrame, k: Int, iters: Int = 2): DataFrame = {
+    val cent = lloyd(collectTraining(emb), k, iters, cosineNearest)
+    emb.sparkSession.createDataFrame(cent.toSeq.map { case (id, ce) => Row(id, ce) }.asJava,
+      StructType.fromDDL("centroid_id BIGINT, ce ARRAY<FLOAT> NOT NULL"))
+  }
 
-  /** Lloyd rounds from an EXPLICIT initial centroid table — the seam the
-    * train-on-sample path needs: pass a sampled `emb` and seeds drawn
-    * from that sample, then assign the FULL corpus against the result. */
-  def ivfTrainFrom(emb: DataFrame, cent0: DataFrame, iters: Int): DataFrame = {
-    var cent = cent0
-    for (it <- 1 to iters) {
-      val assigned = ivfAssign(emb, cent).select("vec_id", "centroid_id")
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-      val sums = assigned
-        .select(col("centroid_id"), posexplode(col("embedding")).as(Seq("i", "x")))
-        .groupBy("centroid_id", "i")
-        .agg(sum(floor(col("x").cast("double") * 1000000 + lit(0.5)).cast("long")).as("s"),
-          count(lit(1)).as("n"))
-      cent = sums
-        .withColumn("c", (col("s").cast("double") / (col("n") * lit(1000000.0))).cast("float"))
-        .groupBy("centroid_id")
-        .agg(array_sort(collect_list(struct(col("i"), col("c")))).as("sc"))
-        .select(col("centroid_id"), expr("transform(sc, e -> e.c)").as("ce"))
-        // k rows; loop-depth-aware so persist can't grow an exponential
-        // describe-time plan (Materialize.loop)
-        .materializeLoop(it)
+  /** Row cap on a collected Lloyd training frame. The fit costs N·k·d
+    * multiply-adds per round on the driver's cores; with d = 64 and
+    * k = [[clustersFor]](N), a round took 1.5 s at N = 10⁵ and 101 s at
+    * N = 10⁶ on 4 cores. Every shape here except the sampled IVFADC
+    * build trains on its whole input ([[ivfSearch]], [[dedupPairsIvf]],
+    * [[semDedup]], [[embedOutliers]], ...), so it fails past this size;
+    * a larger corpus needs centroids trained on a sample, then
+    * [[ivfAssign]] or [[saveIvfIndexWith]] over the full corpus. */
+  val MaxTrainRows = 1000000
+
+  /** The (vec_id, embedding) rows of a training frame, collected once
+    * through `limit(cap + 1)`: more than `cap` rows fail instead of
+    * collecting an unbounded frame. That is one job on a one-partition frame; on P
+    * partitions Spark's incremental take adds about log₄ P more. Rows
+    * with a null id or vector are dropped: Spark's null-propagating
+    * assignment never placed them in any mean. */
+  private[graft] def collectTraining(frame: DataFrame,
+      cap: Int = MaxTrainRows): Array[(Long, Array[Float])] = {
+    import frame.sparkSession.implicits._
+    val rows = frame.select("vec_id", "embedding").na.drop().limit(cap + 1)
+      .as[(Long, Array[Float])].collect()
+    require(rows.length <= cap,
+      s"Lloyd training frame has more than $cap rows; train on a sample")
+    rows
+  }
+
+  /** In-process Lloyd over `points` (id, vector), the one fit behind IVF
+    * and PQ training. Seeds are the points with id < `seedBound`, in id
+    * order. Each round assigns every point with `nearest` (given the
+    * centroids, the index of a vector's nearest one, or -1), then takes
+    * each centroid's elementwise mean in exact integer micro-units:
+    * Σ floor(x·10⁶ + 0.5) as a Long, divided once by n·10⁶ in double,
+    * cast to float. The sum is order-free, so the result equals the
+    * oracle's. A centroid that gets no points drops out. The picks are
+    * independent, so each round assigns slices of `points` on the
+    * driver's cores. */
+  private[operators] def lloyd(points: Array[(Long, Array[Float])],
+      seedBound: Int, iters: Int,
+      nearest: Array[(Long, Array[Float])] => Array[Float] => Int)
+      : Array[(Long, Array[Float])] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val slices = points.grouped(points.length /
+      Runtime.getRuntime.availableProcessors + 1).toSeq
+    var cent = points.filter(_._1 < seedBound).sortBy(_._1)
+    for (_ <- 1 to iters) {
+      val pick = nearest(cent)
+      val picks = Await.result(Future.traverse(slices)(sl => Future(sl.map(p => pick(p._2)))),
+        scala.concurrent.duration.Duration.Inf).toArray.flatten
+      val s = cent.map(_ => ArrayBuffer.empty[Long])
+      val n = cent.map(_ => ArrayBuffer.empty[Long])
+      for (((_, v), c) <- points.zip(picks) if c >= 0; i <- v.indices) {
+        if (s(c).length == i) { s(c) += 0L; n(c) += 0L }
+        s(c)(i) += math.floor(v(i).toDouble * 1000000 + 0.5).toLong
+        n(c)(i) += 1
+      }
+      cent = cent.indices.filter(s(_).nonEmpty).map(c => cent(c)._1 ->
+        s(c).indices.map(i => (s(c)(i).toDouble / (n(c)(i) * 1000000.0)).toFloat)
+          .toArray).toArray
     }
     cent
+  }
+
+  /** [[ivfAssign]]'s rule in-process: the nearest centroid by 4dp cosine
+    * (as the integer k = floor(cos·10⁴ + 0.5) its rank key packs), lowest
+    * id on ties, in the same doubles: the [[graft.functions.FloatDotProduct]]
+    * fold and norms. A zero norm fails as Spark's ANSI division does. */
+  private def cosineNearest(cent: Array[(Long, Array[Float])]): Array[Float] => Int = {
+    val cn = cent.map(c => math.sqrt(ArrayMath.dot(c._2, c._2)))
+    v => {
+      val vn = math.sqrt(ArrayMath.dot(v, v))
+      cent.indices.maxByOption { c =>
+        val d = vn * cn(c)
+        if (d == 0.0) throw new ArithmeticException(
+          "[DIVIDE_BY_ZERO] Division by zero: cosine of a zero-norm vector")
+        math.floor(ArrayMath.dot(v, cent(c)._2) / d * 10000 + 0.5).toLong
+      }.getOrElse(-1)
+    }
   }
 
   /** Embedding outlier detection: flag the vectors LEAST similar to their
@@ -349,8 +422,8 @@ object Similarity {
     * bottom `frac` by cosine-to-centroid (4dp, vec_id tiebreak) is
     * flagged, so the threshold adapts to each cluster's own density
     * instead of a global cutoff that over-flags sparse clusters. Shape:
-    * Lloyd training (bounded-sample at corpus scale) + one broadcast
-    * assignment pass + one window keyed by centroid — the same
+    * Lloyd training on the whole input (up to [[MaxTrainRows]]) + one
+    * broadcast assignment pass + one window keyed by centroid — the same
     * partitioning the corpus would be laid out with. */
   def embedOutliers(emb: DataFrame, nCentroids: Int, iters: Int,
       frac: Double): DataFrame = {
@@ -397,10 +470,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         r4(cosinePre(col("qe"), col("embedding"), col("_qn"), col("_n")))
           .as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"), col("rk"))
+    topK(scored, "score", k)
   }
 
   /** Persist a trained IVF index: the centroid table plus the corpus
@@ -456,7 +526,7 @@ object Similarity {
   def ivfSearchMultiProbe(emb: DataFrame, nCentroids: Int, nQueries: Int,
       k: Int, nprobe: Int, iters: Int = 2): DataFrame = {
     requireProbeFits(math.toIntExact(nQueries.toLong * nprobe)) // probe rows fan out nprobe×
-    val cent = ivfTrain(emb, nCentroids, iters) // ends checkpointed (k rows)
+    val cent = ivfTrain(emb, nCentroids, iters) // k-row local frame
     val assign = ivfAssign(emb, cent)
       .select("vec_id", "centroid_id").materialize
     val withCluster = emb.join(assign, "vec_id")
@@ -474,10 +544,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         r4(cosinePre(col("qe"), col("embedding"), col("_qn"), col("_n")))
           .as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"), col("rk"))
+    topK(scored, "score", k)
   }
 
   /** Recall@k of IVF multi-probe search against the exact brute-force
@@ -517,19 +584,26 @@ object Similarity {
     // Int.MaxValue and a bare toInt would wrap negative
     math.min(math.max(8L, (n + target - 1) / target), Int.MaxValue.toLong).toInt
 
-  /** Cluster-blocked near-dup pairs — the 100 TB path: candidates only
-    * within the same IVF cluster, so the pair space is Σ|cluster|² instead
-    * of N². Misses cross-cluster pairs by design (standard IVF recall
-    * tradeoff; raise nCentroids' coverage with multi-assignment if
-    * needed). Size nCentroids with [[clustersFor]] — bounded cluster
-    * size is what makes "blocked" mean linear. */
+  /** Cluster-blocked near-dup pairs: candidates only within the same IVF
+    * cluster, so the pair space is Σ|cluster|² instead of N². Misses
+    * cross-cluster pairs by design (standard IVF recall tradeoff; raise
+    * nCentroids' coverage with multi-assignment if needed). Size
+    * nCentroids with [[clustersFor]] — bounded cluster size is what makes
+    * "blocked" mean linear. The centroids train on the whole input, so it
+    * runs up to [[MaxTrainRows]] vectors. */
   def dedupPairsIvf(emb: DataFrame, tau: Double, nCentroids: Int,
       iters: Int = 2): DataFrame = {
     // assignment materialized once — reused by both join sides (see
     // ivfSearch); narrow (vec_id, centroid_id) rows
+    clusterPairs(emb, ivfAssign(emb, ivfTrain(emb, nCentroids, iters))
+      .select("vec_id", "centroid_id").materialize, tau)
+  }
+
+  /** Same-cluster pairs (centroid_id, vec_a < vec_b, cos) with 4dp cosine
+    * ≥ tau, blocked on `assign`'s centroid_id. */
+  private def clusterPairs(emb: DataFrame, assign: DataFrame, tau: Double): DataFrame = {
     val withCluster = emb
-      .join(ivfAssign(emb, ivfTrain(emb, nCentroids, iters))
-        .select("vec_id", "centroid_id").materialize, "vec_id")
+      .join(assign.select("vec_id", "centroid_id"), "vec_id")
       .select(col("vec_id"), col("embedding"), col("centroid_id"),
         norm(col("embedding")).as("nrm"))
     val a = withCluster.select(col("centroid_id"), col("vec_id").as("vec_a"),
@@ -597,19 +671,7 @@ object Similarity {
       iters: Int = 2): DataFrame = {
     val asg =
       ivfAssign(emb, ivfTrain(emb, nCentroids, iters)).materialize
-    val withCluster = emb
-      .join(asg.select("vec_id", "centroid_id"), "vec_id")
-      .select(col("vec_id"), col("embedding"), col("centroid_id"),
-        norm(col("embedding")).as("nrm"))
-    val a = withCluster.select(col("centroid_id"), col("vec_id").as("vec_a"),
-      col("embedding").as("ea"), col("nrm").as("na"))
-    val b = withCluster.select(col("centroid_id"), col("vec_id").as("vec_b"),
-      col("embedding").as("eb"), col("nrm").as("nb"))
-    val pairs = a.join(b, Seq("centroid_id"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        r4(cosinePre(col("ea"), col("eb"), col("na"), col("nb"))).as("cos"))
-      .filter(col("cos") >= tau)
+    val pairs = clusterPairs(emb, asg, tau)
     val cc = Dedup.connectedComponents(
         pairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .select(col("doc_id").as("vec_id"), col("canonical_id").as("component"))
@@ -691,10 +753,7 @@ object Similarity {
           sqrt(col("_qn2").cast("double") * col("_n2").cast("double")))
           .as("score"))
       .filter(col("score").isNotNull && !isnan(col("score")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"), col("rk"))
+    topK(scored, "score", k)
   }
 
   /** Deterministic Rademacher (±1) hyperplanes for sign-random-projection

@@ -155,4 +155,44 @@ class IvfPartitionSpec extends AnyFunSuite {
       .filter(_.getName.startsWith("centroid_id=")).map(_.getName)
     assert(parts.length > 1)
   }
+
+  test("Lloyd fit: identical seeds leave an empty centroid, which drops out") {
+    import spark.implicits._
+    val (a, b) = (Array(1f, 0f, 0f), Array(0f, 1f, 0f))
+    val emb = Seq((0L, a), (1L, a), (2L, b), (3L, a), (4L, b)).toDF("vec_id", "embedding")
+    // seeds 0 and 1 are equal, the tie goes to the lowest id, so centroid 1
+    // gets no point and k shrinks from 3 to 2
+    val cent = Similarity.ivfTrain(emb, k = 3, iters = 1).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
+    assert(cent == Seq((0L, a.toSeq), (2L, b.toSeq)))
+  }
+
+  test("Lloyd fit: rows with a null embedding change no centroid") {
+    import spark.implicits._
+    val base = (1L to 40L).map(i => (i, Array.tabulate(4)(j =>
+      ((i * 7 + j * 3) % 5 - 2).toFloat + 0.5f))).toDF("vec_id", "embedding")
+    // one null row inside the seed range, one outside it
+    val withNulls = base.union(
+      Seq((0L, null: Array[Float]), (1000000L, null: Array[Float])).toDF("vec_id", "embedding"))
+    def cent(df: org.apache.spark.sql.DataFrame) = Similarity.ivfTrain(df, 4, 2).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
+    assert(cent(withNulls) == cent(base))
+  }
+
+  test("Lloyd fit: a zero-norm training vector fails loudly") {
+    import spark.implicits._
+    val emb = Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f)), (2L, Array(0f, 0f)))
+      .toDF("vec_id", "embedding")
+    val err = intercept[ArithmeticException](Similarity.ivfTrain(emb, k = 2, iters = 1))
+    assert(err.getMessage.contains("DIVIDE_BY_ZERO"))
+  }
+
+  test("Lloyd training frame over the row cap fails with the cap's message") {
+    import spark.implicits._
+    val emb = (0L to 4L).map(i => (i, Array(1f, i.toFloat))).toDF("vec_id", "embedding")
+    assert(Similarity.collectTraining(emb.limit(3), cap = 3).length == 3)
+    val err = intercept[IllegalArgumentException](Similarity.collectTraining(emb, cap = 3))
+    assert(err.getMessage.contains("more than 3 rows") &&
+      err.getMessage.contains("train on a sample"))
+  }
 }

@@ -81,6 +81,19 @@ class MaterializeSpec extends AnyFunSuite {
     }
   }
 
+  test("deep label propagation is identical under persist (loop auto-truncation)") {
+    // the loop-depth-aware truncation (Materialize.loop) under persist with
+    // a checkpoint dir: twelve rounds cross six truncation points
+    spark.sparkContext.setCheckpointDir(
+      graft.SessionScoped.scratchDir("graft_ckpt_lp"))
+    def lp() = Graph.labelPropagation(edges, iters = 12)
+      .orderBy("node").collect().toSeq
+    val base = lp()                                        // default: local
+    withStrategy("persist") {
+      assert(lp() == base, "label propagation drifted under strategy=persist")
+    }
+  }
+
   test("unknown strategy fails fast") {
     withStrategy("bogus") {
       intercept[IllegalArgumentException] {

@@ -184,6 +184,25 @@ class PqSpec extends AnyFunSuite {
     assert(out.filter(abs(col("score_pq")) > 1.1).count() == 0)
   }
 
+  test("PQ fit: identical seed subvectors leave an empty code, which drops out") {
+    // subspace 0 seeds (1,0),(1,0),(0,1): code 1 ties code 0 and loses;
+    // subspace 1 seeds (1,0),(0,1),(0,1): code 2 ties code 1 and loses
+    val pre = Seq((0L, Array(1f, 0f, 1f, 0f)), (1L, Array(1f, 0f, 0f, 1f)),
+      (2L, Array(0f, 1f, 0f, 1f))).toDF("vec_id", "embedding")
+    val codes = ProductQuantizer.trainOn(pre, subspaces = 2, subDim = 2, k = 3, iters = 1)
+      .collect().map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
+    assert(codes == Seq((0, 0L), (0, 2L), (1, 0L), (1, 1L)))
+  }
+
+  test("PQ fit: rows with a null embedding change no codebook") {
+    val base = emb.select("vec_id", "embedding").filter(col("vec_id") =!= 0)
+    val withNulls = base.union(
+      Seq((0L, null: Array[Float]), (1000000L, null: Array[Float])).toDF("vec_id", "embedding"))
+    def cb(df: org.apache.spark.sql.DataFrame) = ProductQuantizer.train(df, m, sub, k, iters)
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Float](2))).sortBy(t => (t._1, t._2)).toSeq
+    assert(cb(withNulls) == cb(base))
+  }
+
   test("power iteration recovers a planted dominant axis") {
     // cloud = strong spread along axis 2, weak everywhere else: the top
     // direction must load ~±1 on pos 2 and ~0 elsewhere, with lambda
