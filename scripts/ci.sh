@@ -80,6 +80,21 @@ if [[ -n "$ml" ]]; then
   exit 1
 fi
 
+echo "== one definition of the seeded recursions =="
+# The seeded EMA/RMA step and the Wilder DX smoothing are the step methods
+# of SeededAggs.EmaBuf/AdxBuf; the window aggregates and the streaming
+# IndicatorMath both fold through them, so streaming/batch bit-parity holds
+# by construction. A copy elsewhere would have to keep their operation order
+# by hand. OracleSql's DuckDB mirror is the independent reference.
+rec=$(git grep -nE '\(1 - alpha\)|\(dx - ' -- src/main \
+  ':!src/main/scala/graft/functions/SeededAggs.scala' \
+  ':!src/main/scala/graft/OracleSql.scala' || true)
+if [[ -n "$rec" ]]; then
+  echo "$rec"
+  echo "CI FAILED: seeded EMA/ADX recursion outside SeededAggs (use EmaBuf/AdxBuf.step)" >&2
+  exit 1
+fi
+
 echo "== run artifacts under plans/ =="
 # Trend, curate-trend, key-scale and sweep outputs live under plans/ (the
 # trend mains default there); the root keeps bench_out.json, the driver's

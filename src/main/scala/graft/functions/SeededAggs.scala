@@ -37,7 +37,17 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   */
 object SeededAggs {
 
-  final class EmaBuf(var seen: Long, var sum: Double, var s: Double)
+  /** Running state of one seeded smoother. [[step]] is the one
+    * definition of the recursion: [[EmaAgg]] and the streaming
+    * IndicatorMath both fold through it. */
+  final class EmaBuf(var seen: Long = 0L, var sum: Double = 0.0, var s: Double = 0.0) {
+    def step(x: Double, n: Int, alpha: Double): Unit = {
+      seen += 1
+      if (seen < n) sum += x
+      else if (seen == n) s = (sum + x) / n
+      else s = alpha * x + (1 - alpha) * s
+    }
+  }
 
   abstract class SeededFoldBase[T] extends TypedImperativeAggregate[T] {
     override def nullable: Boolean = true
@@ -70,17 +80,11 @@ object SeededAggs {
 
     override def prettyName: String = "seeded_ema"
 
-    override def createAggregationBuffer(): EmaBuf = new EmaBuf(0L, 0.0, 0.0)
+    override def createAggregationBuffer(): EmaBuf = new EmaBuf()
 
     override def update(b: EmaBuf, row: InternalRow): EmaBuf = {
       val v = child.eval(row)
-      if (v != null) {
-        val x = v.asInstanceOf[Double]
-        b.seen += 1
-        if (b.seen < n) b.sum += x
-        else if (b.seen == n) b.s = (b.sum + x) / n
-        else b.s = alpha * x + (1 - alpha) * b.s
-      }
+      if (v != null) b.step(v.asInstanceOf[Double], n, alpha)
       b
     }
 
@@ -101,11 +105,37 @@ object SeededAggs {
     override protected def withNewChildInternal(c: Expression): EmaAgg = copy(child = c)
   }
 
+  /** Running state of Wilder ADX; [[step]] is the recursion's one
+    * definition, shared by [[AdxAgg]] and the streaming IndicatorMath. */
   final class AdxBuf(
-      var cnt: Long,
-      var sumP: Double, var sumN: Double, var sumT: Double,
-      var sP: Double, var sN: Double, var sT: Double,
-      var dxCnt: Long, var dxSum: Double, var adx: Double)
+      var cnt: Long = 0L,
+      var sumP: Double = 0, var sumN: Double = 0, var sumT: Double = 0,
+      var sP: Double = 0, var sN: Double = 0, var sT: Double = 0,
+      var dxCnt: Long = 0L, var dxSum: Double = 0, var adx: Double = 0) {
+    def step(p: Double, m: Double, t: Double, n: Int): Unit = {
+      cnt += 1
+      if (cnt < n) { sumP += p; sumN += m; sumT += t }
+      else {
+        if (cnt == n) {
+          sP = (sumP + p) / n; sN = (sumN + m) / n; sT = (sumT + t) / n
+        } else {
+          sP += (p - sP) / n; sN += (m - sN) / n; sT += (t - sT) / n
+        }
+        if (sT != 0) {
+          val diP = 100.0 * sP / sT
+          val diN = 100.0 * sN / sT
+          val diSum = diP + diN
+          if (diSum != 0) {
+            val dx = 100.0 * math.abs(diP - diN) / diSum
+            dxCnt += 1
+            if (dxCnt < n) dxSum += dx
+            else if (dxCnt == n) adx = (dxSum + dx) / n
+            else adx += (dx - adx) / n
+          }
+        }
+      }
+    }
+  }
 
   /** Wilder ADX(n): RMA-smooth (+DM, −DM, TR), form the directional indexes,
     * then RMA-smooth DX (doubly recursive — SURVEY §2.3 A7;
@@ -127,37 +157,12 @@ object SeededAggs {
     override def second: Expression = ndm
     override def third: Expression = tr
 
-    override def createAggregationBuffer(): AdxBuf =
-      new AdxBuf(0L, 0, 0, 0, 0, 0, 0, 0L, 0, 0)
+    override def createAggregationBuffer(): AdxBuf = new AdxBuf()
 
     override def update(b: AdxBuf, row: InternalRow): AdxBuf = {
       val vp = pdm.eval(row); val vn = ndm.eval(row); val vt = tr.eval(row)
-      if (vp != null && vn != null && vt != null) {
-        val p = vp.asInstanceOf[Double]
-        val m = vn.asInstanceOf[Double]
-        val t = vt.asInstanceOf[Double]
-        b.cnt += 1
-        if (b.cnt < n) { b.sumP += p; b.sumN += m; b.sumT += t }
-        else {
-          if (b.cnt == n) {
-            b.sP = (b.sumP + p) / n; b.sN = (b.sumN + m) / n; b.sT = (b.sumT + t) / n
-          } else {
-            b.sP += (p - b.sP) / n; b.sN += (m - b.sN) / n; b.sT += (t - b.sT) / n
-          }
-          if (b.sT != 0) {
-            val diP = 100.0 * b.sP / b.sT
-            val diN = 100.0 * b.sN / b.sT
-            val diSum = diP + diN
-            if (diSum != 0) {
-              val dx = 100.0 * math.abs(diP - diN) / diSum
-              b.dxCnt += 1
-              if (b.dxCnt < n) b.dxSum += dx
-              else if (b.dxCnt == n) b.adx = (b.dxSum + dx) / n
-              else b.adx += (dx - b.adx) / n
-            }
-          }
-        }
-      }
+      if (vp != null && vn != null && vt != null)
+        b.step(vp.asInstanceOf[Double], vn.asInstanceOf[Double], vt.asInstanceOf[Double], n)
       b
     }
 

@@ -4,41 +4,24 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.types._
 
-/** Data model mirroring the reference's four row shapes (SURVEY §1).
+/** Data model mirroring the reference's row shapes (SURVEY §1). The typed
+  * tick is `StreamIngest.TickEvent`.
   *
   * Reference citations:
-  *  - Tick: trading-etl-python/src/ingestion/producer.py:81-86
-  *  - Bar (per-symbol OHLCV frame): trading-etl-python/src/processing/consumer.py:35-39
+  *  - tick wire schema: trading-etl-python/src/ingestion/producer.py:81-86
   *  - IndicatorRow (20-col sink row): trading-etl-python/src/processing/consumer.py:41-62,
   *    DDL trading-etl-python/src/db/setup.py:55-89
   */
 object Model {
 
-  /** Raw tick message as produced to Kafka (JSON value, key = symbol).
-    * `timestamp`/`fetchedAt` are epoch millis. */
-  final case class Tick(
-      symbol: String,
-      price: Double,
-      timestamp: Long,
-      fetched_at: Option[Long])
-
-  /** Kafka tick JSON wire schema (producer.py:81-86). */
+  /** Kafka tick JSON wire schema (producer.py:81-86): the raw message as
+    * produced to Kafka (key = symbol); `timestamp`/`fetched_at` are epoch
+    * millis. */
   val tickSchema: StructType = StructType(Seq(
     StructField("symbol", StringType),
     StructField("price", DoubleType),
     StructField("timestamp", LongType),
     StructField("fetched_at", LongType)))
-
-  /** One OHLCV bar; the unit of the per-symbol time-series state.
-    * `volume` is None on the live (tick-derived) path — consumer.py:124-127. */
-  final case class Bar(
-      time: Timestamp,
-      symbol: String,
-      open: Option[Double],
-      high: Option[Double],
-      low: Option[Double],
-      close: Double,
-      volume: Option[Long])
 
   /** Sink row: 20 columns in the exact order of the reference DDL
     * (setup.py:55-89). PK (time, symbol); first-write-wins dedup. */

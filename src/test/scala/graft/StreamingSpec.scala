@@ -54,26 +54,28 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming == batch bit-for-bit while the frame is untruncated") {
     val n = 40
     val syms = Seq("A", "B")
+    // one repeated price per symbol: the flat tick makes OBV 0, not null
+    def price(s: String, i: Int): Double =
+      prices(n)(if (i == (if (s == "B") 31 else 17)) i - 1 else i) + (if (s == "B") 11 else 0)
     val msgs = for (s <- syms; i <- 0 until n)
-      yield tickJson(s, prices(n)(i) + (if (s == "B") 11 else 0), 1700000000000L + i * 5000L)
+      yield tickJson(s, price(s, i), 1700000000000L + i * 5000L)
     val got = runStream(Seq(msgs), "s_parity")
       .map(r => ((r.getAs[String]("symbol"), r.getAs[Timestamp]("time")), r))
       .toMap
     val bars = (for (s <- syms; i <- 0 until n) yield {
-      val p = prices(n)(i) + (if (s == "B") 11 else 0)
+      val p = price(s, i)
       (new Timestamp(1700000000000L + i * 5000L), s, p, p, p, p, None: Option[Long])
     }).toDF("time", "symbol", "open", "high", "low", "close", "volume")
     val exp = IndicatorPipeline.gated(bars).collect()
     assert(exp.length == got.size && exp.nonEmpty)
+    assert(exp.exists(_.getAs[Any]("obv") == null) && exp.exists(_.getAs[Any]("obv") != null))
     exp.foreach { e =>
       val key = (e.getAs[String]("symbol"), e.getAs[Timestamp]("time"))
       val g = got(key)
-      for (c <- Seq("sma_20", "ema_10", "ema_20", "macd_line", "adx_14", "rsi_14",
-        "stoch_k_14", "bb_upper", "bb_lower", "atr_14")) {
-        val ev = e.getAs[java.lang.Double](c)
-        val gv = g.getAs[java.lang.Double](c)
-        assert((ev == null && gv == null) || ev.doubleValue == gv.doubleValue,
-          s"$c mismatch at $key: batch=$ev stream=$gv")
+      for (c <- graft.model.Model.DbColumns) {
+        val ev = e.getAs[Any](c)
+        val gv = g.getAs[Any](c)
+        assert(ev == gv, s"$c mismatch at $key: batch=$ev stream=$gv")
       }
     }
   }
@@ -217,7 +219,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("out-of-order block converges to the in-order truth; the reference's positional append would corrupt (ST6)") {
     import graft.streaming.IndicatorMath
-    import graft.streaming.IndicatorMath.BarState
     val n = 41
     def ts(i: Int): Long = 1700000000000L + i * 5000L
     def p(i: Int): Double = prices(n)(i)
@@ -245,10 +246,8 @@ class StreamingSpec extends AnyFunSuite {
     // the reference's shape (consumer.py appends positionally): the late
     // block lands at the END of the frame, so order-sensitive recursions
     // run over a time-corrupted history — provably different values
-    val refFrame = order
-      .map(i => BarState(ts(i), p(i), p(i), p(i), p(i), None))
-      .toVector.takeRight(graft.model.Model.LookbackRows)
-    val corrupt = IndicatorMath.latestRow("A", refFrame)
+    val refFrame = order.takeRight(graft.model.Model.LookbackRows)
+    val corrupt = IndicatorMath.latestRow("A", ts(refFrame.last), refFrame.map(p).toArray)
     assert(corrupt.ema_20.get != last.getAs[java.lang.Double]("ema_20").doubleValue ||
       corrupt.rsi_14.get != last.getAs[java.lang.Double]("rsi_14").doubleValue,
       "positional append must corrupt at least one order-sensitive indicator")
@@ -260,17 +259,14 @@ class StreamingSpec extends AnyFunSuite {
     // a literal 0 — an all-null-volume frame with one repeated price must
     // therefore emit obv = 0, not null
     import graft.streaming.IndicatorMath
-    import graft.streaming.IndicatorMath.BarState
-    def frame(ps: Seq[Double]): Vector[BarState] =
-      ps.zipWithIndex.map { case (p, i) =>
-        BarState(1700000000000L + i * 5000L, p, p, p, p, None)
-      }.toVector
+    def row(ps: Seq[Double]) =
+      IndicatorMath.latestRow("A", 1700000000000L + (ps.length - 1) * 5000L, ps.toArray)
     val strictlyMoving = (1 to 30).map(_.toDouble) // every diff > 0, vols null
-    assert(IndicatorMath.latestRow("A", frame(strictlyMoving)).obv.isEmpty,
+    assert(row(strictlyMoving).obv.isEmpty,
       "all contributions null => OBV must stay null (SQL sum of all nulls)")
     val withFlat = strictlyMoving.take(10) ++ Seq(10.0) ++
       strictlyMoving.drop(10) // one repeated price mid-frame
-    assert(IndicatorMath.latestRow("A", frame(withFlat)).obv.contains(0L),
+    assert(row(withFlat).obv.contains(0L),
       "a flat tick contributes a literal 0 => OBV must be 0, not null")
   }
 }
