@@ -95,6 +95,18 @@ if [[ -n "$rec" ]]; then
   exit 1
 fi
 
+echo "== environment variables only in the mains that document them =="
+# Library code takes its settings as arguments; a sys.env read elsewhere is
+# a knob no caller can see. The session factory, the bench and trend mains
+# and the registry's SPARK_GRAFT_ONLY filter are the documented readers.
+envs=$(git grep -n 'sys\.env' -- src/main \
+  | grep -vE '^src/main/scala/graft/(GraftSession|Bench|BenchTrend|CurateTrend|SparkEntry)\.scala:' || true)
+if [[ -n "$envs" ]]; then
+  echo "$envs"
+  echo "CI FAILED: sys.env read outside GraftSession/Bench/BenchTrend/CurateTrend/SparkEntry" >&2
+  exit 1
+fi
+
 echo "== run artifacts under plans/ =="
 # Trend, curate-trend, key-scale and sweep outputs live under plans/ (the
 # trend mains default there); the root keeps bench_out.json, the driver's

@@ -6,7 +6,7 @@ package graft
   * plan is linear-with-constant-startup lands BELOW 1.0 (fixed costs
   * amortize); one that crosses a cliff (broadcast flipping to shuffle, a
   * band-key hot spot, an accidentally quadratic join) lands well above.
-  * `flagged` lists queries over `SPARK_GRAFT_TREND_FLAG` (default 1.5).
+  * `flagged` lists queries over [[FlagAt]].
   *
   * This is a TREND check, not a correctness gate: the synth dir has no
   * DuckDB oracle on purpose, and the numbers are comparative (same host,
@@ -19,7 +19,6 @@ package graft
   *   SPARK_GRAFT_TREND_DIR     synth output (default /tmp/graft_trend/<base>x<c>)
   *   SPARK_GRAFT_TREND_COPIES  scale multiple (default 3)
   *   SPARK_GRAFT_TREND_ONLY    comma list of queries (default: the heavy set)
-  *   SPARK_GRAFT_TREND_FLAG    per-SF ratio flag threshold (default 1.5)
   *   SPARK_GRAFT_TREND_OUT     full JSON artifact (default plans/trend_out.json)
   */
 object BenchTrend {
@@ -54,12 +53,14 @@ object BenchTrend {
     "q_decontaminate_fuzzy", "q_shuffle_shards", "q_shards_stratified",
     "q_jsonl_roundtrip", "q_export_shards")
 
+  /** Per-SF ratio above which a query is flagged; any flag exits 4. */
+  private val FlagAt = 1.5
+
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_TREND_COPIES", "3").toInt
     val synthDir = sys.env.getOrElse("SPARK_GRAFT_TREND_DIR",
       s"/tmp/graft_trend/${new java.io.File(baseDir).getName}x$copies")
-    val flagAt = sys.env.getOrElse("SPARK_GRAFT_TREND_FLAG", "1.5").toDouble
     val names = sys.env.get("SPARK_GRAFT_TREND_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty).getOrElse(DefaultQueries)
@@ -99,7 +100,7 @@ object BenchTrend {
         yield (n, b, s, s / (copies * b))
     }
     val failed = names.filterNot(n => rows.exists(_._1 == n))
-    val flagged = rows.filter(_._4 > flagAt).map(_._1)
+    val flagged = rows.filter(_._4 > FlagAt).map(_._1)
 
     def f3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -108,7 +109,7 @@ object BenchTrend {
     }.mkString("{", ",", "}")
     val json =
       s"""{"metric":"per_sf_ratio_max","value":${f3(rows.map(_._4).maxOption.getOrElse(0.0))},""" +
-        s""""unit":"x","base":"$baseDir","copies":$copies,"flag_at":${f3(flagAt)},""" +
+        s""""unit":"x","base":"$baseDir","copies":$copies,"flag_at":${f3(FlagAt)},""" +
         s""""flagged":${flagged.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""queries":$qjson}"""

@@ -31,8 +31,8 @@ import graft.sources.{Tables, TextIngest}
   * Every stage is a DataFrame→DataFrame function, so the whole pipeline
   * is ONE lazy plan per materialization and inherits each operator's
   * scale shape (no collects, keyed shuffles only, broadcast where the
-  * small side is bounded; the two count() actions that size SemDeDup's
-  * cluster count are parameter-sizing, not data collects). Run:
+  * small side is bounded; the one count() action that sizes SemDeDup's
+  * cluster count is parameter-sizing, not a data collect). Run:
   * `graft.Curate <sfDir> <outDir>`; prints one JSON line of per-stage
   * survivor counts.
   */
@@ -44,47 +44,38 @@ object Curate {
       rules: Long, repetition: Long, dedup: Long, semdedup: Long,
       decontaminated: Long, fuzzyClean: Long, dsir: Long, ccnet: Long,
       sampled: Long, chunks: Long, seqs: Long, merges: Long, vocab: Long,
-      shards: Long)
+      shards: Long) {
+    /** One JSON object, fields in order, keys in snake_case. */
+    def json: String = productElementNames.zip(productIterator).map {
+      case (k, v) => s""""${k.replaceAll("([A-Z])", "_$1").toLowerCase}":$v"""
+    }.mkString("{", ",", "}")
+  }
 
-  /** Default C4-style blocklist for the synthetic corpus — a term the
-    * generator plants in ~5% of documents, so the gate demonstrably
-    * gates without emptying the funnel. Real runs pass their own list. */
-  val DefaultBlockTerms: Seq[String] = Seq("dup")
+  /** C4-style blocklist for the synthetic corpus — a term the generator
+    * plants in ~5% of documents, so the gate demonstrably gates without
+    * emptying the funnel. */
+  private val BlockTerms = Seq("dup")
 
-  /** @param bloomScreen run decontamination through the bloom prescreen
-    *   ([[Decontamination.screenBloom]]) instead of the exact broadcast —
-    *   bit-exact by contract, so the Funnel must not change (CurateSpec
-    *   asserts it); the switch exists because at real eval-suite sizes
-    *   the exact gram broadcast is the first thing to outgrow executors.
-    * @param gopherFull strict repetition mode: apply Gopher's FULL
-    *   published Table-A1 n-gram rule set ([[TextAnalysis
-    *   .repetitionNgrams]] at the paper thresholds) ON TOP of the tuned
-    *   bigram gate — Gopher applies every rule simultaneously (Rae et
-    *   al. 2021, A1.1). Default off keeps the shipped funnel's
-    *   continuity; the extra rules can only shrink the repetition stage
-    *   (CurateSpec pins both the ordering and the one rule family the
-    *   bigram gate provably cannot subsume — see the 10-gram pin there). */
-  def run(spark: SparkSession, sfDir: String, outDir: String,
-      tau: Double = 0.7, semTau: Double = 0.4, sampleRate: Double = 0.5,
-      bloomScreen: Boolean = false,
-      blockTerms: Seq[String] = DefaultBlockTerms,
-      gopherFull: Boolean = false): Funnel =
-    runTimed(spark, sfDir, outDir, tau, semTau, sampleRate, bloomScreen,
-      blockTerms, gopherFull)._1
+  /** Near-dup corpus dedup Jaccard threshold (stage 4). */
+  private val Tau = 0.7
 
-  /** [[run]] plus per-stage wall times (stage label → seconds). Stages are
+  /** SemDeDup cosine threshold (stage 5). */
+  private val SemTau = 0.4
+
+  /** Deterministic sample rate (stage 8). */
+  private val SampleRate = 0.5
+
+  /** Runs the pipeline, writes its outputs under `outDir`, and returns the
+    * funnel plus per-stage wall times (stage label → seconds). Stages are
     * timed at their ACTIONS — the funnel counts and the writes — so each
     * entry is the cumulative cost of computing through that stage from the
     * scan (the pipeline is one lazy plan; stages don't cache each other).
     * Per-stage MARGINAL cost at a given SF is the delta between adjacent
     * count entries; per-stage scaling is the ratio of those deltas across
     * SFs (both sides carry the same recompute prefix, so it cancels from
-    * the ratio). Used by [[CurateTrend]] for the 10× composition check. */
-  def runTimed(spark: SparkSession, sfDir: String, outDir: String,
-      tau: Double = 0.7, semTau: Double = 0.4, sampleRate: Double = 0.5,
-      bloomScreen: Boolean = false,
-      blockTerms: Seq[String] = DefaultBlockTerms,
-      gopherFull: Boolean = false)
+    * the ratio). [[CurateTrend]] reads the times for the 10× composition
+    * check. */
+  def run(spark: SparkSession, sfDir: String, outDir: String)
       : (Funnel, Vector[(String, Double)]) = {
     val times = Vector.newBuilder[(String, Double)]
     def t[A](label: String)(a: => A): A = {
@@ -100,7 +91,7 @@ object Curate {
     // q_blocklist), and C4 runs its bad-words filter before every other
     // gate (Raffel et al. 2020 §2.2). Any hit drops the doc (maxFrac=0,
     // decided on exact counts).
-    val keepBlock = TextAnalysis.blocklist(docs, blockTerms)
+    val keepBlock = TextAnalysis.blocklist(docs, BlockTerms)
       .filter(col("keep")).select("doc_id")
     val unblocked = docs.join(keepBlock, "doc_id")
 
@@ -118,29 +109,20 @@ object Curate {
       .filter(col("keep")).select("doc_id")
     val ruled = quality.join(keepRules, "doc_id")
 
-    // 3. repetition gate (Gopher-style thresholds tuned for the corpus);
-    // under gopherFull the full Table-A1 n-gram set (top-{2,3,4}-gram
-    // shares + duplicated-{5..10}-gram span coverage, paper thresholds)
-    // gates IN ADDITION — strictly a subset of the bigram gate's
-    // survivors, so the funnel stays monotone by construction
-    val keepRepBigram = TextAnalysis.repetition(ruled,
+    // 3. repetition gate (Gopher-style thresholds tuned for the corpus)
+    val keepRep = TextAnalysis.repetition(ruled,
       maxTokenDup = 0.65, maxDupBigram = 0.10, maxTopBigram = 0.08)
       .filter(col("keep")).select("doc_id")
-    val keepRep =
-      if (gopherFull)
-        keepRepBigram.join(TextAnalysis.repetitionNgrams(ruled)
-          .filter(col("keep")).select("doc_id"), "doc_id")
-      else keepRepBigram
     val repetition = ruled.join(keepRep, "doc_id")
 
     // 4. near-dup corpus dedup: keep each cluster's canonical doc
-    val keepDedup = Dedup.dedupCorpus(repetition, tau)
+    val dupDocs = Dedup.dedupCorpus(repetition, Tau)
       .filter(col("is_duplicate")).select(col("doc_id"))
-    val deduped = repetition.join(keepDedup, Seq("doc_id"), "left_anti")
+    val deduped = repetition.join(dupDocs, Seq("doc_id"), "left_anti")
 
     // 5. SemDeDup semantic pruning over the lexical survivors: embeddings
     // restricted to surviving doc_ids (vec_id ≡ doc_id in the star schema),
-    // IVF-cluster-blocked cosine classes at semTau, keep each class's
+    // IVF-cluster-blocked cosine classes at SemTau, keep each class's
     // farthest-from-centroid member. The cluster count is sized from the
     // SURVIVOR count, so the Σ|cluster|² pair space stays linear however
     // much the earlier gates removed. Coverage policy: a doc with NO
@@ -152,7 +134,7 @@ object Curate {
     // corpus).
     val survEmb = Tables.embeddings(spark, sfDir)
       .join(deduped.select(col("doc_id").as("vec_id")), "vec_id")
-    val dropSem = Similarity.semDedup(survEmb, semTau,
+    val dropSem = Similarity.semDedup(survEmb, SemTau,
         Similarity.clustersFor(survEmb.count()))
       .filter(!col("keep")).select(col("vec_id").as("doc_id"))
     val pruned = deduped.join(dropSem, Seq("doc_id"), "left_anti")
@@ -168,11 +150,8 @@ object Curate {
     val evalPred = pmod(col("doc_id"), lit(10)) === 0
     val evalDocs = docs.filter(evalPred)
     val trainSide = pruned.filter(!evalPred)
-    val screened =
-      if (bloomScreen)
-        Decontamination.screenBloomDocs(trainSide, evalDocs, n = 5, minHits = 1)
-      else Decontamination.screenDocs(trainSide, evalDocs, n = 5, minHits = 1)
-    val contaminated = screened
+    val contaminated = Decontamination
+      .screenDocs(trainSide, evalDocs, n = 5, minHits = 1)
       .filter(col("contaminated")).select("doc_id")
     val train = trainSide.join(contaminated, Seq("doc_id"), "left_anti")
 
@@ -213,7 +192,7 @@ object Curate {
     val routed = weighted.join(tailDrop, Seq("doc_id"), "left_anti")
 
     // 8. deterministic sample (reproducible across reruns)
-    val sampled = Sampling.sample(routed, col("doc_id"), "curate:", sampleRate)
+    val sampled = Sampling.sample(routed, col("doc_id"), "curate:", SampleRate)
 
     // 9. chunk into training windows, pack into fixed-length sequences,
     // write the partitioned corpus
@@ -286,17 +265,7 @@ object Curate {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_curate"
     val spark = GraftSession.local(GraftSession.cpus)
-    // SPARK_GRAFT_GOPHER_FULL=1 turns on the strict Table-A1 repetition
-    // mode from the CLI (same default-off contract as the run() param)
-    val f = run(spark, sfDir, outDir,
-      gopherFull = sys.env.get("SPARK_GRAFT_GOPHER_FULL").contains("1"))
-    println(s"""{"input":${f.input},"blocklist":${f.blocklist},""" +
-      s""""quality":${f.quality},"rules":${f.rules},""" +
-      s""""repetition":${f.repetition},"dedup":${f.dedup},"semdedup":${f.semdedup},""" +
-      s""""decontaminated":${f.decontaminated},"fuzzy_clean":${f.fuzzyClean},""" +
-      s""""dsir":${f.dsir},"ccnet":${f.ccnet},"sampled":${f.sampled},""" +
-      s""""chunks":${f.chunks},"seqs":${f.seqs},""" +
-      s""""merges":${f.merges},"vocab":${f.vocab},"shards":${f.shards}}""")
+    println(run(spark, sfDir, outDir)._1.json)
     spark.stop()
   }
 }

@@ -7,7 +7,7 @@ package graft
   * shapes — so this runs the whole pipeline at the base SF and at a
   * synthesized `copies`× SF and reports per-stage wall-time ratios.
   *
-  * Stage times come from [[Curate.runTimed]]: cumulative-through-stage at
+  * Stage times come from [[Curate.run]]: cumulative-through-stage at
   * the counts (the pipeline is one lazy plan), so the reported per-stage
   * ratio is the ratio of adjacent-count DELTAS — the recompute prefix is
   * identical on both sides and cancels. A stage whose delta-ratio exceeds
@@ -37,7 +37,7 @@ object CurateTrend {
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def once(dir: String, out: String): (Curate.Funnel, Vector[(String, Double)], Double) = {
       val s = System.nanoTime()
-      val (fn, times) = Curate.runTimed(spark, dir, out)
+      val (fn, times) = Curate.run(spark, dir, out)
       (fn, times, (System.nanoTime() - s) / 1e9)
     }
     // warm scan paths so neither side pays first-read costs, then measure
@@ -63,20 +63,13 @@ object CurateTrend {
     val stageJson = ratios.map { case (st, b, s, r) =>
       s""""$st":{"base_sec":${f3(b)},"scaled_sec":${f3(s)},"per_sf_ratio":${f3(r)}}"""
     }.mkString("{", ",", "}")
-    def funnelJson(f: Curate.Funnel): String =
-      s"""{"input":${f.input},"blocklist":${f.blocklist},""" +
-        s""""quality":${f.quality},"rules":${f.rules},""" +
-        s""""repetition":${f.repetition},"dedup":${f.dedup},"semdedup":${f.semdedup},""" +
-        s""""decontaminated":${f.decontaminated},"fuzzy_clean":${f.fuzzyClean},""" +
-        s""""dsir":${f.dsir},"ccnet":${f.ccnet},"sampled":${f.sampled},"chunks":${f.chunks},""" +
-        s""""seqs":${f.seqs},"merges":${f.merges},"vocab":${f.vocab},"shards":${f.shards}}"""
     val worst = ratios.map(_._4).maxOption.getOrElse(0.0)
     val json =
       s"""{"metric":"curate_per_sf_ratio_max","value":${f3(worst)},"unit":"x",""" +
         s""""base":"$baseDir","copies":$copies,""" +
         s""""wall_base_sec":${f3(wb)},"wall_scaled_sec":${f3(ws)},""" +
         s""""wall_per_sf_ratio":${f3(ws / (copies * wb))},""" +
-        s""""funnel_base":${funnelJson(fb)},"funnel_scaled":${funnelJson(fs)},""" +
+        s""""funnel_base":${fb.json},"funnel_scaled":${fs.json},""" +
         s""""stages":$stageJson}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_TREND_OUT", "plans/curate_trend.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")

@@ -73,21 +73,6 @@ object Decontamination {
     val evalGrams = idx.join(evalIds, "doc_id").select(col("h")).distinct()
       .materialize // two consumers: bloom build + exact recheck
     val trainIdx = idx.join(evalIds, Seq("doc_id"), "left_anti")
-    screenBloomAgainst(trainIdx, evalGrams, minHits, numBits, k)
-  }
-
-  /** Two-frame variant of [[screenBloom]] — same composed-pipeline
-    * rationale as [[screenDocs]], same bit-exactness contract vs the
-    * exact screen (CurateSpec pins the funnel unchanged under it). */
-  def screenBloomDocs(trainDocs: DataFrame, evalDocs: DataFrame, n: Int,
-      minHits: Int, numBits: Int = 1 << 20, k: Int = 5): DataFrame =
-    screenBloomAgainst(Dedup.shingleIndex(trainDocs, n),
-      Dedup.shingleIndex(evalDocs, n).select(col("h")).distinct()
-        .materialize, // two consumers: bloom build + exact recheck
-      minHits, numBits, k)
-
-  private def screenBloomAgainst(trainIdx: DataFrame, evalGrams: DataFrame,
-      minHits: Int, numBits: Int, k: Int): DataFrame = {
     val bf = evalGrams.agg(graft.functions.BloomSet
       .bloomAgg(col("h"), numBits, k).as("bf"))
     val candidates = trainIdx.crossJoin(broadcast(bf))

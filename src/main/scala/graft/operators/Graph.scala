@@ -128,19 +128,6 @@ object Graph {
     }
   }
 
-  /** Exact triangle count (plus node/edge/wedge totals and the global
-    * clustering coefficient) over an undirected edge list.
-    *
-    * Scale design: the classic degree-orientation algorithm. Each edge is
-    * oriented from its (degree, id)-smaller endpoint to the larger one,
-    * turning the graph into a DAG in which every triangle appears as
-    * exactly one directed wedge u→v, v→w closed by u→w. The wedge join's
-    * cost is Σ_v out(v)·in(v), which degree orientation bounds by
-    * O(m^1.5) regardless of skew — orienting by raw id instead would let
-    * one low-id hub contribute deg² wedges (the star-graph blowup). All
-    * three joins are keyed equi-joins; counts are exact integer math.
-    * Output is one row: n_nodes, n_edges, n_wedges, n_triangles,
-    * clustering = 3·triangles/wedges (4-dp). */
   /** Synchronous label propagation (community detection): every node
     * starts labeled with its own id; each round it adopts the most
     * frequent label among its NEIGHBORS' previous-round labels, ties
@@ -247,6 +234,19 @@ object Graph {
       .agg(count(lit(1)).cast("long").as("core_deg"))
   }
 
+  /** Exact triangle count (plus node/edge/wedge totals and the global
+    * clustering coefficient) over an undirected edge list.
+    *
+    * Scale design: the classic degree-orientation algorithm. Each edge is
+    * oriented from its (degree, id)-smaller endpoint to the larger one,
+    * turning the graph into a DAG in which every triangle appears as
+    * exactly one directed wedge u→v, v→w closed by u→w. The wedge join's
+    * cost is Σ_v out(v)·in(v), which degree orientation bounds by
+    * O(m^1.5) regardless of skew — orienting by raw id instead would let
+    * one low-id hub contribute deg² wedges (the star-graph blowup). All
+    * three joins are keyed equi-joins; counts are exact integer math.
+    * Output is one row: n_nodes, n_edges, n_wedges, n_triangles,
+    * clustering = 3·triangles/wedges (4-dp). */
   def triangles(edges: DataFrame): DataFrame = {
     val und = edges
       .select(least(col("src"), col("dst")).as("a"),

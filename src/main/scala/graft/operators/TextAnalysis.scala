@@ -513,18 +513,15 @@ object TextAnalysis {
     * are NOT unconditionally broadcast: on a web-scale training corpus
     * the bigram/trigram tables are billions of rows, and a hard
     * `broadcast()` hint would OOM every executor instead of degrading.
-    * Default (`broadcastDims = false`) leaves them as keyed equi-joins
-    * and lets AQE's runtime size check convert each join to broadcast
-    * when the actual gram table is small — the auto path at any scale.
-    * Pass `broadcastDims = true` only for a corpus known to be
-    * vocabulary-bounded. N is a one-row aggregate read (bounded scalar
-    * probe, same pattern as the PageRank convergence probe). Arithmetic
-    * is mirrored op-for-op in the DuckDB oracle with explicit DOUBLE
-    * casts; per-gram NLLs are 4dp-quantized to integers BEFORE the
-    * per-doc sum so the aggregation order can't move the result. */
+    * They stay keyed equi-joins, and AQE's runtime size check converts
+    * each join to broadcast when the actual gram table is small. N is a
+    * one-row aggregate read (bounded scalar probe, same pattern as the
+    * PageRank convergence probe). Arithmetic is mirrored op-for-op in
+    * the DuckDB oracle with explicit DOUBLE casts; per-gram NLLs are
+    * 4dp-quantized to integers BEFORE the per-doc sum so the aggregation
+    * order can't move the result. */
   def backoffLm(train: DataFrame, score: DataFrame, minCount: Long = 1L,
-      alpha: Double = 0.4, unseenP: Double = 0.0001,
-      broadcastDims: Boolean = false): DataFrame = {
+      alpha: Double = 0.4, unseenP: Double = 0.0001): DataFrame = {
     import graft.operators.Materialize.MatOps
     // ONE fused unigram+bigram+trigram count pass (optimization r18,
     // guide §1.2 step 1 / §2.3): the three model tables previously each
@@ -559,13 +556,12 @@ object TextAnalysis {
         concat_ws(" ", element_at(col("parts"), 2), element_at(col("parts"), 3)).as("g2"),
         element_at(col("parts"), 2).as("w2"),
         element_at(col("parts"), 3).as("w3"))
-    val dim = (df: DataFrame) => if (broadcastDims) broadcast(df) else df
     val joined = tris
-      .join(dim(tri.select(col("g").as("g3"), col("n3"))), Seq("g3"), "left")
-      .join(dim(bi.select(col("g").as("ctx2"), col("n2").as("nctx"))), Seq("ctx2"), "left")
-      .join(dim(bi.select(col("g").as("g2"), col("n2").as("n2g"))), Seq("g2"), "left")
-      .join(dim(uni.select(col("w").as("w2"), col("n1").as("n1w2"))), Seq("w2"), "left")
-      .join(dim(uni.select(col("w").as("w3"), col("n1").as("n1w3"))), Seq("w3"), "left")
+      .join(tri.select(col("g").as("g3"), col("n3")), Seq("g3"), "left")
+      .join(bi.select(col("g").as("ctx2"), col("n2").as("nctx")), Seq("ctx2"), "left")
+      .join(bi.select(col("g").as("g2"), col("n2").as("n2g")), Seq("g2"), "left")
+      .join(uni.select(col("w").as("w2"), col("n1").as("n1w2")), Seq("w2"), "left")
+      .join(uni.select(col("w").as("w3"), col("n1").as("n1w3")), Seq("w3"), "left")
       .crossJoin(broadcast(nTotalRow))
     // a seen trigram implies its context bigram was seen (same corpus),
     // and a seen bigram implies its first word was — the CASE arms only

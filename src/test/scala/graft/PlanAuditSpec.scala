@@ -63,16 +63,32 @@ class PlanAuditSpec extends AnyFunSuite {
     "q_mix_plan",
     "q_ccnet_buckets") // one-row tercile-threshold broadcast (qualityDeciles idiom)
 
+  /** What the two registry audits read from one query's sparkPlan. */
+  private final case class PlanFindings(cartesian: Boolean, bnlj: Boolean,
+      unpartitionedWindows: Int)
+
+  /** Every SparkEntry query's findings at sf0.001, from ONE registry pass
+    * shared by both audits. Building a plan runs the query's construction
+    * jobs, so a second pass would pay them all again. Only the findings
+    * are kept: holding the plans would pin every localCheckpointed block
+    * they reference. */
+  private lazy val findings: Seq[(String, PlanFindings)] = {
+    import org.apache.spark.sql.execution.window.WindowExec
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val plan = fn(spark, "/root/testdata/sf0.001").queryExecution.sparkPlan
+      val text = plan.toString
+      name -> PlanFindings(text.contains("CartesianProduct"),
+        text.contains("BroadcastNestedLoopJoin"),
+        plan.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }.size)
+    }
+  }
+
   test("no shipped query plans a cartesian or an unexpected nested-loop join") {
-    val dir = "/root/testdata/sf0.001"
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.sparkPlan.toString
-        val cart = plan.contains("CartesianProduct")
-        val bnlj = plan.contains("BroadcastNestedLoopJoin") && !bnljAllowed(name)
-        if (cart || bnlj)
-          Some(s"$name: ${if (cart) "CartesianProduct" else "BroadcastNestedLoopJoin"}")
-        else None
+    val offenders = findings.flatMap { case (name, f) =>
+      val bnlj = f.bnlj && !bnljAllowed(name)
+      if (f.cartesian || bnlj)
+        Some(s"$name: ${if (f.cartesian) "CartesianProduct" else "BroadcastNestedLoopJoin"}")
+      else None
     }
     assert(offenders.isEmpty, s"unkeyed joins in: ${offenders.mkString("; ")}")
   }
@@ -94,15 +110,10 @@ class PlanAuditSpec extends AnyFunSuite {
       "q_shards_stratified", "q_nb_margin")
 
   test("no shipped query windows over an unpartitioned frame") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    val dir = "/root/testdata/sf0.001"
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val bad = fn(spark, dir).queryExecution.sparkPlan.collect {
-          case w: WindowExec if w.partitionSpec.isEmpty => w
-        }
-        if (bad.nonEmpty && !globalWindowAllowed(name))
-          Some(s"$name: ${bad.size} unpartitioned Window(s)") else None
+    val offenders = findings.flatMap { case (name, f) =>
+      if (f.unpartitionedWindows > 0 && !globalWindowAllowed(name))
+        Some(s"$name: ${f.unpartitionedWindows} unpartitioned Window(s)")
+      else None
     }
     assert(offenders.isEmpty,
       s"single-partition windows in: ${offenders.mkString("; ")}")
