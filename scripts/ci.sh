@@ -122,6 +122,13 @@ fi
 echo "== sbt Test/compile =="
 sbt -batch Test/compile
 
+echo "== benchmark harness compiles against the library =="
+# perfbench/harness builds the library from this checkout and calls
+# StreamIngest.fromRaw/rocksdbConf, IdempotentSink.append, TableSetup.* and
+# JdbcInsertIgnoreSink.foreachBatchWriter; a renamed or re-typed signature
+# must fail here, not in a benchmark run.
+(cd perfbench/harness && sbt -batch compile)
+
 echo "== sbt test =="
 SBT_TEST_LOG=$(mktemp /tmp/graft_ci_sbt_test.XXXXXX)
 trap 'rm -f "$SBT_TEST_LOG"' EXIT

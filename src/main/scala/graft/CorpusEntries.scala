@@ -515,20 +515,18 @@ object CorpusEntries {
     * in-process merge loop; the learned merge table is the artifact a
     * tokenizer ships. */
   private def qBpeTrain(s: SparkSession, dir: String): DataFrame =
-    operators.Bpe.trainMerges(Tables.documents(s, dir), BpeIters)
+    operators.Bpe.fit(Tables.documents(s, dir), BpeIters).table
 
   /** The corpus tokenized with the learned merges: exact per-subword
     * counts (the subword-vocabulary view). */
-  private def qBpeEncode(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    operators.Bpe.encode(docs, operators.Bpe.trainMerges(docs, BpeIters))
-  }
+  private def qBpeEncode(s: SparkSession, dir: String): DataFrame =
+    operators.Bpe.fit(Tables.documents(s, dir), BpeIters).encode
 
   /** Tokenizer fertility report per (source, lang) under the trained
     * merge table — measures ENCODING-side tokenizer quality. */
   private def qBpeFertility(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    operators.Bpe.fertility(docs, operators.Bpe.trainMerges(docs, BpeIters))
+    operators.Bpe.fit(docs, BpeIters).fertility(docs)
   }
 
   /** Unigram-LM parameters shared by the q_unigram pair's queries and
@@ -541,22 +539,18 @@ object CorpusEntries {
   /** Unigram-LM tokenizer training ([[operators.Unigram]]): seed + two
     * hard-EM Viterbi/prune rounds. */
   private def qUnigramTrain(s: SparkSession, dir: String): DataFrame =
-    operators.Unigram.train(Tables.documents(s, dir), UnigramSeedMulti, UnigramKeep)
+    operators.Unigram.fit(Tables.documents(s, dir), UnigramSeedMulti, UnigramKeep).table
 
   /** The corpus Viterbi-tokenized with the learned unigram table: exact
     * per-piece counts (the subword-vocabulary view, like q_bpe_encode). */
-  private def qUnigramEncode(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    operators.Unigram.encode(docs,
-      operators.Unigram.train(docs, UnigramSeedMulti, UnigramKeep))
-  }
+  private def qUnigramEncode(s: SparkSession, dir: String): DataFrame =
+    operators.Unigram.fit(Tables.documents(s, dir), UnigramSeedMulti, UnigramKeep).encode
 
   /** Unigram-tokenizer fertility per (source, lang) — the q_bpe_fertility
     * disparity report over the Viterbi segmentation. */
   private def qUnigramFertility(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    operators.Unigram.fertility(docs,
-      operators.Unigram.train(docs, UnigramSeedMulti, UnigramKeep))
+    operators.Unigram.fit(docs, UnigramSeedMulti, UnigramKeep).fertility(docs)
   }
 
   // ---------------------------------------------------------------- oracle
@@ -652,7 +646,7 @@ object CorpusEntries {
        |  coalesce(n_eval_hits, 0) >= $DecontamMinHits AS contaminated
        |FROM sz LEFT JOIN hits ON hits.doc_id = sz.doc_id""".stripMargin
 
-  /** BPE oracle CTE chain (mirrors Bpe.trainMerges exactly): bracketed
+  /** BPE oracle CTE chain (mirrors Bpe.fit exactly): bracketed
     * symbol strings, greedy merge via plain `replace`, best pair by
     * (count DESC, left, right). `d$i` is the dictionary after merge i —
     * declared AS MATERIALIZED because each d is referenced twice (next
@@ -694,7 +688,7 @@ object CorpusEntries {
        |${(1 to BpeIters).map(layer).mkString(",\n")}""".stripMargin
   }
 
-  /** Unigram-LM oracle CTE chain (mirrors Unigram.train step for step):
+  /** Unigram-LM oracle CTE chain (mirrors Unigram.fit step for step):
     * word dict with the MaxWordLen filter, substring-seeded vocabulary,
     * then per EM round one UNROLLED Viterbi DP (one cumulative layer per
     * word position, ≤ MaxWordLen of them; ties broken (score DESC, split

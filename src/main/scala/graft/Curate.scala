@@ -207,12 +207,11 @@ object Curate {
     // surviving corpus (training the tokenizer on pre-curation text
     // would bake duplicated/contaminated n-grams into the vocabulary),
     // plus the exact subword vocabulary with corpus counts
-    val merges = t("bpe_train")(Bpe.trainMerges(sampled, iters = 32))
+    val bpe = t("bpe_train")(Bpe.fit(sampled, iters = 32))
     t("write_merges")(
-      merges.write.mode("overwrite").parquet(s"$outDir/tokenizer/merges"))
-    val vocab = Bpe.encode(sampled, merges)
+      bpe.table.write.mode("overwrite").parquet(s"$outDir/tokenizer/merges"))
     t("write_vocab")(
-      vocab.write.mode("overwrite").parquet(s"$outDir/tokenizer/vocab"))
+      bpe.encode.write.mode("overwrite").parquet(s"$outDir/tokenizer/vocab"))
 
     // 11. shard layout: seeded global shuffle of the PACKED SEQUENCES into
     // fixed-size shards — the training-loader handoff (reproducible random

@@ -2,14 +2,14 @@ package graft
 
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{ListenerBusDrain, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Sums shuffle-write bytes/records across completed stages — the number
   * scale work cares about (it is what a bloom prescreen or a broadcast
   * flip actually removes). Register once per session; [[delta]] brackets
-  * a measured action. Listener events are async and the bus is private,
-  * so reads poll until the adders stabilize (bounded). */
+  * a measured action. Listener events are async, so reads first drain the
+  * listener bus. */
 final class ShuffleMeter(sc: SparkContext) {
   private val bytes = new LongAdder
   private val records = new LongAdder
@@ -20,32 +20,12 @@ final class ShuffleMeter(sc: SparkContext) {
     }
   })
 
-  /** Wait until the listener bus stops moving the adders. `drain` forces
-    * at least one poll sleep — required AFTER an action, when the
-    * stage-completed events are still in flight. Without it an
-    * already-stable meter returns immediately, so the leading settle of
-    * [[delta]] no longer charges a constant ~200 ms sleep to the
-    * caller's timed window (each trailing settle drains fully, so the
-    * bus is idle by the next leading edge). */
-  private def settle(drain: Boolean): Unit = {
-    var last = bytes.sum()
-    var moving = drain
-    var spins = 0
-    while (moving && spins < 25) {
-      Thread.sleep(200)
-      val now = bytes.sum()
-      moving = now != last
-      last = now
-      spins += 1
-    }
-  }
-
   /** (bytes, records) shuffled while running `a`. */
   def delta[A](a: => A): (Long, Long, A) = {
-    settle(drain = false)
+    ListenerBusDrain.drain(sc)
     val b0 = bytes.sum(); val r0 = records.sum()
     val out = a
-    settle(drain = true)
+    ListenerBusDrain.drain(sc)
     (bytes.sum() - b0, records.sum() - r0, out)
   }
 }

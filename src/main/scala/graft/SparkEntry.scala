@@ -183,7 +183,8 @@ object SparkEntry {
     * different computation) are replayed as Kafka-shaped JSON through the
     * REAL streaming pipeline — file-source micro-batches → parse →
     * watermarked replay-dedup → transformWithState on RocksDB → the
-    * first-write-wins `IdempotentSink`, as StreamRunner lands it — and the
+    * first-write-wins `IdempotentSink`, the `StreamIngest.startSink` query
+    * StreamRunner runs — and the
     * SUNK TABLE is what the oracle hash-checks against the batch indicator
     * SQL. Stream == batch parity was spec-proven (StreamingSpec); this
     * makes it a gated, oracle-checked query. */
@@ -201,14 +202,7 @@ object SparkEntry {
     // three time-range replay micro-batches (per-symbol time order is
     // preserved because the split is by time) — shared feed machinery
     graft.streaming.Feeder.replay(ticks, "ms", work) { feed =>
-      graft.streaming.StreamIngest.fromRaw(feed())
-        .select(col("row.*"), col("seq"))
-        .writeStream
-        .option("checkpointLocation", s"$work/ckpt")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.sinks.IdempotentSink.append(batch, s"$work/out", Seq("time", "symbol"), "seq")
-        }
-        .start()
+      graft.streaming.StreamIngest.startSink(feed(), s"$work/out", s"$work/ckpt")
     }
     roundIndicators(s.read.parquet(s"$work/out"))
       .select(graft.model.Model.DbColumns.map(col): _*)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * DICTIONARY, not the raw corpus — the only corpus-sized pass is one
   * distributed word count, collected once; the merge loop then runs
   * in-process on that vocabulary-sized dictionary, with no Spark job per
-  * merge.
+  * merge, and encoding applies the merges to the same held dictionary.
   *
   * Determinism contract (mirrored in the DuckDB oracle):
   *  - a word starts as its code points;
@@ -24,9 +24,6 @@ import org.apache.spark.sql.DataFrame
   *  - counts are exact integer sums of word frequencies.
   */
 object Bpe {
-
-  private def wordDict(docs: DataFrame): DataFrame =
-    Subword.wordCounts(docs, Subword.isWord)
 
   /** Every adjacent (a, b) in `syms`, leftmost first, fused to a+b. */
   private def mergePair(syms: Array[String], a: String, b: String): Array[String] = {
@@ -70,48 +67,24 @@ object Bpe {
     out.result()
   }
 
-  /** Learned merge table: (iter 1.., left_sym, right_sym, merged,
-    * pair_count) — up to `iters` rows, the artifact a tokenizer ships.
-    * Stops early (returning the merges learned so far) if the dictionary
-    * runs out of mergeable pairs — a tiny corpus can reduce every word
-    * to a single symbol before `iters` is reached. */
-  def trainMerges(docs: DataFrame, iters: Int): DataFrame = {
+  /** Fit `iters` merges. The fitted table is the learned merge table:
+    * (iter 1.., left_sym, right_sym, merged, pair_count) — up to `iters`
+    * rows, the artifact a tokenizer ships. Stops early (returning the
+    * merges learned so far) if the dictionary runs out of mergeable pairs
+    * — a tiny corpus can reduce every word to a single symbol before
+    * `iters` is reached. A word's pieces are its code points with the
+    * merges applied in training order. */
+  def fit(docs: DataFrame, iters: Int): Subword.Tokenizer = {
     require(iters >= 1, "iters must be >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    greedy(Subword.collectDict(wordDict(docs)).toSeq, iters).zipWithIndex
+    val dict = Subword.collectDict(docs, Subword.isWord)
+    val merges = greedy(dict, iters)
+    val table = merges.zipWithIndex
       .map { case ((a, b, pc), i) => (i + 1L, a, b, a + b, pc) }
       .toDF("iter", "left_sym", "right_sym", "merged", "pair_count")
+    Subword.Tokenizer(table, dict, w =>
+      merges.foldLeft(Subword.codePoints(w)) { case (s, (a, b, _)) => mergePair(s, a, b) }
+        .toSeq)
   }
-
-  /** The merge table's (left, right) pairs in training order. */
-  private def mergeList(merges: DataFrame): Array[(String, String)] =
-    merges.select("iter", "left_sym", "right_sym").collect() // tiny
-      .sortBy(_.getLong(0)).map(r => (r.getString(1), r.getString(2)))
-
-  /** A word's pieces under a merge list applied in training order. */
-  private def pieces(word: String, ms: Array[(String, String)]): Seq[String] =
-    ms.foldLeft(Subword.codePoints(word)) { case (s, (a, b)) => mergePair(s, a, b) }
-      .toSeq
-
-  /** Tokenize with a learned merge table: apply the merges in training
-    * order to each DISTINCT word (dictionary-sized work, like training),
-    * then report exact per-token corpus counts — the "how would the
-    * corpus tokenize" view, and the subword-vocabulary artifact. */
-  def encode(docs: DataFrame, merges: DataFrame): DataFrame =
-    Subword.encode(wordDict(docs), mergeList(merges))(pieces)
-
-  /** Per-word subword piece counts under a trained merge table:
-    * (word, n_pieces). Dictionary-sized output. */
-  def wordPieces(docs: DataFrame, merges: DataFrame): DataFrame =
-    Subword.wordPieces(wordDict(docs), mergeList(merges))(pieces)
-
-  /** Tokenizer FERTILITY report per (source, lang) stratum — the standard
-    * post-training eval of a subword tokenizer (how many pieces a word
-    * costs, and how many characters a piece buys, per language/domain):
-    * multilingual corpora surface fertility DISPARITY here (strata the
-    * merges under-served tokenize long), which is exactly what this
-    * report exists to catch before a tokenizer ships. */
-  def fertility(docs: DataFrame, merges: DataFrame): DataFrame =
-    Subword.fertilityReport(docs, wordPieces(docs, merges))
 }

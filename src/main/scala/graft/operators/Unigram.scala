@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
   * corpus-sized pass is the distributed word count, collected once;
   * seeding and every EM round run in-process on that dictionary (a
   * tokenizer vocabulary is driver-sized by definition, 32k pieces at
-  * deployment), and encoding is one distributed per-word Viterbi pass
-  * with the vocabulary broadcast.
+  * deployment), and encoding Viterbi-segments the same held dictionary.
   *
   * Determinism contract (mirrored in the oracle):
   *  - words: whitespace tokens, 0 < length ≤ [[MaxWordLen]], bracket
@@ -50,10 +49,6 @@ object Unigram {
     * quantized log-probability. */
   final case class Piece(piece: String, n_uses: Long, logp_q: Long)
 
-  /** (word, cnt) dictionary — the only corpus-sized pass. */
-  private def wordDict(docs: DataFrame): DataFrame =
-    Subword.wordCounts(docs, w => Subword.isWord(w) && length(w) <= MaxWordLen)
-
   /** floor(ln(c / Σc) · 10⁴ + 0.5) per piece — exact int64 scores. */
   private def logq(vocab: Seq[(String, Long)]): Map[String, Long] = {
     val total = vocab.map(_._2).sum.toDouble
@@ -65,8 +60,9 @@ object Unigram {
   /** Exact Viterbi over one word's code points: max Σ lq, ties →
     * smallest split i (iterating i ascending with a strict `>` keeps the
     * first winner). Reachability is guaranteed by single-char coverage; a
-    * char outside the vocabulary (impossible in train/encode over the
-    * same corpus) fails loudly rather than silently skipping the word. */
+    * char outside the vocabulary (impossible in a fit, which segments
+    * only its own dictionary) fails loudly rather than silently skipping
+    * the word. */
   private[graft] def viterbiPieces(word: String,
       lq: collection.Map[String, Long]): Seq[String] = {
     val cps = Subword.codePoints(word)
@@ -94,18 +90,11 @@ object Unigram {
     require(sc(n) != Long.MinValue,
       s"Unigram.viterbi: word '$word' not coverable — a character is " +
         "missing from the vocabulary (single-char pieces are never pruned, " +
-        "so this means encode ran against a foreign corpus)")
+        "so these scores were fitted on another corpus)")
     val rev = collection.mutable.ArrayBuffer.empty[String]
     var p = n
     while (p > 0) { rev += piece(back(p), p); p = back(p) }
     rev.reverse.toList
-  }
-
-  /** Σ cnt per key over (key, cnt) pairs. */
-  private def sumBy(kv: Iterator[(String, Long)]): Map[String, Long] = {
-    val m = collection.mutable.HashMap.empty[String, Long]
-    kv.foreach { case (k, c) => m(k) = m.getOrElse(k, 0L) + c }
-    m.toMap.withDefaultValue(0L)
   }
 
   private def isChar(p: String): Boolean = p.codePointCount(0, p.length) == 1
@@ -117,23 +106,26 @@ object Unigram {
         .on[(String, Long)] { case (p, u) => (-u, p) })
       .take(k)
 
-  /** Train: seed → `keep.size` hard-EM iterations, pruning the multi-char
-    * vocabulary to keep(t) pieces each round. Returns one row per final
-    * piece: (piece, n_uses, logp_q). Work shape: 1 corpus pass, collected
-    * once; the seed weights and every EM round run in-process on that
+  /** Fit: seed → `keep.size` hard-EM iterations, pruning the multi-char
+    * vocabulary to keep(t) pieces each round. The fitted table has one
+    * row per final piece: (piece, n_uses, logp_q); a word's pieces are its
+    * [[viterbiPieces]] under those scores. Words over [[MaxWordLen]] are
+    * excluded by the dictionary contract, so the tokenizer has no defined
+    * segmentation for them. Work shape: 1 corpus pass, collected once;
+    * the seed weights and every EM round run in-process on that
     * dictionary. */
-  def train(docs: DataFrame, seedMulti: Int, keep: Seq[Int]): DataFrame = {
+  def fit(docs: DataFrame, seedMulti: Int, keep: Seq[Int]): Subword.Tokenizer = {
     // zero EM rounds would leave lastUsage empty and die at lastUsage(p)
     // with an opaque NoSuchElementException — fail like the other
     // misconfigurations do (empty corpus, uncoverable word): loudly
     require(keep.nonEmpty,
-      "Unigram.train: keep must name at least one EM round " +
+      "Unigram.fit: keep must name at least one EM round " +
         "(each entry is that round's multi-char vocabulary size)")
     val spark = docs.sparkSession
     import spark.implicits._
-    val wd = Subword.collectDict(wordDict(docs))
+    val wd = Subword.collectDict(docs, w => Subword.isWord(w) && length(w) <= MaxWordLen)
     // seed weights: every substring of length 1..MaxPiece, Σ cnt × multiplicity
-    val seed = sumBy(wd.iterator.flatMap { case (w, c) =>
+    val seed = Subword.sumBy(wd.iterator.flatMap { case (w, c) =>
       val cps = Subword.codePoints(w)
       for (i <- cps.indices.iterator; l <- 1 to math.min(MaxPiece, cps.length - i))
         yield (cps.slice(i, i + l).mkString, c)
@@ -144,7 +136,7 @@ object Unigram {
     // (wrong column, over-aggressive MaxWordLen); fail loudly rather
     // than shipping an empty vocabulary that encode would then apply
     require(chars.nonEmpty,
-      "Unigram.train: no words survive the dictionary filters " +
+      "Unigram.fit: no words survive the dictionary filters " +
         s"(0 < length <= $MaxWordLen, no bracket control chars) — " +
         "empty corpus or misconfigured input column")
 
@@ -152,7 +144,7 @@ object Unigram {
     var lastUsage: Map[String, Long] = Map.empty
     keep.foreach { k =>
       val lq = logq(vocab)
-      val usage = sumBy(wd.iterator.flatMap { case (w, c) =>
+      val usage = Subword.sumBy(wd.iterator.flatMap { case (w, c) =>
         viterbiPieces(w, lq).map(p => (p, c)) })
       val multiKept = topMulti(usage, k)
       lastUsage = chars.map(c => c -> usage(c)).toMap ++ multiKept
@@ -160,36 +152,8 @@ object Unigram {
         multiKept.map { case (p, u) => (p, u + 1L) }
     }
     val lqF = logq(vocab)
-    vocab.map { case (p, _) => Piece(p, lastUsage(p), lqF(p)) }
+    val table = vocab.map { case (p, _) => Piece(p, lastUsage(p), lqF(p)) }
       .toDF("piece", "n_uses", "logp_q")
+    Subword.Tokenizer(table, wd, viterbiPieces(_, lqF))
   }
-
-  /** The trained table's piece scores, for [[viterbiPieces]]. */
-  private def scores(trained: DataFrame): Map[String, Long] =
-    trained.select("piece", "logp_q").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-
-  /** Encode the corpus with a trained table: Viterbi-segment every
-    * DISTINCT word (dictionary-sized, like [[Bpe.encode]]) and report
-    * exact per-piece corpus counts — the subword-vocabulary view. */
-  def encode(docs: DataFrame, trained: DataFrame): DataFrame =
-    Subword.encode(wordDict(docs), scores(trained))(viterbiPieces)
-
-  /** Per-word Viterbi piece counts under a trained table:
-    * (word, n_pieces). Dictionary-sized output — the Unigram analogue of
-    * [[Bpe.wordPieces]]. Words over [[MaxWordLen]] are excluded by the
-    * dictionary contract (they are excluded from training too, so the
-    * tokenizer has no defined segmentation for them). */
-  def wordPieces(docs: DataFrame, trained: DataFrame): DataFrame =
-    Subword.wordPieces(wordDict(docs), scores(trained))(viterbiPieces)
-
-  /** Tokenizer fertility report per (source, lang) stratum for the
-    * Unigram tokenizer — the same disparity signal as [[Bpe.fertility]]
-    * (how many pieces a word costs, how many characters a piece buys,
-    * per language/domain) computed from the Viterbi segmentation, so the
-    * two trainable tokenizers can be compared on equal footing before
-    * one ships. Same scale shape: dictionary-sized piece table,
-    * word-keyed equi-join against one corpus explode. */
-  def fertility(docs: DataFrame, trained: DataFrame): DataFrame =
-    Subword.fertilityReport(docs, wordPieces(docs, trained))
 }

@@ -2,10 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.model.Model
 import graft.model.Model.IndicatorRow
+import graft.sinks.IdempotentSink
 
 /** The streaming query (SURVEY §3.2): Kafka-shaped JSON ticks → per-symbol
   * bounded state → per-tick indicator rows.
@@ -160,4 +161,19 @@ object StreamIngest {
     * layer). */
   def fromRaw(raw: DataFrame): Dataset[SeqRow] =
     pipeline(dedupWithinWatermark(parse(raw)))
+
+  /** The paper's tick-to-sink stream, started: [[fromRaw]] over `raw`,
+    * each micro-batch's indicator rows appended to the parquet sink at
+    * `sinkPath` first-write-wins on (time, symbol), earliest `seq` first
+    * (ST4), with its progress checkpointed at `checkpointPath`. */
+  def startSink(raw: DataFrame, sinkPath: String, checkpointPath: String): StreamingQuery =
+    fromRaw(raw)
+      .select(col("row.*"), col("seq"))
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointPath)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        IdempotentSink.append(batch, sinkPath, Seq("time", "symbol"), "seq")
+      }
+      .start()
 }

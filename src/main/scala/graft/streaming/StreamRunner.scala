@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-import graft.sinks.IdempotentSink
-
 /** End-to-end streaming demo without a broker:
   * `graft.streaming.StreamRunner <sfDir> <workDir>` — Feeder renders the
   * events table as JSON tick messages to `<workDir>/ticks`, a file-source
@@ -29,15 +27,7 @@ object StreamRunner {
       .option("maxFilesPerTrigger", "1")
       .text(s"$workDir/ticks")
 
-    val q = StreamIngest.fromRaw(raw)
-      .select(col("row.*"), col("seq"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$workDir/chk")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        IdempotentSink.append(batch, s"$workDir/out", Seq("time", "symbol"), "seq")
-      }
-      .start()
+    val q = StreamIngest.startSink(raw, s"$workDir/out", s"$workDir/chk")
     q.processAllAvailable()
     q.stop()
 

@@ -20,7 +20,7 @@ class BpeSpec extends AnyFunSuite {
     // aaab x3, ab x2: round 1 pairs (a,a)=6 vs (a,b)=5 -> merge aa;
     // round 2: (aa,a)=3, (a,b)=5 -> merge ab
     val docs = docsOf("aaab aaab aaab ab ab")
-    val m = Bpe.trainMerges(docs, 2).orderBy("iter").collect()
+    val m = Bpe.fit(docs, 2).table.orderBy("iter").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
     assert(m(0) == (1L, "a", "a", "aa", 6L))
     assert(m(1) == (2L, "a", "b", "ab", 5L))
@@ -30,7 +30,7 @@ class BpeSpec extends AnyFunSuite {
     // abab x2: (a,b) count 4 beats (b,a)=2 and aaa's (a,a)=2; the merge
     // turns EVERY abab into [ab][ab] (both occurrences, one pass)
     val docs = docsOf("abab abab aaa")
-    val enc = Bpe.encode(docs, Bpe.trainMerges(docs, 1))
+    val enc = Bpe.fit(docs, 1).encode
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(enc("ab") == 4L)
     assert(enc("a") == 3L) // aaa untouched by the (a,b) merge
@@ -40,15 +40,14 @@ class BpeSpec extends AnyFunSuite {
   test("overlapping runs resolve leftmost-greedy") {
     // aaa alone: merge (a,a) -> [aa][a], never [a][aa]
     val docs = docsOf("aaa")
-    val enc = Bpe.encode(docs, Bpe.trainMerges(docs, 1))
+    val enc = Bpe.fit(docs, 1).encode
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(enc == Map("aa" -> 1L, "a" -> 1L))
   }
 
   test("encode with zero-effect merges preserves character counts") {
     val docs = docsOf("abc abc xyz")
-    val merges = Bpe.trainMerges(docs, 1)
-    val enc = Bpe.encode(docs, merges)
+    val enc = Bpe.fit(docs, 1).encode
       .agg(sum(col("n") * length(col("token")))).head().getLong(0)
     // total characters are invariant under merging
     assert(enc == 3 + 3 + 3)
@@ -101,7 +100,7 @@ class BpeSpec extends AnyFunSuite {
       // "az" outsorts "c" at the tied count
       (Seq.fill(9)("azx") ++ Seq("az") ++ Seq.fill(9)("cd")).mkString(" "))
     for (c <- corpora; iters <- Seq(2, 3, 12, 30)) {
-      val got = Bpe.trainMerges(docsOf(c), iters).orderBy("iter").collect()
+      val got = Bpe.fit(docsOf(c), iters).table.orderBy("iter").collect()
         .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq
       val want = sequentialMerges(c, iters)
       assert(got == want, s"corpus '$c' iters=$iters")
@@ -116,11 +115,11 @@ class BpeSpec extends AnyFunSuite {
     // source file stays clean text.)
     val L = "\u0001"; val R = "\u0002"
     val dirty = docsOf("aaab aaab aaab ab ab", s"a${L}b c${R}d ${L}xy$R")
-    val m = Bpe.trainMerges(dirty, 2).orderBy("iter").collect()
+    val m = Bpe.fit(dirty, 2).table.orderBy("iter").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
     assert(m(0) == (1L, "a", "a", "aa", 6L))
     assert(m(1) == (2L, "a", "b", "ab", 5L))
-    val enc = Bpe.encode(dirty, Bpe.trainMerges(dirty, 2))
+    val enc = Bpe.fit(dirty, 2).encode
       .collect().map(r => r.getString(0)).toSet
     assert(!enc.exists(t => t.contains(L) || t.contains(R)))
   }
@@ -130,11 +129,11 @@ class BpeSpec extends AnyFunSuite {
     // never had a pair — asking for 10 merges must return the 1 learned,
     // not throw on the empty best-pair aggregate
     val docs = docsOf("a aa")
-    val m = Bpe.trainMerges(docs, 10).orderBy("iter").collect()
+    val m = Bpe.fit(docs, 10).table.orderBy("iter").collect()
       .map(r => (r.getLong(0), r.getString(3), r.getLong(4)))
     assert(m.toSeq == Seq((1L, "aa", 1L)))
     // and encode with the short table still tokenizes the corpus
-    val enc = Bpe.encode(docs, Bpe.trainMerges(docs, 10))
+    val enc = Bpe.fit(docs, 10).encode
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(enc == Map("a" -> 1L, "aa" -> 1L))
   }
@@ -143,27 +142,27 @@ class BpeSpec extends AnyFunSuite {
     // a corpus whose single 40-char word yields 39 distinct merges
     val word = ('a' to 'z').take(20).mkString + ('A' to 'Z').take(20).mkString
     val docs = docsOf(word)
-    val merges = Bpe.trainMerges(docs, 39)
-    assert(merges.count() == 39) // enough merges to collapse the word
-    val encoded = Bpe.encode(docs, merges)
+    val bpe = Bpe.fit(docs, 39)
+    assert(bpe.table.count() == 39) // enough merges to collapse the word
+    val encoded = bpe.encode
     // correctness: 39 merges collapse the 40-char word to one token
     val toks = encoded.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(toks == Map(word -> 1L))
-    // encode's plan does not grow with the merge count: the merge list
-    // is data (broadcast), not one plan expression per merge — the
+    // encode's plan does not grow with the merge count: the merges are
+    // applied in the driver, not one plan expression per merge — the
     // guarantee a 32k-merge vocabulary depends on
     def planSize(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.collect { case n =>
         1 + n.expressions.map(_.collect { case e => e }.size).sum
       }.sum
     assert(planSize(encoded) ==
-      planSize(Bpe.encode(docs, merges.filter(col("iter") === 1))))
+      planSize(Bpe.fit(docs, 1).encode))
   }
 
   test("tie on count breaks by (left, right) symbol order") {
     // two pairs with equal counts: (a,b) and (b,c) both appear once
     val docs = docsOf("abc")
-    val m = Bpe.trainMerges(docs, 1).head()
+    val m = Bpe.fit(docs, 1).table.head()
     assert((m.getString(1), m.getString(2), m.getLong(4)) == ("a", "b", 1L))
   }
 
@@ -174,7 +173,7 @@ class BpeSpec extends AnyFunSuite {
     // sequential greedy picks it SECOND. A batch that had accepted (x,z)
     // alongside the self-merge shipped a wrong merge order.
     val docs = docsOf(("aaaa " * 100) + ("xz " * 40) + ("uv " * 30))
-    val batched = Bpe.trainMerges(docs, 3).orderBy("iter").collect()
+    val batched = Bpe.fit(docs, 3).table.orderBy("iter").collect()
       .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq
     assert(batched == Seq(("a", "a", 300L), ("aa", "aa", 100L), ("x", "z", 40L)))
     assert(batched == sequentialMerges(("aaaa " * 100) + ("xz " * 40) + ("uv " * 30), 3))
@@ -191,14 +190,14 @@ class BpeSpec extends AnyFunSuite {
       s"$a$b " * (1200 / (i + 1) + 1)
     }
     val wide = docsOf(texts: _*)
-    val mb = Bpe.trainMerges(wide, 128)
+    val mb = Bpe.fit(wide, 128).table
     assert(mb.orderBy("iter").collect()
       .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq ==
       sequentialMerges(texts.mkString(" "), 128),
       "merge table diverged from sequential greedy")
     assert(mb.count() == 128)
-    val jobs128 = SparkJobs.count(spark)(Bpe.trainMerges(wide, 128))
-    val jobs2 = SparkJobs.count(spark)(Bpe.trainMerges(wide, 2))
+    val jobs128 = SparkJobs.count(spark)(Bpe.fit(wide, 128).table)
+    val jobs2 = SparkJobs.count(spark)(Bpe.fit(wide, 2).table)
     assert(jobs128 == jobs2, s"128 merges fired $jobs128 jobs, 2 merges $jobs2")
   }
 
@@ -209,7 +208,7 @@ class BpeSpec extends AnyFunSuite {
     val e = new String(Character.toChars(0x1F600))
     val p = "\uE000"
     val docs = docsOf(s"$e$e $e$e x$p x$p x$e x$e")
-    val m = Bpe.trainMerges(docs, 4).orderBy("iter").collect()
+    val m = Bpe.fit(docs, 4).table.orderBy("iter").collect()
       .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq
     assert(m == Seq(("x", p, 2L), ("x", e, 2L), (e, e, 2L)))
   }
@@ -224,11 +223,11 @@ class BpeSpec extends AnyFunSuite {
       (1L, "aaab aaab aaab ab ab", "en", "s1"),
       (2L, "cd cd", "de", "s2"))
       .toDF("doc_id", "text", "lang", "source")
-    val merges = Bpe.trainMerges(docs, 2)
-    val wp = Bpe.wordPieces(docs, merges).collect()
+    val bpe = Bpe.fit(docs, 2)
+    val wp = bpe.wordPieces.collect()
       .map(r => r.getAs[String]("word") -> r.getAs[Long]("n_pieces")).toMap
     assert(wp("aaab") == 2L && wp("ab") == 1L && wp("cd") == 2L)
-    val out = Bpe.fertility(docs, merges).collect()
+    val out = bpe.fertility(docs).collect()
       .map(r => (r.getAs[String]("source"), r.getAs[String]("lang")) -> r).toMap
     val en = out(("s1", "en"))
     // 5 words: 3x"aaab" (2 pieces each) + 2x"ab" (1) = 8 pieces, 16 chars
@@ -242,5 +241,29 @@ class BpeSpec extends AnyFunSuite {
     val de = out(("s2", "de"))
     assert(de.getAs[Double]("fertility") == 2.0)
     assert(de.getAs[Double]("chars_per_piece") == 1.0)
+  }
+
+  private val strata = Seq(
+      (1L, "aaab aaab aaab ab ab", "en", "s1"),
+      (2L, "cd cd", "de", "s2"))
+    .toDF("doc_id", "text", "lang", "source")
+
+  test("encode and wordPieces fire no Spark job beyond the fit") {
+    val fit = SparkJobs.count(spark)(Bpe.fit(strata, 2).table.collect())
+    val all = SparkJobs.count(spark) {
+      val bpe = Bpe.fit(strata, 2)
+      bpe.table.collect(); bpe.encode.collect(); bpe.wordPieces.collect()
+    }
+    assert(all == fit, s"fit + encode + wordPieces fired $all jobs, the fit $fit")
+  }
+
+  test("fertility adds exactly one corpus pass to the fit") {
+    val (docs, reads) = SparkJobs.scanCounted(strata)
+    val bpe = Bpe.fit(docs, 2)
+    assert(reads.value == 2L, "the fit reads the corpus once")
+    bpe.encode.collect(); bpe.wordPieces.collect()
+    assert(reads.value == 2L, "encode and wordPieces read no corpus")
+    bpe.fertility(docs).collect()
+    assert(reads.value == 4L, "fertility reads the corpus once more")
   }
 }

@@ -39,8 +39,8 @@ class UnigramSpec extends AnyFunSuite {
       (2L, "beta beta alpha delta"),
       (3L, "gamma alpha beta beta"),
       (4L, "delta gamma alpha beta")).toDF("doc_id", "text")
-    val trained = Unigram.train(docs, seedMulti = 16, keep = Seq(8, 6))
-    val rows = trained.collect()
+    val unigram = Unigram.fit(docs, seedMulti = 16, keep = Seq(8, 6))
+    val rows = unigram.table.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val pieces = rows.map(_._1).toSet
     // every character of the corpus survives pruning
@@ -53,7 +53,7 @@ class UnigramSpec extends AnyFunSuite {
 
     // encode: every emitted token is a trained piece, and total token
     // mass equals the sum of per-word Viterbi piece counts
-    val enc = Unigram.encode(docs, trained).collect()
+    val enc = unigram.encode.collect()
       .map(r => (r.getString(0), r.getLong(1)))
     enc.foreach { case (t, _) => assert(pieces.contains(t), s"token $t") }
     val lq = rows.map(r => r._1 -> r._3).toMap
@@ -64,14 +64,14 @@ class UnigramSpec extends AnyFunSuite {
     assert(enc.toMap == expected)
 
     // determinism: an independent retrain reproduces the table exactly
-    val again = Unigram.train(docs, seedMulti = 16, keep = Seq(8, 6))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val again = Unigram.fit(docs, seedMulti = 16, keep = Seq(8, 6))
+      .table.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(again.sortBy(_._1).toSeq == rows.sortBy(_._1).toSeq)
 
     // zero EM rounds is a configuration error and fails loudly, like the
     // empty-corpus and uncoverable-word cases
     val e = intercept[IllegalArgumentException] {
-      Unigram.train(docs, seedMulti = 16, keep = Seq.empty)
+      Unigram.fit(docs, seedMulti = 16, keep = Seq.empty)
     }
     assert(e.getMessage.contains("at least one EM round"))
   }
@@ -82,12 +82,12 @@ class UnigramSpec extends AnyFunSuite {
     // take a multi-char slot
     val e = new String(Character.toChars(0x1F600))
     val docs = Seq((1L, s"a$e a$e a$e b$e b"), (2L, s"ab ab $e$e")).toDF("doc_id", "text")
-    val trained = Unigram.train(docs, seedMulti = 4, keep = Seq(2))
-    val pieces = trained.collect().map(_.getString(0)).toSeq
+    val unigram = Unigram.fit(docs, seedMulti = 4, keep = Seq(2))
+    val pieces = unigram.table.collect().map(_.getString(0)).toSeq
     assert(pieces.count(_ == e) == 1, pieces)
     assert(pieces.count(p => p.codePointCount(0, p.length) > 1) <= 2, pieces)
     // encode covers every word: token mass in code points = the corpus's
-    val enc = Unigram.encode(docs, trained).collect()
+    val enc = unigram.encode.collect()
       .map(r => (r.getString(0), r.getLong(1)))
     enc.foreach { case (t, _) => assert(pieces.contains(t), s"token $t") }
     val words = Seq(s"a$e a$e a$e b$e b", s"ab ab $e$e").flatMap(_.split(" "))
@@ -98,9 +98,9 @@ class UnigramSpec extends AnyFunSuite {
   test("training fires the same Spark jobs for one EM round as for many") {
     val docs = Seq((1L, "alpha beta alpha gamma"), (2L, "beta beta alpha delta"))
       .toDF("doc_id", "text")
-    val one = SparkJobs.count(spark)(Unigram.train(docs, seedMulti = 16, keep = Seq(8)))
+    val one = SparkJobs.count(spark)(Unigram.fit(docs, seedMulti = 16, keep = Seq(8)))
     val many = SparkJobs.count(spark)(
-      Unigram.train(docs, seedMulti = 16, keep = Seq(12, 10, 8, 6, 4)))
+      Unigram.fit(docs, seedMulti = 16, keep = Seq(12, 10, 8, 6, 4)))
     assert(one == many, s"1 round fired $one jobs, 5 rounds $many")
   }
 
@@ -111,15 +111,15 @@ class UnigramSpec extends AnyFunSuite {
       (1L, "abab abab abab ab ab", "en", "s1"),
       (2L, "cd cd", "de", "s2"))
       .toDF("doc_id", "text", "lang", "source")
-    val trained = Unigram.train(docs, seedMulti = 8, keep = Seq(6))
+    val unigram = Unigram.fit(docs, seedMulti = 8, keep = Seq(6))
     // "abab" is a frequent <=MaxPiece substring, so it survives pruning
     // as its own piece and Viterbi takes it whole (a single piece always
     // beats any split: ln p > ln p1 + ln p2 for probabilities < 1)
-    val wp = Unigram.wordPieces(docs, trained).collect()
+    val wp = unigram.wordPieces.collect()
       .map(r => r.getAs[String]("word") -> r.getAs[Long]("n_pieces")).toMap
     assert(wp("abab") == 1L)
     assert(wp("ab") == 1L)
-    val uf = Unigram.fertility(docs, trained).collect()
+    val uf = unigram.fertility(docs).collect()
       .map(r => (r.getAs[String]("source"), r.getAs[String]("lang")) -> r).toMap
     val en = uf(("s1", "en"))
     assert(en.getAs[Long]("n_words") == 5L)
@@ -128,7 +128,7 @@ class UnigramSpec extends AnyFunSuite {
     // the disparity row vs BPE on the SAME corpus: the corpus-side
     // accounting (words, chars) must agree stratum-by-stratum; only the
     // segmentation (n_pieces, ratios) may differ between tokenizers
-    val bf = Bpe.fertility(docs, Bpe.trainMerges(docs, 2)).collect()
+    val bf = Bpe.fit(docs, 2).fertility(docs).collect()
       .map(r => (r.getAs[String]("source"), r.getAs[String]("lang")) -> r).toMap
     assert(uf.keySet == bf.keySet)
     uf.keySet.foreach { k =>
@@ -141,5 +141,30 @@ class UnigramSpec extends AnyFunSuite {
     // than 2-merge BPE on the en stratum ("abab" whole vs [aa? ab] splits)
     assert(uf(("s1", "en")).getAs[Double]("fertility") <=
       bf(("s1", "en")).getAs[Double]("fertility"))
+  }
+
+  private val strata = Seq(
+      (1L, "abab abab abab ab ab", "en", "s1"),
+      (2L, "cd cd", "de", "s2"))
+    .toDF("doc_id", "text", "lang", "source")
+
+  test("encode and wordPieces fire no Spark job beyond the fit") {
+    val fit = SparkJobs.count(spark)(
+      Unigram.fit(strata, seedMulti = 8, keep = Seq(6)).table.collect())
+    val all = SparkJobs.count(spark) {
+      val unigram = Unigram.fit(strata, seedMulti = 8, keep = Seq(6))
+      unigram.table.collect(); unigram.encode.collect(); unigram.wordPieces.collect()
+    }
+    assert(all == fit, s"fit + encode + wordPieces fired $all jobs, the fit $fit")
+  }
+
+  test("fertility adds exactly one corpus pass to the fit") {
+    val (docs, reads) = SparkJobs.scanCounted(strata)
+    val unigram = Unigram.fit(docs, seedMulti = 8, keep = Seq(6))
+    assert(reads.value == 2L, "the fit reads the corpus once")
+    unigram.encode.collect(); unigram.wordPieces.collect()
+    assert(reads.value == 2L, "encode and wordPieces read no corpus")
+    unigram.fertility(docs).collect()
+    assert(reads.value == 4L, "fertility reads the corpus once more")
   }
 }
